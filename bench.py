@@ -800,13 +800,9 @@ def main() -> None:
         "metric": "headline_queries_total",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
+        # per-query MIN floors are only in BENCH_DETAIL.json: with them the
+        # line outgrew the ~2000 chars of output that get recorded
         "queries": {n: round(t, 3) for n, t in timings.items()},
-        # per-query MIN floors alongside the medians (VERDICT r17 #6):
-        # the floor is the host-noise-free number — r17's PERF table was
-        # built from medians while 3 of 5 rounds were host-flagged, which
-        # made its per-query comparisons and scaling ratios unusable.
-        # Additions-only: medians, value, min_total all stay.
-        "queries_min": {n: round(t, 2) for n, t in timings_min.items()},
         "sf": sf,
         "min_total": round(min_total, 3),
         "drift": {
@@ -816,10 +812,16 @@ def main() -> None:
         },
     }
     line = json.dumps(compact, separators=(",", ":"))
-    # keep the line parseable if the driver's capture window is tight
-    # (r17's ~2050-char line parsed fine; stay under ~2x that)
-    if len(line) > 3900:
-        compact["queries"] = {n: round(t, 2) for n, t in timings.items()}
+    # Only the final ~2000 chars of output are recorded, so the line must
+    # fit whole: coarsen the per-query timings, then drop the drift
+    # verdict prose, then the per-query block, until it is under 1900.
+    shrink = [
+        lambda c: c.update(queries={n: round(t, 2) for n, t in timings.items()}),
+        lambda c: c["drift"].pop("verdict", None),
+        lambda c: c.pop("queries"),
+    ]
+    while len(line) >= 1900 and shrink:
+        shrink.pop(0)(compact)
         line = json.dumps(compact, separators=(",", ":"))
     # The line must be the LAST bytes this process writes: the driver keeps
     # only the final ~2000 chars of output, and the official r7 record was

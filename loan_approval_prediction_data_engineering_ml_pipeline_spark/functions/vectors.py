@@ -9,6 +9,8 @@ across engines (modulo the final rounding the query applies).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, functions as F
 
 
@@ -76,12 +78,24 @@ def l2_normalize_query(v: Column) -> Column:
     return F.transform(v, lambda x: x / d)
 
 
+def double_sql(x) -> str:
+    """One double as Spark SQL text. A finite value renders as
+    ``repr(x)D``: ``repr()`` is the shortest exact IEEE-754 form and
+    Spark's parser reads it correctly rounded, so the value is
+    bit-identical to ``F.lit(x)``. NaN and ±Inf have no literal form
+    (``nanD``/``infD`` do not parse), so they render as the string casts
+    Spark accepts; NaN stays NaN, not null."""
+    x = float(x)
+    if math.isfinite(x):
+        return f"{x!r}D"
+    name = "NaN" if math.isnan(x) else ("Infinity" if x > 0 else "-Infinity")
+    return f"CAST('{name}' AS DOUBLE)"
+
+
 def array_lit(values) -> Column:
     """A constant ``array<double>`` as ONE SQL literal expression (the
     1-D sibling of the r17 nested-array literal): ``F.array(*[F.lit(x)
     ...])`` costs 2 py4j round trips per element, so a 64-dim query
     vector is ~128 driver round trips per plan build — hot on every
-    single-probe path. ``repr()`` is the shortest exact IEEE-754 form
-    and Spark's parser parses it correctly rounded, so values are
-    bit-identical to the per-element literals."""
-    return F.expr("array(" + ",".join(f"{float(x)!r}D" for x in values) + ")")
+    single-probe path. Elements render through :func:`double_sql`."""
+    return F.expr("array(" + ",".join(double_sql(x) for x in values) + ")")

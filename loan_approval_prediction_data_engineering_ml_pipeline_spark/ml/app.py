@@ -20,15 +20,7 @@ import argparse
 import json
 import sys
 
-
-# columns the schema types as double — JSON integers must coerce
-NUMERIC_FIELDS = (
-    "ApplicantIncome",
-    "CoapplicantIncome",
-    "LoanAmount",
-    "Loan_Amount_Term",
-    "Credit_History",
-)
+from ..sources.schemas import LOAN_NUMERIC_COLS
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -48,7 +40,7 @@ def main(argv: list[str] | None = None) -> int:
     if not isinstance(row, dict):
         parser.error("--row must be a JSON object")
     # natural JSON numbers parse as int; the schema wants double
-    for k in NUMERIC_FIELDS:
+    for k in LOAN_NUMERIC_COLS:
         if k in row and row[k] is not None:
             row[k] = float(row[k])
 

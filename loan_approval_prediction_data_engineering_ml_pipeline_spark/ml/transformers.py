@@ -67,10 +67,6 @@ class StringModeImputerModel(Model, _StringModeParams, DefaultParamsReadable, De
         return json.loads(self.getOrDefault(self.modesJson))
 
     def _transform(self, dataset: DataFrame) -> DataFrame:
-        modes = self.modes
-        return dataset.select(
-            *[
-                F.coalesce(F.col(c), F.lit(modes[c])).alias(c) if c in modes else F.col(c)
-                for c in dataset.columns
-            ]
+        return dataset.withColumns(
+            {c: F.coalesce(F.col(c), F.lit(mode)) for c, mode in self.modes.items()}
         )

@@ -4,6 +4,8 @@ selection, persistence, single-row scoring."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,6 +18,7 @@ from loan_approval_prediction_data_engineering_ml_pipeline_spark.ml import (
     stratified_split,
     train_and_select,
 )
+from loan_approval_prediction_data_engineering_ml_pipeline_spark.functions.cleaning import clean_dependents
 from loan_approval_prediction_data_engineering_ml_pipeline_spark.ml.pipeline import candidate_models
 from loan_approval_prediction_data_engineering_ml_pipeline_spark.operators.relational import (
     duplicate_count,
@@ -72,14 +75,18 @@ def test_dependents_rewrite(loan_df):
 
 def test_string_mode_imputer_tiebreak_and_fill(spark):
     df = spark.createDataFrame(
-        [("b",), ("b",), ("a",), ("a",), (None,)], ["c"]
+        [(1, "b", "x"), (2, "b", "x"), (3, "a", "y"), (4, "a", None), (5, None, "y")],
+        ["i", "c", "d"],
     )
     model = StringModeImputer(inputCols=["c"]).fit(df)
     # tie between a(2) and b(2): sklearn picks the smallest -> 'a'
     assert model.modes == {"c": "a"}
     out = model.transform(df)
+    # imputed columns stay in place; columns outside inputCols pass through
+    assert out.columns == ["i", "c", "d"]
     assert out.where(F.col("c").isNull()).count() == 0
     assert out.where(F.col("c") == "a").count() == 3
+    assert out.where(F.col("d").isNull()).count() == 1
 
 
 def test_stratified_split_exact_and_deterministic(loan_df):
@@ -132,6 +139,86 @@ def test_unknown_category_encodes_all_zeros(spark, loan_df):
         .first()["v"]
     )
     assert list(vec) == [0.0] * len(vec)  # handle_unknown='ignore' parity
+
+
+@pytest.fixture(scope="module")
+def lr_model(loan_df):
+    from pyspark.ml.classification import LogisticRegression
+
+    clf = LogisticRegression(maxIter=10, labelCol="label", featuresCol="features")
+    return build_pipeline(clf).fit(loan_df)
+
+
+def test_double_sql_keeps_non_finite_values(spark):
+    from loan_approval_prediction_data_engineering_ml_pipeline_spark.functions.vectors import (
+        array_lit,
+    )
+
+    vals = spark.range(1).select(array_lit([1.5, math.nan, math.inf, -math.inf]).alias("a")).first()["a"]
+    assert vals[0] == 1.5 and math.isnan(vals[1])  # NaN stays NaN, not null
+    assert vals[2:] == [math.inf, -math.inf]
+
+
+def test_score_single_row_is_job_free_and_matches_batch(spark, lr_model):
+    from pyspark.ml.functions import vector_to_array
+
+    from loan_approval_prediction_data_engineering_ml_pipeline_spark.sources.schemas import (
+        LOAN_NUMERIC_COLS,
+    )
+
+    base = {
+        "Gender": "Male", "Married": "Yes", "Dependents": "0", "Education": "Graduate",
+        "Self_Employed": "No", "ApplicantIncome": 5849.0, "CoapplicantIncome": 0.0,
+        "LoanAmount": 128.0, "Loan_Amount_Term": 360.0, "Credit_History": 1.0,
+        "Property_Area": "Urban",
+    }
+    rows = [
+        base,
+        {**base, "Gender": None, "LoanAmount": None, "Credit_History": None},
+        {**base, "Dependents": "3+", "Loan_ID": "LP999999"},
+        # ints, as the reference app's number_input yields them
+        {**base, "ApplicantIncome": 4583, "CoapplicantIncome": 1508, "Credit_History": 0},
+        {**base, "Property_Area": "Atlantis"},  # unseen category
+        {**base, "Self_Employed": "it's a \\ path\\"},  # quote and backslashes
+        {**base, "ApplicantIncome": math.nan},  # NaN is imputed like null
+        {k: v for k, v in base.items() if k not in ("Married", "LoanAmount")},  # missing keys
+    ]
+    sc = spark.sparkContext
+    answers = []
+    for i, row in enumerate(rows):
+        group = f"test_score_single_row_{i}"
+        sc.setJobGroup(group, "score_single_row")
+        try:
+            answers.append(score_single_row(spark, lr_model, dict(row)))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], f"row {i} launched a job"
+
+    # the batch reference: the same rows through createDataFrame, shaped
+    # as prepare_loan_frame shapes the training frame
+    cols = list(base)
+    batch = spark.createDataFrame(
+        [
+            (i, *(float(r[c]) if c in LOAN_NUMERIC_COLS and r.get(c) is not None else r.get(c)
+                  for c in cols))
+            for i, r in enumerate(rows)
+        ],
+        schema="i int, " + ", ".join(
+            f"{c} double" if c in LOAN_NUMERIC_COLS else f"{c} string" for c in cols
+        ),
+    ).withColumn("Dependents_num", clean_dependents("Dependents").cast("double")).withColumn(
+        "Total_Income", F.col("ApplicantIncome") + F.col("CoapplicantIncome")
+    )
+    expected = (
+        lr_model.transform(batch)
+        .orderBy("i")
+        .select("prediction", vector_to_array("probability")[1].alias("p_approve"))
+        .collect()
+    )
+    assert len(expected) == len(answers)
+    for i, (got, want) in enumerate(zip(answers, expected)):
+        assert got["prediction"] == int(want["prediction"]), f"row {i}"
+        assert got["p_approve"] == pytest.approx(want["p_approve"], abs=1e-9), f"row {i}"
 
 
 @pytest.mark.slow
