@@ -17,10 +17,16 @@ query stage* to learn the final partitioning — measured 3-7.5 s of thrown
 away work per call on a windowed lineage at sf0.1, and at production scale
 it would run the upstream shuffles twice. Here we estimate the scan's task
 count from the leaf files' sizes (driver-side file-index metadata, no job):
-``Σ max(1, size / maxPartitionBytes)`` mirrors Spark's split packing while
-staying an upper bound on row-group parallelism, so a shortfall against
-``defaultParallelism`` is a reliable "this map will underuse the cluster"
-signal.
+each file is charged ``size + openCostInBytes`` and the estimate is
+``ceil(Σ charge / maxPartitionBytes)`` packed partitions, so many tiny
+files count as few tasks, as Spark's split packing makes them. A scan
+whose charges reach ``defaultParallelism × maxPartitionBytes`` is left
+alone without finishing the sum. The estimate uses ``maxPartitionBytes``
+as the split size: Spark's own ``maxSplitBytes`` also shrinks toward
+``Σ charge / defaultParallelism`` on small inputs, which this omits, so a
+many-tiny-file scan Spark already spreads can still be repartitioned. A
+shortfall against ``defaultParallelism`` is the "this map will underuse
+the cluster" signal.
 """
 
 from __future__ import annotations

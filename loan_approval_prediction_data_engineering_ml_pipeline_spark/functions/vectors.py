@@ -92,6 +92,18 @@ def double_sql(x) -> str:
     return f"CAST('{name}' AS DOUBLE)"
 
 
+def string_sql(s: str) -> str:
+    """One string as a Spark SQL literal, escaped for the default parser,
+    which unescapes backslash sequences
+    (``spark.sql.parser.escapedStringLiterals`` off)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def ident_sql(name: str) -> str:
+    """One column name as a backtick-quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def array_lit(values) -> Column:
     """A constant ``array<double>`` as ONE SQL literal expression (the
     1-D sibling of the r17 nested-array literal): ``F.array(*[F.lit(x)

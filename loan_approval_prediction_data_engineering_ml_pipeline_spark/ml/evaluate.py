@@ -58,10 +58,10 @@ def ranking_metrics(
 def feature_importances(model, scored: DataFrame, features_col: str = "features") -> list[tuple[str, float]]:
     """Named feature importances from a fitted tree-ensemble pipeline.
 
-    Maps the classifier's ``featureImportances`` vector back to human
-    feature names via the ML attribute metadata the VectorAssembler
-    stamped on the features column (one-hot slots surface as
-    ``col_value``). Driver-side work is just the vector + metadata —
+    Maps the classifier's ``featureImportances`` vector back to feature
+    names via the ``ml_attr`` metadata the preprocessor stamps on the
+    features column (numeric slots carry their column name, one-hot
+    slots ``col_value``). Driver-side work is just the vector + metadata —
     no data movement. Returns (name, importance) sorted descending;
     importances sum to 1 for RF/GBT.
     """
@@ -70,37 +70,6 @@ def feature_importances(model, scored: DataFrame, features_col: str = "features"
         raise TypeError(f"{type(clf).__name__} exposes no featureImportances")
     imp = clf.featureImportances
     attrs_meta = scored.schema[features_col].metadata["ml_attr"]["attrs"]
-    names: dict[int, str] = {}
-    for group in attrs_meta.values():  # "numeric" / "binary" / "nominal"
-        for a in group:
-            names[a["idx"]] = a["name"]
-
-    # A StandardScaler drops its input's per-slot attribute names, so
-    # scaled slots surface as "<outputCol>_<i>". Recover the originals by
-    # walking the fitted stages: scaler outputCol -> its assembler's
-    # inputCols (imputer "__imp" suffixes stripped back to raw columns).
-    scaled_slots: dict[str, list[str]] = {}
-    stages = list(getattr(model, "stages", []))
-    for st in stages:
-        if type(st).__name__ == "StandardScalerModel":
-            in_col = st.getInputCol()
-            for up in stages:
-                if (
-                    type(up).__name__ == "VectorAssembler"
-                    and up.getOutputCol() == in_col
-                ):
-                    scaled_slots[st.getOutputCol()] = [
-                        c.removesuffix("__imp") for c in up.getInputCols()
-                    ]
-
-    def resolve(name: str) -> str:
-        for scaled, originals in scaled_slots.items():
-            prefix = scaled + "_"
-            if name.startswith(prefix) and name[len(prefix):].isdigit():
-                i = int(name[len(prefix):])
-                if i < len(originals):
-                    return originals[i]
-        return name.removesuffix("__imp")
-
-    pairs = [(resolve(names.get(i, f"f{i}")), float(imp[i])) for i in range(imp.size)]
+    names = {a["idx"]: a["name"] for group in attrs_meta.values() for a in group}
+    pairs = [(names.get(i, f"f{i}"), float(imp[i])) for i in range(imp.size)]
     return sorted(pairs, key=lambda p: (-p[1], p[0]))

@@ -1,21 +1,20 @@
 """The reference's end-to-end ML dataflow (LP.ipynb cells 7-22),
-Spark-native: star join → cleaning → MLlib Pipeline [median-impute →
-mode-impute → index → one-hot → assemble → scale → classifier] →
-model-selection loop → persisted PipelineModel.
+Spark-native: star join → cleaning → MLlib Pipeline [fused preprocessor
+→ classifier] → model-selection loop → persisted PipelineModel.
 
-sklearn-parity decisions (SURVEY.md §7.4):
-- Imputer(strategy=median, relativeError=0.0): exact medians like
-  SimpleImputer (MLlib defaults to approximate).
-- StringIndexer(handleInvalid='keep') + OneHotEncoder(dropLast=True):
-  the keep-bucket becomes the dropped slot, so unknown categories encode
-  as all-zeros — exactly sklearn OneHotEncoder(handle_unknown='ignore',
-  drop=None): one slot per training category.
-- StandardScaler(withMean=True) is applied to the NUMERIC vector only,
-  before concatenation with the one-hot blocks — sklearn's
-  ColumnTransformer semantics, and it keeps the one-hot side sparse
-  (densifying the full assembled vector is the №1 scale trap at 100 TB).
-- Model selection by accuracy/F1, NOT the reference's r2_score bug
-  (LP.ipynb:841); divergence documented in tests.
+The preprocessor is ONE stage (``transformers.FusedPreprocessor``),
+fitted in one aggregation pass and applied as one projection. It keeps
+the sklearn-parity decisions (SURVEY.md §7.4):
+- exact medians, like SimpleImputer (MLlib's Imputer defaults to
+  approximate); NaN and null are both missing;
+- most-frequent categorical imputation, smallest value on ties;
+- one slot per training category in alphabetical order, so an unknown
+  category encodes as all zeros — sklearn OneHotEncoder(
+  handle_unknown='ignore', drop=None);
+- standard scaling (sample std) of the NUMERIC slots only, never the
+  one-hot block — sklearn's ColumnTransformer semantics.
+Model selection is by accuracy/F1, NOT the reference's r2_score bug
+(LP.ipynb:841); the divergence is documented in tests.
 """
 
 from __future__ import annotations
@@ -23,20 +22,19 @@ from __future__ import annotations
 from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.classification import LogisticRegression, RandomForestClassifier
 from pyspark.ml.evaluation import MulticlassClassificationEvaluator
-from pyspark.ml.feature import (
-    Imputer,
-    OneHotEncoder,
-    StandardScaler,
-    StringIndexer,
-    VectorAssembler,
-)
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.cleaning import clean_dependents, label_encode
 from ..sources.schemas import LOAN_CATEGORICAL_COLS, LOAN_LABEL_COL, LOAN_NUMERIC_COLS
-from .transformers import StringModeImputer
+from .transformers import FusedPreprocessor
 
 DERIVED_NUMERIC = ["Total_Income"]
+# the preprocessor's default inputs: Dependents enters as its cleaned
+# numeric twin, never as a category
+NUMERIC_FEATURES = [c for c in LOAN_NUMERIC_COLS if c != "Dependents"] + [
+    "Dependents_num", *DERIVED_NUMERIC
+]
+CATEGORICAL_FEATURES = [c for c in LOAN_CATEGORICAL_COLS if c != "Dependents"]
 
 
 def prepare_loan_frame(
@@ -75,8 +73,8 @@ ENGINEERED_NUMERIC = ["EMI_proxy", "Loan_to_Income", "Log_Total_Income", "Log_Lo
 
 def build_cross_validator(clf=None, *, param_grid=None, n_folds: int = 3, seed: int = 42):
     """README.md:15's k-fold CV + grid search, Spark-native: CrossValidator
-    over the full preprocessing+model pipeline (folds re-fit imputers and
-    scalers — no test-fold leakage, unlike refitting stages manually).
+    over the full preprocessing+model pipeline (folds re-fit the
+    preprocessor — no test-fold leakage, unlike refitting stages manually).
 
     ``param_grid``: list of param maps (ParamGridBuilder().build()); the
     built-in default grid only applies to LogisticRegression — any other
@@ -114,53 +112,6 @@ def build_cross_validator(clf=None, *, param_grid=None, n_folds: int = 3, seed: 
     )
 
 
-def build_preprocessor(
-    numeric_cols: list[str] | None = None,
-    categorical_cols: list[str] | None = None,
-) -> list:
-    """Schema-driven preprocessing stages (the ColumnTransformer analog,
-    LP.ipynb:748-763 cell 17)."""
-    numeric_cols = numeric_cols or [
-        c for c in LOAN_NUMERIC_COLS if c != "Dependents"
-    ] + ["Dependents_num"] + DERIVED_NUMERIC
-    categorical_cols = categorical_cols or [
-        c for c in LOAN_CATEGORICAL_COLS if c != "Dependents"
-    ]
-
-    num_imputer = Imputer(
-        strategy="median",
-        relativeError=0.0,  # exact medians: SimpleImputer parity
-        inputCols=numeric_cols,
-        outputCols=[f"{c}__imp" for c in numeric_cols],
-    )
-    cat_imputer = StringModeImputer(inputCols=categorical_cols)
-    indexers = [
-        StringIndexer(
-            inputCol=c, outputCol=f"{c}__idx", handleInvalid="keep", stringOrderType="alphabetAsc"
-        )
-        for c in categorical_cols
-    ]
-    # The indexer's keep-bucket (last index) is the only "invalid" route,
-    # so the encoder keeps handleInvalid='error' — adding keep here would
-    # append a SECOND invalid bucket and break the all-zeros layout.
-    onehot = OneHotEncoder(
-        inputCols=[f"{c}__idx" for c in categorical_cols],
-        outputCols=[f"{c}__oh" for c in categorical_cols],
-        dropLast=True,  # drops the keep-bucket -> unknowns = all-zeros (sklearn parity)
-    )
-    num_assembler = VectorAssembler(
-        inputCols=[f"{c}__imp" for c in numeric_cols], outputCol="num_vec"
-    )
-    scaler = StandardScaler(
-        inputCol="num_vec", outputCol="num_scaled", withMean=True, withStd=True
-    )
-    final_assembler = VectorAssembler(
-        inputCols=["num_scaled"] + [f"{c}__oh" for c in categorical_cols],
-        outputCol="features",
-    )
-    return [num_imputer, cat_imputer, *indexers, onehot, num_assembler, scaler, final_assembler]
-
-
 def candidate_models(seed: int = 42) -> dict[str, object]:
     """LP.ipynb:772-777 cell 18: the two candidate classifiers with the
     reference's hyperparameters mapped to MLlib."""
@@ -176,7 +127,13 @@ def candidate_models(seed: int = 42) -> dict[str, object]:
 
 
 def build_pipeline(clf, numeric_cols=None, categorical_cols=None) -> Pipeline:
-    return Pipeline(stages=[*build_preprocessor(numeric_cols, categorical_cols), clf])
+    """[fused preprocessor (the ColumnTransformer analog, LP.ipynb:748-763
+    cell 17), ``clf``]; the column lists default to the loan features."""
+    pre = FusedPreprocessor(
+        numericCols=numeric_cols or NUMERIC_FEATURES,
+        categoricalCols=categorical_cols or CATEGORICAL_FEATURES,
+    )
+    return Pipeline(stages=[pre, clf])
 
 
 def train_and_select(

@@ -6,11 +6,11 @@ read back. There is no second scorer; this exact function's transform
 scores a billion-row frame unchanged.
 
 The row enters as a SQL ``VALUES`` relation with typed literals, which
-Spark resolves to a ``LocalRelation``. Every pipeline stage (imputers,
-indexers, one-hot, assemblers, scaler, classifier) is a deterministic
-projection, so Catalyst's ``ConvertToLocalRelation`` evaluates the whole
-transform at optimize time: the physical plan is a ``LocalTableScan``
-and ``collect()`` launches 0 Spark jobs per request.
+Spark resolves to a ``LocalRelation``. Both pipeline stages (the fused
+preprocessor and the classifier) are deterministic projections, so
+Catalyst's ``ConvertToLocalRelation`` evaluates the whole transform at
+optimize time: the physical plan is a ``LocalTableScan`` and
+``collect()`` launches 0 Spark jobs per request.
 ``spark.createDataFrame([row])`` is avoided because it yields a
 ``LogicalRDD``, which Catalyst cannot fold, so every request would pay a
 job. Literals are rendered into the SQL text rather than bound as
@@ -25,23 +25,21 @@ from pyspark.ml.functions import vector_to_array
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.cleaning import clean_dependents
-from ..functions.vectors import double_sql
+from ..functions.vectors import double_sql, ident_sql, string_sql
 from ..sources.schemas import LOAN_NUMERIC_COLS, LOAN_SCHEMAS
 
 
 def _value_sql(name: str, value) -> str:
     """One request value as a typed SQL literal: numeric columns are
     doubles (Python ints from a UI form coerce), every other column is a
-    string; a missing value is a typed NULL. Strings are escaped for
-    Spark's default parser, which unescapes backslash sequences
-    (``spark.sql.parser.escapedStringLiterals`` off)."""
+    string; a missing value is a typed NULL."""
     if name in LOAN_NUMERIC_COLS:
         return "CAST(NULL AS DOUBLE)" if value is None else double_sql(value)
     if value is None:
         return "CAST(NULL AS STRING)"
     if not isinstance(value, str):
         raise TypeError(f"{name}: expected a string, got {type(value).__name__}")
-    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return string_sql(value)
 
 
 def _request_frame(spark: SparkSession, row: dict) -> DataFrame:
@@ -56,7 +54,7 @@ def _request_frame(spark: SparkSession, row: dict) -> DataFrame:
     base.pop("Loan_ID", None)
 
     values = ", ".join(_value_sql(k, v) for k, v in base.items())
-    names = ", ".join("`" + k.replace("`", "``") + "`" for k in base)
+    names = ", ".join(map(ident_sql, base))
     return spark.sql(f"SELECT * FROM VALUES ({values}) AS request({names})").withColumns({
         "Dependents_num": clean_dependents("Dependents").cast("double"),
         "Total_Income": F.col("ApplicantIncome") + F.col("CoapplicantIncome"),

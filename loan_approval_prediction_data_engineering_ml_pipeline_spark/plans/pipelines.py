@@ -39,21 +39,14 @@ _LOAN_FIXTURE_DIR = os.environ.get(
 _LOAN_JOINED = os.path.join(_LOAN_FIXTURE_DIR, "loan_joined")
 _LR_WEIGHTS = os.path.join(_LOAN_FIXTURE_DIR, "lr_weights")
 
-# pipeline column lists — DERIVED the same way build_preprocessor
-# derives its defaults (ml/pipeline.py), not re-hardcoded:
-# ml_preprocess_fit_stats maps scaler means/stds to columns BY POSITION,
-# so a drifted copy would mis-attribute stats and surface only as an
-# opaque oracle hash mismatch
-from ..ml.pipeline import DERIVED_NUMERIC as _DERIVED_NUMERIC  # noqa: E402
-from ..sources.schemas import (  # noqa: E402
-    LOAN_CATEGORICAL_COLS as _LOAN_CAT,
-    LOAN_NUMERIC_COLS as _LOAN_NUM,
+# the preprocessor's own column lists (ml/pipeline.py), not re-hardcoded:
+# the oracles name every stat and weight by these columns, so a drifted
+# copy would surface only as an opaque oracle hash mismatch
+from ..ml.pipeline import (  # noqa: E402
+    CATEGORICAL_FEATURES as _PP_CATEGORICAL,
+    NUMERIC_FEATURES as _PP_NUMERIC,
 )
 
-_PP_NUMERIC = (
-    [c for c in _LOAN_NUM if c != "Dependents"] + ["Dependents_num"] + _DERIVED_NUMERIC
-)
-_PP_CATEGORICAL = [c for c in _LOAN_CAT if c != "Dependents"]
 _PP_NULL_AUDIT = _PP_NUMERIC + _PP_CATEGORICAL + ["Dependents"]
 
 _loan_fixture_fresh = False
@@ -103,7 +96,7 @@ def _preprocess_oracle() -> str:
     committed fixture. quantile_disc matches Spark Imputer's exact
     median (element at the lower-middle rank — probed empirically);
     mode tie-break is (count desc, value asc) = sklearn/our
-    StringModeImputer; scaler moments are avg/stddev_samp over the
+    fused preprocessor; scaler moments are avg/stddev_samp over the
     median-imputed train columns."""
     fix = _LOAN_JOINED
     parts = []
@@ -165,29 +158,24 @@ def _export_lr_weights(spark: SparkSession, model) -> None:
     oracle can re-derive the SCORING pass (margin → sigmoid → prediction
     → confusion cells) from names instead of vector positions.
 
-    Position→name mapping mirrors the assembler layout exactly
-    (ml/pipeline.py build_preprocessor): the first len(numeric) slots are
-    the scaled numeric block in ``_PP_NUMERIC`` order, then one one-hot
-    block per categorical in ``_PP_CATEGORICAL`` order, each of size
-    len(labels) with slot k = labels[k] (alphabetAsc indexers; the
-    dropped dropLast slot is the handleInvalid='keep' bucket, so unknown
-    categories carry weight 0 and need no row)."""
+    Position→name mapping mirrors the fused preprocessor's layout
+    (ml/transformers.py): the first len(numeric) slots are the scaled
+    numeric block in ``_PP_NUMERIC`` order, then one one-hot block per
+    categorical in ``_PP_CATEGORICAL`` order, each of size len(vocab)
+    with slot k = vocab[k] (alphabetical; an unknown category has no
+    slot, so it carries weight 0 and needs no row)."""
     global _lr_weights_fresh
-    from pyspark.ml.feature import StringIndexerModel
-
     from ..sources.loaders import _path_exists
 
-    lr = model.stages[-1]
-    indexers = {
-        s.getInputCol(): s for s in model.stages if isinstance(s, StringIndexerModel)
-    }
+    pre, lr = model.stages
+    vocab = {c: s["vocab"] for c, s in pre.stats["categorical"].items()}
     coef = list(lr.coefficients)
     rows: list[tuple] = [("intercept", "", "", float(lr.intercept))]
     for i, c in enumerate(_PP_NUMERIC):
         rows.append(("num", c, "", float(coef[i])))
     off = len(_PP_NUMERIC)
     for c in _PP_CATEGORICAL:
-        labels = list(indexers[c].labels)
+        labels = vocab[c]
         for k, cat in enumerate(labels):
             rows.append(("cat", c, cat, float(coef[off + k])))
         off += len(labels)
@@ -353,34 +341,19 @@ def transition_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_preprocess_oracle,
     description="Every deterministic fit-time aggregate of the reference's "
     "preprocessing dataflow (LP.ipynb:748-763), emitted from the ACTUAL "
-    "fitted MLlib models — Imputer surrogate medians, StringModeImputer "
-    "modes, StringIndexer category cardinalities, StandardScaler "
-    "means/stds, stratified-split sizes, null audit — and hash-checked "
-    "against a DuckDB re-derivation over the committed fixture "
-    "(.fixtures/loan_joined). Shrinks the ML pipeline's unverified "
+    "fitted preprocessor — impute medians, modes, category "
+    "cardinalities, scaler means/stds, stratified-split sizes, null "
+    "audit — and hash-checked against a DuckDB re-derivation over the "
+    "committed fixture (.fixtures/loan_joined). Shrinks the ML pipeline's unverified "
     "surface to the classifier fit alone (VERDICT r3 #5)",
 )
 def ml_preprocess_fit_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.ml import Pipeline
-    from pyspark.ml.feature import ImputerModel, StandardScalerModel, StringIndexerModel
-
-    from ..ml.pipeline import build_preprocessor
-    from ..ml.transformers import StringModeImputerModel
+    from ..ml.transformers import FusedPreprocessor
 
     train, test, full = _ensure_loan_fixture(spark)
-    pre = Pipeline(stages=build_preprocessor()).fit(train)
-
-    imputer = next(s for s in pre.stages if isinstance(s, ImputerModel))
-    mode_imp = next(s for s in pre.stages if isinstance(s, StringModeImputerModel))
-    indexers = {
-        s.getInputCol(): s for s in pre.stages if isinstance(s, StringIndexerModel)
-    }
-    scaler = next(s for s in pre.stages if isinstance(s, StandardScalerModel))
-
-    surrogate = imputer.surrogateDF.first().asDict()
-    modes = mode_imp.modes
-    # scaler vectors are ordered like the numeric assembler's inputCols
-    means, stds = list(scaler.mean), list(scaler.std)
+    stats = FusedPreprocessor(
+        numericCols=_PP_NUMERIC, categoricalCols=_PP_CATEGORICAL
+    ).fit(train).stats
 
     rows: list[tuple] = []
     # null audit over the full joined frame (one agg pass)
@@ -399,16 +372,13 @@ def ml_preprocess_fit_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows.append(
                 ("split_count", f"{split_name}_label_{int(r['label'])}", float(r["count"]), None)
             )
-    for i, c in enumerate(_PP_NUMERIC):
-        rows.append(("impute_median", c, round(float(surrogate[c]), 6), None))
-        rows.append(("scaled_mean", c, round(float(means[i]), 6), None))
-        rows.append(("scaled_std", c, round(float(stds[i]), 6), None))
-    for c in _PP_CATEGORICAL:
-        rows.append(("mode", c, None, modes[c]))
-        # labelsArray excludes nulls; handleInvalid='keep' adds a virtual
-        # bucket at index len(labels), so len(labels) IS the seen-category
-        # cardinality
-        rows.append(("n_categories", c, float(len(indexers[c].labels)), None))
+    for c, s in stats["numeric"].items():
+        rows.append(("impute_median", c, round(s["median"], 6), None))
+        rows.append(("scaled_mean", c, round(s["mean"], 6), None))
+        rows.append(("scaled_std", c, round(s["std"], 6), None))
+    for c, s in stats["categorical"].items():
+        rows.append(("mode", c, None, s["mode"]))
+        rows.append(("n_categories", c, float(len(s["vocab"])), None))
     return spark.createDataFrame(
         rows, "stat string, col string, value double, svalue string"
     ).orderBy("stat", "col")

@@ -57,6 +57,19 @@ def scoped_conf(spark: SparkSession, **confs: str) -> Iterator[None]:
                 spark.conf.set(key, old)
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half the host's MemTotal, capped at 48g: a local-mode driver is the
+    whole engine, but a heap the host cannot back gets the process killed
+    instead of spilling. Hosts without ``meminfo`` get the cap."""
+    cap_mb = 48 * 1024
+    try:
+        with open(meminfo) as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "48g"
+    return f"{max(512, min(cap_mb, kb // 2048))}m"
+
+
 def get_spark(
     app_name: str = "loan_pipeline_spark",
     cpus: int | str | None = None,
@@ -66,7 +79,8 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    ``cpus`` defaults to $SPARK_GRAFT_CPUS (driver contract) or all cores.
+    ``cpus`` defaults to $SPARK_GRAFT_CPUS (driver contract) or all cores;
+    ``driver_memory`` to $SPARK_DRIVER_MEMORY or :func:`default_driver_memory`.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
     if shuffle_partitions is None:
@@ -81,7 +95,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", driver_memory or os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            driver_memory or os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from loan_approval_prediction_data_engineering_ml_pipeline_spark.ml import (
-    StringModeImputer,
+    FusedPreprocessor,
     build_pipeline,
     confusion_matrix,
     prepare_loan_frame,
@@ -19,7 +19,11 @@ from loan_approval_prediction_data_engineering_ml_pipeline_spark.ml import (
     train_and_select,
 )
 from loan_approval_prediction_data_engineering_ml_pipeline_spark.functions.cleaning import clean_dependents
-from loan_approval_prediction_data_engineering_ml_pipeline_spark.ml.pipeline import candidate_models
+from loan_approval_prediction_data_engineering_ml_pipeline_spark.ml.pipeline import (
+    CATEGORICAL_FEATURES,
+    NUMERIC_FEATURES,
+    candidate_models,
+)
 from loan_approval_prediction_data_engineering_ml_pipeline_spark.operators.relational import (
     duplicate_count,
     null_audit,
@@ -73,20 +77,47 @@ def test_dependents_rewrite(loan_df):
     assert vals == {0.0, 1.0, 2.0, 3.0, None}
 
 
+def _slots(out, col: str = "features") -> list[list[float]]:
+    from pyspark.ml.functions import vector_to_array
+
+    return [r["v"] for r in out.select(vector_to_array(col).alias("v")).collect()]
+
+
+def _slot_index(out, name: str, col: str = "features") -> int:
+    attrs = out.schema[col].metadata["ml_attr"]["attrs"]
+    return next(a["idx"] for group in attrs.values() for a in group if a["name"] == name)
+
+
+def _jobs(spark, group: str, fn):
+    """Run ``fn`` under a fresh job group; return (result, jobs launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_string_mode_imputer_tiebreak_and_fill(spark):
     df = spark.createDataFrame(
         [(1, "b", "x"), (2, "b", "x"), (3, "a", "y"), (4, "a", None), (5, None, "y")],
         ["i", "c", "d"],
     )
-    model = StringModeImputer(inputCols=["c"]).fit(df)
+    model = FusedPreprocessor(categoricalCols=["c"]).fit(df)
     # tie between a(2) and b(2): sklearn picks the smallest -> 'a'
-    assert model.modes == {"c": "a"}
-    out = model.transform(df)
-    # imputed columns stay in place; columns outside inputCols pass through
-    assert out.columns == ["i", "c", "d"]
-    assert out.where(F.col("c").isNull()).count() == 0
-    assert out.where(F.col("c") == "a").count() == 3
+    assert model.stats["categorical"]["c"]["mode"] == "a"
+    out = model.transform(df.orderBy("i"))
+    # the input columns stay in place and pass through; features is appended
+    assert out.columns == ["i", "c", "d", "features"]
+    assert out.where(F.col("c").isNull()).count() == 1
     assert out.where(F.col("d").isNull()).count() == 1
+    # the null row is filled with 'a', so 'a' has 3 rows and no row is all zeros
+    slots = _slots(out)
+    a = _slot_index(out, "c_a")
+    assert slots[4] == slots[2] and slots[4][a] == 1.0
+    assert sum(v[a] for v in slots) == 3
+    assert all(sum(v) == 1.0 for v in slots)
 
 
 def test_stratified_split_exact_and_deterministic(loan_df):
@@ -100,45 +131,185 @@ def test_stratified_split_exact_and_deterministic(loan_df):
 
 
 def test_preprocessing_semantics(spark, loan_df):
-    from pyspark.ml import Pipeline
-    from loan_approval_prediction_data_engineering_ml_pipeline_spark.ml.pipeline import build_preprocessor
-
-    model = Pipeline(stages=build_preprocessor()).fit(loan_df)
+    model = FusedPreprocessor(
+        numericCols=NUMERIC_FEATURES, categoricalCols=CATEGORICAL_FEATURES
+    ).fit(loan_df)
     out = model.transform(loan_df)
     # exact median imputation: LoanAmount median from non-null values
     expected_median = loan_df.approxQuantile("LoanAmount", [0.5], 0.0)[0]
-    imputer_model = model.stages[0]
-    surrogate = imputer_model.surrogateDF.collect()[0]["LoanAmount"]
-    assert surrogate == expected_median
-    # no nulls after imputation in any feature input
-    assert out.where(F.col("LoanAmount__imp").isNull()).count() == 0
-    # scaled numeric block: mean ~0, std ~1 for first element
-    from pyspark.ml.functions import vector_to_array
-    stats = out.select(
-        F.avg(vector_to_array("num_scaled")[0]).alias("m"),
-        F.stddev_samp(vector_to_array("num_scaled")[0]).alias("s"),
-    ).collect()[0]
-    assert abs(stats["m"]) < 1e-9
-    assert stats["s"] == pytest.approx(1.0, abs=1e-9)
-    # one-hot layout: one slot per seen category (keep-bucket dropped)
-    n_gender = loan_df.select("Gender").where(F.col("Gender").isNotNull()).distinct().count()
-    oh_size = out.select(F.size(vector_to_array("Gender__oh")).alias("s")).first()["s"]
-    assert oh_size == n_gender  # sklearn drop=None layout
+    assert model.stats["numeric"]["LoanAmount"]["median"] == expected_median
+    slots = _slots(out)
+    # no nulls or NaNs after imputation in any feature slot
+    assert all(not math.isnan(x) for v in slots for x in v)
+    # scaled numeric block: mean ~0, std ~1 for every numeric slot
+    for i in range(len(NUMERIC_FEATURES)):
+        xs = [v[i] for v in slots]
+        mean = sum(xs) / len(xs)
+        std = math.sqrt(sum((x - mean) ** 2 for x in xs) / (len(xs) - 1))
+        assert abs(mean) < 1e-9
+        assert std == pytest.approx(1.0, abs=1e-9)
+    # one-hot layout: one slot per seen category, alphabetical
+    genders = sorted(
+        r[0] for r in loan_df.select("Gender").where(F.col("Gender").isNotNull()).distinct().collect()
+    )
+    binary = out.schema["features"].metadata["ml_attr"]["attrs"]["binary"]
+    assert [a["name"] for a in binary if a["name"].startswith("Gender_")] == [
+        f"Gender_{g}" for g in genders
+    ]  # sklearn drop=None layout
+    # the one-hot block is left unscaled
+    assert {x for v in slots for x in v[len(NUMERIC_FEATURES):]} == {0.0, 1.0}
 
 
 def test_unknown_category_encodes_all_zeros(spark, loan_df):
-    from pyspark.ml import Pipeline
-    from pyspark.ml.functions import vector_to_array
-    from loan_approval_prediction_data_engineering_ml_pipeline_spark.ml.pipeline import build_preprocessor
+    model = FusedPreprocessor(
+        numericCols=NUMERIC_FEATURES, categoricalCols=CATEGORICAL_FEATURES
+    ).fit(loan_df)
+    weird = model.transform(loan_df.limit(1).withColumn("Property_Area", F.lit("Atlantis")))
+    vec = _slots(weird)[0]
+    area = [
+        _slot_index(weird, f"Property_Area_{v}")
+        for v in model.stats["categorical"]["Property_Area"]["vocab"]
+    ]
+    assert len(area) == 3
+    assert [vec[i] for i in area] == [0.0] * 3  # handle_unknown='ignore' parity
 
-    model = Pipeline(stages=build_preprocessor()).fit(loan_df)
-    weird = loan_df.limit(1).withColumn("Property_Area", F.lit("Atlantis"))
-    vec = (
-        model.transform(weird)
-        .select(vector_to_array("Property_Area__oh").alias("v"))
-        .first()["v"]
+
+def test_fused_preprocessor_missing_numerics(spark):
+    train = spark.createDataFrame(
+        [(1.0, 5.0), (2.0, 5.0), (math.nan, 5.0), (None, 5.0), (10.0, 5.0)], "x double, z double"
     )
-    assert list(vec) == [0.0] * len(vec)  # handle_unknown='ignore' parity
+    model = FusedPreprocessor(numericCols=["x", "z"]).fit(train)
+    # NaN and null are both missing: median of {1, 2, 10}
+    assert model.stats["numeric"]["x"]["median"] == 2.0
+    imputed = [1.0, 2.0, 2.0, 2.0, 10.0]
+    mean = sum(imputed) / 5
+    std = math.sqrt(sum((x - mean) ** 2 for x in imputed) / 4)
+    assert model.stats["numeric"]["x"]["mean"] == pytest.approx(mean, rel=1e-15)
+    assert model.stats["numeric"]["x"]["std"] == pytest.approx(std, rel=1e-15)
+    # a request with NaN or null scores as the median; a zero-variance
+    # column scales to 0.0, as StandardScaler does
+    req = spark.createDataFrame([(math.nan, 7.0), (None, None), (10.0, 5.0)], "x double, z double")
+    got = _slots(model.transform(req))
+    assert [v[0] for v in got] == pytest.approx(
+        [(2.0 - mean) / std, (2.0 - mean) / std, (10.0 - mean) / std], rel=1e-12
+    )
+    assert [v[1] for v in got] == [0.0, 0.0, 0.0]
+
+
+def test_fused_preprocessor_all_missing_numeric_raises(spark):
+    df = spark.createDataFrame([(None, 1.0), (math.nan, 2.0)], "x double, y double")
+    with pytest.raises(ValueError, match="all the values in x are null or NaN"):
+        FusedPreprocessor(numericCols=["x", "y"]).fit(df)
+
+
+def test_fused_fit_is_one_pass(spark, loan_tables):
+    from pyspark.ml.classification import LogisticRegression
+
+    # an uncached frame, so both sides pay the same star join
+    df = prepare_loan_frame(
+        loan_tables["applicant_info"], loan_tables["financial_info"], loan_tables["loan_info"]
+    )
+    pre = FusedPreprocessor(numericCols=NUMERIC_FEATURES, categoricalCols=CATEGORICAL_FEATURES)
+    _, count_jobs = _jobs(spark, "test_fused_fit_count", df.count)
+    _, fit_jobs = _jobs(spark, "test_fused_fit", lambda: pre.fit(df))
+    assert fit_jobs == count_jobs
+    model = build_pipeline(LogisticRegression(maxIter=5, labelCol="label")).fit(df)
+    assert len(model.stages) == 2
+
+
+def _mllib_reference_stages(df, num, cat):
+    """The 11-stage MLlib preprocessor the fused stage replaced: exact
+    median Imputer, mode imputation, 5 alphabetical keep-bucket
+    StringIndexers, a dropLast OneHotEncoder (the dropped slot is the
+    keep bucket, so unknowns are all zeros), a numeric assembler, a
+    StandardScaler and the final assembler. Modes come from a plain
+    grouped count here, independent of the fused stage."""
+    from pyspark.ml.feature import (
+        Imputer,
+        OneHotEncoder,
+        SQLTransformer,
+        StandardScaler,
+        StringIndexer,
+        VectorAssembler,
+    )
+
+    modes = {
+        c: df.where(F.col(c).isNotNull()).groupBy(c).count()
+        .orderBy(F.desc("count"), F.asc(c)).first()[0]
+        for c in cat
+    }
+    fill = ", ".join(f"coalesce({c}, '{m}') AS {c}__m" for c, m in modes.items())
+    return [
+        Imputer(strategy="median", relativeError=0.0, inputCols=num,
+                outputCols=[f"{c}__imp" for c in num]),
+        SQLTransformer(statement=f"SELECT *, {fill} FROM __THIS__"),
+        *[StringIndexer(inputCol=f"{c}__m", outputCol=f"{c}__idx", handleInvalid="keep",
+                        stringOrderType="alphabetAsc") for c in cat],
+        OneHotEncoder(inputCols=[f"{c}__idx" for c in cat], outputCols=[f"{c}__oh" for c in cat],
+                      dropLast=True),
+        VectorAssembler(inputCols=[f"{c}__imp" for c in num], outputCol="num_vec"),
+        StandardScaler(inputCol="num_vec", outputCol="num_scaled", withMean=True, withStd=True),
+        VectorAssembler(inputCols=["num_scaled"] + [f"{c}__oh" for c in cat], outputCol="features"),
+    ]
+
+
+def test_fused_preprocessor_matches_mllib_stages(spark, loan_df, tmp_path):
+    from pyspark.ml import Pipeline, PipelineModel
+    from pyspark.ml.classification import LogisticRegression, RandomForestClassifier
+    from pyspark.ml.functions import vector_to_array
+
+    num, cat = NUMERIC_FEATURES, CATEGORICAL_FEATURES
+    df = loan_df.withColumn("rid", F.monotonically_increasing_id())
+    ref_stages = _mllib_reference_stages(df, num, cat)
+    assert len(ref_stages) == 11
+    pre = FusedPreprocessor(numericCols=num, categoricalCols=cat).fit(df)
+    ref_feat = Pipeline(stages=ref_stages).fit(df).transform(df).cache()
+    feat = pre.transform(df).cache()
+
+    def rows(out):
+        return out.orderBy("rid").select(
+            vector_to_array("features").alias("f"), "prediction",
+            vector_to_array("probability").alias("p"),
+        ).collect()
+
+    lr = LogisticRegression(maxIter=10, labelCol="label")
+    ref_lr, lr_model = lr.fit(ref_feat), lr.fit(feat)
+    ref_rows, got = rows(ref_lr.transform(ref_feat)), rows(lr_model.transform(feat))
+    for a, b in zip(ref_rows, got, strict=True):
+        assert a["f"] == pytest.approx(b["f"], abs=1e-12, rel=0)
+    assert [a["prediction"] for a in ref_rows] == [b["prediction"] for b in got]
+    assert list(lr_model.coefficients) == pytest.approx(
+        list(ref_lr.coefficients), abs=1e-9, rel=0
+    )
+    assert lr_model.intercept == pytest.approx(ref_lr.intercept, abs=1e-9, rel=0)
+
+    # names: the scaler's anonymous "num_scaled_<i>" slots are the numeric
+    # columns, "<c>__oh_<v>" one-hot slots are "<c>_<v>", typed binary
+    def named(out, rename=lambda n: n):
+        attrs = out.schema["features"].metadata["ml_attr"]["attrs"]
+        return {k: sorted((a["idx"], rename(a["name"])) for a in v) for k, v in attrs.items()}
+
+    def ref_name(n):
+        if n.startswith("num_scaled_"):
+            return num[int(n.removeprefix("num_scaled_"))]
+        c, v = n.split("__oh_")
+        return f"{c}_{v}"
+
+    assert named(feat) == named(ref_feat, ref_name)
+
+    # binary slots keep a tree learner's categorical handling
+    rf = RandomForestClassifier(numTrees=10, maxDepth=5, seed=7, labelCol="label")
+    assert [r["prediction"] for r in rows(rf.fit(ref_feat).transform(ref_feat))] == [
+        r["prediction"] for r in rows(rf.fit(feat).transform(feat))
+    ]
+
+    # persisted and reloaded, the 2-stage model scores identically
+    path = str(tmp_path / "fused")
+    PipelineModel(stages=[pre, lr_model]).write().overwrite().save(path)
+    again = rows(PipelineModel.load(path).transform(df))
+    assert [(r["prediction"], r["p"]) for r in got] == [(r["prediction"], r["p"]) for r in again]
+    ref_feat.unpersist()
+    feat.unpersist()
 
 
 @pytest.fixture(scope="module")
@@ -271,7 +442,6 @@ def test_engineered_features_and_cv(spark, loan_df):
         ENGINEERED_NUMERIC,
         add_engineered_features,
         build_cross_validator,
-        build_preprocessor,
     )
 
     eng = add_engineered_features(loan_df)
@@ -287,11 +457,10 @@ def test_engineered_features_and_cv(spark, loan_df):
         ["ApplicantIncome", "CoapplicantIncome", "LoanAmount", "Loan_Amount_Term",
          "Credit_History", "Dependents_num", "Total_Income"]] + ENGINEERED_NUMERIC
     from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml import Pipeline
     clf = LogisticRegression(maxIter=200, labelCol="label", featuresCol="features")
     cv = build_cross_validator(clf, n_folds=3)
     # swap the default preprocessor for one that includes engineered cols
-    cv.setEstimator(Pipeline(stages=[*build_preprocessor(numeric_cols=base_numeric), clf]))
+    cv.setEstimator(build_pipeline(clf, numeric_cols=base_numeric))
     model = cv.fit(eng)
     assert len(model.avgMetrics) == 4  # 2x2 grid
     assert all(0.0 <= m <= 1.0 for m in model.avgMetrics)

@@ -102,14 +102,21 @@ def test_label_encode_matches_map(spark, vals):
 
 
 def test_string_mode_imputer_idempotent(spark):
-    from loan_approval_prediction_data_engineering_ml_pipeline_spark.ml import StringModeImputer
+    from pyspark.ml.functions import vector_to_array
 
-    df = spark.createDataFrame([("a",), ("a",), ("b",), (None,)], ["c"])
-    model = StringModeImputer(inputCols=["c"]).fit(df)
-    once = model.transform(df)
-    twice = model.transform(once)
-    assert once.collect() == twice.collect()
-    assert once.where(F.col("c").isNull()).count() == 0
+    from loan_approval_prediction_data_engineering_ml_pipeline_spark.ml import FusedPreprocessor
+
+    df = spark.createDataFrame([(0, "a"), (1, "a"), (2, "b"), (3, None)], ["i", "c"])
+    model = FusedPreprocessor(categoricalCols=["c"]).fit(df)
+    mode = model.stats["categorical"]["c"]["mode"]
+
+    def features(frame):
+        return model.transform(frame).orderBy("i").select(vector_to_array("features")).collect()
+
+    # imputing an already-imputed column changes nothing, and no row is left unfilled
+    once = features(df)
+    assert once == features(df.fillna({"c": mode}))
+    assert all(sum(r[0]) == 1.0 for r in once)
 
 
 @settings(max_examples=15, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])

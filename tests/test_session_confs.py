@@ -57,3 +57,24 @@ def test_registry_queries_leave_shuffle_partitions_unchanged(spark, name):
         assert df.count() >= 0
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prior)
+
+
+def test_default_driver_memory_follows_host_memtotal(tmp_path):
+    from loan_approval_prediction_data_engineering_ml_pipeline_spark.session import (
+        default_driver_memory,
+    )
+
+    def on_host(text):
+        p = tmp_path / "meminfo"
+        p.write_text(text)
+        return default_driver_memory(str(p))
+
+    # a 4 GB host gets half its memory, never the fixed 48g
+    assert on_host("MemTotal:        4096000 kB\nMemFree:  100 kB\n") == "2000m"
+    # a large host is capped at 48g
+    assert on_host("MemTotal:      1048576000 kB\n") == "49152m"
+    # a tiny host still gets a heap the JVM can start with
+    assert on_host("MemTotal:          65536 kB\n") == "512m"
+    # unreadable or malformed meminfo falls back to the cap
+    assert default_driver_memory(str(tmp_path / "absent")) == "48g"
+    assert on_host("MemFree: 1 kB\n") == "48g"

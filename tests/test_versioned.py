@@ -208,10 +208,9 @@ def test_optimize_compacts_content_identically(spark, tmp_path):
     )
 
     t = str(tmp_path / "t")
-    for i in range(4):  # small-file accumulation: 4 append commits
-        versioned_write(
-            spark.createDataFrame([(i, f"r{i}")], ["id", "v"]).repartition(2), t
-        )
+    for i in range(4):  # small-file accumulation: 4 append commits of 2 files
+        rows = [(2 * i, f"r{2 * i}"), (2 * i + 1, f"r{2 * i + 1}")]
+        versioned_write(spark.createDataFrame(rows, ["id", "v"]).repartition(2), t)
     before = _read_manifest(t, 3)
     assert len(before["files"]) >= 8
     v = optimize_table(spark, t, target_files=1)
@@ -223,7 +222,7 @@ def test_optimize_compacts_content_identically(spark, tmp_path):
     # superseded small files reclaimed only by vacuum, and the compacted
     # table keeps working
     vacuum(t, keep_versions=1)
-    assert read_version(spark, t).count() == 4
+    assert read_version(spark, t).count() == 8
 
 
 # ---------------------------------------------------------------------------
