@@ -7,6 +7,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
+from .vectors import ident_sql
+
 
 def domain_rewrite(col: Column | str, mapping: dict[str, str]) -> Column:
     """F1: conditional string rewrite ('3+' -> '3', LP.ipynb:679)."""
@@ -38,11 +40,20 @@ def label_encode(col: Column | str, mapping: dict[str, int]) -> Column:
     return expr
 
 
+def dependents_sql(c: str) -> str:
+    """The app.py:42-48 defensive parse as SQL over the expression text
+    ``c``: '3+' -> 3, else int(x), else null (try_cast: null-on-error
+    even under ANSI mode). The one definition of the rule: the training
+    frame, the single-row request and :func:`clean_dependents` all use it."""
+    return "CASE WHEN " + c + " = '3+' THEN 3 ELSE try_cast(" + c + " AS INT) END"
+
+
 def clean_dependents(col: Column | str) -> Column:
-    """The app.py:42-48 defensive parse: '3+' -> 3, else int(x), else null
-    (try_cast: null-on-error even under ANSI mode)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(c == "3+", F.lit(3)).otherwise(c.try_cast("int"))
+    """:func:`dependents_sql` as an INT column. A Column argument has no
+    SQL text, so it enters the rule as the variable of a SQL lambda."""
+    if isinstance(col, str):
+        return F.expr(dependents_sql(ident_sql(col)))
+    return F.call_function("transform", F.array(col), F.expr("d -> " + dependents_sql("d")))[0]
 
 
 def nan_to_null(col: Column | str) -> Column:

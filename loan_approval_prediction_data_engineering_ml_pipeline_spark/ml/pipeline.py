@@ -24,16 +24,21 @@ from pyspark.ml.classification import LogisticRegression, RandomForestClassifier
 from pyspark.ml.evaluation import MulticlassClassificationEvaluator
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.cleaning import clean_dependents, label_encode
+from ..functions.cleaning import dependents_sql, label_encode
+from ..functions.vectors import ident_sql
 from ..sources.schemas import LOAN_CATEGORICAL_COLS, LOAN_LABEL_COL, LOAN_NUMERIC_COLS
 from .transformers import FusedPreprocessor
 
-DERIVED_NUMERIC = ["Total_Income"]
+# the derived columns as SQL over the joined loan columns: the training
+# frame (prepare_loan_frame) and the single-row request (ml.scoring)
+# both compute them from this text
+DERIVED_SQL = {
+    "Dependents_num": "CAST(" + dependents_sql(ident_sql("Dependents")) + " AS DOUBLE)",
+    "Total_Income": ident_sql("ApplicantIncome") + " + " + ident_sql("CoapplicantIncome"),
+}
 # the preprocessor's default inputs: Dependents enters as its cleaned
 # numeric twin, never as a category
-NUMERIC_FEATURES = [c for c in LOAN_NUMERIC_COLS if c != "Dependents"] + [
-    "Dependents_num", *DERIVED_NUMERIC
-]
+NUMERIC_FEATURES = [c for c in LOAN_NUMERIC_COLS if c != "Dependents"] + list(DERIVED_SQL)
 CATEGORICAL_FEATURES = [c for c in LOAN_CATEGORICAL_COLS if c != "Dependents"]
 
 
@@ -44,8 +49,7 @@ def prepare_loan_frame(
     drop the key, '3+' -> 3 cast, Y/N -> 1/0 label, Total_Income."""
     df = applicant.join(financial, "Loan_ID", "inner").join(loan, "Loan_ID", "inner").drop("Loan_ID")
     return (
-        df.withColumn("Dependents_num", clean_dependents("Dependents").cast("double"))
-        .withColumn("Total_Income", F.col("ApplicantIncome") + F.col("CoapplicantIncome"))
+        df.withColumns({c: F.expr(sql) for c, sql in DERIVED_SQL.items()})
         .withColumn("label", label_encode(LOAN_LABEL_COL, {"Y": 1, "N": 0}).cast("double"))
         .drop(LOAN_LABEL_COL)
     )

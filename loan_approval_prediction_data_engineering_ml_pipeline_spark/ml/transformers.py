@@ -102,7 +102,7 @@ class FusedPreprocessorModel(Model, _FusedParams, DefaultParamsReadable, Default
     def __init__(self, *, statsJson: str = '{"numeric": {}, "categorical": {}}'):
         super().__init__()
         self._set(statsJson=statsJson)
-        self._rendered: tuple[str, str, dict] | None = None
+        self._rendered: tuple[str, list[str], dict] | None = None
 
     @property
     def stats(self) -> dict:
@@ -110,10 +110,10 @@ class FusedPreprocessorModel(Model, _FusedParams, DefaultParamsReadable, Default
         {mode, vocab}}}``, each in column order."""
         return json.loads(self.getOrDefault(self.statsJson))
 
-    def _render(self) -> tuple[str, dict]:
-        """The feature array as SQL text plus its ``ml_attr`` metadata,
-        rendered once per fitted stats, so a request costs O(1) py4j
-        calls however many slots there are."""
+    def _render(self) -> tuple[list[str], dict]:
+        """One SQL expression per feature slot plus the ``ml_attr``
+        metadata, rendered once per fitted stats, so a request costs O(1)
+        py4j calls however many slots there are."""
         key = self.getOrDefault(self.statsJson)
         if self._rendered is None or self._rendered[0] != key:
             stats, slots, numeric, binary = self.stats, [], [], []
@@ -132,10 +132,16 @@ class FusedPreprocessorModel(Model, _FusedParams, DefaultParamsReadable, Default
                     binary.append({"idx": len(slots) - 1, "name": f"{c}_{v}"})
             attrs = {k: v for k, v in (("numeric", numeric), ("binary", binary)) if v}
             meta = {"ml_attr": {"attrs": attrs, "num_attrs": len(slots)}}
-            self._rendered = (key, "array(" + ", ".join(slots) + ")", meta)
+            self._rendered = (key, slots, meta)
         return self._rendered[1], self._rendered[2]
 
+    def slot_sql(self) -> list[str]:
+        """The SQL text of each ``features`` slot, in slot order, over the
+        input columns; ``ml.scoring`` compiles it into its statement."""
+        return self._render()[0]
+
     def _transform(self, dataset: DataFrame) -> DataFrame:
-        sql, meta = self._render()
+        slots, meta = self._render()
         out = self.getOrDefault(self.outputCol)
-        return dataset.withColumn(out, array_to_vector(F.expr(sql)).alias(out, metadata=meta))
+        features = array_to_vector(F.expr("array(" + ", ".join(slots) + ")"))
+        return dataset.withColumn(out, features.alias(out, metadata=meta))

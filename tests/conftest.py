@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
+import threading
 
 import pytest
 
@@ -9,6 +11,28 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
+
+
+@contextlib.contextmanager
+def count_py4j_round_trips():
+    """Count the py4j commands this thread sends to the JVM inside the
+    block; yields a list whose one element holds the count. py4j's
+    finalizer thread, which releases Java objects in the background, is
+    not counted."""
+    from py4j.clientserver import ClientServerConnection
+
+    send, me, count = ClientServerConnection.send_command, threading.get_ident(), [0]
+
+    def counted(self, command):
+        if threading.get_ident() == me:
+            count[0] += 1
+        return send(self, command)
+
+    ClientServerConnection.send_command = counted
+    try:
+        yield count
+    finally:
+        ClientServerConnection.send_command = send
 
 
 @pytest.fixture(scope="session")

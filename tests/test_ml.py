@@ -75,6 +75,11 @@ def test_dependents_rewrite(loan_df):
     # '3+' -> 3.0 (LP.ipynb:678-681 cell 14); nulls preserved for imputation
     vals = {r["Dependents_num"] for r in loan_df.select("Dependents_num").distinct().collect()}
     assert vals == {0.0, 1.0, 2.0, 3.0, None}
+    # a Column argument goes through the same rule as a column name
+    pairs = loan_df.select(
+        clean_dependents("Dependents").alias("a"), clean_dependents(F.col("Dependents")).alias("b")
+    ).distinct().collect()
+    assert {(r["a"], r["b"]) for r in pairs} == {(0, 0), (1, 1), (2, 2), (3, 3), (None, None)}
 
 
 def _slots(out, col: str = "features") -> list[list[float]]:
@@ -330,19 +335,55 @@ def test_double_sql_keeps_non_finite_values(spark):
     assert vals[2:] == [math.inf, -math.inf]
 
 
-def test_score_single_row_is_job_free_and_matches_batch(spark, lr_model):
+_REQUEST = {
+    "Gender": "Male", "Married": "Yes", "Dependents": "0", "Education": "Graduate",
+    "Self_Employed": "No", "ApplicantIncome": 5849.0, "CoapplicantIncome": 0.0,
+    "LoanAmount": 128.0, "Loan_Amount_Term": 360.0, "Credit_History": 1.0,
+    "Property_Area": "Urban",
+}
+
+
+@pytest.fixture(scope="module")
+def rf_model(loan_df):
+    from pyspark.ml.classification import RandomForestClassifier
+
+    clf = RandomForestClassifier(numTrees=5, maxDepth=3, seed=7, labelCol="label",
+                                 featuresCol="features")
+    return build_pipeline(clf).fit(loan_df)
+
+
+def test_score_single_row_is_job_free_and_matches_batch(spark, loan_df, lr_model, rf_model,
+                                                        tmp_path):
+    from itertools import combinations
+
+    from pyspark.ml import PipelineModel
+    from pyspark.ml.classification import LogisticRegression
     from pyspark.ml.functions import vector_to_array
 
+    from loan_approval_prediction_data_engineering_ml_pipeline_spark.ml.scoring import _statement
     from loan_approval_prediction_data_engineering_ml_pipeline_spark.sources.schemas import (
         LOAN_NUMERIC_COLS,
     )
 
-    base = {
-        "Gender": "Male", "Married": "Yes", "Dependents": "0", "Education": "Graduate",
-        "Self_Employed": "No", "ApplicantIncome": 5849.0, "CoapplicantIncome": 0.0,
-        "LoanAmount": 128.0, "Loan_Amount_Term": 360.0, "Credit_History": 1.0,
-        "Property_Area": "Urban",
-    }
+    # reloaded and scored once, then given a new threshold: the statement
+    # kept on the model must follow it
+    lr_model.write().overwrite().save(str(tmp_path / "lr"))
+    reloaded = PipelineModel.load(str(tmp_path / "lr"))
+    score_single_row(spark, reloaded, dict(_REQUEST))
+    reloaded.stages[1].setThreshold(0.3)
+    no_intercept, multinomial = (build_pipeline(LogisticRegression(
+        maxIter=10, labelCol="label", featuresCol="features", **kw)).fit(loan_df)
+        for kw in ({"fitIntercept": False}, {"family": "multinomial"}))
+    models = {"lr": lr_model, "rf": rf_model, "lr reloaded, threshold 0.3": reloaded,
+              "lr without intercept": no_intercept, "lr multinomial": multinomial}
+
+    # +inf and -inf in two inputs whose LR weights share a sign: a NaN margin
+    pre, lr = lr_model.stages
+    weight = dict(zip(pre.getOrDefault(pre.numericCols), lr.coefficients.toArray()))
+    nan_pair = next((a, b) for a, b in combinations(
+        ["LoanAmount", "Loan_Amount_Term", "Credit_History"], 2) if weight[a] * weight[b] > 0)
+
+    base = _REQUEST
     rows = [
         base,
         {**base, "Gender": None, "LoanAmount": None, "Credit_History": None},
@@ -353,17 +394,13 @@ def test_score_single_row_is_job_free_and_matches_batch(spark, lr_model):
         {**base, "Self_Employed": "it's a \\ path\\"},  # quote and backslashes
         {**base, "ApplicantIncome": math.nan},  # NaN is imputed like null
         {k: v for k, v in base.items() if k not in ("Married", "LoanAmount")},  # missing keys
+        {**base, "Education": "x'); SELECT 1 --", "Gender": "{", "Married": "}"},  # SQL-shaped
+        {**base, "ApplicantIncome": math.inf},
+        {**base, "LoanAmount": -math.inf},
+        {**base, nan_pair[0]: math.inf, nan_pair[1]: -math.inf},
+        {**base, "Credit_History": 0.55},  # between the classes: 0.3 < p_approve < 0.5
     ]
-    sc = spark.sparkContext
-    answers = []
-    for i, row in enumerate(rows):
-        group = f"test_score_single_row_{i}"
-        sc.setJobGroup(group, "score_single_row")
-        try:
-            answers.append(score_single_row(spark, lr_model, dict(row)))
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        assert sc.statusTracker().getJobIdsForGroup(group) == [], f"row {i} launched a job"
+    nan_row = len(rows) - 2
 
     # the batch reference: the same rows through createDataFrame, shaped
     # as prepare_loan_frame shapes the training frame
@@ -380,16 +417,45 @@ def test_score_single_row_is_job_free_and_matches_batch(spark, lr_model):
     ).withColumn("Dependents_num", clean_dependents("Dependents").cast("double")).withColumn(
         "Total_Income", F.col("ApplicantIncome") + F.col("CoapplicantIncome")
     )
-    expected = (
-        lr_model.transform(batch)
-        .orderBy("i")
-        .select("prediction", vector_to_array("probability")[1].alias("p_approve"))
-        .collect()
-    )
-    assert len(expected) == len(answers)
-    for i, (got, want) in enumerate(zip(answers, expected)):
-        assert got["prediction"] == int(want["prediction"]), f"row {i}"
-        assert got["p_approve"] == pytest.approx(want["p_approve"], abs=1e-9), f"row {i}"
+    sc = spark.sparkContext
+    for name, model in models.items():
+        # binomial LR pipelines take the compiled statement, the rest transform
+        assert (_statement(model) is None) == (name in ("rf", "lr multinomial")), name
+        answers = []
+        for i, row in enumerate(rows):
+            group = f"test_score_single_row_{i}"
+            sc.setJobGroup(group, "score_single_row")
+            try:
+                answers.append(score_single_row(spark, model, dict(row)))
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert sc.statusTracker().getJobIdsForGroup(group) == [], f"{name}: row {i} launched a job"
+
+        expected = (
+            model.transform(batch)
+            .orderBy("i")
+            .select("prediction", vector_to_array("probability")[1].alias("p_approve"))
+            .collect()
+        )
+        assert len(expected) == len(answers)
+        for i, (got, want) in enumerate(zip(answers, expected)):
+            assert got["prediction"] == int(want["prediction"]), f"{name}: row {i}"
+            assert got["p_approve"] == pytest.approx(want["p_approve"], abs=1e-9, nan_ok=True), (
+                f"{name}: row {i}")
+        if name == "lr":
+            assert math.isnan(answers[nan_row]["p_approve"]) and answers[nan_row]["prediction"] == 0
+        if name == "lr reloaded, threshold 0.3":
+            assert 0.3 < answers[-1]["p_approve"] < 0.5 and answers[-1]["prediction"] == 1
+
+
+def test_compiled_request_makes_few_py4j_round_trips(spark, lr_model):
+    from .conftest import count_py4j_round_trips
+
+    for _ in range(2):  # compiles the statement, warms the session
+        score_single_row(spark, lr_model, dict(_REQUEST))
+    with count_py4j_round_trips() as trips:
+        score_single_row(spark, lr_model, dict(_REQUEST))
+    assert trips[0] <= 20, trips[0]
 
 
 @pytest.mark.slow
