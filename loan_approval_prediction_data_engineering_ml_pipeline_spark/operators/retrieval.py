@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions import text as X
 from ..functions.parallel import ensure_cpu_parallelism
+from ..sources.memo import memo
 from ..sources.versioned import CommitConflict, _join, log_store_for
 from .index_commit import (
     bucket_map as _bucket_map,
@@ -53,20 +54,6 @@ B = 0.75  #: BM25 length normalization
 # See that module's docstring for the full guarantees.
 
 
-# per-(session, path, resolved meta dir) memo of the 1-row meta
-# relation's collected row — a probe's first eager step is reading
-# (n, avgdl, n_buckets, gram), and a meta dir is immutable once a
-# manifest references it (the _CODEBOOK_CACHE rationale): repeated
-# probes pay zero parquet jobs for it. A new manifest version resolves
-# a fresh object dir and misses naturally. MANIFEST-BACKED ONLY: a
-# legacy flat layout's meta dir is the constant "meta", so an in-place
-# rebuild at the same path would be served stale — flat snapshots skip
-# the memo (ADVICE r17). Dead-application keys are purged on insert,
-# like _CODEBOOK_CACHE, so entries cannot accumulate across
-# SparkSession restarts within one Python process.
-_META_CACHE: dict[tuple[str, str, str], object] = {}
-
-
 class _Bm25Snapshot:
     """One resolved, immutable view of an index: manifest-backed when a
     manifest exists, else the legacy flat layout (read-only compat)."""
@@ -81,33 +68,17 @@ class _Bm25Snapshot:
         return self.spark.read.parquet(_join(self.path, rel))
 
     def meta_row(self):
-        """The collected 1-row meta, memoized per resolved meta dir.
-        Legacy flat layouts (no manifest) are NOT memoized: their meta
-        path never changes, so a same-path rebuild within one session
-        would otherwise serve stale (n, avgdl, n_buckets)."""
-        if self.manifest is None:
-            return self.meta_df().first()
-        rel = self.manifest["meta"]
-        app_id = self.spark.sparkContext.applicationId
-        key = (app_id, self.path, rel)
-        hit = _META_CACHE.get(key)
-        if hit is None:
-            for dead in [c for c in _META_CACHE if c[0] != app_id]:
-                del _META_CACHE[dead]
-            hit = _META_CACHE[key] = self.meta_df().first()
-        return hit
+        """The collected 1-row meta, memoized per meta dir version."""
+        rel = self.manifest["meta"] if self.manifest else "meta"
+        return memo(self.spark, self.path, [rel], "bm25_meta", lambda: self.meta_df().first())
 
     def id_type(self) -> str:
         return self.lengths().schema["id"].dataType.simpleString()
 
     def _read(self, rels: list[str]) -> DataFrame:
-        """Manifest-referenced dirs through the shared index-read handle
-        memo (r18): a probe's plan build used to re-list the posting/
-        length dirs and re-read footers every call — the same driver
-        overhead the ANN probes paid. Manifest object dirs are
-        immutable, so the lazy handle can never serve stale file lists;
-        legacy flat layouts bypass this (read directly below), exactly
-        like the meta memo."""
+        """Index dirs through the read memo: a probe's plan build would
+        otherwise re-list the posting/length dirs and re-read footers
+        every call."""
         from .similarity import cached_index_parquet
 
         return cached_index_parquet(self.spark, self.path, rels)
@@ -124,7 +95,7 @@ class _Bm25Snapshot:
             if not keys:
                 return None
             return self._read([pm[k] for k in keys]).select("tok", "id", "tf")
-        df = self.spark.read.parquet(f"{self.path}/postings")
+        df = self._read(["postings"])
         if probe_buckets is not None and len(probe_buckets) < n_buckets:
             df = df.where(F.col("bucket").isin(probe_buckets))
         return df.select("tok", "id", "tf")
@@ -133,7 +104,7 @@ class _Bm25Snapshot:
         if self.manifest:
             lm = self.manifest["lengths"]
             return self._read([lm[k] for k in sorted(lm)]).select("id", "dl")
-        return self.spark.read.parquet(f"{self.path}/lengths").select("id", "dl")
+        return self._read(["lengths"]).select("id", "dl")
 
     def lengths_for(self, lbs: list[int]) -> DataFrame | None:
         """Partition-pruned (id, dl) for the given id buckets; None when
@@ -145,7 +116,7 @@ class _Bm25Snapshot:
                 return None
             return self._read(rels).select("id", "dl")
         return (
-            self.spark.read.parquet(f"{self.path}/lengths")
+            self._read(["lengths"])
             .where(F.col("lb").isin(list(lbs)))
             .select("id", "dl")
         )

@@ -25,6 +25,7 @@ import json
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import vectors as V
+from ..sources.memo import memo
 from ..sources.versioned import CommitConflict, _join, log_store_for
 from .index_commit import (
     bucket_map,
@@ -74,50 +75,22 @@ def _ivf_snapshot(path: str) -> dict:
     return read_index_manifest(path) or _ivf_manifest_from_flat(path)
 
 
-# Lazy parquet-HANDLE memo for index reads (r18): ``spark.read.parquet``
-# re-lists the index's partition directories and re-reads footers for
-# schema on EVERY probe's plan build — measured 0.3-0.5 s of driver time
-# per probe on a 71-cell index (the whole text-IVF serving regression).
-# The cached object is a LAZY DataFrame holding only the resolved file
-# index (driver metadata — the ``loaders._HANDLE_CACHE`` pattern);
-# every execution still scans the underlying files, so no results are
-# memoized. Keys are (applicationId, index path, basePath+rels):
-# manifest object dirs are immutable so a new committed version misses
-# naturally; IN-PLACE flat (re)builds purge their path's keys via
-# :func:`_invalidate_index_handles` (called by every build_*).
-_PARQUET_HANDLE_CACHE: dict[tuple[str, str, tuple[str, ...]], DataFrame] = {}
-# collected centroid ROWS per resolved centroid dir (bounded: n_lists
-# rows of immutable build metadata — the _CODEBOOK_CACHE rationale);
-# saves one Spark job per single-probe call
-_CENTROID_ROWS_CACHE: dict[tuple[str, str, str], list] = {}
-
-
-def _invalidate_index_handles(path: str) -> None:
-    for k in [k for k in _PARQUET_HANDLE_CACHE if k[1] == path]:
-        del _PARQUET_HANDLE_CACHE[k]
-    for k in [k for k in _CENTROID_ROWS_CACHE if k[1] == path]:
-        del _CENTROID_ROWS_CACHE[k]
-
-
 def cached_index_parquet(
     spark, path: str, rels: list[str], *, base: str | None = None
 ) -> DataFrame:
-    """Memoized lazy parquet read of index-relative dirs (see
-    ``_PARQUET_HANDLE_CACHE``). ``base`` sets ``basePath`` so hive
+    """Lazy parquet read of index-relative dirs through the read memo
+    (``sources/memo.py``): only the resolved file index is kept, every
+    execution still scans the files. ``base`` sets ``basePath`` so hive
     partition columns restore for dir-pruned reads."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, path, (base or "",) + tuple(sorted(rels)))
-    hit = _PARQUET_HANDLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    reader = spark.read
-    if base is not None:
-        reader = reader.option("basePath", base)
-    df = reader.parquet(*[_join(path, r) for r in sorted(rels)])
-    for dead in [k for k in _PARQUET_HANDLE_CACHE if k[0] != app_id]:
-        del _PARQUET_HANDLE_CACHE[dead]
-    _PARQUET_HANDLE_CACHE[key] = df
-    return df
+    rels = sorted(rels)
+
+    def read() -> DataFrame:
+        reader = spark.read
+        if base is not None:
+            reader = reader.option("basePath", base)
+        return reader.parquet(*[_join(path, r) for r in rels])
+
+    return memo(spark, path, rels, ("parquet", base), read)
 
 
 def _ivf_centroids(spark, path: str) -> DataFrame:
@@ -127,19 +100,13 @@ def _ivf_centroids(spark, path: str) -> DataFrame:
 
 
 def _centroid_rows_for(spark, path: str, rel: str) -> list:
-    """The collected centroid table (n_lists bounded rows of immutable
-    build metadata), memoized per resolved centroid dir — one fewer
-    Spark job per single probe. Shared by the IVF and IVF-PQ probes."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, path, rel)
-    hit = _CENTROID_ROWS_CACHE.get(key)
-    if hit is None:
-        for dead in [k for k in _CENTROID_ROWS_CACHE if k[0] != app_id]:
-            del _CENTROID_ROWS_CACHE[dead]
-        hit = _CENTROID_ROWS_CACHE[key] = cached_index_parquet(
-            spark, path, [rel]
-        ).collect()
-    return hit
+    """The collected centroid table (n_lists bounded rows), memoized per
+    centroid dir version — one fewer Spark job per single probe. Shared
+    by the IVF and IVF-PQ probes."""
+    return memo(
+        spark, path, [rel], "centroid_rows",
+        lambda: cached_index_parquet(spark, path, [rel]).collect(),
+    )
 
 
 def _ivf_centroid_rows(spark, path: str) -> list:
@@ -751,7 +718,6 @@ def build_ivf_index(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    _invalidate_index_handles(path)  # in-place flat (re)build
     vecs = embeddings.select(
         F.col(id_col), V.as_double(vec_col).alias("arr")
     ).withColumn("feat", array_to_vector(F.col("arr")))
@@ -899,7 +865,6 @@ def build_lsh_index(
     writes into a fresh immutable object dir and commits the
     next-version manifest, so probes see the rebuilt index and prior
     snapshots stay readable."""
-    _invalidate_index_handles(path)  # in-place flat (re)build
     banded = _lsh_banded_rows(
         embeddings, id_col=id_col, vec_col=vec_col,
         n_planes=n_planes, n_tables=n_tables, dim=dim,
@@ -973,7 +938,6 @@ def write_lsh_signatures(
     exact behavior by prefix masking — the whole tables x bits recall
     frontier from one table (ann_lsh_band_sweep). ``e1`` (first vector
     component) rides along for the staleness fingerprint."""
-    _invalidate_index_handles(path)  # in-place flat (re)build
     v = V.as_double(vec_col)
     tables = F.array(
         *[
@@ -1288,7 +1252,6 @@ def build_pq_index(
     distance: the QUERY stays exact, only the corpus is quantized —
     Jégou et al., "Product Quantization for Nearest Neighbor Search",
     TPAMI 2011)."""
-    _invalidate_index_handles(path)  # in-place flat (re)build
     norm = V.l2_normalize(V.as_double(vec_col))
     df = embeddings.select(F.col(id_col), norm.alias("arr"))
     books, sub = _fit_pq_codebooks(df, m=m, k=k, seed=seed)
@@ -1407,20 +1370,6 @@ def _write_pq_codebooks(
         [(j, c, books[j][c]) for j in range(len(books)) for c in range(len(books[j]))],
         "subspace int, code int, centroid array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(_join(path, rel))
-    # a rebuild invalidates any memoized codebook for this path
-    for key in [key for key in _CODEBOOK_CACHE if key[1] == path]:
-        del _CODEBOOK_CACHE[key]
-    _invalidate_index_handles(path)
-
-
-# per-(session, path, resolved codebook dir) memo of the collected
-# codebook: the probe path is the hot one, and a codebook dir is
-# immutable once a manifest references it — repeated probes pay zero
-# parquet jobs for it (VERDICT r3 #8, same rationale as
-# loaders._HANDLE_CACHE). Keying on the RESOLVED dir means a new
-# manifest version (fresh object dir) misses naturally; an in-place
-# flat rebuild is invalidated by _write_pq_codebooks.
-_CODEBOOK_CACHE: dict[tuple[str, str, str], tuple[int, int, int, list]] = {}
 
 
 def _codebook_rel(path: str) -> str:
@@ -1432,23 +1381,19 @@ def _codebook_rel(path: str) -> str:
 
 
 def _load_codebook(spark, path: str) -> tuple[int, int, int, list]:
-    app_id = spark.sparkContext.applicationId
     rel = _codebook_rel(path)
-    key = (app_id, path, rel)
-    hit = _CODEBOOK_CACHE.get(key)
-    if hit is not None:
-        return hit
-    rows = spark.read.parquet(_join(path, rel)).collect()
-    m = 1 + max(r["subspace"] for r in rows)
-    k = 1 + max(r["code"] for r in rows)
-    sub = len(rows[0]["centroid"])
-    cents = [None] * (m * k)
-    for r in rows:
-        cents[r["subspace"] * k + r["code"]] = list(r["centroid"])
-    for dead in [c for c in _CODEBOOK_CACHE if c[0] != app_id]:
-        del _CODEBOOK_CACHE[dead]
-    _CODEBOOK_CACHE[key] = (m, k, sub, cents)
-    return m, k, sub, cents
+
+    def load() -> tuple[int, int, int, list]:
+        rows = spark.read.parquet(_join(path, rel)).collect()
+        m = 1 + max(r["subspace"] for r in rows)
+        k = 1 + max(r["code"] for r in rows)
+        sub = len(rows[0]["centroid"])
+        cents = [None] * (m * k)
+        for r in rows:
+            cents[r["subspace"] * k + r["code"]] = list(r["centroid"])
+        return m, k, sub, cents
+
+    return memo(spark, path, [rel], "codebook", load)
 
 
 def _adc_table(spark, path: str, query_vec: list[float]) -> list[float]:
@@ -1542,9 +1487,8 @@ def pq_query(
     as a literal array, and score the encoded corpus with one
     whole-stage-codegen aggregate over the code array. No shuffle, no
     Python; top-k is TakeOrderedAndProject. Approximate score ≈ cosine
-    (corpus l2-normalized at build). The codebook is memoized per
-    (session, path, resolved dir), so repeated probes skip its parquet
-    read. The code relation resolves the committed SNAPSHOT (manifest
+    (corpus l2-normalized at build). The codebook goes through the
+    read memo, so repeated probes skip its parquet read. The code relation resolves the committed SNAPSHOT (manifest
     overlay after upserts, flat ``codes`` for fresh builds)."""
     codes = _pq_codes_df(spark, path)
     if exclude_id is not None:
@@ -1978,7 +1922,6 @@ def build_ivfpq_index(
     corpus vectors; 0 skips calibration and records the static
     prior) — the r17 two-scale sweep measured that no static n_probe
     heuristic serves both scattered and clustered corpora."""
-    _invalidate_index_handles(path)  # in-place flat (re)build
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 

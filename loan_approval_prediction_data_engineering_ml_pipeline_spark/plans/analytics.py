@@ -10,13 +10,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import Window as W
 
 from ..sources.loaders import load_table
+from ..sources.memo import memo
 from .registry import query
 
 ORDER_STATUSES = ["F", "O", "P"]
-
-# per-(applicationId, sf_dir) memo of the range join's density-chosen
-# sub-bucket count; entries from dead applications evicted on insert
-_RANGE_K_CACHE: dict[tuple[str, str, float], int] = {}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -547,26 +544,12 @@ def range_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     er = ev.where(F.col("event_type") == "error").select(
         F.col("event_id").alias("error_id"), F.col("user_id").alias("e_user"), us.alias("ets")
     )
-    # the density estimate is a pure function of the fixture, so the
-    # planning aggregate runs once per dataset per process — the
-    # load_table-handle / PQ-codebook memoization precedent. The events
-    # mtime is part of the key: a regenerated fixture at the same path
-    # (scripts/gen_sf1.py) must re-plan, or the density adaptation
-    # silently stops adapting.
-    import os as _os
-
-    norm_dir = _os.path.normpath(sf_dir)
-    try:
-        mtime = _os.path.getmtime(_os.path.join(norm_dir, "events.parquet"))
-    except OSError:
-        mtime = 0.0
-    key = (spark.sparkContext.applicationId, norm_dir, mtime)
-    k = _RANGE_K_CACHE.get(key)
-    if k is None:
-        k = range_join_subbuckets(p, er, "user_id", "e_user", "pts", "ets", gap_us)
-        for dead in [c for c in _RANGE_K_CACHE if c[0] != key[0]]:
-            del _RANGE_K_CACHE[dead]
-        _RANGE_K_CACHE[key] = k
+    # the density estimate is a pure function of the events fixture, so
+    # its planning aggregate runs once per fixture version
+    k = memo(
+        spark, sf_dir, ["events.parquet"], "range_k",
+        lambda: range_join_subbuckets(p, er, "user_id", "e_user", "pts", "ets", gap_us),
+    )
     return adaptive_range_join(
         p, er, "user_id", "e_user", "pts", "ets", gap_us, k=k
     ).select(

@@ -26,20 +26,19 @@ from __future__ import annotations
 
 import datetime
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import versioned as V
 from ..sources.loaders import load_table
+from ..sources.memo import memo
 from .llm_data import _index_dir
 from .registry import query
 
 # statuses committed as versions 0, 1, 2 — append-only by construction
 _VTAB_STATUSES = ("F", "O", "P")
-
-# per-process fixture freshness memo (same pattern as llm_data._FRESH_INDEXES)
-_FRESH_VTABS: set[str] = set()
 
 # oracle strings are registered at import with the sf0.01 fixture path;
 # tests/_retag_oracle rewrites the sf tag for other scales
@@ -53,15 +52,13 @@ def _ensure_vtab(spark: SparkSession, sf_dir: str) -> str:
     table's count — if the testdata was regenerated, rebuild so the
     Spark read and the DuckDB glob keep seeing the same files."""
     path = _index_dir(sf_dir, "vtab")
-    if path in _FRESH_VTABS:
-        return path
-    orders = load_table(spark, sf_dir, "orders")
-    ok = V.latest_version(path) == len(_VTAB_STATUSES) - 1
-    if ok and V._read_manifest(path, 2)["rows"] != orders.count():
-        ok = False
-    if not ok:
-        import shutil
 
+    def fresh() -> None:
+        orders = load_table(spark, sf_dir, "orders")
+        if V.latest_version(path) == len(_VTAB_STATUSES) - 1 and (
+            V._read_manifest(path, 2)["rows"] == orders.count()
+        ):
+            return
         if os.path.exists(path):
             shutil.rmtree(path)
         for status in _VTAB_STATUSES:
@@ -70,7 +67,8 @@ def _ensure_vtab(spark: SparkSession, sf_dir: str) -> str:
                 .repartitionByRange(4, "o_orderdate"),
                 path,
             )
-    _FRESH_VTABS.add(path)
+
+    memo(spark, sf_dir, ["orders.parquet"], ("fresh", path), fresh)
     return path
 
 
@@ -195,22 +193,19 @@ _ORACLE_VTAB_DV_DIR = _index_dir("sf0.01", "vtab_dv")
 
 def _ensure_vtab_dv(spark: SparkSession, sf_dir: str) -> str:
     path = _index_dir(sf_dir, "vtab_dv")
-    if path in _FRESH_VTABS:
-        return path
-    orders = load_table(spark, sf_dir, "orders")
-    f_slice = orders.where(F.col("o_orderstatus") == "F")
-    want_rows = f_slice.where(F.col("o_orderpriority") != "1-URGENT").count()
-    ok = V.latest_version(path) == 1
-    if ok and V._read_raw_manifest(path, 1)["rows"] != want_rows:
-        ok = False
-    if not ok:
-        import shutil
 
+    def fresh() -> None:
+        orders = load_table(spark, sf_dir, "orders")
+        f_slice = orders.where(F.col("o_orderstatus") == "F")
+        want_rows = f_slice.where(F.col("o_orderpriority") != "1-URGENT").count()
+        if V.latest_version(path) == 1 and V._read_raw_manifest(path, 1)["rows"] == want_rows:
+            return
         if os.path.exists(path):
             shutil.rmtree(path)
         V.versioned_write(f_slice.repartitionByRange(4, "o_orderdate"), path)
         V.delete_where(spark, path, [("o_orderpriority", "==", "1-URGENT")])
-    _FRESH_VTABS.add(path)
+
+    memo(spark, sf_dir, ["orders.parquet"], ("fresh", path), fresh)
     return path
 
 

@@ -21,6 +21,7 @@ from ..functions.parallel import ensure_cpu_parallelism
 from ..operators import dedup as D
 from ..operators import similarity as S
 from ..sources.loaders import load_table
+from ..sources.memo import memo
 from .registry import query
 
 
@@ -534,10 +535,6 @@ def _index_dir(sf_dir: str, kind: str) -> str:
     return os.path.join(root, tag, kind)
 
 
-# per-process memo for the ann_ivf staleness guard (one fingerprint
-# comparison per index per process, not per query call)
-_FRESH_INDEXES: set[str] = set()
-
 # Oracle SQL strings are registered once at import; template the index
 # path from the SAME root _index_dir resolves (repo-relative or
 # SPARK_GRAFT_INDEX_DIR) so the Spark probe and the DuckDB oracle
@@ -608,6 +605,7 @@ def _ensure_index(
     spark: SparkSession,
     idx: str,
     *,
+    source: tuple[str, str],
     marker: str,
     src_pairs: DataFrame,
     id_col: str,
@@ -626,29 +624,28 @@ def _ensure_index(
     committed files when the index stores raw components (IVF cells, LSH
     rows); indexes that store only CODES (PQ, IVF-PQ) compare against a
     ``content.fp`` sidecar written at build time — a missing sidecar
-    rebuilds once and writes it. Checked once per process
-    (``_FRESH_INDEXES``); a stale index is rebuilt IN PLACE so the Spark
-    probe and the DuckDB oracle keep reading the same (new) files."""
+    rebuilds once and writes it. Checked once per version of the
+    ``source`` table (``(dir, rel)``, through the read memo); a stale
+    index is rebuilt IN PLACE so the Spark probe and the DuckDB oracle
+    keep reading the same (new) files."""
     import os
 
-    if idx in _FRESH_INDEXES:
-        return idx
-    if not os.path.exists(os.path.join(idx, *marker.split("/"))):
+    def check() -> None:
+        cur = None
+        if os.path.exists(os.path.join(idx, *marker.split("/"))):
+            cur = _emb_fp(src_pairs, id_col)
+            prev = (
+                _emb_fp(stored_pairs(), id_col)
+                if stored_pairs is not None
+                else _read_fp(idx)
+            )
+            if cur == prev:
+                return
         build()
         if stored_pairs is None:
-            _write_fp(idx, _emb_fp(src_pairs, id_col))
-    else:
-        cur = _emb_fp(src_pairs, id_col)
-        prev = (
-            _emb_fp(stored_pairs(), id_col)
-            if stored_pairs is not None
-            else _read_fp(idx)
-        )
-        if cur != prev:
-            build()
-            if stored_pairs is None:
-                _write_fp(idx, cur)
-    _FRESH_INDEXES.add(idx)
+            _write_fp(idx, cur or _emb_fp(src_pairs, id_col))
+
+    memo(spark, source[0], [source[1]], ("fresh", idx), check)
     return idx
 
 
@@ -661,6 +658,7 @@ def _ensure_ivf8(spark: SparkSession, sf_dir: str) -> str:
     return _ensure_index(
         spark,
         idx,
+        source=(sf_dir, "embeddings.parquet"),
         marker="cells/_SUCCESS",
         src_pairs=_emb_pairs(emb),
         id_col="vec_id",
@@ -732,6 +730,7 @@ def _ensure_lsh44(spark: SparkSession, sf_dir: str) -> str:
     return _ensure_index(
         spark,
         idx,
+        source=(sf_dir, "embeddings.parquet"),
         marker="_SUCCESS",
         src_pairs=_emb_pairs(emb),
         id_col="vec_id",
@@ -751,6 +750,7 @@ def _ensure_pq816(spark: SparkSession, sf_dir: str) -> str:
     return _ensure_index(
         spark,
         idx,
+        source=(sf_dir, "embeddings.parquet"),
         marker="codes/_SUCCESS",
         src_pairs=_emb_pairs(emb),
         id_col="vec_id",
@@ -767,6 +767,7 @@ def _ensure_ivfpq(spark: SparkSession, sf_dir: str) -> str:
     return _ensure_index(
         spark,
         idx,
+        source=(sf_dir, "embeddings.parquet"),
         marker="codes/_SUCCESS",
         src_pairs=_emb_pairs(emb),
         id_col="vec_id",
@@ -3488,17 +3489,19 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = _index_dir(sf_dir, "quality_lr")
     wpath = os.path.join(idx, "weights.parquet")
     docs = load_table(spark, sf_dir, "documents")
-    if not os.path.exists(os.path.join(wpath, "_SUCCESS")):
+
+    def fresh() -> None:
+        if os.path.exists(os.path.join(wpath, "_SUCCESS")):
+            fp = docs.agg(F.count("*").alias("n"), F.sum("doc_id").alias("s")).first()
+            meta = {
+                r["bucket"]: r["w"]
+                for r in spark.read.parquet(wpath).where("bucket < -1").collect()
+            }
+            if (float(fp["n"]), float(fp["s"] or 0)) == (meta.get(-2), meta.get(-3)):
+                return
         _build_quality_model(spark, docs, wpath)
-    elif idx not in _FRESH_INDEXES:
-        fp = docs.agg(F.count("*").alias("n"), F.sum("doc_id").alias("s")).first()
-        meta = {
-            r["bucket"]: r["w"]
-            for r in spark.read.parquet(wpath).where("bucket < -1").collect()
-        }
-        if (float(fp["n"]), float(fp["s"] or 0)) != (meta.get(-2), meta.get(-3)):
-            _build_quality_model(spark, docs, wpath)
-    _FRESH_INDEXES.add(idx)
+
+    memo(spark, sf_dir, ["documents.parquet"], ("fresh", idx), fresh)
     w, b = Q.load_weights(spark, wpath)
     return Q.score_documents(docs, w, b, n_buckets=_QLR_BUCKETS).orderBy("doc_id")
 
@@ -4076,23 +4079,25 @@ def bm25_indexed_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     idx = _index_dir(sf_dir, "bm25u1")
     docs = load_table(spark, sf_dir, "documents")
-    if R.read_index_manifest(idx) is None:
+
+    def fresh() -> None:
+        if R.read_index_manifest(idx) is not None:
+            # staleness guard (the ann_ivf pattern): the committed index
+            # must describe the CURRENT documents table. meta's (n, sum_dl)
+            # is an exact fingerprint of the indexed token stream; recompute
+            # it from docs in one map pass and rebuild on mismatch (a new
+            # manifest version — probes in flight keep their snapshot).
+            units = F.filter(X.tokens("text"), lambda t: t != "")
+            a = docs.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.coalesce(F.sum(F.size(units)), F.lit(0)).alias("s"),
+            ).first()
+            m = R._Bm25Snapshot(spark, idx).meta_df().first()
+            if (int(a["n"]), int(a["s"])) == (int(m["n"]), int(m["sum_dl"])):
+                return
         R.build_bm25_index(docs, idx, n_buckets=8, n_files=4)
-    elif idx not in _FRESH_INDEXES:
-        # staleness guard (the ann_ivf pattern): the committed index
-        # must describe the CURRENT documents table. meta's (n, sum_dl)
-        # is an exact fingerprint of the indexed token stream; recompute
-        # it from docs in one map pass and rebuild on mismatch (a new
-        # manifest version — probes in flight keep their snapshot).
-        units = F.filter(X.tokens("text"), lambda t: t != "")
-        a = docs.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum(F.size(units)), F.lit(0)).alias("s"),
-        ).first()
-        m = R._Bm25Snapshot(spark, idx).meta_df().first()
-        if (int(a["n"]), int(a["s"])) != (int(m["n"]), int(m["sum_dl"])):
-            R.build_bm25_index(docs, idx, n_buckets=8, n_files=4)
-    _FRESH_INDEXES.add(idx)
+
+    memo(spark, sf_dir, ["documents.parquet"], ("fresh", idx), fresh)
     queries = spark.createDataFrame(_BM25_QUERIES, "query_id string, term string")
     return R.bm25_topk_indexed(spark, idx, queries, k=10).orderBy(
         "query_id", "rank"
@@ -4578,6 +4583,7 @@ def _ensure_ivftext(spark: SparkSession, sf_dir: str) -> str:
     return _ensure_index(
         spark,
         idx,
+        source=(sf_dir, "documents.parquet"),
         marker="cells/_SUCCESS",
         src_pairs=_emb_pairs(emb, id_col="doc_id"),
         id_col="doc_id",
@@ -4844,6 +4850,7 @@ def _ensure_lshsig88(spark: SparkSession, sf_dir: str) -> str:
     return _ensure_index(
         spark,
         idx,
+        source=(sf_dir, "embeddings.parquet"),
         marker="_SUCCESS",
         src_pairs=_emb_pairs(emb),
         id_col="vec_id",
@@ -5596,6 +5603,7 @@ def _ensure_ivfpq256(spark: SparkSession, sf_dir: str) -> str:
     return _ensure_index(
         spark,
         idx,
+        source=(sf_dir, "embeddings.parquet"),
         marker="codes/_SUCCESS",
         src_pairs=_emb_pairs(emb),
         id_col="vec_id",
@@ -5633,6 +5641,7 @@ def _ensure_ivfpqr256(spark: SparkSession, sf_dir: str) -> str:
     return _ensure_index(
         spark,
         idx,
+        source=(sf_dir, "embeddings.parquet"),
         marker="codes/_SUCCESS",
         src_pairs=_emb_pairs(emb),
         id_col="vec_id",
@@ -5745,6 +5754,7 @@ def _ensure_clustered64(spark: SparkSession, sf_dir: str) -> str:
         _ensure_index(
             spark,
             idx,
+            source=(root, "corpus"),
             marker="codes/_SUCCESS",
             src_pairs=_emb_pairs(corpus),
             id_col="vec_id",

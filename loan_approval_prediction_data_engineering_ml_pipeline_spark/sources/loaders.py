@@ -5,8 +5,14 @@ Reference surface covered here (SURVEY.md §2.1):
 - S2 SQL table scan   (LP.ipynb:51-55 cell 2)   → load_table / load_tables
 - S4/S5 DDL           (MY.ipynb:411-504)        → register_views / save_as_table
 - S6 batched upsert   (MY.ipynb:513-527 cell 13)→ upsert_parquet (REPLACE INTO
-  semantics = PK-dedupe + overwrite; Spark-native, no row loop)
+  semantics = PK-dedupe, written once to a staging dir and renamed into
+  place; Spark-native, no row loop)
 - S9 literal 1-row source (app.py:52-67)        → single_row_frame
+
+Fixture reads go through the read memo (``sources/memo.py``). Full
+rewrites of a plain parquet store (upsert, compaction) swap a staged
+copy in with two renames, and the next call recovers from a crash
+between them, so an interrupted write never loses the store.
 """
 
 from __future__ import annotations
@@ -18,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
+from .memo import memo
 from .schemas import TABLE_SCHEMAS
 
 
@@ -53,36 +60,29 @@ def _path_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(jpath))
 
 
-# Analyzed-handle cache: re-calling spark.read.parquet on the same path
-# re-lists the directory and re-reads footers (~80 ms/table of pure
-# driver overhead that lands in EVERY query's wall time — the bulk of
-# the star_join_agg "regression" chased in VERDICT r2 #6). Fixture
-# parquet is immutable within a process, so the analyzed DataFrame
-# (an immutable logical plan) is reused. Keyed by applicationId so a
-# fresh driver session never sees another session's handles; entries
-# from dead applicationIds are evicted on insert so a long-lived
-# process restarting sessions doesn't accumulate dead JVM handles.
-# The key includes ``validate`` so a validate=False read can never
-# short-circuit a later validate=True call's schema-drift check.
-_HANDLE_CACHE: dict[tuple[str, str, str, bool], DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str, *, validate: bool = True) -> DataFrame:
     """Read one fixture table from parquet.
 
     Parquet carries its own schema (no inference drift possible), so we
     *validate* against the declared StructType instead of overriding —
     catching silent upstream changes, which is the failure mode the
-    reference hit with pandas dtype inference (SURVEY.md §1.3).
+    reference hit with pandas dtype inference (SURVEY.md §1.3). The
+    analyzed handle goes through the read memo (``sources/memo.py``):
+    re-reading re-lists the file and its footer on every query, and
+    ``validate`` is part of the key so an unvalidated read never
+    short-circuits a later schema-drift check.
     """
     # The driver calls queries() with its own SparkSession; pin UTC so
     # timestamp semantics match the DuckDB oracle regardless of host tz.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    app_id = spark.sparkContext.applicationId
-    cache_key = (app_id, os.path.normpath(sf_dir), name, validate)
-    cached = _HANDLE_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
+    rel = f"{name}.parquet"
+    return memo(
+        spark, sf_dir, [rel], ("load_table", validate),
+        lambda: _read_table(spark, os.path.join(sf_dir, rel), name, validate),
+    )
+
+
+def _read_table(spark: SparkSession, file: str, name: str, validate: bool) -> DataFrame:
     if name == "events":
         # events.parquet has shipped as both TIMESTAMP(NANOS) — which
         # Spark's vectorized reader rejects outright — and TIMESTAMP(MICROS).
@@ -91,7 +91,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, *, validate: bool = 
         # applies); a micros column arrives as a timestamp already and only
         # needs the NTZ cast (session tz is pinned UTC).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+        df = spark.read.parquet(file)
         if isinstance(df.schema["ts"].dataType, T.LongType):
             ts_col = F.timestamp_micros(F.expr("ts DIV 1000"))
         else:
@@ -100,7 +100,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, *, validate: bool = 
             "event_id", "ts", "user_id", "event_type", "value", "props"
         )
     else:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        df = spark.read.parquet(file)
     if validate and name in TABLE_SCHEMAS:
         expected = {f.name: f.dataType for f in TABLE_SCHEMAS[name].fields}
         actual = {f.name: f.dataType for f in df.schema.fields}
@@ -108,9 +108,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, *, validate: bool = 
             raise ValueError(
                 f"schema drift in {name}: expected {expected}, got {actual}"
             )
-    for dead in [k for k in _HANDLE_CACHE if k[0] != app_id]:
-        del _HANDLE_CACHE[dead]
-    _HANDLE_CACHE[cache_key] = df
     return df
 
 
@@ -135,6 +132,33 @@ def read_jsonlines(spark: SparkSession, path: str, schema: T.StructType) -> Data
     return spark.read.schema(schema).json(path)
 
 
+def _swap_in(spark: SparkSession, staged: str, path: str) -> None:
+    """Move a fully written ``staged`` dir into place: ``path`` →
+    ``path__old``, ``staged`` → ``path``, then drop ``path__old``. A
+    crash at any step leaves either the old or the new store intact
+    next to the leftovers that :func:`_recover_swap` resolves."""
+    old = path + "__old"
+    if _path_exists(spark, path):
+        _rename_path(spark, path, old)
+    _rename_path(spark, staged, path)
+    _delete_path(spark, old)
+
+
+def _recover_swap(spark: SparkSession, staged: str, path: str) -> None:
+    """Undo what an interrupted :func:`_swap_in` left behind: a stray
+    ``staged`` dir is dropped (its batch was never committed), and
+    ``path__old`` is restored when ``path`` is missing (the crash fell
+    between the two renames) or dropped when both exist (the crash fell
+    after the swap)."""
+    old = path + "__old"
+    _delete_path(spark, staged)
+    if _path_exists(spark, old):
+        if _path_exists(spark, path):
+            _delete_path(spark, old)
+        else:
+            _rename_path(spark, old, path)
+
+
 def upsert_parquet(
     df: DataFrame,
     path: str,
@@ -147,15 +171,23 @@ def upsert_parquet(
     The reference hand-rolls this with a NaN scrub + row loop +
     `REPLACE INTO ... executemany` (MY.ipynb:513-527). Here: union the
     incoming batch with the existing store, keep one row per key
-    (newest wins when ``order_col`` given), overwrite. Distributed,
-    no driver loop; NaN→NULL scrubbing is unnecessary because Spark
-    has single null semantics (SURVEY.md §2.6 F6).
+    (newest wins when ``order_col`` given), write the result ONCE to
+    ``path__staging`` and swap it into place with two directory renames
+    (:func:`_swap_in`). Parquet can't overwrite a path it is reading,
+    and the swap means a crash never loses the store: the next call
+    first recovers the leftovers (:func:`_recover_swap`). The store
+    stays a plain parquet directory. Distributed, no driver loop;
+    NaN→NULL scrubbing is unnecessary because Spark has single null
+    semantics (SURVEY.md §2.6 F6).
 
     At 100 TB you'd use Delta `MERGE INTO` or partition-overwrite to
     avoid rewriting cold partitions; plain parquet (this container) has
-    no transactional merge, so full overwrite is the honest primitive.
+    no transactional merge, so full rewrite is the honest primitive.
     """
     spark = df.sparkSession
+    path = path.rstrip("/")
+    staged = path + "__staging"
+    _recover_swap(spark, staged, path)
     incoming = df.withColumn("__src", F.lit(0))
     try:
         existing = spark.read.parquet(path).withColumn("__src", F.lit(1))
@@ -181,12 +213,8 @@ def upsert_parquet(
         .filter(F.col("__rn") == 1)
         .drop("__rn", "__src")
     )
-    # Parquet can't atomically overwrite a path it is reading: stage then move.
-    staged = path.rstrip("/") + "__staging"
     deduped.write.mode("overwrite").parquet(staged)
-    final = spark.read.parquet(staged)
-    final.write.mode("overwrite").parquet(path)
-    _delete_path(spark, staged)
+    _swap_in(spark, staged, path)
 
 
 # Hive/Spark partition-path escaping, ported to Python (charset from
@@ -426,12 +454,7 @@ def delete_keys_partitioned(
     # matching Spark's partition-path escaping exactly (see
     # escape_hive_path_name; JVM parity asserted in tests).
     for v in set(touched) - kept_parts:
-        part_dir = (
-            f"{partition_col}=__HIVE_DEFAULT_PARTITION__"
-            if v is None
-            else f"{escape_hive_path_name(partition_col)}={escape_hive_path_name(str(v))}"
-        )
-        _delete_path(spark, path.rstrip("/") + "/" + part_dir)
+        _delete_path(spark, path.rstrip("/") + "/" + partition_dir_name(partition_col, v))
     return n_deleted
 
 
@@ -495,15 +518,17 @@ def compact_parquet(spark: SparkSession, path: str, *, target_files: int | None 
     """Small-files compaction: rewrite a parquet dataset into ~target_files
     outputs via coalesce (no shuffle). Streaming sinks and over-parallel
     writers fragment tables; scan cost at 100 TB is dominated by file
-    count as much as bytes. Stage-then-swap like upsert_parquet."""
+    count as much as bytes. Written once to ``path__compact`` and swapped
+    in like upsert_parquet."""
+    path = path.rstrip("/")
+    staged = path + "__compact"
+    _recover_swap(spark, staged, path)
     df = spark.read.parquet(path)
     if target_files is None:
         n_rows = df.count()
         target_files = max(1, (n_rows + target_rows_per_file - 1) // target_rows_per_file)
-    staged = path.rstrip("/") + "__compact"
     df.coalesce(target_files).write.mode("overwrite").parquet(staged)
-    spark.read.parquet(staged).write.mode("overwrite").parquet(path)
-    _delete_path(spark, staged)
+    _swap_in(spark, staged, path)
 
 
 def write_partitioned_by_day(df: DataFrame, path: str, ts_col: str = "ts") -> None:

@@ -478,19 +478,26 @@ def test_pq_index_and_rerank_pipeline(spark, tmp_path):
     pq = S.pq_query(spark, idx, qv, 5, exclude_id=0)
     plan = pq._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan and "TakeOrderedAndProject" in plan  # (c)
-    books = {
-        (r["subspace"], r["code"]): r["centroid"]
-        for r in spark.read.parquet(idx + "/codebooks").collect()
-    }
-    codes = {r["vec_id"]: r["codes"] for r in spark.read.parquet(idx + "/codes").collect()}
     qn = math.sqrt(sum(x * x for x in qv))
     q = [x / qn for x in qv]
-    for r in pq.collect():
-        expect = sum(
-            sum(q[j * 8 + i] * books[(j, c)][i] for i in range(8))
-            for j, c in enumerate(codes[r["vec_id"]])
-        )
-        assert abs(r["pq_score"] - round(expect, 6)) <= 1e-6, r
+
+    def assert_adc_exact(rows) -> dict:
+        """Check the probe's scores against the stored codebook and
+        codes; returns the codes."""
+        books = {
+            (r["subspace"], r["code"]): r["centroid"]
+            for r in spark.read.parquet(idx + "/codebooks").collect()
+        }
+        codes = {r["vec_id"]: r["codes"] for r in spark.read.parquet(idx + "/codes").collect()}
+        for r in rows:
+            expect = sum(
+                sum(q[j * 8 + i] * books[(j, c)][i] for i in range(8))
+                for j, c in enumerate(codes[r["vec_id"]])
+            )
+            assert abs(r["pq_score"] - round(expect, 6)) <= 1e-6, r
+        return codes
+
+    codes = assert_adc_exact(pq.collect())
 
     # (b)+(d) rerank pipeline recall + exactness
     got = {r["vec_id"]: r["cosine"] for r in
@@ -504,27 +511,69 @@ def test_pq_index_and_rerank_pipeline(spark, tmp_path):
     # the encoded corpus is m one-byte-range ints per vector
     assert all(len(c) == 8 and all(0 <= x < 16 for x in c) for c in codes.values())
 
-    # (e) VERDICT r3 #8: the codebook is memoized per (session, path) —
-    # a second probe must run NO parquet job against /codebooks (the
-    # probe path is the hot one). Assert by poisoning the reader.
+    # (e) VERDICT r3 #8: the codebook goes through the read memo — a
+    # second probe must run NO parquet job against /codebooks (the
+    # probe path is the hot one). Assert by recording the reader.
+    import os
+    import shutil
     from unittest import mock
 
-    real_parquet = type(spark.read).parquet
+    from loan_approval_prediction_data_engineering_ml_pipeline_spark.operators import (
+        retrieval as R,
+    )
 
-    def guarded(reader, *paths):
-        assert not any(p.endswith("/codebooks") for p in paths), (
-            "second pq_query probe re-read the codebook parquet"
-        )
+    real_parquet = type(spark.read).parquet
+    read_paths: list[str] = []
+
+    def recording(reader, *paths):
+        read_paths.extend(paths)
         return real_parquet(reader, *paths)
 
-    with mock.patch.object(type(spark.read), "parquet", guarded):
-        again = S.pq_query(spark, idx, qv, 5, exclude_id=0).collect()
+    def reads_of(probe) -> list[str]:
+        read_paths.clear()
+        with mock.patch.object(type(spark.read), "parquet", recording):
+            probe()
+        return list(read_paths)
+
+    again = []
+    assert reads_of(lambda: again.extend(S.pq_query(spark, idx, qv, 5, exclude_id=0).collect())) == []
     assert [r["vec_id"] for r in again] == [r["vec_id"] for r in pq.collect()]
 
-    # a rebuild invalidates the memo: after build_pq_index the next probe
-    # re-reads the (new) codebook rather than serving stale centroids
-    S.build_pq_index(emb, idx, m=8, k=16, seed=42)
-    assert all(key[1] != idx for key in S._CODEBOOK_CACHE)
+    # a rebuild by another seed is seen: the next probe re-reads the
+    # codebook once and scores with the new one
+    S.build_pq_index(emb, idx, m=8, k=16, seed=7)
+    rebuilt = []
+    paths = reads_of(lambda: rebuilt.extend(S.pq_query(spark, idx, qv, 5, exclude_id=0).collect()))
+    assert [p for p in paths if p.endswith("/codebooks")] == [idx + "/codebooks"]
+    assert_adc_exact(rebuilt)
+
+    # a warm second probe reads no parquet dir, on flat and
+    # manifest-backed (post-upsert) IVF, PQ and BM25 indexes
+    ivf = str(tmp_path / "ivf")
+    S.build_ivf_index(emb, ivf, n_lists=4, seed=42)
+    docs = load_table(spark, SF, "documents")
+    bm25, bm25_flat = str(tmp_path / "bm25"), str(tmp_path / "bm25_flat")
+    R.build_bm25_index(docs, bm25, n_buckets=4, n_files=2)
+    shutil.copytree(
+        os.path.join(bm25, R.read_index_manifest(bm25)["meta"].rsplit("/", 1)[0]), bm25_flat
+    )
+    terms = spark.createDataFrame([("q", "data"), ("q", "spark")], "query_id string, term string")
+    probes = {
+        "ivf": lambda: S.ivf_query(spark, ivf, qv, 5, n_probe=2).collect(),
+        "pq": lambda: S.pq_query(spark, idx, qv, 5).collect(),
+        "bm25": lambda: R.bm25_topk_indexed(spark, bm25, terms, k=5).collect(),
+        "bm25_flat": lambda: R.bm25_topk_indexed(spark, bm25_flat, terms, k=5).collect(),
+    }
+    for name, probe in probes.items():
+        probe()
+        assert reads_of(probe) == [], name
+    delta = emb.where(F.col("vec_id") < 5)
+    S.ivf_upsert(spark, ivf, delta)
+    S.pq_upsert(spark, idx, delta)
+    assert S.read_index_manifest(ivf) and S.read_index_manifest(idx)
+    for name in ("ivf", "pq"):
+        probes[name]()
+        assert reads_of(probes[name]) == [], name + " (manifest-backed)"
 
 
 def test_export_training_shards_deterministic_and_complete(spark, tmp_path):

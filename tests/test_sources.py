@@ -74,6 +74,39 @@ def test_handle_cache_never_skips_validation(spark, tmp_path):
         load_table(spark, str(tmp_path), "customer")  # validate=True default
 
 
+@pytest.mark.parametrize("crash", ["before_swap", "between_renames", "after_swap"])
+def test_upsert_parquet_recovers_from_crash_during_swap(spark, tmp_path, monkeypatch, crash):
+    """upsert_parquet writes the merged store once to a staging dir and
+    swaps it in with two renames. A crash at any point of the swap must
+    leave the next upsert_parquet a recoverable store and give the
+    correct merged rows."""
+    import os
+
+    from loan_approval_prediction_data_engineering_ml_pipeline_spark.sources import loaders as L
+
+    path = str(tmp_path / "t")
+    L.upsert_parquet(spark.createDataFrame([(1, "a"), (2, "b")], "id long, val string"), path, ["id"])
+    batch = spark.createDataFrame([(2, "b2"), (3, "c")], "id long, val string")
+    real, calls = L._rename_path, []
+
+    def rename(spark_, src, dst):
+        calls.append(dst)
+        if crash == "before_swap" or (crash == "between_renames" and len(calls) == 2):
+            raise IOError("injected crash")
+        real(spark_, src, dst)
+        if crash == "after_swap" and len(calls) == 2:
+            raise IOError("injected crash")
+
+    monkeypatch.setattr(L, "_rename_path", rename)
+    with pytest.raises(IOError, match="injected crash"):
+        L.upsert_parquet(batch, path, ["id"])
+    monkeypatch.undo()
+    assert os.path.exists(path) == (crash != "between_renames")
+    L.upsert_parquet(batch, path, ["id"])
+    assert {tuple(r) for r in spark.read.parquet(path).collect()} == {(1, "a"), (2, "b2"), (3, "c")}
+    assert not os.path.exists(path + "__staging") and not os.path.exists(path + "__old")
+
+
 def test_csv_roundtrip_declared_schema(spark, tmp_path):
     from loan_approval_prediction_data_engineering_ml_pipeline_spark.sources.loaders import read_csv
 
