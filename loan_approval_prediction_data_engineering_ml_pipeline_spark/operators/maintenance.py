@@ -19,6 +19,12 @@ aggregate per refresh (no shuffle of fact rows — xxhash64 reduces each
 row to 8 bytes before the per-partition sum). Cold store partitions keep
 byte-identical files (asserted in tests), so downstream consumers see
 stable snapshots for unchanged data.
+
+Both write their output once to ``<store>__staging`` and commit it
+through the loaders' one commit path (``sources/loaders._swap_in``): the
+rollup by a partition swap of the changed partitions, the SCD2 store and
+the rollup manifest by a whole-store swap. Each call first recovers a
+crash left by the previous one, so no crash loses or mixes a partition.
 """
 
 from __future__ import annotations
@@ -28,11 +34,10 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..sources.loaders import (
-    _delete_path,
     _path_exists,
-    _rename_path,
-    _stage_and_dynamic_overwrite,
-    escape_hive_path_name,
+    _recover_swap,
+    _swap_in,
+    _touched_partition_predicate,
     partition_dir_name,
 )
 
@@ -72,10 +77,18 @@ def incremental_rollup(
     must be partition-local — true for any groupBy that includes the
     partition column). Partitions that vanished from the fact are
     deleted from the store. The fingerprint manifest lives next to the
-    store (``<store>__manifest``) and is rewritten atomically last, so a
-    crashed refresh re-runs (idempotent) rather than losing changes.
+    store (``<store>__manifest``) and is swapped in last, so a crashed
+    refresh re-runs (idempotent) rather than losing changes. A refresh
+    without a manifest (the first, ``full_rebuild=True``, or after a
+    lost manifest) rewrites every partition, so it swaps in the whole
+    store, and store partitions the fact no longer has go with the old
+    copy.
     """
-    manifest_path = store_path.rstrip("/") + "__manifest"
+    store_path = store_path.rstrip("/")
+    manifest_path = store_path + "__manifest"
+    staged, staged_manifest = store_path + "__staging", manifest_path + "__staging"
+    _recover_swap(spark, staged, store_path)
+    _recover_swap(spark, staged_manifest, manifest_path)
     fp = _partition_fingerprints(fact, partition_col)
 
     # existence is checked explicitly: a manifest READ failure (corrupt
@@ -87,28 +100,15 @@ def incremental_rollup(
 
     if old is None:
         changed = [r[0] for r in fp.select(partition_col).collect()]
-        removed: list = []
-        # a manifest-less build over an EXISTING store (recovery after a
-        # crash in the swap window, or full_rebuild=True) must also drop
-        # store partitions the fact no longer has — otherwise they stay
-        # orphaned forever (neither the rebuilt manifest nor any future
-        # fact lists them). Compared at the escaped-dir-name level so
-        # hive escaping round-trips exactly.
-        if _path_exists(spark, store_path):
-            expected_dirs = {partition_dir_name(partition_col, v) for v in changed}
-            jpath = spark._jvm.org.apache.hadoop.fs.Path(store_path)
-            fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-            prefix = f"{escape_hive_path_name(partition_col)}="
-            for st in fs.listStatus(jpath):
-                name = st.getPath().getName()
-                if st.isDirectory() and name.startswith(prefix) and name not in expected_dirs:
-                    _delete_path(spark, store_path.rstrip("/") + "/" + name)
+        sub, parts = fact, None
     else:
         j = fp.alias("new").join(
             old.alias("old"),
             F.col(f"new.{partition_col}").eqNullSafe(F.col(f"old.{partition_col}")),
             "full_outer",
         )
+        # changed includes removed partitions: they have no fact rows, so
+        # no dir in staging, and the partition swap drops them
         changed = [
             r[0]
             for r in j.where(
@@ -120,39 +120,20 @@ def incremental_rollup(
             .select(F.coalesce(F.col(f"new.{partition_col}"), F.col(f"old.{partition_col}")))
             .collect()
         ]
-        removed = [
-            r[0]
-            for r in j.where(F.col(f"new.{partition_col}").isNull())
-            .select(F.col(f"old.{partition_col}"))
-            .collect()
-        ]
-
-    live_changed = [v for v in changed if v not in set(removed)]
-    if live_changed:
-        from ..sources.loaders import _touched_partition_predicate
-
-        sub = fact.filter(_touched_partition_predicate(partition_col, live_changed))
+        sub = fact.filter(_touched_partition_predicate(partition_col, changed))
+        parts = [partition_dir_name(partition_col, v) for v in changed]
+    if old is None or changed:
         agg = agg_fn(sub)
         if partition_col not in agg.columns:
             raise ValueError(f"agg_fn must retain partition column {partition_col!r}")
-        staged = store_path.rstrip("/") + "__rollup_staging"
-        _stage_and_dynamic_overwrite(agg, store_path, partition_col, staged)
-        _delete_path(spark, staged)
-    for v in removed:
-        _delete_path(
-            spark, store_path.rstrip("/") + "/" + partition_dir_name(partition_col, v)
-        )
-    # manifest last, via staging + rename: a refresh that dies before
-    # this point simply re-runs; a mode=overwrite directly on
-    # manifest_path could die mid-write and leave a PARTIAL manifest
-    # that _path_exists sees but spark.read cannot parse — bricking
-    # every later refresh. With the swap, a crash leaves either the old
-    # manifest (stale: refresh re-runs) or none (full rebuild: the
-    # manifest is derivable data) — never a corrupt one.
-    staged_manifest = manifest_path + "__staging"
+        agg.write.mode("overwrite").partitionBy(partition_col).parquet(staged)
+        _swap_in(spark, staged, store_path, parts)
+    # manifest last: a refresh that dies before this point simply
+    # re-runs; a crash in its swap leaves the old manifest (stale:
+    # refresh re-runs) or, after recovery, the new one — never a partial
+    # manifest that _path_exists sees but spark.read cannot parse
     fp.coalesce(1).write.mode("overwrite").parquet(staged_manifest)
-    _delete_path(spark, manifest_path)
-    _rename_path(spark, staged_manifest, manifest_path)
+    _swap_in(spark, staged_manifest, manifest_path)
     return len(changed)
 
 
@@ -179,29 +160,35 @@ def scd2_merge(
     The merge is one full-outer-free pass: dim LEFT JOIN changes decides
     close/keep per existing row; changes LEFT ANTI dim-current finds
     inserts. Dimensions are orders of magnitude smaller than facts, so
-    the store rewrite is staged-overwrite (the fact-side analog with
+    both the first load and the merge write the whole store once to
+    ``dim_path__staging`` and swap it in (``sources/loaders._swap_in``);
+    a crash mid-swap never loses the history (the fact-side analog with
     partition granularity is :func:`incremental_rollup`)."""
     import functools
 
-    # path-missing is the ONLY condition that means 'store is empty';
-    # any read failure on an existing store propagates — overwriting on
-    # e.g. a transient FS error would destroy the SCD2 history (ADVICE r3)
-    empty = not _path_exists(spark, dim_path)
-    if not empty:
-        dim = spark.read.parquet(dim_path)
+    dim_path = dim_path.rstrip("/")
+    staged = dim_path + "__staging"
+    _recover_swap(spark, staged, dim_path)
     ch = changes.select(
         *key_cols, *attr_cols, F.col(eff_col).alias("__eff")
     )
-    if empty:
-        out = ch.select(
+
+    def opened(rows: DataFrame) -> DataFrame:
+        return rows.select(
             *key_cols, *attr_cols,
             F.col("__eff").alias("valid_from"),
             F.lit(None).cast(ch.schema["__eff"].dataType).alias("valid_to"),
             F.lit(True).alias("is_current"),
         )
-        out.write.mode("overwrite").parquet(dim_path)
-        return
 
+    # path-missing is the ONLY condition that means 'store is empty';
+    # any read failure on an existing store propagates — overwriting on
+    # e.g. a transient FS error would destroy the SCD2 history (ADVICE r3)
+    if not _path_exists(spark, dim_path):
+        opened(ch).write.mode("overwrite").parquet(staged)
+        _swap_in(spark, staged, dim_path)
+        return
+    dim = spark.read.parquet(dim_path)
     ch = ch.withColumn("__matched", F.lit(True))
     key_eq = functools.reduce(
         lambda a, b: a & b, [dim[k].eqNullSafe(ch[k]) for k in key_cols]
@@ -231,14 +218,9 @@ def scd2_merge(
         lambda a, b: a & b, [cur[a].eqNullSafe(ch[a]) for a in attr_cols]
     )
     unchanged_keys = ch.join(cur, cur_key_eq & cur_attrs_same, "left_semi")
-    new_rows = ch.exceptAll(unchanged_keys).select(
-        *key_cols, *attr_cols,
-        F.col("__eff").alias("valid_from"),
-        F.lit(None).cast(ch.schema["__eff"].dataType).alias("valid_to"),
-        F.lit(True).alias("is_current"),
-    )
-    merged = updated_existing.unionByName(new_rows).localCheckpoint(eager=True)
-    merged.write.mode("overwrite").parquet(dim_path)
+    new_rows = opened(ch.exceptAll(unchanged_keys))
+    updated_existing.unionByName(new_rows).write.mode("overwrite").parquet(staged)
+    _swap_in(spark, staged, dim_path)
 
 
 def _quantile_bin(col: "F.Column", cuts: list[float], lo: int = 0, hi: int | None = None) -> "F.Column":

@@ -12,6 +12,7 @@ the driver's correctness gate.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -26,7 +27,7 @@ from .relational import events_hourly
 # DuckDB oracle can re-derive every deterministic fit-time aggregate
 # (impute medians, modes, category cardinalities, scaler moments, split
 # sizes) from the SAME rows the MLlib fit consumes. Spark-side staleness
-# is fingerprint-guarded per process.
+# is checked once per fixture version (_commit_fixture).
 # ---------------------------------------------------------------------------
 
 _LOAN_FIXTURE_DIR = os.environ.get(
@@ -49,7 +50,27 @@ from ..ml.pipeline import (  # noqa: E402
 
 _PP_NULL_AUDIT = _PP_NUMERIC + _PP_CATEGORICAL + ["Dependents"]
 
-_loan_fixture_fresh = False
+
+def _commit_fixture(
+    spark: SparkSession, path: str, live: DataFrame, same: Callable[[DataFrame], bool]
+) -> None:
+    """Make the committed fixture at ``path`` hold ``live``: unless
+    ``same(committed)`` holds, ``live`` is written once to staging and
+    swapped in. The check runs once per fixture version and application,
+    through the read memo."""
+    from ..sources.loaders import _path_exists, _recover_swap, _swap_in
+    from ..sources.memo import memo
+
+    staged = path + "__staging"
+
+    def check() -> bool:
+        _recover_swap(spark, staged, path)
+        if not (_path_exists(spark, path) and same(spark.read.parquet(path))):
+            live.coalesce(1).write.mode("overwrite").parquet(staged)
+            _swap_in(spark, staged, path)
+        return True
+
+    memo(spark, os.path.dirname(path), [os.path.basename(path)], "fixture_fresh", check)
 
 
 def _frame_fingerprint(df: DataFrame) -> tuple:
@@ -68,10 +89,8 @@ def _ensure_loan_fixture(spark: SparkSession) -> tuple[DataFrame, DataFrame, Dat
     """Build (seed-deterministic) the joined loan frame + split column,
     verify the committed parquet matches it (rebuild if stale), and
     return (train, test, full)."""
-    global _loan_fixture_fresh
     from ..ml.pipeline import prepare_loan_frame
     from ..ml.split import stratified_split
-    from ..sources.loaders import _path_exists
     from ..sources.loan_fixtures import generate_loan_tables
 
     t = generate_loan_tables(spark, seed=42)
@@ -80,14 +99,10 @@ def _ensure_loan_fixture(spark: SparkSession) -> tuple[DataFrame, DataFrame, Dat
     live = train.withColumn("split", F.lit("train")).unionByName(
         test.withColumn("split", F.lit("test"))
     )
-    if not _loan_fixture_fresh:
-        stale = True
-        if _path_exists(spark, _LOAN_JOINED):
-            committed = spark.read.parquet(_LOAN_JOINED)
-            stale = _frame_fingerprint(committed) != _frame_fingerprint(live)
-        if stale:
-            live.coalesce(1).write.mode("overwrite").parquet(_LOAN_JOINED)
-        _loan_fixture_fresh = True
+    _commit_fixture(
+        spark, _LOAN_JOINED, live,
+        lambda committed: _frame_fingerprint(committed) == _frame_fingerprint(live),
+    )
     return train, test, df
 
 
@@ -148,8 +163,6 @@ def _preprocess_oracle() -> str:
         f"SELECT stat, col, value, svalue FROM ({body}) ORDER BY stat, col"
     )
 
-_lr_weights_fresh = False
-
 
 def _export_lr_weights(spark: SparkSession, model) -> None:
     """Flatten the fitted LR's coefficient vector into a named weight
@@ -164,9 +177,6 @@ def _export_lr_weights(spark: SparkSession, model) -> None:
     categorical in ``_PP_CATEGORICAL`` order, each of size len(vocab)
     with slot k = vocab[k] (alphabetical; an unknown category has no
     slot, so it carries weight 0 and needs no row)."""
-    global _lr_weights_fresh
-    from ..sources.loaders import _path_exists
-
     pre, lr = model.stages
     vocab = {c: s["vocab"] for c, s in pre.stats["categorical"].items()}
     coef = list(lr.coefficients)
@@ -183,14 +193,10 @@ def _export_lr_weights(spark: SparkSession, model) -> None:
     live = spark.createDataFrame(
         rows, "kind string, col string, category string, weight double"
     )
-    if not _lr_weights_fresh:
-        stale = True
-        if _path_exists(spark, _LR_WEIGHTS):
-            committed = spark.read.parquet(_LR_WEIGHTS)
-            stale = sorted(map(tuple, committed.collect())) != sorted(rows)
-        if stale:
-            live.coalesce(1).write.mode("overwrite").parquet(_LR_WEIGHTS)
-        _lr_weights_fresh = True
+    _commit_fixture(
+        spark, _LR_WEIGHTS, live,
+        lambda committed: sorted(map(tuple, committed.collect())) == sorted(rows),
+    )
 
 
 def _lr_score_oracle() -> str:

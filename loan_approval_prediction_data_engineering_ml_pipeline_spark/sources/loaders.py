@@ -4,22 +4,23 @@ Reference surface covered here (SURVEY.md §2.1):
 - S1 JSON-lines scan  (MY.ipynb:24-28 cell 1)   → read_jsonlines
 - S2 SQL table scan   (LP.ipynb:51-55 cell 2)   → load_table / load_tables
 - S4/S5 DDL           (MY.ipynb:411-504)        → register_views / save_as_table
-- S6 batched upsert   (MY.ipynb:513-527 cell 13)→ upsert_parquet (REPLACE INTO
-  semantics = PK-dedupe, written once to a staging dir and renamed into
-  place; Spark-native, no row loop)
+- S6 batched upsert   (MY.ipynb:513-527 cell 13)→ upsert_parquet /
+  upsert_parquet_partitioned (REPLACE INTO semantics = PK-dedupe,
+  written once to a staging dir and renamed into place; Spark-native,
+  no row loop)
 - S9 literal 1-row source (app.py:52-67)        → single_row_frame
 
-Fixture reads go through the read memo (``sources/memo.py``). Full
-rewrites of a plain parquet store (upsert, compaction) swap a staged
-copy in with two renames, and the next call recovers from a crash
-between them, so an interrupted write never loses the store.
+Fixture reads go through the read memo (``sources/memo.py``). Every
+rewrite of a plain parquet store, here and in ``operators/maintenance``,
+is written once to ``path__staging`` and committed by :func:`_swap_in`
+(the whole store or a set of partition dirs); the writer's next call
+recovers from a crash mid-swap, so no write loses or mixes a partition.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window as W
@@ -28,12 +29,22 @@ from .memo import memo
 from .schemas import TABLE_SCHEMAS
 
 
-def _delete_path(spark: SparkSession, path: str) -> None:
-    """Remove a staging directory via the Hadoop FS API (works for any
-    supported filesystem, not just file://). Leaving staged copies around
-    doubles storage per operation at scale."""
+def _fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Hadoop Path) for ``path`` — works for any
+    supported filesystem, not just file://."""
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def _subdirs(spark: SparkSession, path: str) -> list[str]:
+    fs, jpath = _fs(spark, path)
+    return [st.getPath().getName() for st in fs.listStatus(jpath) if st.isDirectory()]
+
+
+def _delete_path(spark: SparkSession, path: str) -> None:
+    """Remove a staging directory. Leaving staged copies around doubles
+    storage per operation at scale."""
+    fs, jpath = _fs(spark, path)
     fs.delete(jpath, True)
 
 
@@ -43,8 +54,7 @@ def _rename_path(spark: SparkSession, src: str, dst: str) -> None:
     neither path exists is as small as the filesystem allows (a crash
     there leaves only the derivable artifact missing, never a partial
     one)."""
-    jsrc = spark._jvm.org.apache.hadoop.fs.Path(src)
-    fs = jsrc.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jsrc = _fs(spark, src)
     if not fs.rename(jsrc, spark._jvm.org.apache.hadoop.fs.Path(dst)):
         raise IOError(f"rename {src} -> {dst} failed")
 
@@ -55,8 +65,7 @@ def _path_exists(spark: SparkSession, path: str) -> bool:
     (corrupt footer, transient FS error, permissions) — treating any
     read exception as 'empty' would let a transient error silently
     replace the full store with just the incoming batch (ADVICE r3)."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = _fs(spark, path)
     return bool(fs.exists(jpath))
 
 
@@ -132,31 +141,85 @@ def read_jsonlines(spark: SparkSession, path: str, schema: T.StructType) -> Data
     return spark.read.schema(schema).json(path)
 
 
-def _swap_in(spark: SparkSession, staged: str, path: str) -> None:
-    """Move a fully written ``staged`` dir into place: ``path`` →
-    ``path__old``, ``staged`` → ``path``, then drop ``path__old``. A
-    crash at any step leaves either the old or the new store intact
-    next to the leftovers that :func:`_recover_swap` resolves."""
+def _swap_in(spark: SparkSession, staged: str, path: str, parts: list[str] | None = None) -> None:
+    """Commit a fully written ``staged`` dir to ``path`` by renames, the one
+    commit path for rewrites of a plain parquet store. The whole store
+    (``parts`` None, or no ``path`` yet): ``path`` → ``path__old``,
+    ``staged`` → ``path``. A set of partition dirs: each dir named in
+    ``parts`` or held by ``staged`` is parked as ``path__old/col=v`` and
+    replaced by ``staged/col=v``; one with no staged dir is dropped, and
+    untouched partitions are never renamed. ``path__old`` is then renamed
+    onto the staging name, which every recovery drops, before it is
+    deleted, so a crash mid-delete never brings half a partition back.
+
+    Crash contract, once :func:`_recover_swap` has run: each touched
+    partition (or the whole store) is wholly old or wholly new, never
+    missing or mixed, and re-running the interrupted call converges
+    because every writer that commits here is idempotent. (Spark's
+    dynamic partition overwrite is not atomic across partitions either.)"""
     old = path + "__old"
-    if _path_exists(spark, path):
-        _rename_path(spark, path, old)
-    _rename_path(spark, staged, path)
-    _delete_path(spark, old)
+    if parts is None or not _path_exists(spark, path):
+        if _path_exists(spark, path):
+            _rename_path(spark, path, old)
+        _rename_path(spark, staged, path)
+    else:
+        fs, jold = _fs(spark, old)
+        fs.mkdirs(jold)
+        for d in sorted(set(parts) | set(_subdirs(spark, staged))):
+            if _path_exists(spark, f"{path}/{d}"):
+                _rename_path(spark, f"{path}/{d}", f"{old}/{d}")
+            if _path_exists(spark, f"{staged}/{d}"):
+                _rename_path(spark, f"{staged}/{d}", f"{path}/{d}")
+        _delete_path(spark, staged)
+    if _path_exists(spark, old):
+        _rename_path(spark, old, staged)
+    _delete_path(spark, staged)
 
 
 def _recover_swap(spark: SparkSession, staged: str, path: str) -> None:
-    """Undo what an interrupted :func:`_swap_in` left behind: a stray
-    ``staged`` dir is dropped (its batch was never committed), and
-    ``path__old`` is restored when ``path`` is missing (the crash fell
-    between the two renames) or dropped when both exist (the crash fell
-    after the swap)."""
+    """Undo what an interrupted :func:`_swap_in` left behind. A stray
+    ``staged`` dir is dropped: its batch was never committed, or it holds
+    retired copies. Then each copy parked in ``path__old`` goes back
+    where nothing replaced it — the whole store when ``path`` is missing
+    (the crash fell between the two whole-store renames), else each
+    partition dir missing from ``path`` — and the rest is dropped."""
     old = path + "__old"
     _delete_path(spark, staged)
-    if _path_exists(spark, old):
-        if _path_exists(spark, path):
-            _delete_path(spark, old)
-        else:
-            _rename_path(spark, old, path)
+    if not _path_exists(spark, old):
+        return
+    if not _path_exists(spark, path):
+        _rename_path(spark, old, path)
+        return
+    for d in _subdirs(spark, old):
+        if not _path_exists(spark, f"{path}/{d}"):
+            _rename_path(spark, f"{old}/{d}", f"{path}/{d}")
+    _delete_path(spark, old)
+
+
+def _newest_wins(
+    incoming: DataFrame,
+    existing: DataFrame | None,
+    key_cols: list[str],
+    order_col: str | None = None,
+) -> DataFrame:
+    """REPLACE INTO's merge: one row per key from ``incoming`` ∪
+    ``existing``, the highest ``order_col`` first and the incoming row on
+    a tie. The source tag (incoming=0 < existing=1) is the ultimate
+    tie-break, so even with order_col=None the winner is deterministic —
+    dropDuplicates on the union would keep a partition-order-dependent
+    row and could silently let the existing row survive."""
+    merged = incoming.withColumn("__src", F.lit(0))
+    if existing is not None:
+        merged = merged.unionByName(existing.withColumn("__src", F.lit(1)), allowMissingColumns=False)
+    ordering = [F.col("__src").asc()]
+    if order_col:
+        ordering.insert(0, F.col(order_col).desc())
+    w = W.partitionBy(*key_cols).orderBy(*ordering)
+    return (
+        merged.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn", "__src")
+    )
 
 
 def upsert_parquet(
@@ -171,49 +234,25 @@ def upsert_parquet(
     The reference hand-rolls this with a NaN scrub + row loop +
     `REPLACE INTO ... executemany` (MY.ipynb:513-527). Here: union the
     incoming batch with the existing store, keep one row per key
-    (newest wins when ``order_col`` given), write the result ONCE to
-    ``path__staging`` and swap it into place with two directory renames
-    (:func:`_swap_in`). Parquet can't overwrite a path it is reading,
-    and the swap means a crash never loses the store: the next call
-    first recovers the leftovers (:func:`_recover_swap`). The store
-    stays a plain parquet directory. Distributed, no driver loop;
-    NaN→NULL scrubbing is unnecessary because Spark has single null
-    semantics (SURVEY.md §2.6 F6).
+    (:func:`_newest_wins`), write the result ONCE to ``path__staging``
+    and swap it into place (:func:`_swap_in`). Parquet can't overwrite a
+    path it is reading, and the swap means a crash never loses the
+    store: the next call first recovers the leftovers
+    (:func:`_recover_swap`). The store stays a plain parquet directory.
+    Distributed, no driver loop; NaN→NULL scrubbing is unnecessary
+    because Spark has single null semantics (SURVEY.md §2.6 F6).
 
-    At 100 TB you'd use Delta `MERGE INTO` or partition-overwrite to
-    avoid rewriting cold partitions; plain parquet (this container) has
-    no transactional merge, so full rewrite is the honest primitive.
+    At 100 TB use :func:`upsert_parquet_partitioned`, which rewrites
+    only the touched partitions; this one rewrites the whole store.
     """
     spark = df.sparkSession
     path = path.rstrip("/")
     staged = path + "__staging"
     _recover_swap(spark, staged, path)
-    incoming = df.withColumn("__src", F.lit(0))
-    try:
-        existing = spark.read.parquet(path).withColumn("__src", F.lit(1))
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" not in str(exc):
-            # anything other than "store doesn't exist yet" must surface:
-            # swallowing it here would overwrite (destroy) the live table
-            raise
-        merged = incoming
-    else:
-        merged = incoming.unionByName(existing, allowMissingColumns=False)
-    # REPLACE INTO: the incoming batch must win on key collision. __src
-    # (incoming=0 < existing=1) is the ultimate tie-break, so even with
-    # order_col=None the winner is deterministic — dropDuplicates on the
-    # union would keep a partition-order-dependent row and could silently
-    # let the existing row survive.
-    ordering = [F.col("__src").asc()]
-    if order_col:
-        ordering.insert(0, F.col(order_col).desc())
-    w = W.partitionBy(*key_cols).orderBy(*ordering)
-    deduped = (
-        merged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__src")
-    )
-    deduped.write.mode("overwrite").parquet(staged)
+    # only a missing path means "no store yet": any read failure on an
+    # existing store must surface, not be overwritten with the batch
+    existing = spark.read.parquet(path) if _path_exists(spark, path) else None
+    _newest_wins(df, existing, key_cols, order_col).write.mode("overwrite").parquet(staged)
     _swap_in(spark, staged, path)
 
 
@@ -284,28 +323,6 @@ def _touched_partition_predicate(partition_col: str, values: list):
     return pred
 
 
-def _stage_and_dynamic_overwrite(
-    df: DataFrame, path: str, partition_col: str, staged: str
-) -> DataFrame:
-    """Stage ``df`` (parquet can't atomically overwrite a path it is
-    reading), then dynamic-partition-overwrite the store: only partitions
-    present in the staged frame are replaced. The staged read declares
-    the schema: inference could re-type a partition value (string '007'
-    → int 7) and land the rewrite under a DIFFERENT partition directory,
-    leaving the old one stale. Returns the staged frame (caller must
-    ``_delete_path(staged)`` when done with it)."""
-    spark = df.sparkSession
-    df.write.mode("overwrite").partitionBy(partition_col).parquet(staged)
-    final = spark.read.schema(df.schema).parquet(staged)
-    (
-        final.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
-    return final
-
-
 def upsert_parquet_partitioned(
     df: DataFrame,
     path: str,
@@ -318,7 +335,10 @@ def upsert_parquet_partitioned(
     """S6 at scale: partition-granular REPLACE INTO over a hive-partitioned
     parquet store — only the partitions present in the incoming batch are
     read, merged, and rewritten; cold partitions are never touched (their
-    files stay byte-identical — asserted in tests).
+    files stay byte-identical — asserted in tests). The merged touched
+    partitions are written once to ``path__staging`` and committed by a
+    partition swap (:func:`_swap_in`); the next call recovers a crash
+    mid-swap, leaving each touched partition wholly old or wholly new.
 
     This is the 100 TB shape of ``upsert_parquet``: a daily ingest into a
     day-partitioned store rewrites O(days touched), not O(store). The
@@ -336,30 +356,19 @@ def upsert_parquet_partitioned(
     clustering across repeated upserts instead of degrading (ADVICE r9).
     """
     spark = df.sparkSession
+    path = path.rstrip("/")
+    staged = path + "__staging"
+    _recover_swap(spark, staged, path)
     touched = [r[0] for r in df.select(partition_col).distinct().collect()]
-    incoming = df.withColumn("__src", F.lit(0))
-    touched_pred = _touched_partition_predicate(partition_col, touched)
-    try:
-        existing_all = spark.read.schema(df.schema).parquet(path)
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" not in str(exc):
-            raise
-        merged = incoming
-    else:
+    existing = None
+    if _path_exists(spark, path):
         # partition pruning: only the touched partitions are scanned.
         # The explicit schema pins the partition column to the incoming
         # type — no inference, so values compare like with like.
-        existing = existing_all.filter(touched_pred).withColumn("__src", F.lit(1))
-        merged = incoming.unionByName(existing, allowMissingColumns=False)
-    ordering = [F.col("__src").asc()]
-    if order_col:
-        ordering.insert(0, F.col(order_col).desc())
-    w = W.partitionBy(*key_cols).orderBy(*ordering)
-    deduped = (
-        merged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__src")
-    )
+        existing = spark.read.schema(df.schema).parquet(path).filter(
+            _touched_partition_predicate(partition_col, touched)
+        )
+    deduped = _newest_wins(df, existing, key_cols, order_col)
     if sort_within:
         # the partition column LEADS the sort: the parquet writer's
         # required ordering is (partition cols first), and when the
@@ -371,9 +380,8 @@ def upsert_parquet_partitioned(
         deduped = deduped.repartition(F.col(partition_col)).sortWithinPartitions(
             partition_col, *sort_within
         )
-    staged = path.rstrip("/") + "__upsert_staging"
-    _stage_and_dynamic_overwrite(deduped, path, partition_col, staged)
-    _delete_path(spark, staged)
+    deduped.write.mode("overwrite").partitionBy(partition_col).parquet(staged)
+    _swap_in(spark, staged, path, [partition_dir_name(partition_col, v) for v in touched])
 
 
 def delete_keys_partitioned(
@@ -386,7 +394,10 @@ def delete_keys_partitioned(
     """Targeted row deletion from a hive-partitioned parquet store (the
     right-to-be-forgotten / retention-purge shape): only partitions that
     actually contain a requested key are read, anti-joined, and
-    rewritten — cold partitions keep byte-identical files.
+    rewritten — cold partitions keep byte-identical files. The surviving
+    rows of the touched partitions are written once to ``path__staging``
+    and committed by a partition swap (:func:`_swap_in`), which also
+    drops a touched partition left with no rows.
 
     ``keys`` carries the key columns (extra columns ignored). The
     touched-partition discovery is a full probe of the store UNLESS the
@@ -400,6 +411,9 @@ def delete_keys_partitioned(
     daily) so each partition is rewritten once per cycle, not once per
     request.
     """
+    path = path.rstrip("/")
+    staged = path + "__staging"
+    _recover_swap(spark, staged, path)
     key_set = keys.select(*key_cols).distinct()
     # eqNullSafe, not name-equality: a delete request with a NULL key
     # column must still match its rows (NULL = x is NULL under
@@ -439,22 +453,13 @@ def delete_keys_partitioned(
     affected = store.filter(_touched_partition_predicate(partition_col, touched))
     kept = affected.join(F.broadcast(key_set), key_match, "left_anti")
     n_affected = affected.count()
-    staged = path.rstrip("/") + "__delete_staging"
-    final = _stage_and_dynamic_overwrite(kept, path, partition_col, staged)
+    kept.write.mode("overwrite").partitionBy(partition_col).parquet(staged)
     # count survivors from the (small) staged copy — not by re-running
     # the anti-join against the store a second time
-    n_deleted = n_affected - final.count()
-    # collect surviving partitions BEFORE the staging dir is deleted
-    # (``final`` reads from it)
-    kept_parts = {r[0] for r in final.select(partition_col).distinct().collect()}
-    _delete_path(spark, staged)
-    # dynamic overwrite only replaces partitions PRESENT in the staged
-    # frame — a partition whose every row was deleted is absent from it
-    # and would silently survive. Remove those directories explicitly,
-    # matching Spark's partition-path escaping exactly (see
-    # escape_hive_path_name; JVM parity asserted in tests).
-    for v in set(touched) - kept_parts:
-        _delete_path(spark, path.rstrip("/") + "/" + partition_dir_name(partition_col, v))
+    n_deleted = n_affected - spark.read.schema(kept.schema).parquet(staged).count()
+    # a partition whose every row was deleted has no dir in staging, so
+    # the swap drops it
+    _swap_in(spark, staged, path, [partition_dir_name(partition_col, v) for v in touched])
     return n_deleted
 
 
@@ -518,10 +523,10 @@ def compact_parquet(spark: SparkSession, path: str, *, target_files: int | None 
     """Small-files compaction: rewrite a parquet dataset into ~target_files
     outputs via coalesce (no shuffle). Streaming sinks and over-parallel
     writers fragment tables; scan cost at 100 TB is dominated by file
-    count as much as bytes. Written once to ``path__compact`` and swapped
+    count as much as bytes. Written once to ``path__staging`` and swapped
     in like upsert_parquet."""
     path = path.rstrip("/")
-    staged = path + "__compact"
+    staged = path + "__staging"
     _recover_swap(spark, staged, path)
     df = spark.read.parquet(path)
     if target_files is None:
@@ -700,15 +705,7 @@ def replace_into_jdbc(
         # createTableColumnTypes DDL reaches the CREATE TABLE)
         write_jdbc(merged, url, table, mode="overwrite", properties=properties)
         return
-    tagged = current.withColumn("__src", F.lit(0)).unionByName(
-        incoming.select(*current.columns).withColumn("__src", F.lit(1))
-    )
-    w = W.partitionBy(*key_cols).orderBy(F.desc("__src"))
-    merged = (
-        tagged.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn", "__src")
-    )
+    merged = _newest_wins(incoming.select(*current.columns), current, key_cols)
     merged = merged.localCheckpoint(eager=True)
     # truncate=true: DELETE-then-INSERT into the EXISTING table instead of
     # DROP+CREATE-with-default-types — real REPLACE INTO preserves the
@@ -761,13 +758,10 @@ def expire_partitions(
     day-partitioned store is O(days dropped) metadata operations.
     Returns the dropped partition values (raw form; None for the NULL
     partition)."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     prefix = f"{escape_hive_path_name(partition_col)}="
     dropped = []
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith(prefix)):
+    for name in _subdirs(spark, path):
+        if not name.startswith(prefix):
             continue
         dir_value = name[len(prefix):]
         if dir_value == "__HIVE_DEFAULT_PARTITION__":

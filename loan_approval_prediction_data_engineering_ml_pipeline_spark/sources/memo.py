@@ -16,9 +16,12 @@ check) and ``token`` is the store's version of each rel:
 - any other rel (a flat index dir, a fixture file) uses
   ``log_store_for(p).mtime(p)``. A Spark ``mode("overwrite")`` write
   recreates its directory, and a rewritten file gets a new mtime, so a
-  rebuild by this or any other process changes the token. A write made
-  only below a rel dir's own entries (into an existing subdir) would
-  not; the engine's writers replace whole dirs or write new object dirs.
+  rebuild by this or any other process changes the token. The parquet
+  writers commit by renames (``loaders._swap_in``): a whole-store swap
+  replaces the dir, and a partition swap renames entries of the store
+  dir, which changes that dir's own mtime, so both change the token. A
+  write made only inside an existing subdir would not; the engine's
+  writers make none (index builds write new object dirs).
 
 Eviction: inserting an entry drops the entries of other application ids
 (dead sessions' JVM handles) and the entries for the same

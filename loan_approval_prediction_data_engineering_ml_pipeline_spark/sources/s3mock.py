@@ -272,7 +272,7 @@ class S3MockDiskLogStore(S3MockLogStore):
         os.unlink(self._key(path))
 
 
-_SHARED: S3MockDiskLogStore | None = None
+_SHARED = S3MockDiskLogStore()
 
 
 def register_shared_s3mock() -> S3MockDiskLogStore:
@@ -283,12 +283,9 @@ def register_shared_s3mock() -> S3MockDiskLogStore:
     runs Python data source planning in its own interpreter, so any
     custom-scheme registration must be re-establishable there by name.
     """
-    global _SHARED
     from ..streaming.versioned_source import register_stream_filesystem
     from .versioned import register_log_store
 
-    if _SHARED is None:
-        _SHARED = S3MockDiskLogStore()
     register_log_store("s3mock://", _SHARED)
     register_stream_filesystem("s3mock", s3mock_stream_resolver)
     return _SHARED

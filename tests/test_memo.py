@@ -96,13 +96,21 @@ def _empty_container(node: ast.expr) -> bool:
 
 def test_engine_has_one_module_level_memo():
     """One mechanism per concern: a module-level name bound to an empty
-    dict/set/list is a cache or a registry; the read memo in
-    ``sources/memo.py`` is the only cache allowed."""
+    dict/set/list is a cache or a registry, and a ``global`` statement
+    rebinds module state (a per-process flag is a cache too); the read
+    memo in ``sources/memo.py`` is the only cache allowed."""
     root = pathlib.Path(engine.__file__).parent
     found = []
     for f in sorted(root.rglob("*.py")):
         rel = f.relative_to(root).as_posix()
-        for node in ast.parse(f.read_text()).body:
+        tree = ast.parse(f.read_text())
+        found += [
+            f"{rel}:{node.lineno} global {name}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Global)
+            for name in node.names
+        ]
+        for node in tree.body:
             if isinstance(node, ast.Assign):
                 targets = node.targets
             elif isinstance(node, ast.AnnAssign) and node.value is not None:

@@ -74,37 +74,202 @@ def test_handle_cache_never_skips_validation(spark, tmp_path):
         load_table(spark, str(tmp_path), "customer")  # validate=True default
 
 
-@pytest.mark.parametrize("crash", ["before_swap", "between_renames", "after_swap"])
-def test_upsert_parquet_recovers_from_crash_during_swap(spark, tmp_path, monkeypatch, crash):
-    """upsert_parquet writes the merged store once to a staging dir and
-    swaps it in with two renames. A crash at any point of the swap must
-    leave the next upsert_parquet a recoverable store and give the
-    correct merged rows."""
-    import os
+def _crash_upsert(spark, tmp):
+    from loan_approval_prediction_data_engineering_ml_pipeline_spark.sources.loaders import upsert_parquet
+
+    path, schema = str(tmp / "t"), "id long, val string"
+    upsert_parquet(spark.createDataFrame([(1, "a"), (2, "b")], schema), path, ["id"])
+    batch = spark.createDataFrame([(2, "b2"), (3, "c")], schema)
+    return (
+        lambda: upsert_parquet(batch, path, ["id"]),
+        {path: None},
+        {(1, "a"), (2, "b2"), (3, "c")},
+    )
+
+
+def _crash_upsert_partitioned(spark, tmp):
+    from loan_approval_prediction_data_engineering_ml_pipeline_spark.sources.loaders import (
+        upsert_parquet_partitioned,
+    )
+
+    path, schema = str(tmp / "t"), "id long, val string, dt string"
+    base = [(1, "a", "x"), (2, "b", "x"), (3, "c", "y"), (4, "d", "z")]
+    upsert_parquet_partitioned(spark.createDataFrame(base, schema), path, ["id"], "dt")
+    # touches two partitions: an update in x, an insert in y
+    batch = spark.createDataFrame([(2, "b2", "x"), (5, "e", "y")], schema)
+    return (
+        lambda: upsert_parquet_partitioned(batch, path, ["id"], "dt"),
+        {path: "dt"},
+        {(1, "a", "x"), (2, "b2", "x"), (3, "c", "y"), (5, "e", "y"), (4, "d", "z")},
+    )
+
+
+def _crash_delete_partitioned(spark, tmp):
+    from loan_approval_prediction_data_engineering_ml_pipeline_spark.sources.loaders import (
+        delete_keys_partitioned,
+    )
+
+    path = str(tmp / "t")
+    rows = [(u, d) for u in range(3) for d in (1, 2, 3)]
+    spark.createDataFrame(rows, "u int, day int").write.partitionBy("day").parquet(path)
+    # empties day 1, thins day 2, leaves day 3 cold
+    keys = spark.createDataFrame([(0, 1), (1, 1), (2, 1), (0, 2)], "u int, day int")
+    return (
+        lambda: delete_keys_partitioned(spark, path, keys, ["u", "day"], "day"),
+        {path: "day"},
+        {(1, 2), (2, 2), (0, 3), (1, 3), (2, 3)},
+    )
+
+
+def _crash_rollup(spark, tmp):
+    from loan_approval_prediction_data_engineering_ml_pipeline_spark.operators.maintenance import (
+        incremental_rollup,
+    )
+
+    store, schema = str(tmp / "t"), "dt string, v long"
+
+    def agg(fact):
+        return fact.groupBy("dt").agg(F.sum("v").alias("s"))
+
+    incremental_rollup(spark, spark.createDataFrame([("a", 1), ("b", 2), ("c", 3)], schema), store, "dt", agg)
+    # partition a changes, c vanishes, b stays cold
+    fact2 = spark.createDataFrame([("a", 1), ("a", 10), ("b", 2)], schema)
+    return (
+        lambda: incremental_rollup(spark, fact2, store, "dt", agg),
+        {store: "dt", store + "__manifest": None},
+        {(11, "a"), (2, "b")},
+    )
+
+
+def _crash_scd2(spark, tmp):
+    from loan_approval_prediction_data_engineering_ml_pipeline_spark.operators.maintenance import (
+        scd2_merge,
+    )
+
+    dim, schema = str(tmp / "t"), "k int, a string, eff_ts string"
+    scd2_merge(spark, dim, spark.createDataFrame([(1, "x", "d1"), (2, "y", "d1")], schema), ["k"], ["a"])
+    batch = spark.createDataFrame([(1, "x2", "d2"), (3, "z", "d2")], schema)
+    return (
+        lambda: scd2_merge(spark, dim, batch, ["k"], ["a"]),
+        {dim: None},
+        {
+            (1, "x", "d1", "d2", False), (1, "x2", "d2", None, True),
+            (2, "y", "d1", None, True), (3, "z", "d2", None, True),
+        },
+    )
+
+
+def _partition_rows(spark, path, part):
+    """{partition value (None for an unpartitioned store): sorted rows}."""
+    out: dict = {}
+    for r in spark.read.parquet(path).collect():
+        out.setdefault(r[part] if part else None, []).append(tuple(r))
+    return {k: sorted(v, key=repr) for k, v in out.items()}
+
+
+# (scenario, number of renames its commit makes); the upsert_parquet ids
+# name the crash points of the whole-store swap
+_CRASH_WRITERS = {
+    "upsert": (_crash_upsert, 3),
+    "upsert_partitioned": (_crash_upsert_partitioned, 5),
+    "delete_partitioned": (_crash_delete_partitioned, 4),
+    "rollup": (_crash_rollup, 7),
+    "scd2": (_crash_scd2, 3),
+}
+_CRASH_CASES = [
+    pytest.param("upsert", k, id=name)
+    for k, name in enumerate(["before_swap", "between_renames", "after_swap", "after_retire"])
+] + [
+    pytest.param(w, k, id=f"{w}-{k}")
+    for w, (_, n) in _CRASH_WRITERS.items()
+    if w != "upsert"
+    for k in range(n + 1)
+]
+
+
+@pytest.mark.parametrize("writer, crash", _CRASH_CASES)
+def test_upsert_parquet_recovers_from_crash_during_swap(spark, tmp_path, monkeypatch, writer, crash):
+    """Every parquet store rewrite writes its output once to a staging
+    dir and commits it by renames. A crash before the first rename or
+    after any of them (``crash`` = renames done) must leave, once
+    recovered, each touched partition (or unpartitioned store) wholly
+    old or wholly new; re-running the call gives the expected rows and
+    leaves no staging or parked copy behind."""
+    import glob
 
     from loan_approval_prediction_data_engineering_ml_pipeline_spark.sources import loaders as L
 
-    path = str(tmp_path / "t")
-    L.upsert_parquet(spark.createDataFrame([(1, "a"), (2, "b")], "id long, val string"), path, ["id"])
-    batch = spark.createDataFrame([(2, "b2"), (3, "c")], "id long, val string")
+    run, stores, want = _CRASH_WRITERS[writer][0](spark, tmp_path)
+    old = {p: _partition_rows(spark, p, c) for p, c in stores.items()}
     real, calls = L._rename_path, []
 
     def rename(spark_, src, dst):
-        calls.append(dst)
-        if crash == "before_swap" or (crash == "between_renames" and len(calls) == 2):
-            raise IOError("injected crash")
-        real(spark_, src, dst)
-        if crash == "after_swap" and len(calls) == 2:
+        if crash:
+            real(spark_, src, dst)
+            calls.append(dst)
+        if len(calls) == crash:
             raise IOError("injected crash")
 
     monkeypatch.setattr(L, "_rename_path", rename)
     with pytest.raises(IOError, match="injected crash"):
-        L.upsert_parquet(batch, path, ["id"])
+        run()
     monkeypatch.undo()
-    assert os.path.exists(path) == (crash != "between_renames")
-    L.upsert_parquet(batch, path, ["id"])
-    assert {tuple(r) for r in spark.read.parquet(path).collect()} == {(1, "a"), (2, "b2"), (3, "c")}
-    assert not os.path.exists(path + "__staging") and not os.path.exists(path + "__old")
+    for p in stores:
+        L._recover_swap(spark, p + "__staging", p)
+    now = {p: _partition_rows(spark, p, c) for p, c in stores.items()}
+    run()
+    new = {p: _partition_rows(spark, p, c) for p, c in stores.items()}
+    for p in stores:
+        for k in old[p].keys() | new[p].keys() | now[p].keys():
+            assert now[p].get(k) in (old[p].get(k), new[p].get(k)), (p, k)
+    main = next(iter(stores))
+    assert {tuple(r) for r in spark.read.parquet(main).collect()} == want
+    assert glob.glob(str(tmp_path / "*__staging")) == glob.glob(str(tmp_path / "*__old")) == []
+
+
+def test_partitioned_rewrites_write_each_row_once(spark, tmp_path, monkeypatch):
+    """A partitioned upsert, a partitioned delete and a rollup refresh
+    with one changed partition each make exactly one data write: the
+    rows go to staging once and are committed by renames (the rollup
+    also writes its manifest once)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from loan_approval_prediction_data_engineering_ml_pipeline_spark.operators.maintenance import (
+        incremental_rollup,
+    )
+    from loan_approval_prediction_data_engineering_ml_pipeline_spark.sources.loaders import (
+        delete_keys_partitioned,
+        upsert_parquet_partitioned,
+    )
+
+    schema = "id long, v long, dt string"
+    path, store = str(tmp_path / "t"), str(tmp_path / "r")
+    base = spark.createDataFrame([(1, 1, "x"), (2, 2, "x"), (3, 3, "y")], schema)
+    upsert_parquet_partitioned(base, path, ["id"], "dt")
+
+    def agg(fact):
+        return fact.groupBy("dt").agg(F.sum("v").alias("s"))
+
+    incremental_rollup(spark, base, store, "dt", agg)
+    real, writes = DataFrameWriter.parquet, []
+
+    def parquet(self, p, *args, **kwargs):
+        writes.append(p)
+        return real(self, p, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    upsert_parquet_partitioned(
+        spark.createDataFrame([(2, 20, "x"), (4, 4, "y")], schema), path, ["id"], "dt"
+    )
+    assert writes == [path + "__staging"]
+    writes.clear()
+    keys = spark.createDataFrame([(1, "x")], "id long, dt string")
+    assert delete_keys_partitioned(spark, path, keys, ["id", "dt"], "dt") == 1
+    assert writes == [path + "__staging"]
+    writes.clear()
+    fact2 = spark.createDataFrame([(1, 1, "x"), (2, 5, "x"), (3, 3, "y")], schema)
+    assert incremental_rollup(spark, fact2, store, "dt", agg) == 1
+    assert writes == [store + "__staging", store + "__manifest__staging"]
 
 
 def test_csv_roundtrip_declared_schema(spark, tmp_path):
