@@ -22,9 +22,10 @@ stable snapshots for unchanged data.
 
 Both write their output once to ``<store>__staging`` and commit it
 through the loaders' one commit path (``sources/loaders._swap_in``): the
-rollup by a partition swap of the changed partitions, the SCD2 store and
-the rollup manifest by a whole-store swap. Each call first recovers a
-crash left by the previous one, so no crash loses or mixes a partition.
+rollup by a partition swap of the changed partitions, its manifest-less
+rebuild, the SCD2 store and the rollup manifest by a whole-store swap.
+Each call first recovers a crash left by the previous one, so no crash
+loses or mixes a partition.
 """
 
 from __future__ import annotations

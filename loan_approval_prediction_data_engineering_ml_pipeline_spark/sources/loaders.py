@@ -145,12 +145,15 @@ def _swap_in(spark: SparkSession, staged: str, path: str, parts: list[str] | Non
     """Commit a fully written ``staged`` dir to ``path`` by renames, the one
     commit path for rewrites of a plain parquet store. The whole store
     (``parts`` None, or no ``path`` yet): ``path`` → ``path__old``,
-    ``staged`` → ``path``. A set of partition dirs: each dir named in
-    ``parts`` or held by ``staged`` is parked as ``path__old/col=v`` and
-    replaced by ``staged/col=v``; one with no staged dir is dropped, and
-    untouched partitions are never renamed. ``path__old`` is then renamed
-    onto the staging name, which every recovery drops, before it is
-    deleted, so a crash mid-delete never brings half a partition back.
+    ``staged`` → ``path``, then ``path__old`` is retired onto the staging
+    name. A set of partition dirs: each dir named in ``parts`` or held by
+    ``staged`` is parked as ``path__old/col=v`` and replaced by
+    ``staged/col=v``; one with no staged dir is dropped, and untouched
+    partitions are never renamed; ``path__old`` is then retired into the
+    staging dir, which stays in place until then, so ``path__old`` beside
+    ``staged`` marks an unfinished partition swap. Retired copies are
+    deleted with the staging dir, which every recovery drops, so a crash
+    mid-delete never brings half a partition back.
 
     Crash contract, once :func:`_recover_swap` has run: each touched
     partition (or the whole store) is wholly old or wholly new, never
@@ -162,6 +165,8 @@ def _swap_in(spark: SparkSession, staged: str, path: str, parts: list[str] | Non
         if _path_exists(spark, path):
             _rename_path(spark, path, old)
         _rename_path(spark, staged, path)
+        if _path_exists(spark, old):
+            _rename_path(spark, old, staged)
     else:
         fs, jold = _fs(spark, old)
         fs.mkdirs(jold)
@@ -170,30 +175,29 @@ def _swap_in(spark: SparkSession, staged: str, path: str, parts: list[str] | Non
                 _rename_path(spark, f"{path}/{d}", f"{old}/{d}")
             if _path_exists(spark, f"{staged}/{d}"):
                 _rename_path(spark, f"{staged}/{d}", f"{path}/{d}")
-        _delete_path(spark, staged)
-    if _path_exists(spark, old):
-        _rename_path(spark, old, staged)
+        _rename_path(spark, old, f"{staged}/__old")
     _delete_path(spark, staged)
 
 
 def _recover_swap(spark: SparkSession, staged: str, path: str) -> None:
-    """Undo what an interrupted :func:`_swap_in` left behind. A stray
-    ``staged`` dir is dropped: its batch was never committed, or it holds
-    retired copies. Then each copy parked in ``path__old`` goes back
-    where nothing replaced it — the whole store when ``path`` is missing
-    (the crash fell between the two whole-store renames), else each
-    partition dir missing from ``path`` — and the rest is dropped."""
+    """Undo what an interrupted :func:`_swap_in` left behind. A copy
+    parked in ``path__old`` goes back where nothing replaced it: the
+    whole store when ``path`` is missing (the crash fell between the two
+    whole-store renames), else — while ``staged`` still exists, i.e. a
+    partition swap was cut short — each partition dir missing from
+    ``path``. Otherwise the new store is whole and the old copy is
+    dropped, as is the staging dir: its batch was never committed, or it
+    holds retired copies."""
     old = path + "__old"
-    _delete_path(spark, staged)
-    if not _path_exists(spark, old):
-        return
-    if not _path_exists(spark, path):
-        _rename_path(spark, old, path)
-        return
-    for d in _subdirs(spark, old):
-        if not _path_exists(spark, f"{path}/{d}"):
-            _rename_path(spark, f"{old}/{d}", f"{path}/{d}")
+    if _path_exists(spark, old):
+        if not _path_exists(spark, path):
+            _rename_path(spark, old, path)
+        elif _path_exists(spark, staged):
+            for d in _subdirs(spark, old):
+                if not _path_exists(spark, f"{path}/{d}"):
+                    _rename_path(spark, f"{old}/{d}", f"{path}/{d}")
     _delete_path(spark, old)
+    _delete_path(spark, staged)
 
 
 def _newest_wins(

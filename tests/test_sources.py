@@ -121,7 +121,7 @@ def _crash_delete_partitioned(spark, tmp):
     )
 
 
-def _crash_rollup(spark, tmp):
+def _crash_rollup(spark, tmp, full_rebuild=False):
     from loan_approval_prediction_data_engineering_ml_pipeline_spark.operators.maintenance import (
         incremental_rollup,
     )
@@ -131,13 +131,23 @@ def _crash_rollup(spark, tmp):
     def agg(fact):
         return fact.groupBy("dt").agg(F.sum("v").alias("s"))
 
-    incremental_rollup(spark, spark.createDataFrame([("a", 1), ("b", 2), ("c", 3)], schema), store, "dt", agg)
-    # partition a changes, c vanishes, b stays cold
-    fact2 = spark.createDataFrame([("a", 1), ("a", 10), ("b", 2)], schema)
+    fact1 = [("a", 1), ("b", 2), ("c", 3), ("e", 4)]
+    incremental_rollup(spark, spark.createDataFrame(fact1, schema), store, "dt", agg)
+    # partition a changes, c vanishes, b and e stay cold; a full rebuild
+    # swaps in the whole store, so it is compared whole and c must not
+    # come back
+    fact2 = spark.createDataFrame([("a", 1), ("a", 10), ("b", 2), ("e", 4)], schema)
+
+    def run():
+        n = incremental_rollup(spark, fact2, store, "dt", agg, full_rebuild=full_rebuild)
+        # a recovered manifest keeps the re-run incremental: a and c, or
+        # nothing once the new manifest is in
+        assert n in ({3} if full_rebuild else {0, 2})
+
     return (
-        lambda: incremental_rollup(spark, fact2, store, "dt", agg),
-        {store: "dt", store + "__manifest": None},
-        {(11, "a"), (2, "b")},
+        run,
+        {store: None if full_rebuild else "dt", store + "__manifest": None},
+        {(11, "a"), (2, "b"), (4, "e")},
     )
 
 
@@ -174,6 +184,7 @@ _CRASH_WRITERS = {
     "upsert_partitioned": (_crash_upsert_partitioned, 5),
     "delete_partitioned": (_crash_delete_partitioned, 4),
     "rollup": (_crash_rollup, 7),
+    "rollup_rebuild": (lambda spark, tmp: _crash_rollup(spark, tmp, full_rebuild=True), 6),
     "scd2": (_crash_scd2, 3),
 }
 _CRASH_CASES = [
@@ -192,14 +203,17 @@ def test_upsert_parquet_recovers_from_crash_during_swap(spark, tmp_path, monkeyp
     """Every parquet store rewrite writes its output once to a staging
     dir and commits it by renames. A crash before the first rename or
     after any of them (``crash`` = renames done) must leave, once
-    recovered, each touched partition (or unpartitioned store) wholly
-    old or wholly new; re-running the call gives the expected rows and
-    leaves no staging or parked copy behind."""
+    recovered, each touched partition (or store compared whole) wholly
+    old or wholly new. Recovery is checked on a copy of the crashed
+    tree, so the re-run on the original tree has to recover by itself:
+    it gives the expected rows and leaves no staging or parked copy."""
     import glob
+    import shutil
 
     from loan_approval_prediction_data_engineering_ml_pipeline_spark.sources import loaders as L
 
-    run, stores, want = _CRASH_WRITERS[writer][0](spark, tmp_path)
+    live, copy = tmp_path / "live", tmp_path / "recovered"
+    run, stores, want = _CRASH_WRITERS[writer][0](spark, live)
     old = {p: _partition_rows(spark, p, c) for p, c in stores.items()}
     real, calls = L._rename_path, []
 
@@ -214,9 +228,12 @@ def test_upsert_parquet_recovers_from_crash_during_swap(spark, tmp_path, monkeyp
     with pytest.raises(IOError, match="injected crash"):
         run()
     monkeypatch.undo()
-    for p in stores:
-        L._recover_swap(spark, p + "__staging", p)
-    now = {p: _partition_rows(spark, p, c) for p, c in stores.items()}
+    shutil.copytree(live, copy)
+    now = {}
+    for p, c in stores.items():
+        q = p.replace(str(live), str(copy), 1)
+        L._recover_swap(spark, q + "__staging", q)
+        now[p] = _partition_rows(spark, q, c)
     run()
     new = {p: _partition_rows(spark, p, c) for p, c in stores.items()}
     for p in stores:
@@ -224,7 +241,7 @@ def test_upsert_parquet_recovers_from_crash_during_swap(spark, tmp_path, monkeyp
             assert now[p].get(k) in (old[p].get(k), new[p].get(k)), (p, k)
     main = next(iter(stores))
     assert {tuple(r) for r in spark.read.parquet(main).collect()} == want
-    assert glob.glob(str(tmp_path / "*__staging")) == glob.glob(str(tmp_path / "*__old")) == []
+    assert glob.glob(str(tmp_path / "*" / "*__staging")) == glob.glob(str(tmp_path / "*" / "*__old")) == []
 
 
 def test_partitioned_rewrites_write_each_row_once(spark, tmp_path, monkeypatch):
