@@ -709,7 +709,8 @@ def argmax_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT event_id, user_id,
            strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS purchase_ts,
-           round((epoch_us(ts) - last_click_us) / 1000000.0, 3) AS sec_since_click
+           CAST(round(CAST(epoch_us(ts) - last_click_us AS DECIMAL(24, 0)) * 0.000001, 3)
+                AS DOUBLE) AS sec_since_click
     FROM tagged
     WHERE event_type = 'purchase' AND last_click_us IS NOT NULL
     ORDER BY event_id
@@ -717,7 +718,8 @@ def argmax_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="As-of join (each purchase matched to the latest prior "
     "click by the same user) as a single-pass last-ignorenulls window — "
     "no pairwise range join, no merge_asof UDF; scales as one sort per "
-    "user partition",
+    "user partition. The gap is rounded HALF_UP to milliseconds from its "
+    "exact microsecond decimal, so both engines agree at exact halves",
 )
 def asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -737,7 +739,11 @@ def asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
             "user_id",
             F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("purchase_ts"),
-            F.round((us - F.col("last_click_us")) / 1_000_000.0, 3).alias("sec_since_click"),
+            # exact decimal, not a double: rounding gap / 1e6 as a double
+            # splits exact half milliseconds differently across engines
+            F.round((us - F.col("last_click_us")).cast("decimal(24,0)") / 1_000_000, 3)
+            .cast("double")
+            .alias("sec_since_click"),
         )
         .orderBy("event_id")
     )

@@ -43,8 +43,10 @@ from __future__ import annotations
 import glob
 import os
 import subprocess
+import tempfile
 import threading
 import time
+import zipfile
 from urllib.parse import unquote, urlparse
 
 from .versioned import LogStore
@@ -196,28 +198,29 @@ class S3MockLogStore(LogStore):
 
 
 # ---------------------------------------------------------------------------
-# Java shim build: compile once, cache, hand the classes dir to Spark
+# Java shim build: compile once into a jar, hand the jar to Spark
 # ---------------------------------------------------------------------------
 
 _SHIM_SRC = os.path.join(os.path.dirname(__file__), "s3mockfs", "S3MockFileSystem.java")
-_BUILD_DIR = os.path.join(
+_SHIM_JAR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
     ".build",
-    "s3mockfs",
+    "s3mockfs.jar",
 )
 
 
 def ensure_s3mock_fs() -> str | None:
     """Compile the bundled ``S3MockFileSystem`` Hadoop shim (if javac is
-    available) and return the classes directory to put on
+    available) into ``.build/s3mockfs.jar`` and return the jar to put on
     ``spark.driver.extraClassPath``, with
     ``spark.hadoop.fs.s3mock.impl=sparkgraft.S3MockFileSystem``.
     Returns None when javac or the Hadoop jar is missing — callers skip
-    the s3mock variants then. The compile is cached: an up-to-date
-    ``.class`` newer than the source short-circuits."""
-    cls = os.path.join(_BUILD_DIR, "sparkgraft", "S3MockFileSystem.class")
-    if os.path.exists(cls) and os.path.getmtime(cls) >= os.path.getmtime(_SHIM_SRC):
-        return _BUILD_DIR
+    the s3mock variants then. The build is cached: a jar newer than the
+    source short-circuits. A jar, not a classes directory, because the
+    driver JVM cannot dump its class-data-sharing archive with a non-empty
+    directory on its class path."""
+    if os.path.exists(_SHIM_JAR) and os.path.getmtime(_SHIM_JAR) >= os.path.getmtime(_SHIM_SRC):
+        return _SHIM_JAR
     try:
         import pyspark
 
@@ -226,14 +229,22 @@ def ensure_s3mock_fs() -> str | None:
         )
         if not jars:
             return None
-        os.makedirs(_BUILD_DIR, exist_ok=True)
-        subprocess.run(
-            ["javac", "-cp", jars[0], "-d", _BUILD_DIR, _SHIM_SRC],
-            check=True,
-            capture_output=True,
-            timeout=120,
-        )
-        return _BUILD_DIR
+        os.makedirs(os.path.dirname(_SHIM_JAR), exist_ok=True)
+        with tempfile.TemporaryDirectory(dir=os.path.dirname(_SHIM_JAR)) as classes:
+            subprocess.run(
+                ["javac", "-cp", jars[0], "-d", classes, _SHIM_SRC],
+                check=True,
+                capture_output=True,
+                timeout=120,
+            )
+            # a jar is a zip of the class tree; written aside, then renamed
+            # into place so a concurrent reader never sees half of it
+            tmp = os.path.join(classes, "s3mockfs.jar")
+            with zipfile.ZipFile(tmp, "w") as jar:
+                for path in glob.glob(os.path.join(classes, "**", "*.class"), recursive=True):
+                    jar.write(path, os.path.relpath(path, classes))
+            os.replace(tmp, _SHIM_JAR)
+        return _SHIM_JAR
     except (OSError, subprocess.SubprocessError):
         return None
 

@@ -44,10 +44,10 @@ def spark():
     # be on the driver classpath BEFORE the JVM launches; best-effort —
     # without javac the s3mock-parameterized tests skip
     extra: dict[str, str] = {}
-    classes = ensure_s3mock_fs()
-    if classes:
+    jar = ensure_s3mock_fs()
+    if jar:
         extra = {
-            "spark.driver.extraClassPath": classes,
+            "spark.driver.extraClassPath": jar,
             "spark.hadoop.fs.s3mock.impl": "sparkgraft.S3MockFileSystem",
         }
     s = get_spark(app_name="tests", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"),

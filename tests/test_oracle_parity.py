@@ -46,6 +46,38 @@ def test_oracle_parity(spark, name):
     assert_matches(sdf, odf, name)
 
 
+def test_asof_join_rounds_exact_half_milliseconds(spark, tmp_path):
+    """``sec_since_click`` rounds the integer microsecond gap HALF_UP to
+    milliseconds in exact decimal arithmetic on both engines. Every gap here
+    ends in exactly 500 µs, where rounding gap / 1e6 as a double splits
+    (DuckDB's double round gives 0.5 for a 500,500 µs gap)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    gaps = [500, 500_500, 501_500, 1_234_500, 2_000_500, 59_999_500]
+    start = 1_704_067_200_000_000  # 2024-01-01 00:00 UTC in µs
+    ts = [start + user * 3_600_000_000 + at for user, gap in enumerate(gaps) for at in (0, gap)]
+    n = len(ts)
+    pq.write_table(pa.table({
+        "event_id": pa.array(range(n), pa.int64()),
+        "ts": pa.array(ts, pa.timestamp("us")),
+        "user_id": pa.array([i // 2 for i in range(n)], pa.int64()),
+        "event_type": ["click", "purchase"] * len(gaps),
+        "value": [1.0] * n,
+        "props": ["{}"] * n,
+    }), tmp_path / "events.parquet")
+    spec = QUERIES["asof_join"]
+    sdf = spec.fn(spark, str(tmp_path))
+    want = [float((Decimal(g) / 10**6).quantize(Decimal("0.001"), ROUND_HALF_UP)) for g in gaps]
+    assert [r["sec_since_click"] for r in sdf.collect()] == want
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS SELECT * FROM '{tmp_path / 'events.parquet'}'")
+    assert_matches(sdf, con.sql(spec.oracle).df(), "asof_join")
+
+
 @pytest.mark.parametrize("name", ROWS_ONLY_QUERIES)
 def test_rows_only_queries_run(spark, name):
     spec = QUERIES[name]
