@@ -17,10 +17,14 @@ point and merely *scaled down* for local testing:
 - Cold start: the driver JVM a call launches shares an AppCDS dynamic
   archive (JEP 350) under ``.build/cds/``, so its class loading is a
   memory map instead of parsing and verifying thousands of classes. The
-  archive's name is keyed by the JDK build, the expanded class path jars
-  (path, size, mtime) and whether the heap is 32 GiB or more (which turns
-  compressed oops off). A process that finds no archive for its key has
-  its JVM dump one at exit to a unique ``.part`` file; a later start
+  archive's name is keyed by the app name, the JDK build, the expanded
+  class path jars (path, size, mtime) and whether the heap is 32 GiB or
+  more (which turns compressed oops off). An archive holds the classes of
+  the run that dumped it and is never refreshed, so keying by app name
+  keeps one application's first run (a script, the scorer) from deciding
+  what another (the benchmark, the tests) gets from its archive. A
+  process that finds no archive for its key has its JVM dump one at exit
+  to a unique ``.part`` file; a later start
   checks the file complete (header and region CRCs) and publishes it by
   rename. A JVM is only ever handed a published archive whose header and
   region extents check out: a truncated archive crashes the JVM with
@@ -208,8 +212,8 @@ def _publish(name: str) -> str | None:
     """The archive published under ``name`` in :data:`_CDS_DIR`, if any.
     Drops a published archive that no longer checks out, publishes a
     checked-complete ``.part`` by rename, drops parts that are redundant or
-    stale, and drops archives of the same class path and heap whose JDK or
-    jars have changed."""
+    stale, and drops archives of the same app, class path and heap whose
+    JDK or jars have changed."""
     final = os.path.join(_CDS_DIR, name + ".jsa")
     group = name.split("-")[0] + "-"
     with contextlib.suppress(FileNotFoundError):
@@ -232,10 +236,10 @@ def _publish(name: str) -> str | None:
     return final if os.path.exists(final) else None
 
 
-def _cds_launch(conf: dict[str, str]) -> tuple[str, str] | None:
+def _cds_launch(conf: dict[str, str], app_name: str) -> tuple[str, str] | None:
     """(driver java options, SPARK_CONF_DIR) that make the JVM about to be
-    launched use the published archive for its key, or dump one at exit;
-    None when this launch cannot share an archive."""
+    launched for ``app_name`` use the published archive for its key, or
+    dump one at exit; None when this launch cannot share an archive."""
     if (SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ
             or os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell") != "pyspark-shell"
             or os.environ.get("SPARK_CONF_DIR")
@@ -262,7 +266,8 @@ def _cds_launch(conf: dict[str, str]) -> tuple[str, str] | None:
     classpath = _classpath([e for e in entries if e])
     if not classpath:
         return None
-    group = hashlib.sha1(repr(([p for p, _, _ in classpath], big_heap)).encode()).hexdigest()[:12]
+    paths = [p for p, _, _ in classpath]
+    group = hashlib.sha1(repr((app_name, paths, big_heap)).encode()).hexdigest()[:12]
     stamp = hashlib.sha1(repr((jdk, classpath)).encode()).hexdigest()[:12]
     name = f"{group}-{stamp}"
     archive = _publish(name)
@@ -306,7 +311,7 @@ def get_spark(
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         **(extra_conf or {}),
     }
-    cds = _cds_launch(conf)
+    cds = _cds_launch(conf, app_name)
     if cds:
         opts = f"{cds[0]} {conf.get('spark.driver.extraJavaOptions', '')}".strip()
         conf["spark.driver.extraJavaOptions"] = opts

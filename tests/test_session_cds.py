@@ -165,3 +165,33 @@ def test_user_conf_dir_is_honoured_without_archive(first_starts, tmp_path):
     assert out["marker"] == "from-user-conf"
     assert out["prop"] == "kept"
     assert not [a for a in out["args"] if "Archive" in a or "Xshare" in a or "Xlog" in a]
+
+
+def test_archive_is_keyed_by_app_name(tmp_path, monkeypatch):
+    """Two apps never share an archive or prune each other's: an archive
+    holds only the classes its dumping run loaded. Needs no JVM: the key
+    and the flags are worked out before the launch."""
+    from pyspark import SparkContext
+
+    from loan_approval_prediction_data_engineering_ml_pipeline_spark import session as S
+
+    monkeypatch.setattr(S, "_CDS_DIR", str(tmp_path))
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    for var in ("SPARK_CONF_DIR", "PYSPARK_GATEWAY_PORT", "PYSPARK_SUBMIT_ARGS"):
+        monkeypatch.delenv(var, raising=False)
+    conf = {"spark.driver.memory": "1g"}
+
+    def key(app: str) -> str:
+        opts, _ = S._cds_launch(conf, app)
+        part = next(o for o in opts.split() if o.startswith("-XX:ArchiveClassesAtExit="))
+        return os.path.basename(part).split(".")[0]
+
+    a, b = key("app-a"), key("app-b")
+    assert key("app-a") == a and a != b
+    assert a.split("-")[0] != b.split("-")[0]  # another group: never pruned as superseded
+    other = tmp_path / f"{a.split('-')[0]}-000000000000.jsa"
+    other.write_bytes(b"")
+    key("app-b")
+    assert other.exists()
+    key("app-a")
+    assert not other.exists()
