@@ -24,9 +24,8 @@ point and merely *scaled down* for local testing:
   keeps one application's first run (a script, the scorer) from deciding
   what another (the benchmark, the tests) gets from its archive. A
   process that finds no archive for its key has its JVM dump one at exit
-  to a unique ``.part`` file; a later start
-  checks the file complete (header and region CRCs) and publishes it by
-  rename. A JVM is only ever handed a published archive whose header and
+  to a unique ``.part`` file; a later start checks the file complete
+  (header and region CRCs) and publishes it by rename. A JVM is only ever handed a published archive whose header and
   region extents check out: a truncated archive crashes the JVM with
   SIGBUS, even under ``-Xshare:auto``. The JVM refuses to dump with a
   non-empty directory on its class path, so the launcher is pointed at an
