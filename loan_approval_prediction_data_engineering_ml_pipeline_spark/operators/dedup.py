@@ -18,6 +18,7 @@ Scale design (the point of every function here):
 from __future__ import annotations
 
 import hashlib
+from typing import Iterable
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
@@ -514,6 +515,33 @@ def prefix_filtered_jaccard_join(
     )
 
 
+def union_find(a: Iterable, b: Iterable) -> dict:
+    """Components of the undirected edges ``zip(a, b)`` by path-compressed
+    union-find: ``{vertex: smallest vertex of its component}`` for every
+    vertex on an edge."""
+    parent: dict = {}
+
+    def find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:  # path compression
+            parent[x], x = r, parent[x]
+        return r
+
+    for x, y in zip(a, b):
+        parent.setdefault(x, x)
+        parent.setdefault(y, y)
+        rx, ry = find(x), find(y)
+        if rx != ry:
+            parent[ry] = rx
+    roots: dict = {}
+    for v in parent:
+        r = find(v)
+        roots[r] = min(roots.get(r, v), v)
+    return {v: roots[find(v)] for v in parent}
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -542,6 +570,12 @@ def connected_components(
     round (never payloads), rounds = graph diameter (near-dup graphs
     are shallow clique-ish blobs: 2-4), ``localCheckpoint`` cutting
     lineage each round so the plan stays bounded.
+
+    Either way this runs Spark jobs while the plan is built (checkpoint,
+    count, collect). Edges that never cross a block need none of it:
+    ``similarity.cosine_components`` runs :func:`union_find` per block
+    inside one ``applyInPandas`` and keeps this function for blocks too
+    large for one task.
     """
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     sym = e.union(e.select(F.col("d").alias("s"), F.col("s").alias("d"))).distinct()
@@ -551,31 +585,11 @@ def connected_components(
         [T.StructField("vertex", vtype), T.StructField("component", vtype)]
     )
     if sym.count() <= driver_threshold:
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:  # path compression
-                parent[x], x = r, parent[x]
-            return r
-
         # one Arrow transfer (toLocalIterator would run one sequential
         # job per partition); python-native lists keep createDataFrame
         # type inference happy
         pdf = sym.toPandas()
-        for a, b in zip(pdf["s"].tolist(), pdf["d"].tolist()):
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[rb] = ra
-        roots: dict = {}
-        for v in parent:
-            r = find(v)
-            roots[r] = min(roots.get(r, v), v)
-        data = [(v, roots[find(v)]) for v in parent]
+        data = list(union_find(pdf["s"].tolist(), pdf["d"].tolist()).items())
         return edges.sparkSession.createDataFrame(data, out_schema)
 
     comp = (

@@ -280,6 +280,52 @@ def _with_tile_keys(
     )
 
 
+def pairs_from(ids_a, M_a, ids_b, M_b, threshold: float, triangular: bool):
+    """The Gram step of a block (or of one tile of it): every pair of a row
+    of ``M_a`` and a row of ``M_b`` whose cosine, rounded to 6 dp, is
+    ``>= threshold``, as a pandas frame ``(id_a < id_b, cosine)``.
+    ``triangular`` takes the pairs of one matrix with itself (``M_a is
+    M_b``), each once; otherwise every (a, b) pair of two disjoint chunks."""
+    import numpy as np
+    import pandas as pd
+
+    C = (M_a @ M_b.T) / np.outer(np.linalg.norm(M_a, axis=1), np.linalg.norm(M_b, axis=1))
+    if triangular:
+        iu, ju = np.triu_indices(len(ids_a), k=1)
+    else:
+        iu, ju = np.indices((len(ids_a), len(ids_b)))
+        iu, ju = iu.ravel(), ju.ravel()
+    c = np.round(C[iu, ju], 6)
+    keep = c >= threshold
+    ia, ib = ids_a[iu[keep]], ids_b[ju[keep]]
+    lo, hi = np.minimum(ia, ib), np.maximum(ia, ib)
+    return pd.DataFrame({"id_a": lo, "id_b": hi, "cosine": c[keep]})
+
+
+def _block_rows(pdf, id_col: str, vec_col: str):
+    """``(ids, float64 matrix)`` of one group's rows."""
+    import numpy as np
+
+    return pdf[id_col].to_numpy(), np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+
+
+def _blocked(embeddings: DataFrame, id_col: str, vec_col: str, block_col: str) -> DataFrame:
+    # cosine_pairs' equi-join drops NULL block keys; groupBy would
+    # collect them into one block — filter to keep the paths twins
+    return embeddings.select(F.col(id_col), F.col(vec_col), F.col(block_col)).where(
+        F.col(block_col).isNotNull()
+    )
+
+
+def _max_block_occupancy(emb: DataFrame, block_col: str) -> int | None:
+    """Rows in the largest block of ``emb`` (None when it is empty): one
+    aggregate, run while the plan is built, that sizes the tiling. A top-1
+    of the block counts is one shuffle, where a global max over them
+    would be a second one."""
+    top = emb.groupBy(block_col).agg(F.count(F.lit(1)).alias("n")).orderBy(F.desc("n")).first()
+    return None if top is None else int(top["n"])
+
+
 def cosine_pairs_gemm(
     embeddings: DataFrame,
     threshold: float,
@@ -291,7 +337,7 @@ def cosine_pairs_gemm(
     tile_target: int = 4096,
 ) -> DataFrame:
     """Near-dup pairs by block-local matrix multiply: ``applyInPandas``
-    per block, one BLAS Gram matrix per group.
+    per block, one BLAS Gram matrix per group (:func:`pairs_from`).
 
     Same semantics as :func:`cosine_pairs` (id_a < id_b, cosine rounded
     to 6 dp, ``>= threshold``), different physics: Arrow ships each
@@ -315,27 +361,15 @@ def cosine_pairs_gemm(
     so small blocks pay zero tile duplication (measured 1.9s -> 1.2s at
     sf0.1 where blocks are only 200 rows) while oversized blocks are
     still cut to tiles of ≤ ``tile_target`` vectors. Output is identical
-    for every n_chunks, so the adaptive choice can't change results."""
-    import numpy as np
+    for every n_chunks, so the adaptive choice can't change results.
+
+    Clusters of these pairs come from :func:`cosine_components`, which
+    skips the pair relation altogether while the largest block fits
+    one tile."""
     import pandas as pd
 
     def empty() -> pd.DataFrame:
         return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-
-    def pairs_from(ids_a, M_a, ids_b, M_b, triangular: bool) -> pd.DataFrame:
-        C = (M_a @ M_b.T) / np.outer(
-            np.linalg.norm(M_a, axis=1), np.linalg.norm(M_b, axis=1)
-        )
-        if triangular:
-            iu, ju = np.triu_indices(len(ids_a), k=1)
-        else:
-            iu, ju = np.indices((len(ids_a), len(ids_b)))
-            iu, ju = iu.ravel(), ju.ravel()
-        c = np.round(C[iu, ju], 6)
-        keep = c >= threshold
-        ia, ib = ids_a[iu[keep]], ids_b[ju[keep]]
-        lo, hi = np.minimum(ia, ib), np.maximum(ia, ib)
-        return pd.DataFrame({"id_a": lo, "id_b": hi, "cosine": c[keep]})
 
     def gram(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(id_col)
@@ -347,29 +381,18 @@ def cosine_pairs_gemm(
             if len(sub_a) == 0 or len(sub_b) == 0:
                 return empty()
             return pairs_from(
-                sub_a[id_col].to_numpy(),
-                np.stack(sub_a[vec_col].to_numpy()).astype(np.float64),
-                sub_b[id_col].to_numpy(),
-                np.stack(sub_b[vec_col].to_numpy()).astype(np.float64),
+                *_block_rows(sub_a, id_col, vec_col),
+                *_block_rows(sub_b, id_col, vec_col),
+                threshold,
                 triangular=False,
             )
-        ids = pdf[id_col].to_numpy()
-        M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-        return pairs_from(ids, M, ids, M, triangular=True)
+        ids, M = _block_rows(pdf, id_col, vec_col)
+        return pairs_from(ids, M, ids, M, threshold, triangular=True)
 
-    # cosine_pairs' equi-join drops NULL block keys; groupBy would
-    # collect them into one block — filter to keep the paths twins
-    emb = embeddings.select(F.col(id_col), F.col(vec_col), F.col(block_col)).where(
-        F.col(block_col).isNotNull()
-    )
+    emb = _blocked(embeddings, id_col, vec_col, block_col)
     if n_chunks is None:
-        mx = (
-            emb.groupBy(block_col)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.max("n").alias("mx"))
-            .first()["mx"]
-        )
-        n_chunks = 1 if mx is None else -(-int(mx) // tile_target)
+        mx = _max_block_occupancy(emb, block_col)
+        n_chunks = 1 if mx is None else -(-mx // tile_target)
     if n_chunks <= 1:
         grouped = emb.groupBy(block_col)
     else:
@@ -378,6 +401,57 @@ def cosine_pairs_gemm(
         grouped.applyInPandas(gram, "id_a long, id_b long, cosine double")
         .orderBy(F.desc("cosine"), F.asc("id_a"), F.asc("id_b"))
     )
+
+
+def cosine_components(
+    embeddings: DataFrame,
+    threshold: float,
+    *,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    block_col: str = "label",
+    tile_target: int = 4096,
+) -> DataFrame:
+    """Near-dup clusters: ``(vertex, component)`` for every vector that has
+    at least one block-local pair of rounded cosine ``>= threshold``, where
+    component is the smallest id connected to it. Equal, row for row, to
+    ``connected_components(cosine_pairs_gemm(...), "id_a", "id_b")``; the
+    caller's left join covers vectors without a pair and NULL blocks.
+
+    Pairs never cross a block, so neither does a cluster. While the
+    largest block fits one tile (``<= tile_target`` rows), one
+    ``groupBy(block).applyInPandas`` computes each block's Gram matrix
+    (:func:`pairs_from`) and unions its pairs (``dedup.union_find``) in
+    the same task: the clusters are declared in the plan, and building
+    it runs only the max-block-occupancy aggregate, the scale switch.
+    Above that, the tiled pair relation (``n_chunks`` from the same
+    occupancy) goes through :func:`dedup.connected_components`, whose
+    distributed path handles blocks no single task can hold."""
+    import numpy as np
+    import pandas as pd
+
+    from .dedup import connected_components, union_find
+
+    emb = _blocked(embeddings, id_col, vec_col, block_col)
+    mx = _max_block_occupancy(emb, block_col)
+    if mx is not None and mx > tile_target:
+        pairs = cosine_pairs_gemm(
+            embeddings, threshold, id_col=id_col, vec_col=vec_col, block_col=block_col,
+            n_chunks=-(-mx // tile_target),
+        )
+        return connected_components(pairs, "id_a", "id_b")
+
+    def components(pdf: pd.DataFrame) -> pd.DataFrame:
+        # the same row order as cosine_pairs_gemm's block, so the same BLAS sums
+        ids, M = _block_rows(pdf.sort_values(id_col), id_col, vec_col)
+        p = pairs_from(ids, M, ids, M, threshold, triangular=True)
+        comp = union_find(p["id_a"].tolist(), p["id_b"].tolist())
+        return pd.DataFrame({
+            "vertex": np.fromiter(comp.keys(), np.int64, len(comp)),
+            "component": np.fromiter(comp.values(), np.int64, len(comp)),
+        })
+
+    return emb.groupBy(block_col).applyInPandas(components, "vertex long, component long")
 
 
 def max_cosine_vs_reference(

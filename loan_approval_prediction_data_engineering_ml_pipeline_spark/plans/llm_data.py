@@ -390,18 +390,20 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT a AS vec_id, min(b) AS component
     FROM reach GROUP BY a ORDER BY vec_id
     """,
-    description="Near-dup clusters: cosine pairs (label-blocked) -> "
-    "connected components (scale-adaptive: driver union-find on the "
-    "LSH-bounded pair set when it fits, else iterative min-label "
-    "propagation shuffling only (vertex, component) longs per round) "
-    "-> every doc labeled with its canonical (minimum) id. The "
+    description="Near-dup clusters: label-blocked cosine pairs -> "
+    "connected components, scale-adaptive: while the largest block fits "
+    "one tile, one groupBy(label).applyInPandas computes each block's "
+    "BLAS Gram matrix and union-finds its pairs in the same task, "
+    "declared in the plan (building it runs only the max-block-occupancy "
+    "aggregate); larger blocks take the tiled pair path and iterative "
+    "min-label propagation shuffling only (vertex, component) longs per "
+    "round -> every doc labeled with its canonical (minimum) id. The "
     "keep-one-per-cluster step of a training-data dedup pipeline; "
     "oracle = recursive-CTE transitive closure",
 )
 def near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    pairs = S.cosine_pairs_gemm(emb, threshold=0.4, block_col="label", n_chunks=None)
-    comps = D.connected_components(pairs, "id_a", "id_b")
+    comps = S.cosine_components(emb, threshold=0.4, block_col="label")
     return (
         emb.select("vec_id")
         .join(comps, emb["vec_id"] == comps["vertex"], "left")
@@ -461,16 +463,17 @@ def near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     "member instead of the minimum id — the keeper rule production "
     "dedup actually wants (FineWeb/RefinedWeb keep the best-scoring "
     "representative, not an arbitrary one). Per cluster: size, kept id, "
-    "kept score. Scale shape: clusters come from the bounded pair set "
-    "(never all-pairs), quality is the map-only composite, and the "
+    "kept score. Scale shape: clusters come from near_dup_components' "
+    "per-block Gram + union-find applyInPandas (never all-pairs; the "
+    "tiled pair path for oversized blocks), quality is the map-only "
+    "composite, and the "
     "argmax is one window over (component) — cluster-cardinality rows "
     "shuffle, never text",
 )
 def canonical_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents")
-    pairs = S.cosine_pairs_gemm(emb, threshold=0.4, block_col="label", n_chunks=None)
-    comps = D.connected_components(pairs, "id_a", "id_b")
+    comps = S.cosine_components(emb, threshold=0.4, block_col="label")
     membership = (
         emb.select("vec_id")
         .join(comps, emb["vec_id"] == comps["vertex"], "left")
@@ -552,9 +555,14 @@ _ORACLE_IVFPQR256_DIR = _index_dir("sf0.01", "ivfpqr8x8x256")
 
 
 def _query_vec(spark: SparkSession, sf_dir: str, vec_id: int) -> list[float]:
-    emb = load_table(spark, sf_dir, "embeddings")
-    row = emb.where(F.col("vec_id") == vec_id).select(V.as_double("embedding").alias("v")).first()
-    return list(row["v"])
+    """The embedding of ``vec_id``, read once per version of the table."""
+
+    def read() -> tuple[float, ...]:
+        emb = load_table(spark, sf_dir, "embeddings")
+        v = V.as_double("embedding").alias("v")
+        return tuple(emb.where(F.col("vec_id") == vec_id).select(v).first()["v"])
+
+    return list(memo(spark, sf_dir, ["embeddings.parquet"], ("query_vec", vec_id), read))
 
 
 def _emb_fp(pairs: DataFrame, id_col: str) -> tuple:

@@ -25,8 +25,11 @@ point and merely *scaled down* for local testing:
   what another (the benchmark, the tests) gets from its archive. A
   process that finds no archive for its key has its JVM dump one at exit
   to a unique ``.part`` file; a later start checks the file complete
-  (header and region CRCs) and publishes it by rename. A JVM is only ever handed a published archive whose header and
-  region extents check out: a truncated archive crashes the JVM with
+  (header and region CRCs) and publishes it by rename. A start refreshes
+  the mtime of the archive it maps, and drops files of other keys that no
+  start has touched for 30 days (renamed apps, changed class paths). A
+  JVM is only ever handed a published archive whose header and region
+  extents check out: a truncated archive crashes the JVM with
   SIGBUS, even under ``-Xshare:auto``. The JVM refuses to dump with a
   non-empty directory on its class path, so the launcher is pointed at an
   empty conf dir when ``$SPARK_HOME/conf`` holds only templates; a
@@ -113,6 +116,9 @@ _BASE_MAGIC, _TOP_MAGIC = 0xF00BABA2, 0xF00BABA8
 _N_REGIONS, _REGION_AT, _REGION_SIZE, _HEADER_SIZE_AT = 7, 16, 72, 0x208
 # an unfinished .part older than this has lost its writer; a dump takes ~30 s
 _STALE_PART_S = 600
+# a start maps its archive after touching it, so another group's file older
+# than this belongs to an app, class path or key format no start still uses
+_STALE_GROUP_S = 30 * 86400
 _CDS_LOG = "-Xlog:disable -Xlog:all=warning:stderr -Xlog:cds*=error:stderr"
 # a caller's own CDS flag: the JVM fails to start if it maps a dynamic
 # archive and is also asked to dump one
@@ -208,21 +214,26 @@ def _classpath(entries: list[str]) -> list[tuple] | None:
 
 
 def _publish(name: str) -> str | None:
-    """The archive published under ``name`` in :data:`_CDS_DIR`, if any.
-    Drops a published archive that no longer checks out, publishes a
-    checked-complete ``.part`` by rename, drops parts that are redundant or
-    stale, and drops archives of the same app, class path and heap whose
-    JDK or jars have changed."""
+    """The archive published under ``name`` in :data:`_CDS_DIR`, if any,
+    with its mtime refreshed. Drops a published archive that no longer
+    checks out, publishes a checked-complete ``.part`` by rename, drops
+    parts that are redundant or stale, drops archives of the same app,
+    class path and heap whose JDK or jars have changed, and drops every
+    file of another group (archive, part or stray name) untouched for
+    :data:`_STALE_GROUP_S`."""
     final = os.path.join(_CDS_DIR, name + ".jsa")
     group = name.split("-")[0] + "-"
     with contextlib.suppress(FileNotFoundError):
         if not _archive_ok(final, full=False):
             os.unlink(final)
     for entry in os.scandir(_CDS_DIR):
-        if not entry.name.startswith(group):
-            continue
+        if not entry.is_file():
+            continue  # the launcher's conf dir
         with contextlib.suppress(FileNotFoundError):
-            if not entry.name.startswith(name + "."):
+            if not entry.name.startswith(group):
+                if time.time() - entry.stat().st_mtime > _STALE_GROUP_S:
+                    os.unlink(entry.path)
+            elif not entry.name.startswith(name + "."):
                 os.unlink(entry.path)  # superseded key
             elif entry.name.endswith(".part"):
                 if _archive_ok(entry.path, full=True):
@@ -232,7 +243,11 @@ def _publish(name: str) -> str | None:
                         os.rename(entry.path, final)
                 elif time.time() - entry.stat().st_mtime > _STALE_PART_S:
                     os.unlink(entry.path)
-    return final if os.path.exists(final) else None
+    try:
+        os.utime(final)
+    except FileNotFoundError:
+        return None
+    return final
 
 
 def _cds_launch(conf: dict[str, str], app_name: str) -> tuple[str, str] | None:

@@ -435,6 +435,51 @@ def test_pack_documents_budget_and_determinism(spark):
     assert a == b
 
 
+def _components_frame(spark):
+    """A chain 1-2-3-4 of three pairs at cosine 0.94 (consecutive vectors
+    20 degrees apart, 1 and 3 only 0.77) with an unpaired 5 in block "a",
+    a one-row block "b", a pair in block "c", and a NULL-label row that
+    would pair with 1 and 6 if NULL were a block."""
+    import math
+
+    def unit(deg):
+        return [math.cos(math.radians(deg)), math.sin(math.radians(deg))]
+
+    rows = [
+        (1, unit(0), "a"), (2, unit(20), "a"), (3, unit(40), "a"), (4, unit(60), "a"),
+        (5, unit(180), "a"), (6, unit(0), "b"), (7, unit(0), None),
+        (8, unit(90), "c"), (9, unit(90), "c"),
+    ]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>, label string")
+
+
+def _is_fused(df) -> bool:
+    # the fallback's driver union-find returns rows, not a plan over the input
+    return "FlatMapGroupsInPandas" in df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("fused", [True, False])
+def test_cosine_components_equals_components_of_pairs(spark, fused):
+    # the default tile_target takes the fused per-block path; a tile_target
+    # just under the largest block (63 rows in the fixture, 5 in the
+    # frame) forces the tiled pairs -> connected_components path
+    cases = [(load_table(spark, SF, "embeddings"), 0.4, 32), (_components_frame(spark), 0.9, 4)]
+    for emb, threshold, small in cases:
+        tile_target = 4096 if fused else small
+        want = {
+            tuple(r)
+            for r in D.connected_components(
+                S.cosine_pairs_gemm(emb, threshold, n_chunks=None, tile_target=tile_target),
+                "id_a", "id_b",
+            ).collect()
+        }
+        comps = S.cosine_components(emb, threshold, tile_target=tile_target)
+        assert comps.columns == ["vertex", "component"]
+        assert _is_fused(comps) == fused
+        assert {tuple(r) for r in comps.collect()} == want and want
+    assert want == {(1, 1), (2, 1), (3, 1), (4, 1), (8, 8), (9, 8)}  # the frame's
+
+
 def test_cosine_pairs_gemm_adaptive_tiling(spark):
     emb = load_table(spark, SF, "embeddings")
     fixed = {

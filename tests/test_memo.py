@@ -124,3 +124,35 @@ def test_engine_has_one_module_level_memo():
                 if name not in _REGISTRIES and (rel, name) != ("sources/memo.py", "_MEMO"):
                     found.append(f"{rel}:{node.lineno} {name}")
     assert found == []
+
+
+def test_query_vec_is_read_once_per_version_of_the_embeddings(spark, tmp_path):
+    """A warm ann_ivf build launches no Spark job: its query vector comes
+    from the read memo. Rewriting the embeddings file is a new version,
+    so the next read sees the new vector."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from loan_approval_prediction_data_engineering_ml_pipeline_spark.plans import llm_data as L
+    from loan_approval_prediction_data_engineering_ml_pipeline_spark.plans.registry import QUERIES
+
+    sc, group = spark.sparkContext, "ann_ivf_warm_build"
+    QUERIES["ann_ivf"].fn(spark, SF)
+    sc.setJobGroup(group, group)
+    try:
+        QUERIES["ann_ivf"].fn(spark, SF)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    shutil.copyfile(os.path.join(SF, "embeddings.parquet"), sf / "embeddings.parquet")
+    t = pq.read_table(sf / "embeddings.parquet")
+    before = L._query_vec(spark, str(sf), 0)
+    i = t.schema.get_field_index("embedding")
+    flipped = [[-x for x in v] if k == 0 else v
+               for k, v in zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist())]
+    pq.write_table(t.set_column(i, t.schema.field(i), pa.array(flipped, t.schema.field(i).type)),
+                   sf / "embeddings.parquet")
+    assert L._query_vec(spark, str(sf), 0) == [-x for x in before] != before

@@ -286,6 +286,38 @@ def test_training_shard_stats_single_exchange(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_near_dup_components_declares_its_clusters(spark):
+    """The clusters are one applyInPandas inside the plan, not rows the
+    build collected to the driver (a LocalTableScan or an RDD scan); the
+    only jobs the build runs are the max-block-occupancy aggregate's,
+    which picks between that path and the tiled one."""
+    import inspect
+
+    from loan_approval_prediction_data_engineering_ml_pipeline_spark.operators import similarity as S
+    from loan_approval_prediction_data_engineering_ml_pipeline_spark.sources.loaders import load_table
+
+    load_table(spark, SF, "embeddings")  # the memoized read is not the build's
+    sc, group = spark.sparkContext, "near_dup_components_build"
+    sc.setJobGroup(group, group)
+    try:
+        df = QUERIES["near_dup_components"].fn(spark, SF)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" in plan
+    assert "LocalTableScan" not in plan and "Scan ExistingRDD" not in plan
+    lines, first = inspect.getsourcelines(S._max_block_occupancy)
+    occupancy = {f"first at {inspect.getsourcefile(S)}:{n}" for n in range(first, first + len(lines))}
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    sites = {
+        tracker.getStageInfo(stage).name
+        for job in jobs
+        for stage in tracker.getJobInfo(job).stageIds
+    }
+    assert jobs and sites <= occupancy, sites
+
+
 def test_semantic_dedup_no_all_pairs_join(spark):
     """SemDeDup's pair generation must stay cluster-blocked: grouped
     Arrow GEMM, never a cartesian/nested-loop pair join."""

@@ -195,3 +195,37 @@ def test_archive_is_keyed_by_app_name(tmp_path, monkeypatch):
     assert other.exists()
     key("app-a")
     assert not other.exists()
+
+
+def test_publish_prunes_files_of_groups_gone_stale(tmp_path, monkeypatch):
+    """Another group's archive (a renamed app, a changed class path) is
+    never mapped or superseded again: it goes once no start has touched
+    it for the stale age, as does a stray file; a recent one stays, and
+    publishing refreshes the mtime of the archive it returns. Needs no
+    JVM: the archive is a bare header that passes the check."""
+    import struct
+    import time
+    import zlib
+
+    from loan_approval_prediction_data_engineering_ml_pipeline_spark import session as S
+
+    head = bytearray(S._HEADER_SIZE_AT + 8)  # no regions in use
+    struct.pack_into("<IiiQ", head, 0, S._TOP_MAGIC, 0, S._CDS_VERSION, 0)
+    struct.pack_into("<Q", head, S._HEADER_SIZE_AT, len(head))
+    struct.pack_into("<I", head, 4, zlib.crc32(head[8:]))
+    monkeypatch.setattr(S, "_CDS_DIR", str(tmp_path))
+    name = "aaaaaaaaaaaa-bbbbbbbbbbbb"
+    old = time.time() - S._STALE_GROUP_S - 3600
+    files = {n: tmp_path / n for n in [f"{name}.jsa", "cccccccccccc-dddddddddddd.jsa",
+                                       "stray.tmp", "eeeeeeeeeeee-ffffffffffff.jsa"]}
+    for n, path in files.items():
+        path.write_bytes(bytes(head))
+        if not n.startswith("e"):
+            os.utime(path, (old, old))
+    (tmp_path / "conf").mkdir()
+    os.utime(tmp_path / "conf", (old, old))
+
+    assert S._publish(name) == str(files[f"{name}.jsa"])
+    assert files[f"{name}.jsa"].stat().st_mtime > time.time() - 600
+    assert sorted(os.listdir(tmp_path)) == sorted([f"{name}.jsa", "eeeeeeeeeeee-ffffffffffff.jsa",
+                                                   "conf"])
