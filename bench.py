@@ -45,9 +45,7 @@ HEADLINE = [
     "range_join_bucketed",
     "rollup_revenue",
     "dedup_exact",
-    "dedup_minhash_lsh",
     "dedup_minhash_near",
-    "text_quality",
     "tfidf_top_terms",
     "ann_cosine_topk",
     "window_suite",

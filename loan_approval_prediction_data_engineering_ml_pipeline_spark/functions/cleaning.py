@@ -54,10 +54,3 @@ def clean_dependents(col: Column | str) -> Column:
     if isinstance(col, str):
         return F.expr(dependents_sql(ident_sql(col)))
     return F.call_function("transform", F.array(col), F.expr("d -> " + dependents_sql("d")))[0]
-
-
-def nan_to_null(col: Column | str) -> Column:
-    """F6: float-NaN -> SQL NULL (the reference's np.nan -> None scrub,
-    MY.ipynb:37-41; Spark needs it only for literal NaN doubles)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.nanvl(c, F.lit(None).cast("double"))

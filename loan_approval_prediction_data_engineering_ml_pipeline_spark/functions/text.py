@@ -38,12 +38,6 @@ def token_count(col: Column | str) -> Column:
     return F.size(tokens(col))
 
 
-def bpe_ish_token_count(col: Column | str) -> Column:
-    """BPE-ish subword proxy: alternating alpha / digit runs."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.size(F.regexp_extract_all(c, F.lit("[a-z]+|[A-Z]+|[0-9]+"), F.lit(0)))
-
-
 MINHASH_PRIME = 2147483647  # 2^31 - 1: products stay under 2^62 (no BIGINT overflow in Spark ANSI or DuckDB)
 
 
@@ -69,15 +63,6 @@ def token_base_hash(tok: Column) -> Column:
     return (
         F.conv(F.substring(F.md5(tok), 1, 15), 16, 10).cast("long") % MINHASH_PRIME
     )
-
-
-def token_hash(seed: int, tok: Column) -> Column:
-    """h_seed(token): universal-hash family over the shared base hash —
-    one md5 per token total, then per-seed arithmetic (a*h + b) mod p.
-    The classic k-permutation trick: k independent md5 evaluations per
-    token would cost k× the string hashing for no statistical gain."""
-    a, b = minhash_coeffs(seed)
-    return (F.lit(a) * token_base_hash(tok) + F.lit(b)) % MINHASH_PRIME
 
 
 def minhash_signature(col: Column | str, k: int = 16) -> Column:

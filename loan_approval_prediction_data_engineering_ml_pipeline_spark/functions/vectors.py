@@ -61,11 +61,6 @@ def quantize_int8(v: Column) -> Column:
     return F.transform(v, lambda x: F.floor(x * scale + F.lit(0.5)).cast("int"))
 
 
-def dequantize(q: Column, scale: Column) -> Column:
-    """Inverse of quantize_int8 given scale = 127/max|x|."""
-    return F.transform(q, lambda x: x.cast("double") / scale)
-
-
 def l2_normalize_query(v: Column) -> Column:
     """Unit-norm with the single-probe QUERY guard (``qn or 1.0``,
     ADVICE r17): a zero query vector normalizes to itself (all zeros →

@@ -4,6 +4,5 @@ from .relational import (  # noqa: F401
     duplicate_count,
     value_counts,
     top_k,
-    distinct_values,
     grouped_stats,
 )

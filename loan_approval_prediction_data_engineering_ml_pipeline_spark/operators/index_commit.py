@@ -80,11 +80,6 @@ def commit_index_manifest(path: str, version: int, doc: dict) -> None:
         ) from exc
 
 
-def next_index_version(path: str) -> int:
-    versions = index_versions(path)
-    return (versions[-1] + 1) if versions else 1
-
-
 def new_object_rel() -> str:
     return f"objects/{uuid.uuid4().hex[:12]}"
 

@@ -126,12 +126,6 @@ def top_k(df: DataFrame, order_col: str | Column, k: int, *, ascending: bool = F
     return df.orderBy(c.asc() if ascending else c.desc()).limit(k)
 
 
-def distinct_values(df: DataFrame, col: str) -> DataFrame:
-    """A9: distinct-category collection (OneHotEncoder.fit analog,
-    LP.ipynb:756). Partial-agg dedupe before the shuffle."""
-    return df.select(col).distinct().orderBy(col)
-
-
 def salted_join(
     skewed: DataFrame,
     dim: DataFrame,

@@ -78,88 +78,6 @@ def rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "cube_counts",
-    tier="local",  # the CUBE grouping-set lattice is driver-verified via grouping_sets_counts (full 4-set cube + grouping markers)
-    oracle="""
-    SELECT l_returnflag, l_linestatus, CAST(count(*) AS BIGINT) AS n
-    FROM lineitem
-    GROUP BY CUBE (l_returnflag, l_linestatus)
-    ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
-    """,
-    description="CUBE over (returnflag, linestatus): all grouping-set "
-    "combinations in one pass",
-)
-def cube_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.cube("l_returnflag", "l_linestatus")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.asc_nulls_first("l_returnflag"), F.asc_nulls_first("l_linestatus"))
-    )
-
-
-@query(
-    "percentiles_by_flag",
-    tier="local",  # driver-verified via the merged grouped_stats (p25/p50/p75/p90 columns)
-    oracle="""
-    SELECT l_returnflag,
-           round(quantile_cont(l_extendedprice, 0.25), 6) AS p25,
-           round(quantile_cont(l_extendedprice, 0.50), 6) AS p50,
-           round(quantile_cont(l_extendedprice, 0.75), 6) AS p75,
-           round(quantile_cont(l_extendedprice, 0.90), 6) AS p90
-    FROM lineitem
-    GROUP BY l_returnflag
-    ORDER BY l_returnflag
-    """,
-    description="Exact interpolated percentiles per group (A6 family). At "
-    "100 TB switch to percentile_approx with a tuned accuracy — exposed "
-    "via the same operator",
-)
-def percentiles_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    pct = F.percentile("l_extendedprice", F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75), F.lit(0.9)))
-    return (
-        li.groupBy("l_returnflag")
-        .agg(pct.alias("p"))
-        .select(
-            "l_returnflag",
-            F.round(F.col("p")[0], 6).alias("p25"),
-            F.round(F.col("p")[1], 6).alias("p50"),
-            F.round(F.col("p")[2], 6).alias("p75"),
-            F.round(F.col("p")[3], 6).alias("p90"),
-        )
-        .orderBy("l_returnflag")
-    )
-
-
-@query(
-    "corr_cov",
-    tier="local",  # driver-verified via the merged grouped_stats (corr/cov columns)
-    oracle="""
-    SELECT l_returnflag,
-           round(corr(l_quantity, l_extendedprice), 6)       AS corr_qty_price,
-           round(covar_samp(l_quantity, l_extendedprice), 4) AS cov_qty_price,
-           round(covar_pop(l_quantity, l_discount), 6)       AS cov_qty_disc
-    FROM lineitem
-    GROUP BY l_returnflag
-    ORDER BY l_returnflag
-    """,
-    description="Correlation / covariance aggregates per group",
-)
-def corr_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.round(F.corr("l_quantity", "l_extendedprice"), 6).alias("corr_qty_price"),
-            F.round(F.covar_samp("l_quantity", "l_extendedprice"), 4).alias("cov_qty_price"),
-            F.round(F.covar_pop("l_quantity", "l_discount"), 6).alias("cov_qty_disc"),
-        )
-        .orderBy("l_returnflag")
-    )
-
-
-@query(
     "distinct_users_by_type",
     oracle="""
     SELECT event_type,
@@ -182,40 +100,6 @@ def distinct_users_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_events"),
         )
         .orderBy("event_type")
-    )
-
-
-@query(
-    "running_total",
-    tier="local",  # the running cumulative-sum frame is driver-verified inside window_suite (running_spend)
-    oracle="""
-    SELECT o_custkey,
-           strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS order_ts,
-           o_orderkey,
-           round(sum(o_totalprice) OVER (
-               PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-               ROWS UNBOUNDED PRECEDING), 4) AS running_spend
-    FROM orders
-    ORDER BY o_custkey, order_ts, o_orderkey
-    """,
-    description="Running cumulative sum per customer over event time "
-    "(frame-bounded window aggregate)",
-)
-def running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    w = (
-        W.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    return (
-        o.select(
-            "o_custkey",
-            F.date_format("o_orderdate", "yyyy-MM-dd HH:mm:ss").alias("order_ts"),
-            "o_orderkey",
-            F.round(F.sum("o_totalprice").over(w), 4).alias("running_spend"),
-        )
-        .orderBy("o_custkey", "order_ts", "o_orderkey")
     )
 
 
@@ -367,9 +251,9 @@ def window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="GROUPING SETS over the full 4-set lattice of (status, "
     "priority) — i.e. CUBE — with grouping() markers: every aggregation "
     "level in one shuffle instead of a union of four scans. The general "
-    "form behind rollup/cube (the .cube()/.rollup() API twins are "
-    "oracle-checked locally as cube_counts / driver-checked as "
-    "rollup_revenue)",
+    "form behind rollup/cube: Catalyst plans .cube() as this same "
+    "grouping-sets Expand + Aggregate, and the .rollup() API twin is "
+    "driver-checked as rollup_revenue",
 )
 def grouping_sets_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -452,63 +336,6 @@ def price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.max(price), 4).alias("hi"),
         )
         .orderBy("bucket")
-    )
-
-
-@query(
-    "table_profile",
-    tier="local",  # driver-verified via the extended null_audit (same single-pass struct-agg profile, 6 lineitem columns)
-    oracle="""
-    SELECT 'c_custkey' AS column_name,
-           CAST(sum(CASE WHEN c_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-           CAST(count(DISTINCT c_custkey) AS BIGINT) AS n_distinct,
-           CAST(min(c_custkey) AS VARCHAR) AS min_value,
-           CAST(max(c_custkey) AS VARCHAR) AS max_value
-    FROM customer
-    UNION ALL
-    SELECT 'c_acctbal',
-           CAST(sum(CASE WHEN c_acctbal IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-           CAST(count(DISTINCT c_acctbal) AS BIGINT),
-           CAST(round(min(c_acctbal), 4) AS VARCHAR),
-           CAST(round(max(c_acctbal), 4) AS VARCHAR)
-    FROM customer
-    UNION ALL
-    SELECT 'c_mktsegment',
-           CAST(sum(CASE WHEN c_mktsegment IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-           CAST(count(DISTINCT c_mktsegment) AS BIGINT),
-           CAST(min(c_mktsegment) AS VARCHAR),
-           CAST(max(c_mktsegment) AS VARCHAR)
-    FROM customer
-    ORDER BY column_name
-    """,
-    description="Data profiling: per-column nulls / distinct / min / max "
-    "in ONE scan (the df.info()/describe() analog, LP.ipynb:591-626, as "
-    "a distributed single-pass aggregate)",
-)
-def table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-
-    def prof(col: str, numeric: bool):
-        mn = F.round(F.min(col), 4) if numeric else F.min(col)
-        mx = F.round(F.max(col), 4) if numeric else F.max(col)
-        return F.struct(
-            F.lit(col).alias("column_name"),
-            F.sum(F.col(col).isNull().cast("long")).alias("n_nulls"),
-            F.countDistinct(col).alias("n_distinct"),
-            mn.cast("string").alias("min_value"),
-            mx.cast("string").alias("max_value"),
-        )
-
-    # one aggregation job produces every column's profile; unpack after
-    agg = c.agg(
-        prof("c_custkey", True).alias("p1"),
-        prof("c_acctbal", True).alias("p2"),
-        prof("c_mktsegment", False).alias("p3"),
-    )
-    return (
-        agg.select(F.explode(F.array("p1", "p2", "p3")).alias("p"))
-        .select("p.*")
-        .orderBy("column_name")
     )
 
 

@@ -32,15 +32,7 @@ def _docs_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ensure_cpu_parallelism(load_table(spark, sf_dir, "documents"))
 
 
-# Banding parameters are threshold-tuned (tau ~ (1/b)^(1/r)): the LSH
-# query verifies at jaccard=1.0, so ONE band of all k rows is optimal —
-# narrower bands only add false candidates, and this corpus has high
-# ambient Jaccard (median ~0.53, tiny synthetic vocabulary), so they add
-# a LOT (measured at sf0.1: r=8 -> 2.4M candidate pairs, r=16 -> 1.0M,
-# r=k=16 single band -> ~40k). Recall for jaccard=1 pairs is exactly 1
-# at any banding, since identical sets share every band.
 MINHASH_K = 16
-LSH_BANDS = 1
 
 _TOKS = "list_distinct(string_split(trim(text), ' '))"
 _STOP_EN = "['the','a','of','and','to','in','is']"
@@ -117,28 +109,6 @@ def dedup_minhash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is generated from the same constant at import time.
 
 
-@query(
-    "dedup_minhash_lsh",
-    tier="local",  # at min_jaccard=1.0 this is the degenerate (recall-1) LSH regime; the approximate regime LSH exists for is driver-verified as dedup_minhash_near
-    oracle="""
-    WITH t AS (SELECT doc_id, list_sort(list_distinct(string_split(trim(text), ' '))) AS toks
-               FROM documents)
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b, 1.0 AS jaccard
-    FROM t a JOIN t b ON a.toks = b.toks AND a.doc_id < b.doc_id
-    ORDER BY id_a, id_b
-    """,
-    description="MinHash+LSH dedup pipeline: shingle → minhash → band → "
-    "bucket-join → exact-Jaccard verification. min_jaccard=1.0 makes "
-    "recall exactly 1 (identical sets share every band), so the LSH "
-    "path is oracle-checkable against the exact duplicate-set self-join",
-)
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return D.minhash_lsh_dedup(
-        docs, k=MINHASH_K, bands=LSH_BANDS, min_jaccard=1.0
-    ).orderBy("id_a", "id_b")
-
-
 # DuckDB twin of functions.text.word_ngrams(text, n): ALL word n-grams
 # in positional order (docs in this corpus always have >= 10 tokens, so
 # the short-doc guard never fires and the oracle can skip it).
@@ -156,7 +126,6 @@ def _shingles_sql(n: int, text: str = "text") -> str:
 
 
 _SHINGLES3 = _shingles_sql(3)
-_J3 = "round(len(list_intersect(a.s, b.s))*1.0/len(list_distinct(list_concat(a.s, b.s))), 6)"
 
 
 # Ground-truth threshold-Jaccard oracle with PREFIX-FILTERED candidate
@@ -1042,52 +1011,6 @@ def ann_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "text_quality",
-    tier="local",  # driver-verified via the merged doc_profile (same columns + fingerprint)
-    oracle=f"""
-    WITH t AS (
-        SELECT doc_id, text,
-               string_split(trim(text), ' ') AS toks,
-               len(string_split(trim(text), ' ')) AS n_toks
-        FROM documents
-    )
-    SELECT doc_id,
-           CAST(n_toks AS BIGINT) AS n_tokens,
-           round(list_aggregate(list_transform(toks, x -> length(x)), 'sum') * 1.0
-                 / n_toks, 6) AS avg_token_len,
-           round(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) * 1.0
-                 / length(text), 6) AS alpha_ratio,
-           round(len(list_filter(toks, x -> list_contains({_STOP_EN}, x))) * 1.0
-                 / n_toks, 6) AS stopword_ratio,
-           round(
-             least(list_aggregate(list_transform(toks, x -> length(x)), 'sum') * 1.0
-                   / n_toks / 8.0, 1.0) * 0.3
-             + length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) * 1.0
-               / length(text) * 0.3
-             + least(len(list_filter(toks, x -> list_contains({_STOP_EN}, x))) * 1.0
-                     / n_toks * 5.0, 1.0) * 0.2
-             + len(list_distinct(toks)) * 1.0 / n_toks * 0.2,
-           6) AS quality_score
-    FROM t
-    ORDER BY doc_id
-    """,
-    description="Per-document quality scoring: token stats, alphabetic "
-    "ratio, stopword ratio, composite score — all codegen'd expressions",
-)
-def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs_spread(spark, sf_dir)
-    c = F.col("text")
-    return docs.select(
-        "doc_id",
-        X.token_count(c).cast("long").alias("n_tokens"),
-        F.round(X.avg_token_len(c), 6).alias("avg_token_len"),
-        F.round(X.alpha_ratio(c), 6).alias("alpha_ratio"),
-        F.round(X.stopword_hits(c, X.STOPWORDS) / X.token_count(c), 6).alias("stopword_ratio"),
-        F.round(X.quality_score(c), 6).alias("quality_score"),
-    ).orderBy("doc_id")
-
-
-@query(
     "doc_profile",
     oracle=f"""
     WITH t AS (
@@ -1208,75 +1131,6 @@ def lang_token_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "lang_id_confusion",
-    tier="local",  # driver-verified via the merged lang_token_profile ((lang, lang_pred) grain)
-    oracle=f"""
-    WITH t AS (
-        SELECT lang,
-               len(list_filter(string_split(trim(text), ' '),
-                               x -> list_contains({_STOP_EN}, x))) AS en,
-               len(list_filter(string_split(trim(text), ' '),
-                               x -> list_contains({_STOP_DE}, x))) AS de,
-               len(list_filter(string_split(trim(text), ' '),
-                               x -> list_contains({_STOP_FR}, x))) AS fr
-        FROM documents
-    )
-    SELECT lang,
-           CASE WHEN en >= de AND en >= fr THEN 'en'
-                WHEN de >= fr THEN 'de'
-                ELSE 'fr' END AS lang_pred,
-           CAST(count(*) AS BIGINT) AS n
-    FROM t
-    GROUP BY lang, lang_pred
-    ORDER BY lang, lang_pred
-    """,
-    description="Language-ID heuristic (stopword-profile argmax with "
-    "deterministic tie-break) cross-tabulated against the labeled lang",
-)
-def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.select("lang", X.lang_id("text").alias("lang_pred"))
-        .groupBy("lang", "lang_pred")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("lang", "lang_pred")
-    )
-
-
-@query(
-    "token_stats_by_lang",
-    tier="local",  # driver-verified via the merged lang_token_profile
-    oracle="""
-    WITH e AS (SELECT doc_id, lang, unnest(string_split(trim(text), ' ')) AS tok
-               FROM documents)
-    SELECT lang,
-           CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-           CAST(count(*) AS BIGINT)               AS total_tokens,
-           CAST(count(DISTINCT tok) AS BIGINT)    AS vocab,
-           round(count(*) * 1.0 / count(DISTINCT doc_id), 6) AS avg_tokens
-    FROM e
-    GROUP BY lang
-    ORDER BY lang
-    """,
-    description="Token counting rolled up by language: doc counts, token "
-    "totals, vocabulary size (explode + multi-distinct aggregate)",
-)
-def token_stats_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    e = docs.select("doc_id", "lang", F.explode(X.tokens("text")).alias("tok"))
-    return (
-        e.groupBy("lang")
-        .agg(
-            F.countDistinct("doc_id").alias("n_docs"),
-            F.count(F.lit(1)).alias("total_tokens"),
-            F.countDistinct("tok").alias("vocab"),
-            F.round(F.count(F.lit(1)) / F.countDistinct("doc_id"), 6).alias("avg_tokens"),
-        )
-        .orderBy("lang")
-    )
-
-
-@query(
     "tfidf_top_terms",
     oracle="""
     WITH tf AS (
@@ -1317,30 +1171,6 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("total_tfidf"), F.asc("term"))
         .limit(20)
     )
-
-
-@query(
-    "doc_fingerprint",
-    tier="local",  # driver-verified via the merged doc_profile
-    oracle="""
-    SELECT doc_id,
-           md5(lower(trim(text)))          AS fingerprint,
-           CAST(length(text) AS BIGINT)    AS n_chars_actual,
-           (length(text) = n_chars)        AS length_matches
-    FROM documents
-    ORDER BY doc_id
-    """,
-    description="Document fingerprinting: content hash + metadata "
-    "consistency check (declared n_chars vs actual)",
-)
-def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        X.fingerprint_md5(F.col("text")).alias("fingerprint"),
-        F.length("text").cast("long").alias("n_chars_actual"),
-        (F.length("text") == F.col("n_chars")).alias("length_matches"),
-    ).orderBy("doc_id")
 
 
 @query(

@@ -14,7 +14,7 @@ and nothing collects to the driver.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import Window as W
 
 from ..operators import relational as ops
@@ -199,7 +199,16 @@ def value_counts_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     "percentile_approx with tuned accuracy — same operator surface",
 )
 def grouped_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    qty, price = F.col("l_quantity"), F.col("l_extendedprice")
+    probs = F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75), F.lit(0.9))
+    return _grouped_stats(_t(spark, sf_dir, "lineitem"), F.median(qty), F.percentile(price, probs))
+
+
+def _grouped_stats(li: DataFrame, median: Column, pcts: Column) -> DataFrame:
+    """grouped_stats' two-branch plan: the eight moment aggregates in one
+    codegen HashAggregate, joined on l_returnflag to the order statistics
+    given here — ``median`` of l_quantity and ``pcts``, the p25/p50/p75/p90
+    array of l_extendedprice."""
     qty, price = F.col("l_quantity"), F.col("l_extendedprice")
     moments = li.groupBy("l_returnflag").agg(
         F.count(qty).alias("n"),
@@ -211,13 +220,12 @@ def grouped_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.covar_samp(qty, price), 4).alias("cov_qty_price"),
         F.round(F.covar_pop(qty, F.col("l_discount")), 6).alias("cov_qty_disc"),
     )
-    pct = F.percentile(price, F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75), F.lit(0.9)))
-    pcts = li.groupBy("l_returnflag").agg(
-        F.round(F.median(qty), 6).alias("median"),
-        pct.alias("__p"),
+    order_stats = li.groupBy("l_returnflag").agg(
+        F.round(median, 6).alias("median"),
+        pcts.alias("__p"),
     )
     return (
-        moments.join(pcts, "l_returnflag")
+        moments.join(order_stats, "l_returnflag")
         .select(
             "l_returnflag", "n", "mean", "stddev", "median", "min", "max",
             F.round(F.col("__p")[0], 6).alias("p25"),
@@ -244,48 +252,14 @@ def grouped_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(~1e-4 rank error) — tune DOWN for wider groups at scale",
 )
 def grouped_stats_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
     qty, price = F.col("l_quantity"), F.col("l_extendedprice")
-    moments = li.groupBy("l_returnflag").agg(
-        F.count(qty).alias("n"),
-        F.round(F.avg(qty), 6).alias("mean"),
-        F.round(F.stddev_samp(qty), 6).alias("stddev"),
-        F.round(F.min(qty), 6).alias("min"),
-        F.round(F.max(qty), 6).alias("max"),
-        F.round(F.corr(qty, price), 6).alias("corr_qty_price"),
-        F.round(F.covar_samp(qty, price), 4).alias("cov_qty_price"),
-        F.round(F.covar_pop(qty, F.col("l_discount")), 6).alias("cov_qty_disc"),
-    )
+    probs = F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75), F.lit(0.9))
     acc = F.lit(10000)
-    pcts = li.groupBy("l_returnflag").agg(
-        F.round(F.percentile_approx(qty, F.lit(0.5), acc), 6).alias("median"),
-        F.percentile_approx(
-            price, F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75), F.lit(0.9)), acc
-        ).alias("__p"),
+    return _grouped_stats(
+        _t(spark, sf_dir, "lineitem"),
+        F.percentile_approx(qty, F.lit(0.5), acc),
+        F.percentile_approx(price, probs, acc),
     )
-    return (
-        moments.join(pcts, "l_returnflag")
-        .select(
-            "l_returnflag", "n", "mean", "stddev", "median", "min", "max",
-            F.round(F.col("__p")[0], 6).alias("p25"),
-            F.round(F.col("__p")[1], 6).alias("p50"),
-            F.round(F.col("__p")[2], 6).alias("p75"),
-            F.round(F.col("__p")[3], 6).alias("p90"),
-            "corr_qty_price", "cov_qty_price", "cov_qty_disc",
-        )
-        .orderBy("l_returnflag")
-    )
-
-
-@query(
-    "distinct_categories",
-    tier="local",  # A9 surface is contained in every groupBy; merged-out of the capped driver set
-    oracle="SELECT DISTINCT c_mktsegment FROM customer ORDER BY c_mktsegment",
-    description="A9: distinct-category collection "
-    "(reference: OneHotEncoder.fit category dict, LP.ipynb:756)",
-)
-def distinct_categories(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ops.distinct_values(_t(spark, sf_dir, "customer"), "c_mktsegment")
 
 
 @query(
@@ -483,43 +457,6 @@ def left_join_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "semi_join",
-    tier="local",  # driver-verified via the merged semi_anti_join
-    oracle="""
-    SELECT c_custkey, c_acctbal FROM customer
-    WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-    """,
-    description="J1 variant: left-semi join (EXISTS) — customers with >=1 order",
-)
-def semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
-    o = _t(spark, sf_dir, "orders").select("o_custkey")
-    return c.join(o, c.c_custkey == o.o_custkey, "left_semi")
-
-
-@query(
-    "anti_join",
-    tier="local",  # driver-verified via the merged semi_anti_join
-    oracle="""
-    SELECT c_custkey, c_acctbal FROM customer
-    WHERE NOT EXISTS (SELECT 1 FROM orders
-                      WHERE o_custkey = c_custkey
-                        AND o_orderpriority = '1-URGENT')
-    """,
-    description="J1 variant: left-anti join (NOT EXISTS) — customers with "
-    "no urgent order (predicate keeps the result non-empty at every sf)",
-)
-def anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
-    o = (
-        _t(spark, sf_dir, "orders")
-        .filter(F.col("o_orderpriority") == "1-URGENT")
-        .select("o_custkey")
-    )
-    return c.join(o, c.c_custkey == o.o_custkey, "left_anti")
-
-
-@query(
     "semi_anti_join",
     oracle="""
     SELECT 'semi' AS side, c_custkey, c_acctbal FROM customer
@@ -631,55 +568,6 @@ def window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("rn")
         .orderBy("o_custkey")
     )
-
-
-@query(
-    "union_distinct",
-    tier="local",  # driver-verified via the merged set_ops
-    oracle="""
-    SELECT c_nationkey AS nationkey FROM customer
-    UNION
-    SELECT s_nationkey AS nationkey FROM supplier
-    ORDER BY nationkey
-    """,
-    description="U1 extension: UNION (distinct) of two key sets",
-)
-def union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
-    return c.unionByName(s).distinct().orderBy("nationkey")
-
-
-@query(
-    "intersect_except",
-    tier="local",  # driver-verified via the merged set_ops
-    oracle="""
-    WITH purchasers AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase'),
-    erroring AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'error'),
-    both_u AS (SELECT user_id FROM purchasers INTERSECT SELECT user_id FROM erroring),
-    only_p AS (SELECT user_id FROM purchasers EXCEPT SELECT user_id FROM erroring)
-    SELECT 'both' AS cohort, CAST(count(*) AS BIGINT) AS n FROM both_u
-    UNION ALL
-    SELECT 'purchase_only', CAST(count(*) AS BIGINT) FROM only_p
-    ORDER BY cohort
-    """,
-    description="U1 extension: INTERSECT / EXCEPT set operations "
-    "(user cohorts by event behavior)",
-)
-def intersect_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    purchasers = ev.where(F.col("event_type") == "purchase").select("user_id").distinct()
-    erroring = ev.where(F.col("event_type") == "error").select("user_id").distinct()
-    both_u = purchasers.intersect(erroring).agg(F.count(F.lit(1)).alias("n")).select(
-        F.lit("both").alias("cohort"), "n"
-    )
-    # subtract() = set-semantics EXCEPT, matching the oracle's EXCEPT
-    # (exceptAll would be EXCEPT ALL — equivalent here only because the
-    # inputs are pre-distincted, so say what we mean)
-    only_p = purchasers.subtract(erroring).agg(F.count(F.lit(1)).alias("n")).select(
-        F.lit("purchase_only").alias("cohort"), "n"
-    )
-    return both_u.unionByName(only_p).orderBy("cohort")
 
 
 @query(

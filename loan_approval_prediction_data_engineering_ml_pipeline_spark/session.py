@@ -60,6 +60,8 @@ from pyspark.sql import SparkSession
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 _UNSET = object()
+# the directory holding this package, whatever the caller's working directory
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @contextlib.contextmanager
@@ -105,9 +107,7 @@ def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
 
 # -- class-data-sharing archive for the driver JVM ---------------------------
 
-_CDS_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".build", "cds"
-)
+_CDS_DIR = os.path.join(_ROOT, ".build", "cds")
 # JDK 17's archive format (CURRENT_CDS_ARCHIVE_VERSION 11): a JDK whose
 # base archive carries another version gets no archive, because
 # _archive_ok could not check what its JVM writes
@@ -306,7 +306,10 @@ def get_spark(
     ``driver_memory`` to $SPARK_DRIVER_MEMORY or :func:`default_driver_memory`.
     A call that launches the driver JVM also sets up its class-data-sharing
     archive (module docstring); the archive's flags go before any
-    ``spark.driver.extraJavaOptions`` in ``extra_conf``.
+    ``spark.driver.extraJavaOptions`` in ``extra_conf``. The Python workers
+    get this package's parent directory first on their ``PYTHONPATH``:
+    pandas UDFs whose closures call module-level helpers unpickle them by
+    importing the package by name.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
     if shuffle_partitions is None:
@@ -325,6 +328,8 @@ def get_spark(
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         **(extra_conf or {}),
     }
+    worker_path = conf.get("spark.executorEnv.PYTHONPATH")
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(filter(None, [_ROOT, worker_path]))
     cds = _cds_launch(conf, app_name)
     if cds:
         opts = f"{cds[0]} {conf.get('spark.driver.extraJavaOptions', '')}".strip()

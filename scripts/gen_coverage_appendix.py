@@ -13,7 +13,8 @@ from loan_approval_prediction_data_engineering_ml_pipeline_spark.plans.registry 
 
 COVERAGE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "COVERAGE.md")
 
-HEADER = """## Appendix: full query registry (auto-generated — rerun scripts/gen_coverage_appendix.py after registry changes)
+MARK = "## Appendix: full query registry"
+HEADER = MARK + """ (auto-generated — rerun scripts/gen_coverage_appendix.py after registry changes)
 
 Tier `driver` = in `__spark_entry__.queries()`, verified per-round by the
 harness (oracle hash-compare, or rows-only where marked). Tier `local` =
@@ -33,7 +34,8 @@ from tests.test_oracle_parity import BOUND_CHECKED_QUERIES  # noqa: E402
 BOUNDED = set(BOUND_CHECKED_QUERIES)
 
 
-def main() -> None:
+def render() -> str:
+    """The appendix, from its heading to the end of COVERAGE.md."""
     rows = []
     for name, spec in QUERIES.items():
         check = "oracle" if spec.oracle is not None else (
@@ -43,12 +45,16 @@ def main() -> None:
         if len(desc) > 140:
             desc = desc[:137] + "..."
         rows.append(f"| `{name}` | {spec.tier} | {check} | {desc} |")
+    return HEADER + "\n".join(rows) + "\n"
+
+
+def main() -> None:
     with open(COVERAGE) as f:
         doc = f.read()
-    head, _, _ = doc.partition("## Appendix: full query registry")
+    head, _, _ = doc.partition(MARK)
     with open(COVERAGE, "w") as f:
-        f.write(head + HEADER + "\n".join(rows) + "\n")
-    print(f"wrote {len(rows)} registry rows")
+        f.write(head + render())
+    print(f"wrote {len(QUERIES)} registry rows")
 
 
 if __name__ == "__main__":

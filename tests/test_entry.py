@@ -2,7 +2,12 @@
 
 from __future__ import annotations
 
+import importlib.util
+import os
+
 import __spark_entry__ as entry_mod
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_entry_returns_rows(spark):
@@ -73,3 +78,16 @@ def test_registry_lazy_oracles_all_build():
     for name, spec in registry.QUERIES.items():
         o = spec.oracle  # raises loudly if a builder is broken
         assert o is None or (isinstance(o, str) and o.strip()), name
+
+
+def test_coverage_appendix_matches_the_registry():
+    # a registry change that forgets to rerun the generator fails here
+    path = os.path.join(ROOT, "scripts", "gen_coverage_appendix.py")
+    spec = importlib.util.spec_from_file_location("gen_coverage_appendix", path)
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    with open(gen.COVERAGE) as f:
+        _, mark, appendix = f.read().partition(gen.MARK)
+    assert mark + appendix == gen.render(), (
+        "COVERAGE.md's appendix is stale: run scripts/gen_coverage_appendix.py"
+    )
