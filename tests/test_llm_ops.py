@@ -95,6 +95,12 @@ def test_mllib_minhash_agrees_with_expression_lsh(spark):
     }
     # identical token sets collide in every hash table in both schemes
     assert mllib_pairs == expr_pairs
+    # and both equal the exact set of pairs with identical token sets
+    by_set: dict[frozenset, list[int]] = {}
+    for r in docs.select("doc_id", "text").collect():
+        by_set.setdefault(frozenset(r["text"].strip(" ").split(" ")), []).append(r["doc_id"])
+    exact = {(a, b) for ids in by_set.values() for a in ids for b in ids if a < b}
+    assert exact and expr_pairs == exact
 
 
 def test_mllib_brp_topk_overlaps_brute_force(spark):
@@ -814,19 +820,20 @@ def test_prefix_filtered_oracle_equals_all_pairs_truth_set():
     an EXACT optimization, not an approximation. Prove it: on sf0.01
     the prefix-filtered oracle's (id_a, id_b, jaccard) set must equal
     the naive all-pairs threshold self-join, pair for pair."""
-    from loan_approval_prediction_data_engineering_ml_pipeline_spark.plans.llm_data import _J3, _SHINGLES3
+    from loan_approval_prediction_data_engineering_ml_pipeline_spark.plans.llm_data import _SHINGLES3
     from loan_approval_prediction_data_engineering_ml_pipeline_spark.plans.registry import QUERIES
 
     from .oracle_utils import duckdb_run
 
     sf_dir = "/root/testdata/sf0.01"
+    j3 = "round(len(list_intersect(a.s, b.s))*1.0/len(list_distinct(list_concat(a.s, b.s))), 6)"
     fast = duckdb_run(QUERIES["dedup_minhash_near"].oracle, sf_dir)
     naive = duckdb_run(
         f"""
         WITH sh AS MATERIALIZED (SELECT doc_id, {_SHINGLES3} AS s FROM documents)
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, {_J3} AS jaccard
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b, {j3} AS jaccard
         FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE {_J3} >= 0.8
+        WHERE {j3} >= 0.8
         ORDER BY id_a, id_b
         """,
         sf_dir,
