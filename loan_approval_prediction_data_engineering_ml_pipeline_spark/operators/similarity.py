@@ -205,7 +205,7 @@ def brute_force_topk(
 ) -> DataFrame:
     emb = embeddings.select(F.col(id_col), V.as_double(vec_col).alias("v"))
     q = emb.where(F.col(id_col) == query_id).select(F.col("v").alias("qv"))
-    cos = V.cosine(F.col("v"), F.col("qv"))
+    cos = V.cosine("v", "qv")
     return (
         emb.where(F.col(id_col) != query_id)
         .join(F.broadcast(q))
@@ -227,13 +227,12 @@ def cosine_pairs(
     (equi-join on the block key instead of a cross join) — the blocking
     pattern that keeps pair generation tractable at scale; pass None for
     the exact-but-quadratic variant."""
-    v = V.as_double(vec_col)
     # norms once per ROW before the join (not per pair): 2/3 of the
     # array arithmetic moves out of the O(pairs) loop
     emb = embeddings.select(
         F.col(id_col),
-        v.alias("v"),
-        V.norm(v).alias("nrm"),
+        V.as_double(vec_col).alias("v"),
+        V.norm(V.as_double_sql(vec_col)).alias("nrm"),
         *([F.col(block_col)] if block_col else []),
     )
     a = emb.alias("a")
@@ -241,7 +240,7 @@ def cosine_pairs(
     on = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
     if block_col:
         on = on & (F.col(f"a.{block_col}") == F.col(f"b.{block_col}"))
-    cos = V.dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nrm") * F.col("b.nrm"))
+    cos = V.dot("a.v", "b.v") / (F.col("a.nrm") * F.col("b.nrm"))
     return (
         a.join(b, on)
         .select(
@@ -317,13 +316,17 @@ def _blocked(embeddings: DataFrame, id_col: str, vec_col: str, block_col: str) -
     )
 
 
-def _max_block_occupancy(emb: DataFrame, block_col: str) -> int | None:
-    """Rows in the largest block of ``emb`` (None when it is empty): one
-    aggregate, run while the plan is built, that sizes the tiling. A top-1
-    of the block counts is one shuffle, where a global max over them
-    would be a second one."""
-    top = emb.groupBy(block_col).agg(F.count(F.lit(1)).alias("n")).orderBy(F.desc("n")).first()
-    return None if top is None else int(top["n"])
+def max_block_occupancy(emb: DataFrame, block_col: str) -> int:
+    """Rows in the largest non-NULL block of ``emb`` (0 when there is
+    none): one aggregate, run while the plan is built, that sizes the
+    tiling. A top-1 of the block counts is one shuffle, where a global max
+    over them would be a second one."""
+    top = (
+        emb.where(F.col(block_col).isNotNull())
+        .groupBy(block_col).agg(F.count(F.lit(1)).alias("n"))
+        .orderBy(F.desc("n")).first()
+    )
+    return 0 if top is None else int(top["n"])
 
 
 def cosine_pairs_gemm(
@@ -391,8 +394,7 @@ def cosine_pairs_gemm(
 
     emb = _blocked(embeddings, id_col, vec_col, block_col)
     if n_chunks is None:
-        mx = _max_block_occupancy(emb, block_col)
-        n_chunks = 1 if mx is None else -(-mx // tile_target)
+        n_chunks = -(-max_block_occupancy(emb, block_col) // tile_target)
     if n_chunks <= 1:
         grouped = emb.groupBy(block_col)
     else:
@@ -411,6 +413,7 @@ def cosine_components(
     vec_col: str = "embedding",
     block_col: str = "label",
     tile_target: int = 4096,
+    max_block: int | None = None,
 ) -> DataFrame:
     """Near-dup clusters: ``(vertex, component)`` for every vector that has
     at least one block-local pair of rounded cosine ``>= threshold``, where
@@ -423,18 +426,20 @@ def cosine_components(
     ``groupBy(block).applyInPandas`` computes each block's Gram matrix
     (:func:`pairs_from`) and unions its pairs (``dedup.union_find``) in
     the same task: the clusters are declared in the plan, and building
-    it runs only the max-block-occupancy aggregate, the scale switch.
-    Above that, the tiled pair relation (``n_chunks`` from the same
-    occupancy) goes through :func:`dedup.connected_components`, whose
-    distributed path handles blocks no single task can hold."""
+    it runs only the max-block-occupancy aggregate, the scale switch
+    (none when the caller passes that occupancy as ``max_block``, e.g.
+    memoized per version of its store). Above that, the tiled pair
+    relation (``n_chunks`` from the same occupancy) goes through
+    :func:`dedup.connected_components`, whose distributed path handles
+    blocks no single task can hold."""
     import numpy as np
     import pandas as pd
 
     from .dedup import connected_components, union_find
 
     emb = _blocked(embeddings, id_col, vec_col, block_col)
-    mx = _max_block_occupancy(emb, block_col)
-    if mx is not None and mx > tile_target:
+    mx = max_block_occupancy(emb, block_col) if max_block is None else max_block
+    if mx > tile_target:
         pairs = cosine_pairs_gemm(
             embeddings, threshold, id_col=id_col, vec_col=vec_col, block_col=block_col,
             n_chunks=-(-mx // tile_target),
@@ -512,7 +517,7 @@ def max_cosine_vs_reference(
             corpus.select(id_col, vec_col)
             .join(F.broadcast(ref))
             .groupBy(id_col)
-            .agg(F.max(V.cosine(F.col(vec_col), F.col("__rv"))).alias("mc"))
+            .agg(F.max(V.cosine(V.ident_sql(vec_col), "__rv")).alias("mc"))
         )
 
     import numpy as np
@@ -595,8 +600,7 @@ def ivf_topk(
     probe_cells = dists[:n_probe]
 
     cand = assigned.where(F.col("cell").isin(probe_cells) & (F.col(id_col) != query_id))
-    qlit = V.array_lit(qv)  # ONE SQL literal, not 2*dim py4j calls
-    cos = V.cosine(F.col("arr"), qlit)
+    cos = V.cosine("arr", V.array_sql(qv))
     return (
         cand.select(F.col(id_col), F.round(cos, 6).alias("cosine"))
         .orderBy(F.desc("cosine"), F.asc(id_col))
@@ -706,7 +710,7 @@ def _calibrated_n_probe(
         .select(
             "__qid",
             F.col("cell").alias("__tcell"),
-            F.round(V.cosine(F.col("arr"), F.col("__qv")), 6).alias("__d"),
+            F.round(V.cosine("arr", "__qv"), 6).alias("__d"),
             F.col(id_col).alias("__tid"),
         )
         .withColumn(
@@ -906,8 +910,7 @@ def ivf_query(
     cells = _ivf_cells(spark, path, probe)
     if exclude_id is not None:
         cells = cells.where(F.col(id_col) != exclude_id)
-    qlit = V.array_lit(query_vec)  # ONE SQL literal, not 2*dim py4j calls
-    cos = V.cosine(F.col("arr"), qlit)
+    cos = V.cosine("arr", V.array_sql(query_vec))
     cols = [F.col(id_col), F.round(cos, 6).alias("cosine")]
     if include_cell:
         cols.append(F.col("cell"))
@@ -974,12 +977,12 @@ def _lsh_banded_rows(
 ) -> DataFrame:
     """(id, v, table_id, bucket) — each vector's signature in every
     table; the write/probe unit both the build and the upsert produce."""
-    v = V.as_double(vec_col)
+    v, v_sql = V.as_double(vec_col), V.as_double_sql(vec_col)
     tables = F.array(
         *[
             F.struct(
                 F.lit(t).alias("table_id"),
-                _bucket_expr(v, n_planes, dim, seed=42 + 1000 * t).alias("bucket"),
+                _bucket_expr(v_sql, n_planes, dim, seed=42 + 1000 * t).alias("bucket"),
             )
             for t in range(n_tables)
         ]
@@ -1012,12 +1015,12 @@ def write_lsh_signatures(
     exact behavior by prefix masking — the whole tables x bits recall
     frontier from one table (ann_lsh_band_sweep). ``e1`` (first vector
     component) rides along for the staleness fingerprint."""
-    v = V.as_double(vec_col)
+    v, v_sql = V.as_double(vec_col), V.as_double_sql(vec_col)
     tables = F.array(
         *[
             F.struct(
                 F.lit(t).alias("table_id"),
-                _bucket_expr(v, n_planes, dim, seed=42 + 1000 * t).alias("bucket"),
+                _bucket_expr(v_sql, n_planes, dim, seed=42 + 1000 * t).alias("bucket"),
             )
             for t in range(n_tables)
         ]
@@ -1220,8 +1223,7 @@ def lsh_index_query(
     if exclude_id is not None:
         cands = cands.where(F.col(id_col) != exclude_id)
     cands = cands.dropDuplicates([id_col])
-    qlit = V.array_lit(query_vec)  # ONE SQL literal, not 2*dim py4j calls
-    cos = V.cosine(F.col("v"), qlit)
+    cos = V.cosine("v", V.array_sql(query_vec))
     return (
         cands.select(F.col(id_col), F.round(cos, 6).alias("cosine"))
         .orderBy(F.desc("cosine"), F.asc(id_col))
@@ -1289,7 +1291,7 @@ def lsh_batch_query(
     if exclude_self:
         tagged = tagged.where(F.col(id_col) != F.col("query_id"))
     tagged = tagged.dropDuplicates(["query_id", id_col])
-    cos = V.cosine(F.col("v"), F.col("qv"))
+    cos = V.cosine("v", "qv")
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc(id_col)
     )
@@ -1326,7 +1328,7 @@ def build_pq_index(
     distance: the QUERY stays exact, only the corpus is quantized —
     Jégou et al., "Product Quantization for Nearest Neighbor Search",
     TPAMI 2011)."""
-    norm = V.l2_normalize(V.as_double(vec_col))
+    norm = V.l2_normalize(V.as_double_sql(vec_col))
     df = embeddings.select(F.col(id_col), norm.alias("arr"))
     books, sub = _fit_pq_codebooks(df, m=m, k=k, seed=seed)
     codes = df.select(F.col(id_col), _pq_codes_expr(books, sub).alias("codes"))
@@ -1596,9 +1598,8 @@ def pq_query_rerank(
     cands = pq_query(
         spark, path, query_vec, shortlist, id_col=id_col, exclude_id=exclude_id
     ).select(id_col)
-    emb = embeddings.select(F.col(id_col), V.l2_normalize(V.as_double(vec_col)).alias("v"))
-    qlit = V.array_lit(query_vec)  # ONE SQL literal, not 2*dim py4j calls
-    cos = V.cosine(F.col("v"), qlit)
+    emb = embeddings.select(F.col(id_col), V.l2_normalize(V.as_double_sql(vec_col)).alias("v"))
+    cos = V.cosine("v", V.array_sql(query_vec))
     return (
         emb.join(F.broadcast(cands), id_col, "left_semi")
         .select(F.col(id_col), F.round(cos, 6).alias("cosine"))
@@ -1636,7 +1637,7 @@ def pq_batch_topk(
         F.col(id_col).alias("query_id"),
         # query-side guard (ADVICE r17): zero vector → zero scores,
         # exactly like _adc_score's `qn or 1.0`, not an all-null array
-        V.l2_normalize_query(V.as_double(vec_col)).alias("qn"),
+        V.l2_normalize_query(V.as_double_sql(vec_col)).alias("qn"),
     )
     books = cached_index_parquet(spark, path, [_codebook_rel(path)]).select(
         F.col("subspace").cast("int").alias("__j"),
@@ -1680,12 +1681,12 @@ def pq_batch_topk(
         .select("query_id", id_col)
     )
     emb = embeddings.select(
-        F.col(id_col), V.l2_normalize(V.as_double(vec_col)).alias("__v")
+        F.col(id_col), V.l2_normalize(V.as_double_sql(vec_col)).alias("__v")
     )
     qraw = queries.select(
         F.col(id_col).alias("query_id"), V.as_double(vec_col).alias("__qv")
     )
-    cos = V.cosine(F.col("__v"), F.col("__qv"))
+    cos = V.cosine("__v", "__qv")
     return (
         short.join(emb, id_col)
         .join(qraw, "query_id")
@@ -1763,7 +1764,7 @@ def pq_upsert(
         [c for c in (cents[j * k + cc] for cc in range(k)) if c is not None]
         for j in range(m)
     ]
-    norm = V.l2_normalize(V.as_double(vec_col))
+    norm = V.l2_normalize(V.as_double_sql(vec_col))
     delta = (
         new_vecs.select(F.col(id_col), norm.alias("arr"))
         .select(F.col(id_col), _pq_codes_expr(books, sub).alias("codes"))
@@ -1917,7 +1918,7 @@ def ivf_batch_topk(
     scored = scored.select(
         "query_id",
         F.col(id_col),
-        F.round(V.cosine(F.col("arr"), F.col("qv")), 6).alias("cosine"),
+        F.round(V.cosine("arr", "qv"), 6).alias("cosine"),
     )
     topk = (
         scored.withColumn(
@@ -1999,7 +2000,7 @@ def build_ivfpq_index(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    norm = V.l2_normalize(V.as_double(vec_col))
+    norm = V.l2_normalize(V.as_double_sql(vec_col))
     df = embeddings.select(F.col(id_col), norm.alias("arr"))
     vecs = df.withColumn("feat", array_to_vector(F.col("arr")))
     n_vectors = vecs.count()
@@ -2175,10 +2176,9 @@ def ivfpq_query_rerank(
         .select(id_col)
     )
     emb = embeddings.select(
-        F.col(id_col), V.l2_normalize(V.as_double(vec_col)).alias("v")
+        F.col(id_col), V.l2_normalize(V.as_double_sql(vec_col)).alias("v")
     )
-    qlit = V.array_lit(query_vec)  # ONE SQL literal, not 2*dim py4j calls
-    cos = V.cosine(F.col("v"), qlit)
+    cos = V.cosine("v", V.array_sql(query_vec))
     return (
         emb.join(F.broadcast(cands), id_col, "left_semi")
         .select(F.col(id_col), F.round(cos, 6).alias("cosine"))
@@ -2238,7 +2238,7 @@ def ivfpq_batch_topk(
         F.col(id_col).alias("query_id"),
         # query-side guard (ADVICE r17): zero vector → zero scores,
         # exactly like _adc_score's `qn or 1.0`, not an all-null array
-        V.l2_normalize_query(V.as_double(vec_col)).alias("qn"),
+        V.l2_normalize_query(V.as_double_sql(vec_col)).alias("qn"),
     )
     cent = cached_index_parquet(spark, path, [snap["centroids"]]).select(
         F.col("cell").cast("int").alias("cell"), "centroid"
@@ -2343,7 +2343,7 @@ def ivfpq_batch_topk(
     qraw = queries.select(
         F.col(id_col).alias("query_id"), V.as_double(vec_col).alias("__qv")
     )
-    cos = V.cosine(F.col("__v"), F.col("__qv"))
+    cos = V.cosine("__v", "__qv")
     return (
         short.join(emb, id_col)
         .join(qraw, "query_id")
@@ -2465,7 +2465,7 @@ def ivfpq_quantization_stats(
         for j in range(m)
     ]
     normed = vecs.select(
-        F.col(id_col), V.l2_normalize(V.as_double(vec_col)).alias("arr")
+        F.col(id_col), V.l2_normalize(V.as_double_sql(vec_col)).alias("arr")
     )
     assigned = normed.join(
         assign_cells(normed, cents_list, id_col=id_col, vec_col="arr"), id_col
@@ -2530,7 +2530,7 @@ def ivfpq_upsert(
         for j in range(m)
     ]
     normed = new_vecs.select(
-        F.col(id_col), V.l2_normalize(V.as_double(vec_col)).alias("arr")
+        F.col(id_col), V.l2_normalize(V.as_double_sql(vec_col)).alias("arr")
     )
     eff_residual = snap.get("residual", residual)  # manifest wins
     assigned_delta = normed.join(
@@ -2656,11 +2656,11 @@ def _hyperplanes(n_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
     return planes
 
 
-def _bucket_expr(v, n_planes: int, dim: int, seed: int):
+def _bucket_expr(v: str, n_planes: int, dim: int, seed: int):
     planes = _hyperplanes(n_planes, dim, seed)
     bits = [
         F.when(
-            V.dot(v, V.array_lit(plane)) >= 0, F.lit(1 << p)
+            V.dot(v, V.array_sql(plane)) >= 0, F.lit(1 << p)
         ).otherwise(F.lit(0))
         for p, plane in enumerate(planes)
     ]
@@ -2679,7 +2679,7 @@ def with_hyperplane_buckets(
     seed: int = 42,
 ) -> DataFrame:
     """Attach `bucket`: the n_planes-bit signed-projection signature."""
-    return embeddings.withColumn("bucket", _bucket_expr(V.as_double(vec_col), n_planes, dim, seed))
+    return embeddings.withColumn("bucket", _bucket_expr(V.as_double_sql(vec_col), n_planes, dim, seed))
 
 
 def lsh_topk(
@@ -2703,12 +2703,12 @@ def lsh_topk(
     signatures shuffle, then just the candidate set is scored. Recall < 1
     by construction; tests measure overlap vs brute force. On a persisted
     bucketed table the bucket join becomes partition pruning."""
-    v = V.as_double(vec_col)
+    v, v_sql = V.as_double(vec_col), V.as_double_sql(vec_col)
     tables = F.array(
         *[
             F.struct(
                 F.lit(t).alias("table_id"),
-                _bucket_expr(v, n_planes, dim, seed=42 + 1000 * t).alias("bucket"),
+                _bucket_expr(v_sql, n_planes, dim, seed=42 + 1000 * t).alias("bucket"),
             )
             for t in range(n_tables)
         ]
@@ -2727,7 +2727,7 @@ def lsh_topk(
         .select(id_col, "v", "qv")
         .dropDuplicates([id_col])
     )
-    cos = V.cosine(F.col("v"), F.col("qv"))
+    cos = V.cosine("v", "qv")
     return (
         cands.select(F.col(id_col), F.round(cos, 6).alias("cosine"))
         .orderBy(F.desc("cosine"), F.asc(id_col))

@@ -363,8 +363,9 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "connected components, scale-adaptive: while the largest block fits "
     "one tile, one groupBy(label).applyInPandas computes each block's "
     "BLAS Gram matrix and union-finds its pairs in the same task, "
-    "declared in the plan (building it runs only the max-block-occupancy "
-    "aggregate); larger blocks take the tiled pair path and iterative "
+    "declared in the plan (the max-block-occupancy aggregate that picks "
+    "the path runs once per version of the table); larger blocks take "
+    "the tiled pair path and iterative "
     "min-label propagation shuffling only (vertex, component) longs per "
     "round -> every doc labeled with its canonical (minimum) id. The "
     "keep-one-per-cluster step of a training-data dedup pipeline; "
@@ -372,7 +373,9 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    comps = S.cosine_components(emb, threshold=0.4, block_col="label")
+    comps = S.cosine_components(
+        emb, threshold=0.4, block_col="label", max_block=_label_occupancy(spark, sf_dir)
+    )
     return (
         emb.select("vec_id")
         .join(comps, emb["vec_id"] == comps["vertex"], "left")
@@ -442,7 +445,9 @@ def near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 def canonical_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents")
-    comps = S.cosine_components(emb, threshold=0.4, block_col="label")
+    comps = S.cosine_components(
+        emb, threshold=0.4, block_col="label", max_block=_label_occupancy(spark, sf_dir)
+    )
     membership = (
         emb.select("vec_id")
         .join(comps, emb["vec_id"] == comps["vertex"], "left")
@@ -532,6 +537,16 @@ def _query_vec(spark: SparkSession, sf_dir: str, vec_id: int) -> list[float]:
         return tuple(emb.where(F.col("vec_id") == vec_id).select(v).first()["v"])
 
     return list(memo(spark, sf_dir, ["embeddings.parquet"], ("query_vec", vec_id), read))
+
+
+def _label_occupancy(spark: SparkSession, sf_dir: str) -> int:
+    """Rows in the largest label block of the embeddings table — the
+    near-dup clusters' scale switch, measured once per version of the
+    table (a planning estimate in the read memo)."""
+    return memo(
+        spark, sf_dir, ["embeddings.parquet"], "max_label_occupancy",
+        lambda: S.max_block_occupancy(load_table(spark, sf_dir, "embeddings"), "label"),
+    )
 
 
 def _emb_fp(pairs: DataFrame, id_col: str) -> tuple:
@@ -1781,8 +1796,8 @@ def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 def embedding_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     v = V.as_double(F.col("embedding"))
-    withv = emb.select("label", v.alias("e")).where(V.max_abs(F.col("e")) > 0)
-    scale = F.lit(127.0) / V.max_abs(F.col("e"))
+    withv = emb.select("label", v.alias("e")).where(V.max_abs("e") > 0)
+    scale = F.lit(127.0) / V.max_abs("e")
     max_err = F.array_max(
         F.transform(
             F.col("e"),
@@ -4160,7 +4175,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx = S.ivf_batch_topk(spark, idx, q, k=10, n_probe=6)
     qv = q.select(F.col("vec_id").alias("query_id"), V.as_double("embedding").alias("qv"))
     corpus = emb.select("vec_id", V.as_double("embedding").alias("v"))
-    cos = F.round(V.cosine(F.col("v"), F.col("qv")), 6)
+    cos = F.round(V.cosine("v", "qv"), 6)
     exact = (
         corpus.join(F.broadcast(qv))
         .where(F.col("vec_id") != F.col("query_id"))
@@ -4296,9 +4311,9 @@ def _recall_sweep(
         F.col(id_col).alias("vid"), V.as_double("embedding").alias("v")
     )
     score = (
-        V.dot(F.col("v"), F.col("qv"))
+        V.dot("v", "qv")
         if use_dot
-        else V.cosine(F.col("v"), F.col("qv"))
+        else V.cosine("v", "qv")
     )
     cos = F.round(score, 6)
     exact = (
@@ -4819,7 +4834,7 @@ def ann_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.select(
         F.col("vec_id").alias("vid"), V.as_double("embedding").alias("v")
     )
-    cos = F.round(V.cosine(F.col("v"), F.col("qv")), 6)
+    cos = F.round(V.cosine("v", "qv"), 6)
     exact = (
         corpus.join(F.broadcast(qv))
         .where(F.col("vid") != F.col("query_id"))
@@ -5092,7 +5107,7 @@ def _ivfpq_sweep(
         F.col("vec_id").alias("query_id"), V.as_double("embedding").alias("qv")
     )
     corpus = emb.select("vec_id", V.as_double("embedding").alias("v"))
-    cos = F.round(V.cosine(F.col("v"), F.col("qv")), 6)
+    cos = F.round(V.cosine("v", "qv"), 6)
     exact = (
         corpus.join(F.broadcast(qv))
         .where(F.col("vec_id") != F.col("query_id"))
@@ -5123,7 +5138,7 @@ def _ivfpq_sweep(
     # fit on the normalized corpus)
     nqv = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"),
-        V.l2_normalize(V.as_double("embedding")).alias("nv"),
+        V.l2_normalize(V.as_double_sql("embedding")).alias("nv"),
     )
     dist = F.aggregate(
         F.zip_with(F.col("nv"), F.col("centroid"), lambda x, y: (x - y) * (x - y)),
@@ -5909,7 +5924,7 @@ def ann_family_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), V.as_double("embedding").alias("qv")
     )
     corpus = emb.select("vec_id", V.as_double("embedding").alias("v"))
-    cos = F.round(V.cosine(F.col("v"), F.col("qv")), 6)
+    cos = F.round(V.cosine("v", "qv"), 6)
     exact = (
         corpus.join(F.broadcast(qv))
         .where(F.col("vec_id") != F.col("query_id"))
@@ -6340,8 +6355,7 @@ def ann_text_embed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # encoder lineage; the materialized relation is docs x dim doubles
     emb = E.hashed_tfidf_embed(docs, dim=64).localCheckpoint(eager=True)
     qrow = emb.where(F.col("doc_id") == 0).first()
-    qlit = V.array_lit(qrow["embedding"])  # ONE SQL literal
-    cos = F.round(V.dot(F.col("embedding"), qlit), 6)
+    cos = F.round(V.dot("embedding", V.array_sql(qrow["embedding"])), 6)
     return (
         emb.where(F.col("doc_id") != 0)
         .select("doc_id", cos.alias("cosine"))
@@ -6439,7 +6453,7 @@ def retrieval_quality_hybrid_textemb(spark: SparkSession, sf_dir: str) -> DataFr
     feats = E.hashed_token_features(docs, dim=64).localCheckpoint(eager=True)
     demb = E.hashed_tfidf_embed(docs, dim=64, feats=feats)
     qemb = E.embed_terms(qdf, feats, dim=64)
-    cos = F.round(V.dot(F.col("embedding"), F.col("qv")), 6)
+    cos = F.round(V.dot("embedding", "qv"), 6)
     sem = (
         demb.crossJoin(F.broadcast(qemb))
         .select("query_id", "doc_id", cos.alias("cosine"))

@@ -9,7 +9,13 @@ becomes the orders-priority share query.
 
 Scale notes apply to every query: dims are broadcast, aggregates are
 partial (map-side combine), filters/projections push to the parquet scan,
-and nothing collects to the driver.
+and nothing collects to the driver. A table no bigger than one file's open
+cost (``spark.sql.files.openCostInBytes``, 4 MB by default) is read as one
+partition (``sources.loaders.load_table``), so over such inputs the
+aggregates, windows, joins and final sorts plan no ``Exchange``: at sf0.1
+``window_rank`` and ``asof_join`` run one job, and a global sort runs no
+range-sampling job. lineitem at sf0.1, and every fact table at real scale,
+keeps the partitioned plans described above.
 """
 
 from __future__ import annotations

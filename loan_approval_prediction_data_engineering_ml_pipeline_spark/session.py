@@ -86,7 +86,8 @@ def scoped_conf(spark: SparkSession, **confs: str) -> Iterator[None]:
         yield
     finally:
         for key, old in prior.items():
-            if old is _UNSET:
+            # an optional conf with no value reads back as None
+            if old is _UNSET or old is None:
                 spark.conf.unset(key)
             else:
                 spark.conf.set(key, old)
@@ -309,7 +310,10 @@ def get_spark(
     ``spark.driver.extraJavaOptions`` in ``extra_conf``. The Python workers
     get this package's parent directory first on their ``PYTHONPATH``:
     pandas UDFs whose closures call module-level helpers unpickle them by
-    importing the package by name.
+    importing the package by name. They are forked from
+    :mod:`.worker_daemon`, which stops each task from re-reading
+    ``pyspark.zip``'s directory, unless ``extra_conf`` sets
+    ``spark.python.daemon.module``.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
     if shuffle_partitions is None:
@@ -326,6 +330,7 @@ def get_spark(
             driver_memory or os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
         "spark.ui.enabled": "false",
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        "spark.python.daemon.module": f"{__package__}.worker_daemon",
         **(extra_conf or {}),
     }
     worker_path = conf.get("spark.executorEnv.PYTHONPATH")

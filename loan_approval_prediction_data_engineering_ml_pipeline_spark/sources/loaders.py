@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
+from ..functions.parallel import open_cost_bytes, scan_estimate
 from .memo import memo
 from .schemas import TABLE_SCHEMAS
 
@@ -80,18 +81,36 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, *, validate: bool = 
     re-reading re-lists the file and its footer on every query, and
     ``validate`` is part of the key so an unvalidated read never
     short-circuits a later schema-drift check.
+
+    A table whose files total at most ``spark.sql.files.openCostInBytes``
+    (Spark's own price, in scanned bytes, of opening one file; 4 MB by
+    default) is read as ONE partition: ``coalesce(1)`` decides from
+    metadata and runs no job, and its ``SinglePartition`` output satisfies
+    every clustered and ordered distribution, so the aggregates, windows,
+    joins and global sorts above the scan plan no ``Exchange`` and a
+    global sort runs no range-sampling job (which would run its whole
+    child a second time). The size comes from
+    ``functions.parallel.scan_estimate``; on a non-local filesystem the
+    read is left as it is. At sf0.1 every star and corpus table but
+    lineitem qualifies; at real scale only dimension tables do, so large
+    inputs keep their partitioned plans. The threshold is part of the
+    memo key, so a caller that scopes the conf gets a handle decided
+    under it.
     """
     # The driver calls queries() with its own SparkSession; pin UTC so
     # timestamp semantics match the DuckDB oracle regardless of host tz.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     rel = f"{name}.parquet"
+    open_cost = open_cost_bytes(spark)
     return memo(
-        spark, sf_dir, [rel], ("load_table", validate),
-        lambda: _read_table(spark, os.path.join(sf_dir, rel), name, validate),
+        spark, sf_dir, [rel], ("load_table", validate, open_cost),
+        lambda: _read_table(spark, os.path.join(sf_dir, rel), name, validate, open_cost),
     )
 
 
-def _read_table(spark: SparkSession, file: str, name: str, validate: bool) -> DataFrame:
+def _read_table(
+    spark: SparkSession, file: str, name: str, validate: bool, open_cost: int
+) -> DataFrame:
     if name == "events":
         # events.parquet has shipped as both TIMESTAMP(NANOS) — which
         # Spark's vectorized reader rejects outright — and TIMESTAMP(MICROS).
@@ -117,7 +136,7 @@ def _read_table(spark: SparkSession, file: str, name: str, validate: bool) -> Da
             raise ValueError(
                 f"schema drift in {name}: expected {expected}, got {actual}"
             )
-    return df
+    return df if scan_estimate(df, limit=open_cost) is None else df.coalesce(1)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:

@@ -128,7 +128,7 @@ def main() -> None:
         V.as_double("embedding").alias("qv"),
     )
     corpus = emb.select(F.col("vec_id").alias("doc_id"), V.as_double("embedding").alias("v"))
-    cos = F.round(V.cosine(F.col("v"), F.col("qv")), 6)
+    cos = F.round(V.cosine("v", "qv"), 6)
     sem = (
         corpus.join(F.broadcast(qv))
         .where(F.col("doc_id") != F.col("own_doc"))

@@ -1249,7 +1249,7 @@ def test_ann_recall_sweep_identity_matches_actually_run_probes(spark):
     q = emb.where(F.col("vec_id") < 3)
     qv = q.select(F.col("vec_id").alias("query_id"), V.as_double("embedding").alias("qv"))
     corpus = emb.select("vec_id", V.as_double("embedding").alias("v"))
-    cos = F.round(V.cosine(F.col("v"), F.col("qv")), 6)
+    cos = F.round(V.cosine("v", "qv"), 6)
     truth = {
         (r["query_id"], r["vec_id"])
         for r in (

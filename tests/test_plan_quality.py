@@ -10,6 +10,7 @@ import contextlib
 import pytest
 
 from loan_approval_prediction_data_engineering_ml_pipeline_spark.plans.registry import QUERIES
+from loan_approval_prediction_data_engineering_ml_pipeline_spark.session import scoped_conf
 
 SF = "/root/testdata/sf0.001"
 
@@ -20,6 +21,15 @@ def _formatted_plan(spark, name: str) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def large_input(spark):
+    """Plan as for inputs too big for ``load_table``'s one-partition read:
+    with a file's open cost at 0 bytes no table qualifies. The fixture
+    tables all qualify otherwise, and a single-partition input satisfies
+    every distribution, so a test of the scale-out plan's exchanges builds
+    that plan under this scope."""
+    return scoped_conf(spark, spark_sql_files_openCostInBytes="0")
 
 
 def test_projection_prunes_scan(spark):
@@ -177,7 +187,8 @@ def test_repetition_stats_single_corpus_exchange(spark):
     # Map-only signal computation: the only exchanges allowed are the
     # parallelism spread (RoundRobin) and the deterministic output sort
     # — no aggregation/join shuffle may appear.
-    plan = _formatted_plan(spark, "repetition_stats")
+    with large_input(spark):
+        plan = _formatted_plan(spark, "repetition_stats")
     import re
 
     kinds = set(re.findall(r"Exchange (\w+)", plan))
@@ -190,7 +201,8 @@ def test_incremental_dedup_never_rescans_corpus_text(spark):
     # The batch joins the INDEX (fingerprints), and the index build here
     # reads the corpus once; the join itself must key on fingerprint —
     # text never appears in a shuffle's output schema.
-    plan = _formatted_plan(spark, "incremental_dedup")
+    with large_input(spark):
+        plan = _formatted_plan(spark, "incremental_dedup")
     assert "fingerprint" in plan
     for line in plan.splitlines():
         if line.strip().startswith("Exchange hashpartitioning"):
@@ -204,8 +216,9 @@ def test_scd2_intervals_single_user_exchange(spark):
     # orderBy adds a range exchange, which is allowed.)
     import re
 
-    df = QUERIES["scd2_intervals"].fn(spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    with large_input(spark):
+        df = QUERIES["scd2_intervals"].fn(spark, SF)
+        plan = df._jdf.queryExecution().executedPlan().toString()
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
 
 
@@ -215,8 +228,9 @@ def test_funnel_windows_share_one_fact_exchange(spark):
     # count_distinct expand — never a second fact-table shuffle.
     import re
 
-    df = QUERIES["funnel_conversion"].fn(spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    with large_input(spark):
+        df = QUERIES["funnel_conversion"].fn(spark, SF)
+        plan = df._jdf.queryExecution().executedPlan().toString()
     assert len(re.findall(r"Exchange hashpartitioning", plan)) <= 2
     assert "SortMergeJoin" not in plan  # no self-join formulation
 
@@ -276,7 +290,8 @@ def test_training_shard_stats_single_exchange(spark):
     that makes the export one hash exchange at 100 TB."""
     import re
 
-    plan = _formatted_plan(spark, "training_shard_stats")
+    with large_input(spark):
+        plan = _formatted_plan(spark, "training_shard_stats")
     # one data shuffle (the partial-agg'd per-shard aggregation); the
     # only other exchange is the presentation orderBy's range partition
     # over the already-aggregated n_shards rows
@@ -286,36 +301,84 @@ def test_training_shard_stats_single_exchange(spark):
     assert "CartesianProduct" not in plan
 
 
+def _group_jobs(spark, group: str, fn):
+    """``(fn(), ids of the Spark jobs it ran)``, via a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
 def test_near_dup_components_declares_its_clusters(spark):
     """The clusters are one applyInPandas inside the plan, not rows the
     build collected to the driver (a LocalTableScan or an RDD scan); the
-    only jobs the build runs are the max-block-occupancy aggregate's,
-    which picks between that path and the tiled one."""
+    only jobs a build runs are the max-block-occupancy aggregate's, which
+    picks between that path and the tiled one, and only the first build
+    per version of the embeddings table runs it."""
     import inspect
 
     from loan_approval_prediction_data_engineering_ml_pipeline_spark.operators import similarity as S
+    from loan_approval_prediction_data_engineering_ml_pipeline_spark.sources import memo as M
     from loan_approval_prediction_data_engineering_ml_pipeline_spark.sources.loaders import load_table
 
     load_table(spark, SF, "embeddings")  # the memoized read is not the build's
-    sc, group = spark.sparkContext, "near_dup_components_build"
-    sc.setJobGroup(group, group)
-    try:
-        df = QUERIES["near_dup_components"].fn(spark, SF)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    for key in [k for k in M._MEMO if k[4] == "max_label_occupancy"]:
+        del M._MEMO[key]  # another test may have built the query already
+    build = lambda: QUERIES["near_dup_components"].fn(spark, SF)  # noqa: E731
+    df, jobs = _group_jobs(spark, "near_dup_components_build", build)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" in plan
     assert "LocalTableScan" not in plan and "Scan ExistingRDD" not in plan
-    lines, first = inspect.getsourcelines(S._max_block_occupancy)
+    lines, first = inspect.getsourcelines(S.max_block_occupancy)
     occupancy = {f"first at {inspect.getsourcefile(S)}:{n}" for n in range(first, first + len(lines))}
-    tracker = sc.statusTracker()
-    jobs = tracker.getJobIdsForGroup(group)
+    tracker = spark.sparkContext.statusTracker()
     sites = {
         tracker.getStageInfo(stage).name
         for job in jobs
         for stage in tracker.getJobInfo(job).stageIds
     }
     assert jobs and sites <= occupancy, sites
+    _, warm = _group_jobs(spark, "near_dup_components_warm_build", build)
+    assert not warm
+
+
+SF_CORRECT = "/root/testdata/sf0.01"
+
+
+def _canonical(rows) -> list:
+    return sorted(
+        tuple(round(v, 6) if isinstance(v, float) else v for v in r) for r in rows
+    )
+
+
+@pytest.mark.parametrize("name", ["window_rank", "asof_join", "star_join_agg"])
+def test_small_tables_read_as_one_partition_plan_no_shuffle(spark, name):
+    """Over tables no bigger than one file's open cost ``load_table``
+    reads one partition, which satisfies every distribution: the window
+    and as-of queries plan no ``Exchange`` and run ONE job (no shuffle
+    stage, no range-sampling job for the final sort), the star join keeps
+    only its two dimension broadcasts. The rows equal the large-input
+    plan's, whose exchanges are still there."""
+    import re
+
+    df = QUERIES[name].fn(spark, SF_CORRECT)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if name == "star_join_agg":
+        assert re.findall(r"\w*Exchange", plan) == ["BroadcastExchange"] * 2, plan
+    else:
+        assert "Exchange" not in plan, plan
+        df.collect()  # the first run's broadcasts and codegen are not the count's
+        _, jobs = _group_jobs(spark, f"one_partition_{name}", df.collect)
+        assert len(jobs) == 1
+    rows = df.collect()
+    with large_input(spark):
+        big = QUERIES[name].fn(spark, SF_CORRECT)
+        big_plan = big._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange hashpartitioning" in big_plan or "Exchange rangepartitioning" in big_plan
+        assert _canonical(rows) == _canonical(big.collect())
 
 
 def test_semantic_dedup_no_all_pairs_join(spark):
@@ -521,26 +584,82 @@ def test_text_ivf_serving_path_prunes_and_stays_bounded(spark):
     assert 0 < n_probed <= 9, m.group(1)
 
 
+def test_packing_estimate_follows_sparks_split_formula():
+    """``packed_partitions`` mirrors Spark's file packing, including the
+    ``maxSplitBytes`` shrink toward ``Σ charge / minPartitions``:
+    ``min(maxPartitionBytes, max(openCostInBytes, Σ(size + openCost) /
+    slots))``. Hand-derived cases at Spark's default confs."""
+    from loan_approval_prediction_data_engineering_ml_pipeline_spark.functions.parallel import (
+        packed_partitions,
+    )
+
+    KB, MB = 1 << 10, 1 << 20
+    max_pb, open_cost = 128 * MB, 4 * MB
+    # 100 files of 1 KB: Σ charge = 100 * (4 MB + 1 KB). 4 slots: split =
+    # 100 MB + 25 KB, which holds 25 files -> 4 partitions; 1 slot: split
+    # = 128 MB, 32 files each -> 4 partitions too
+    assert packed_partitions([KB] * 100, max_pb, open_cost, 4) == 4
+    assert packed_partitions([KB] * 100, max_pb, open_cost, 1) == 4
+    # 12 tiny files on 4 slots: split = 12 MB + 3 KB, 3 files each -> 4
+    # partitions, so Spark already feeds every slot
+    assert packed_partitions([KB] * 12, max_pb, open_cost, 4) == 4
+    # one file just over a split: 1 slot -> chunks of 128 MB and 1 byte,
+    # two partitions; 4 slots -> split = (132 MB + 1) / 4 = 33 MB, three
+    # 33 MB chunks and a 29 MB tail, one partition each
+    assert packed_partitions([max_pb + 1], max_pb, open_cost, 1) == 2
+    assert packed_partitions([max_pb + 1], max_pb, open_cost, 4) == 4
+    # one small file is one partition whatever the slots
+    assert packed_partitions([MB], max_pb, open_cost, 4) == 1
+    assert packed_partitions([], max_pb, open_cost, 4) == 0
+
+
+@pytest.mark.parametrize("slots", [1, 4])
+def test_packing_estimate_matches_spark_scan_partitions(spark, tmp_path, slots):
+    """The metadata-only estimate equals the partition count of the scan
+    Spark actually plans (``rdd.getNumPartitions()`` of a bare file scan
+    runs no job), on text files of exact sizes with the byte confs scaled
+    down 1024x: many tiny files, one file just over a split, a mix."""
+    from loan_approval_prediction_data_engineering_ml_pipeline_spark.functions.parallel import (
+        scan_estimate,
+    )
+
+    KB = 1 << 10
+    cases = {
+        "tiny": [100] * 40,
+        "over_split": [128 * KB + 1],
+        "mix": [300 * KB, 5 * KB, 90 * KB] + [10] * 7,
+    }
+    with scoped_conf(spark, spark_sql_files_maxPartitionBytes=str(128 * KB),
+                     spark_sql_files_openCostInBytes=str(4 * KB),
+                     spark_sql_leafNodeDefaultParallelism=str(slots)):
+        for name, sizes in cases.items():
+            d = tmp_path / f"{name}-{slots}"
+            d.mkdir()
+            for i, size in enumerate(sizes):
+                (d / f"f{i:03d}.txt").write_bytes(b"x" * (size - 1) + b"\n")
+            df = spark.read.text(str(d))
+            assert scan_estimate(df, limit=1 << 30) == (sum(sizes), df.rdd.getNumPartitions()), name
+
+
 def test_cpu_spread_sees_through_tiny_file_packing(spark, tmp_path):
-    """ADVICE r17: Spark packs many tiny files into few scan partitions
-    (openCostInBytes), so a raw file-count early exit would skip the
-    spread in exactly the serial-map case it exists for. The packing
-    estimate must fire on many-tiny-files input and stay a no-op when
-    the charged bytes already feed every slot."""
+    """The spread fires when Spark's packing leaves slots idle and is a
+    no-op when the scan already feeds every slot — judged by the packing
+    estimate, so many tiny files that Spark spreads by its per-core split
+    shrink are not repartitioned again, while one small file is."""
     from loan_approval_prediction_data_engineering_ml_pipeline_spark.functions.parallel import (
         ensure_cpu_parallelism,
     )
 
     slots = spark.sparkContext.defaultParallelism
+    one = str(tmp_path / "one")
+    spark.range(slots + 8).coalesce(1).write.parquet(one)
+    df = spark.read.parquet(one)
+    assert df.rdd.getNumPartitions() < slots or slots == 1
+    assert (ensure_cpu_parallelism(df) is not df) == (slots > 1)
+    # more files than slots, kilobytes each: the split shrinks to about
+    # Σ charge / slots, so the scan is already slots wide
     tiny = str(tmp_path / "tiny")
-    # more files than slots, but kilobytes each: Spark coalesces them
-    # into ~1 scan task, so the helper must still add the spread
     spark.range(slots + 8).repartition(slots + 8).write.parquet(tiny)
     df = spark.read.parquet(tiny)
-    assert ensure_cpu_parallelism(df) is not df
-    # charged bytes >= slots full splits -> untouched plan (identity)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "1k")
-    try:
-        assert ensure_cpu_parallelism(df) is df
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+    assert df.rdd.getNumPartitions() >= slots
+    assert ensure_cpu_parallelism(df) is df

@@ -15,6 +15,7 @@ from loan_approval_prediction_data_engineering_ml_pipeline_spark.sources.loaders
     read_jdbc,
     write_partitioned_by_day,
 )
+from loan_approval_prediction_data_engineering_ml_pipeline_spark.session import scoped_conf
 
 SF = "/root/testdata/sf0.001"
 
@@ -156,37 +157,41 @@ def test_bucketed_join_eliminates_exchange(spark):
         save_bucketed_table,
     )
 
-    orders = load_table(spark, SF, "orders")
-    customer = load_table(spark, SF, "customer")
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        bo = save_bucketed_table(spark, orders, "t_orders_b", 8, ["o_custkey"])
-        bc = save_bucketed_table(
-            spark, customer.withColumnRenamed("c_custkey", "o_custkey"),
-            "t_customer_b", 8, ["o_custkey"],
-        )
-        bucketed = bo.join(bc, "o_custkey")
-        plain = orders.join(
-            customer.withColumnRenamed("c_custkey", "o_custkey"), "o_custkey"
-        )
-        assert "Exchange" not in _physical_plan(bucketed), (
-            "bucketed equi-join must not shuffle"
-        )
-        assert "Exchange" in _physical_plan(plain), (
-            "negative control: unbucketed join should shuffle"
-        )
-        # same co-location also covers the downstream groupBy key
-        agg_on_key = bo.join(bc, "o_custkey").groupBy("o_custkey").count()
-        assert "Exchange" not in _physical_plan(agg_on_key)
-        # and the results agree with the unbucketed plan
-        lhs = {tuple(r) for r in bucketed.groupBy("c_mktsegment").count().collect()}
-        rhs = {tuple(r) for r in plain.groupBy("c_mktsegment").count().collect()}
-        assert lhs == rhs
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.sql("DROP TABLE IF EXISTS t_orders_b")
-        spark.sql("DROP TABLE IF EXISTS t_customer_b")
+    # the plain join's shuffle is the negative control: build it as for
+    # inputs too big for load_table's one-partition read, whose single
+    # partition would need no exchange at all
+    with scoped_conf(spark, spark_sql_files_openCostInBytes="0"):
+        orders = load_table(spark, SF, "orders")
+        customer = load_table(spark, SF, "customer")
+        old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            bo = save_bucketed_table(spark, orders, "t_orders_b", 8, ["o_custkey"])
+            bc = save_bucketed_table(
+                spark, customer.withColumnRenamed("c_custkey", "o_custkey"),
+                "t_customer_b", 8, ["o_custkey"],
+            )
+            bucketed = bo.join(bc, "o_custkey")
+            plain = orders.join(
+                customer.withColumnRenamed("c_custkey", "o_custkey"), "o_custkey"
+            )
+            assert "Exchange" not in _physical_plan(bucketed), (
+                "bucketed equi-join must not shuffle"
+            )
+            assert "Exchange" in _physical_plan(plain), (
+                "negative control: unbucketed join should shuffle"
+            )
+            # same co-location also covers the downstream groupBy key
+            agg_on_key = bo.join(bc, "o_custkey").groupBy("o_custkey").count()
+            assert "Exchange" not in _physical_plan(agg_on_key)
+            # and the results agree with the unbucketed plan
+            lhs = {tuple(r) for r in bucketed.groupBy("c_mktsegment").count().collect()}
+            rhs = {tuple(r) for r in plain.groupBy("c_mktsegment").count().collect()}
+            assert lhs == rhs
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
+            spark.sql("DROP TABLE IF EXISTS t_orders_b")
+            spark.sql("DROP TABLE IF EXISTS t_customer_b")
 
 
 def test_runtime_bloom_filter_prunes_fact_side(spark):
@@ -213,20 +218,23 @@ def test_runtime_bloom_filter_prunes_fact_side(spark):
         )
         # force a shuffle join: broadcast joins don't need runtime filters
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        o = load_table(spark, "/root/testdata/sf0.01", "orders").where(
-            F.col("o_orderpriority") == "1-URGENT"
-        )
-        li = load_table(spark, "/root/testdata/sf0.01", "lineitem")
-        j = (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .groupBy("o_orderpriority")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "bloom_filter_agg" in plan
-        assert "might_contain" in plan
-        # and the filtered result still matches the unfiltered-plan answer
-        assert j.first()["n"] > 0
+        # and read both sides as inputs too big for load_table's
+        # one-partition read, whose join would need no shuffle
+        with scoped_conf(spark, spark_sql_files_openCostInBytes="0"):
+            o = load_table(spark, "/root/testdata/sf0.01", "orders").where(
+                F.col("o_orderpriority") == "1-URGENT"
+            )
+            li = load_table(spark, "/root/testdata/sf0.01", "lineitem")
+            j = (
+                li.join(o, li.l_orderkey == o.o_orderkey)
+                .groupBy("o_orderpriority")
+                .agg(F.count(F.lit(1)).alias("n"))
+            )
+            plan = j._jdf.queryExecution().executedPlan().toString()
+            assert "bloom_filter_agg" in plan
+            assert "might_contain" in plan
+            # and the filtered result still matches the unfiltered-plan answer
+            assert j.first()["n"] > 0
     finally:
         for k, v in saved.items():
             if v is None:

@@ -115,3 +115,51 @@ def test_workers_import_the_package_from_another_working_directory(tmp_path):
     proc = subprocess.run([sys.executable, "-c", WORKER_IMPORT, ROOT], cwd=tmp_path, env=env,
                           capture_output=True, text=True, timeout=600)
     assert proc.returncode == 0, proc.stderr[-3000:]
+
+
+def test_worker_daemon_rereads_a_zip_only_when_it_changed(tmp_path, monkeypatch):
+    """The worker daemon's guarded ``zipimporter.invalidate_caches``:
+    ``importlib.invalidate_caches()`` (which every Python worker task
+    calls) re-reads no unchanged archive, and a rewritten archive's new
+    module imports. JVM-free: a temp zip on ``sys.path``."""
+    import importlib
+    import zipfile
+    import zipimport
+
+    from loan_approval_prediction_data_engineering_ml_pipeline_spark import worker_daemon
+
+    archive = str(tmp_path / "mods.zip")
+
+    def write(**modules: str) -> None:
+        with zipfile.ZipFile(archive, "w") as z:
+            for name, body in modules.items():
+                z.writestr(f"{name}.py", body)
+
+    write(zmod_a="A = 1\n")
+    reads: list[str] = []
+    read_directory = zipimport._read_directory
+
+    def counted(path):
+        reads.append(path)
+        return read_directory(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counted)
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches",
+                        zipimport.zipimporter.invalidate_caches)
+    monkeypatch.syspath_prepend(archive)
+    for name in ("zmod_a", "zmod_b"):
+        monkeypatch.delitem(sys.modules, name, raising=False)
+    assert importlib.import_module("zmod_a").A == 1
+
+    worker_daemon.guard_zip_rereads()
+    importlib.invalidate_caches()  # the first guarded call reads once
+    reads.clear()
+    for _ in range(3):
+        importlib.invalidate_caches()
+    assert archive not in reads
+
+    write(zmod_a="A = 1\n", zmod_b="B = 2\n")
+    os.utime(archive, ns=(0, os.stat(archive).st_mtime_ns + 10**9))
+    importlib.invalidate_caches()
+    assert reads.count(archive) == 1
+    assert importlib.import_module("zmod_b").B == 2
