@@ -94,18 +94,9 @@ HEADLINE = [
     "retrieval_quality_bm25",  # recall/MRR/nDCG evaluation aggregates (r13)
     "image_near_dup_pairs",  # perceptual-hash hamming banding, multimodal near-dup (r13)
     "video_near_dup_pairs",  # frame-sampled majority signature, video near-dup (r14)
-    "ann_recall_report",  # IVF recall@10 vs exact brute force at the shipped n_probe (r13)
-    "ann_recall_sweep",  # whole recall/cost curve in one pass (r14)
-    "ann_family_recall",  # cross-family recall@10 at shipped defaults (r14)
     "ann_text_embed_topk",  # deterministic text encoder, cosine top-k (r14)
     "retrieval_quality_hybrid_textemb",  # text-embed hybrid fusion metrics (r14)
     "ann_text_embed_ivf",  # encoder served through the persisted IVF probe (r15)
-    "ann_recall_sweep_textivf",  # operating-point curve over the text index (r15)
-    "ann_lsh_band_sweep",  # tables x bits frontier from one signature table (r15)
-    "ann_recall_sweep_ivfpq256",  # the measured k=256 recipe point (r16)
-    "ann_recall_sweep_ivfpqr256",  # k=256 + residual, the full recipe (r16)
-    "ann_recall_sweep_clustered_raw",  # residual positive control, raw arm (r16)
-    "ann_recall_sweep_clustered_res",  # residual positive control, residual arm (r16)
     "ann_text_embed_ivf_batch",  # batched text-IVF probe, one vocab broadcast (r16)
     "ann_ivfpq_batch",  # batched compressed-index probe, relational ADC (r16)
     "ann_ivfpq_stream_drift",  # streaming PQ maintenance drift log (r17)

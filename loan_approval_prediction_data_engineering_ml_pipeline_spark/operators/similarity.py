@@ -7,15 +7,15 @@ Two paths, mirroring production ANN architecture:
   codegen) and top-k is TakeOrderedAndProject (per-partition heaps, no
   global sort). This is the correctness baseline and is already the right
   plan for "one query against everything".
-- ``lsh_topk`` / ``with_hyperplane_buckets`` — random-hyperplane (signed
-  projection) bucketing: each vector maps to a compact integer signature;
-  search only scans the query's bucket. At 100 TB you persist the
-  bucketed table (partitioned by signature prefix) so a query prunes to
-  a few partitions — the IVF/LSH "scale path".
+- persisted indexes — IVF (``build_ivf_index``/``ivf_query``), flat PQ
+  (``build_pq_index``/``pq_query_rerank``) and IVF-PQ, raw or residual
+  (``build_ivfpq_index``/``ivfpq_query_rerank``/``ivfpq_batch_topk``).
+  Each is written once and probed many times; the IVF families
+  partition by cell, so a probe prunes to the few cells it scans — the
+  "scale path".
 
-Hyperplanes are generated from a fixed LCG seed at plan-build time and
-inlined as literals, so the operator is deterministic across runs and
-engines.
+KMeans and PQ codebooks are fitted with a fixed seed, so a rebuild is
+deterministic across runs and engines.
 """
 
 from __future__ import annotations
@@ -142,7 +142,7 @@ def _read_manifest_dirs(spark, path: str, rels: list[str]) -> DataFrame:
     """Read manifest-referenced dirs grouped by their hive base with
     ``basePath``, so partition columns restore even when hot and cold
     entries live in different immutable object dirs (the `_ivf_cells`
-    pattern, shared by the LSH/PQ/IVF-PQ snapshot resolvers)."""
+    pattern, shared by the PQ/IVF-PQ snapshot resolvers)."""
     groups: dict[str, list[str]] = {}
     for rel in rels:
         groups.setdefault(_hive_base(rel), []).append(rel)
@@ -587,7 +587,7 @@ def ivf_topk(
     # n_lists tiny), then scan only the top n_probe cells
     qrow = assigned.where(F.col(id_col) == query_id).select("arr", "cell").first()
     if qrow is None:
-        # match brute_force_topk/lsh_topk: unknown query id -> empty result
+        # match brute_force_topk: unknown query id -> empty result
         return embeddings.sparkSession.createDataFrame(
             [], f"{id_col} long, cosine double"
         )
@@ -613,9 +613,8 @@ def default_n_lists(n_rows: int) -> int:
     [2, 65536] — the classic IVF sizing rule (FAISS guidelines), and
     the policy the r14 two-build sweep MEASURED: at equal recall the
     sqrt-sized quantizer scans ~1.7x fewer candidate rows than a
-    fixed-8 build (ann_recall_sweep vs ann_recall_sweep_ivf32,
-    BASELINE r14). At 100 TB (~1e9+ vectors) this lands at the cap,
-    where per-cell postings stay partition-sized."""
+    fixed-8 build (BASELINE r14). At 100 TB (~1e9+ vectors) this lands
+    at the cap, where per-cell postings stay partition-sized."""
     import math
 
     return max(2, min(int(math.ceil(math.sqrt(max(n_rows, 1)))), 65536))
@@ -626,7 +625,7 @@ def recommended_probe_params(n_lists: int, k: int, n_vectors: int) -> dict:
     build records with the index (VERDICT r16 #1: the measured 100 TB
     recipe must be what a defaults-following user actually gets, not a
     BASELINE.md footnote). Derived from the r16/r17 recall sweeps
-    (``ann_recall_sweep_ivfpq*``, grids in SCALE.md/BASELINE.md):
+    (grids in SCALE.md/BASELINE.md):
 
     - ``shortlist``: with k>=64 codebooks (8-ish bits/subspace — the
       FAISS-default resolution regime) recall@10 >= 0.9 is reached
@@ -872,7 +871,7 @@ def ivf_query(
     *,
     # None = the BUILD-RECORDED calibrated operating point (r17 —
     # manifest / ivfmeta.json). Pre-recipe indexes without a record
-    # fall back to 6, their own measured point (ann_recall_sweep, r14:
+    # fall back to 6, their own measured point (the r14 IVF recall sweep:
     # smallest n_probe with recall@10 >= 0.9 at sf0.01 and sf0.1 on
     # the shipped 8-list fixture). Explicit values always win.
     n_probe: int | None = None,
@@ -918,390 +917,6 @@ def ivf_query(
         cells.select(*cols)
         .orderBy(F.desc("cosine"), F.asc(id_col))
         .limit(k)
-    )
-
-
-def build_lsh_index(
-    embeddings: DataFrame,
-    path: str,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 4,
-    n_tables: int = 4,
-    dim: int = 64,
-) -> None:
-    """Build-once half of the hyperplane-LSH lifecycle: explode each
-    vector to its (table_id, bucket) signatures and write parquet
-    PARTITIONED BY (table_id, bucket), so a query's bucket lookups are
-    partition pruning instead of a bucket join.
-
-    Same rebuild semantics as :func:`build_ivf_index` (VERDICT r12 #4):
-    a manifest-less path gets the flat hive layout (the oracle-fixture
-    format); a MANIFESTED path (one that has been ``lsh_upsert``-ed)
-    writes into a fresh immutable object dir and commits the
-    next-version manifest, so probes see the rebuilt index and prior
-    snapshots stay readable."""
-    banded = _lsh_banded_rows(
-        embeddings, id_col=id_col, vec_col=vec_col,
-        n_planes=n_planes, n_tables=n_tables, dim=dim,
-    )
-    prior = read_index_manifest(path)
-    if prior is None:
-        banded.write.mode("overwrite").partitionBy("table_id", "bucket").parquet(path)
-        return
-    obj = new_object_rel()
-    banded.write.mode("overwrite").partitionBy("table_id", "bucket").parquet(
-        _join(path, obj, "banded")
-    )
-    commit_index_manifest(
-        path,
-        int(prior["version"]) + 1,
-        {
-            "n_planes": n_planes,
-            "n_tables": n_tables,
-            "dim": dim,
-            "banded": _lsh_bucket_map(path, obj),
-        },
-    )
-
-
-def _lsh_banded_rows(
-    embeddings: DataFrame,
-    *,
-    id_col: str,
-    vec_col: str,
-    n_planes: int,
-    n_tables: int,
-    dim: int,
-) -> DataFrame:
-    """(id, v, table_id, bucket) — each vector's signature in every
-    table; the write/probe unit both the build and the upsert produce."""
-    v, v_sql = V.as_double(vec_col), V.as_double_sql(vec_col)
-    tables = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("table_id"),
-                _bucket_expr(v_sql, n_planes, dim, seed=42 + 1000 * t).alias("bucket"),
-            )
-            for t in range(n_tables)
-        ]
-    )
-    return (
-        embeddings.select(F.col(id_col), v.alias("v"), F.explode(tables).alias("b"))
-        .select(id_col, "v", F.col("b.table_id"), F.col("b.bucket"))
-    )
-
-
-def write_lsh_signatures(
-    embeddings: DataFrame,
-    path: str,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    n_tables: int = 8,
-    dim: int = 64,
-) -> None:
-    """Compact MAX-CONFIG signature table ``(id, e1, table_id, bucket)``
-    for OFFLINE operating-point sweeps (one coalesced parquet file, not
-    a serving index): because :func:`_hyperplanes` generates planes
-    sequentially from one LCG stream and :func:`_bucket_expr` packs
-    plane ``p`` into bit ``p``, the low ``b`` bits of an ``n_planes``
-    signature ARE the bucket a real ``b``-plane build (same table seed)
-    would assign, and tables ``0..t-1`` ARE the tables a ``t``-table
-    build creates. One n_planes x n_tables signature pass therefore
-    yields EVERY (tables<=n_tables, bits<=n_planes) configuration's
-    exact behavior by prefix masking — the whole tables x bits recall
-    frontier from one table (ann_lsh_band_sweep). ``e1`` (first vector
-    component) rides along for the staleness fingerprint."""
-    v, v_sql = V.as_double(vec_col), V.as_double_sql(vec_col)
-    tables = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("table_id"),
-                _bucket_expr(v_sql, n_planes, dim, seed=42 + 1000 * t).alias("bucket"),
-            )
-            for t in range(n_tables)
-        ]
-    )
-    (
-        embeddings.select(
-            F.col(id_col),
-            F.element_at(v, 1).alias("e1"),
-            F.explode(tables).alias("b"),
-        )
-        .select(id_col, "e1", F.col("b.table_id"), F.col("b.bucket"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def _lsh_bucket_map(path: str, obj_rel: str) -> dict[str, str]:
-    """Two-level ``"table/bucket" -> dir`` map for the hive dirs a
-    banded write just produced under ``objects/<id>/banded``."""
-    store = log_store_for(path)
-    root = _join(path, obj_rel, "banded")
-    out: dict[str, str] = {}
-    for td in store.list_subdirs(root):
-        if not td.startswith("table_id="):
-            continue
-        t = td.split("=", 1)[1]
-        for bd in store.list_subdirs(_join(root, td)):
-            if bd.startswith("bucket="):
-                out[f"{t}/{bd.split('=', 1)[1]}"] = f"{obj_rel}/banded/{td}/{bd}"
-    return out
-
-
-def _lsh_manifest_from_flat(
-    path: str, *, n_planes: int, n_tables: int, dim: int
-) -> dict:
-    """Version-0 view of a flat-layout LSH index: every
-    (table_id, bucket) dir referenced in place. The hyperplane params
-    are the CALLER's (the flat layout does not persist them — the same
-    contract the probe always had); once a manifest exists they are
-    recorded and authoritative."""
-    store = log_store_for(path)
-    banded: dict[str, str] = {}
-    for td in store.list_subdirs(path):
-        if not td.startswith("table_id="):
-            continue
-        t = td.split("=", 1)[1]
-        for bd in store.list_subdirs(_join(path, td)):
-            if bd.startswith("bucket="):
-                banded[f"{t}/{bd.split('=', 1)[1]}"] = f"{td}/{bd}"
-    return {
-        "version": 0,
-        "n_planes": n_planes,
-        "n_tables": n_tables,
-        "dim": dim,
-        "banded": banded,
-    }
-
-
-def lsh_upsert(
-    spark,
-    path: str,
-    new_vecs: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 4,
-    n_tables: int = 4,
-    dim: int = 64,
-    retries: int = 0,
-) -> int:
-    """Incremental LSH maintenance (VERDICT r12 #4 — the ``ivf_upsert``
-    pattern for the hyperplane index): signature-assign the delta with
-    the SAME deterministic hyperplanes the build used, then per-id
-    REPLACE of only the touched (table_id, bucket) partitions. Cold
-    buckets carry into the next manifest BY REFERENCE; one manifest
-    commit makes all touched buckets visible together; a crash before
-    the commit changes nothing a reader can observe; a lost race
-    raises :class:`CommitConflict` (OCC rebase via ``retries``).
-
-    The hyperplane params are taken from the committed manifest when
-    one exists; for the FIRST upsert on a flat index the caller must
-    pass the build's params (the flat layout does not persist them —
-    same contract as :func:`lsh_index_query`).
-
-    Same constraint as ``ivf_upsert``: a re-ingested id whose NEW
-    vector lands in different buckets leaves its old rows in buckets
-    the delta does not touch — delete the ids first if embeddings
-    mutate. New-id appends are exact. Returns touched bucket count."""
-    snap = read_index_manifest(path) or _lsh_manifest_from_flat(
-        path, n_planes=n_planes, n_tables=n_tables, dim=dim
-    )
-    n_planes, n_tables, dim = (
-        int(snap["n_planes"]), int(snap["n_tables"]), int(snap["dim"])
-    )
-    delta = _lsh_banded_rows(
-        new_vecs, id_col=id_col, vec_col=vec_col,
-        n_planes=n_planes, n_tables=n_tables, dim=dim,
-    ).localCheckpoint(eager=True)  # assignment pass runs once, not 3x
-    touched = sorted(
-        (int(r["table_id"]), int(r["bucket"]))
-        for r in delta.select("table_id", "bucket").distinct().collect()
-    )
-    bm = snap["banded"]
-    old_rels = [bm[f"{t}/{b}"] for t, b in touched if f"{t}/{b}" in bm]
-    if old_rels:
-        old_hot = _read_manifest_dirs(spark, path, old_rels).select(
-            id_col, "v", "table_id", "bucket"
-        )
-        new_rows = old_hot.join(
-            delta.select(id_col).distinct(), id_col, "left_anti"
-        ).unionByName(delta.select(id_col, "v", "table_id", "bucket"))
-    else:
-        new_rows = delta
-    obj = new_object_rel()
-    (
-        new_rows.repartition(max(len(touched), 1), "table_id", "bucket")
-        .sortWithinPartitions("table_id", "bucket", id_col)
-        .write.mode("overwrite")
-        .partitionBy("table_id", "bucket")
-        .parquet(_join(path, obj, "banded"))
-    )
-    try:
-        commit_index_manifest(
-            path,
-            int(snap["version"]) + 1,
-            {
-                "n_planes": n_planes,
-                "n_tables": n_tables,
-                "dim": dim,
-                "banded": {**bm, **_lsh_bucket_map(path, obj)},
-            },
-        )
-    except CommitConflict:
-        if retries > 0:
-            return lsh_upsert(
-                spark, path, new_vecs,
-                id_col=id_col, vec_col=vec_col,
-                n_planes=n_planes, n_tables=n_tables, dim=dim,
-                retries=retries - 1,
-            )
-        raise
-    return len(touched)
-
-
-def _py_bucket(query_vec: list[float], n_planes: int, dim: int, seed: int) -> int:
-    """Driver-side twin of ``_bucket_expr`` for a single query vector."""
-    planes = _hyperplanes(n_planes, dim, seed)
-    return sum(
-        1 << p
-        for p, plane in enumerate(planes)
-        if sum(plane[i] * query_vec[i] for i in range(len(query_vec))) >= 0
-    )
-
-
-def lsh_index_query(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    *,
-    n_planes: int = 4,
-    n_tables: int = 4,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    exclude_id: int | None = None,
-) -> DataFrame:
-    """Probe half of the hyperplane-LSH lifecycle: compute the query's
-    per-table bucket driver-side (n_tables tiny dot products), scan only
-    those (table_id, bucket) partitions, dedupe candidates, score.
-
-    Resolves the index SNAPSHOT once (manifest overlay after upserts —
-    whose recorded hyperplane params are then authoritative — or the
-    flat layout for fresh builds, where pruning is hive partition
-    pruning)."""
-    snap = read_index_manifest(path) or _lsh_manifest_from_flat(
-        path, n_planes=n_planes, n_tables=n_tables, dim=dim
-    )
-    # the snapshot's recorded params are authoritative once a manifest
-    # exists; for the flat layout they are the caller's (unpersisted)
-    n_planes, n_tables, dim = (
-        int(snap["n_planes"]), int(snap["n_tables"]), int(snap["dim"])
-    )
-    probes = [
-        (t, _py_bucket(query_vec, n_planes, dim, seed=42 + 1000 * t))
-        for t in range(n_tables)
-    ]
-    # read ONLY the probed (table, bucket) dirs the snapshot references —
-    # directory-level pruning on both layouts, and the flat root is
-    # never scanned wholesale (a crashed upsert's orphan objects/ dir
-    # lives beside the flat table_id= dirs and must stay invisible)
-    rels = [
-        snap["banded"][f"{t}/{b}"]
-        for t, b in probes
-        if f"{t}/{b}" in snap["banded"]
-    ]
-    if not rels:
-        return _empty_topk(spark, path, list(snap["banded"].values()), id_col)
-    cands = _read_manifest_dirs(spark, path, rels)
-    if exclude_id is not None:
-        cands = cands.where(F.col(id_col) != exclude_id)
-    cands = cands.dropDuplicates([id_col])
-    cos = V.cosine("v", V.array_sql(query_vec))
-    return (
-        cands.select(F.col(id_col), F.round(cos, 6).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def lsh_batch_query(
-    spark,
-    path: str,
-    query_rows: list[tuple[int, list[float]]],
-    k: int = 10,
-    *,
-    n_planes: int = 4,
-    n_tables: int = 4,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Batch hyperplane-LSH probe (VERDICT r17 #7): the union of every
-    query's probed (table, bucket) dirs is read in ONE signature scan,
-    a tiny broadcast (query_id, table_id, bucket) relation re-attaches
-    candidates to the queries that probed them, and per-query dedup +
-    exact-cosine rank reproduce :func:`lsh_index_query` EXACTLY row
-    for row (same probed sets, same 6-dp rounding, same id
-    tie-breaks). ``query_rows`` is bounded driver data [(query_id,
-    vector)] — the same literals the single probes inline.
-
-    ``exclude_self`` drops candidate ``id == query_id`` (the single
-    probes' ``exclude_id=qid`` convention for in-corpus queries)."""
-    from pyspark.sql import Window
-
-    snap = read_index_manifest(path) or _lsh_manifest_from_flat(
-        path, n_planes=n_planes, n_tables=n_tables, dim=dim
-    )
-    n_planes, n_tables, dim = (
-        int(snap["n_planes"]), int(snap["n_tables"]), int(snap["dim"])
-    )
-    pairs = [
-        (int(qid), t, _py_bucket(list(vec), n_planes, dim, seed=42 + 1000 * t))
-        for qid, vec in query_rows
-        for t in range(n_tables)
-    ]
-    keys = sorted({f"{t}/{b}" for _, t, b in pairs if f"{t}/{b}" in snap["banded"]})
-    if not keys:
-        empty = _empty_topk(spark, path, list(snap["banded"].values()), id_col)
-        return empty.select(
-            F.lit(None).cast("long").alias("query_id"), id_col, "cosine"
-        ).where(F.lit(False))
-    cands = _read_manifest_dirs(spark, path, [snap["banded"][key] for key in keys])
-    probe_df = spark.createDataFrame(
-        pairs, "query_id long, table_id int, bucket int"
-    )
-    qv_df = spark.createDataFrame(
-        [(int(qid), [float(x) for x in vec]) for qid, vec in query_rows],
-        "query_id long, qv array<double>",
-    )
-    tagged = cands.join(
-        F.broadcast(probe_df),
-        [
-            cands["table_id"].cast("int") == probe_df["table_id"],
-            cands["bucket"].cast("int") == probe_df["bucket"],
-        ],
-    ).select("query_id", F.col(id_col), "v")
-    if exclude_self:
-        tagged = tagged.where(F.col(id_col) != F.col("query_id"))
-    tagged = tagged.dropDuplicates(["query_id", id_col])
-    cos = V.cosine("v", "qv")
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc(id_col)
-    )
-    return (
-        tagged.join(F.broadcast(qv_df), "query_id")
-        .select("query_id", F.col(id_col), F.round(cos, 6).alias("cosine"))
-        .withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") <= k)
-        .drop("__rk")
-        .orderBy("query_id", F.desc("cosine"), F.asc(id_col))
     )
 
 
@@ -1376,7 +991,6 @@ def _fit_pq_codebooks(
         model = KMeans(k=k, seed=seed + j, featuresCol="feat").fit(feats)
         books.append([[float(x) for x in c] for c in model.clusterCenters()])
     return books, sub
-
 
 
 def _array2d_lit(rows: list[list[float]]):
@@ -1472,12 +1086,14 @@ def _load_codebook(spark, path: str) -> tuple[int, int, int, list]:
     return memo(spark, path, [rel], "codebook", load)
 
 
-def _adc_table(spark, path: str, query_vec: list[float]) -> list[float]:
-    """The m×k driver-side ADC inner-product table for one query (the
-    EXACT normalized query subvectors × codebook centroids, ``qn or
-    1.0`` zero guard) — shared by the single-probe literal expression
-    (:func:`_adc_score`) and the sweep's multi-query nested literal, so
-    the two forms cannot drift."""
+def _adc_score(spark, path: str, query_vec: list[float]):
+    """Asymmetric-distance scoring column for a `codes` array column:
+    the m×k inner-product table between the EXACT normalized query
+    subvectors (``qn or 1.0`` zero guard) and the codebook centroids is
+    built driver-side (a few KB), inlined as a literal array, and summed
+    by one codegen aggregate — no shuffle, no Python. Shared by flat-PQ
+    and IVF-PQ probes (the memoized codebook makes repeated probes
+    free)."""
     import math
 
     m, k, sub, cents = _load_codebook(spark, path)
@@ -1495,22 +1111,10 @@ def _adc_table(spark, path: str, query_vec: list[float]) -> list[float]:
                 # leave 0.0
                 continue
             table[j * k + c] = sum(q[j * sub + i] * cent[i] for i in range(sub))
-    return table
-
-
-def _adc_score(spark, path: str, query_vec: list[float]):
-    """Asymmetric-distance scoring column for a `codes` array column:
-    the m×k inner-product table between the EXACT normalized query
-    subvectors and the codebook centroids is built driver-side (a few
-    KB), inlined as a literal array, and summed by one codegen
-    aggregate — no shuffle, no Python. Shared by flat-PQ and IVF-PQ
-    probes (the memoized codebook makes repeated probes free)."""
-    m, k, _sub, _cents = _load_codebook(spark, path)
-    table = _adc_table(spark, path, query_vec)
     # ONE py4j round trip for the whole table (r17): PySpark's
     # ``F.lit(list)`` silently expands to ``array(lit(x) for x in ...)``
-    # — 2 py4j calls per element, measured 4.6 s of driver time PER
-    # SWEEP at m*k = 2048 cells x 3 queries. A SQL ``array(...)``
+    # — 2 py4j calls per element, measured 4.6 s of driver time for 3
+    # queries at m*k = 2048 cells. A SQL ``array(...)``
     # literal ships the table as one string; every element is a foldable
     # double literal (repr() is the shortest IEEE-754 round-trip form
     # and Java's parseDouble is correctly rounded, so values are
@@ -1605,103 +1209,6 @@ def pq_query_rerank(
         .select(F.col(id_col), F.round(cos, 6).alias("cosine"))
         .orderBy(F.desc("cosine"), F.asc(id_col))
         .limit(k_results)
-    )
-
-
-def pq_batch_topk(
-    spark,
-    path: str,
-    queries: DataFrame,
-    embeddings: DataFrame,
-    k_results: int = 10,
-    *,
-    shortlist: int = 100,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Batch flat-PQ probe (r17): ADC-shortlisted, exact-reranked
-    cosine top-k for EVERY row of ``queries`` as ONE distributed plan —
-    the flat-index twin of :func:`ivfpq_batch_topk`, built for fused
-    multi-query reports (``ann_family_recall``) and batch serving. The
-    ADC table is a RELATION (query frame ⋈ broadcast persisted
-    codebooks → per-(query, subspace, code) inner products), corpus
-    codes posexplode to (id, j, code_j) once regardless of fan-in, and
-    one hash join + sum reassembles every score. Per query the result
-    is EXACTLY :func:`pq_query_rerank`'s: same normalized-subvector
-    table values, same 6-dp rounding before the shortlist cut, same
-    normalized-corpus rerank, same id tie-breaks."""
-    from pyspark.sql import Window
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        # query-side guard (ADVICE r17): zero vector → zero scores,
-        # exactly like _adc_score's `qn or 1.0`, not an all-null array
-        V.l2_normalize_query(V.as_double_sql(vec_col)).alias("qn"),
-    )
-    books = cached_index_parquet(spark, path, [_codebook_rel(path)]).select(
-        F.col("subspace").cast("int").alias("__j"),
-        F.col("code").cast("int").alias("__code"),
-        "centroid",
-    )
-    sub = F.size(F.col("centroid"))
-    qsub = F.slice(F.col("qn"), F.col("__j") * sub + 1, sub)
-    ip = F.aggregate(
-        F.zip_with(qsub, F.col("centroid"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    qtab = q.join(F.broadcast(books)).select(
-        "query_id", "__j", "__code", ip.alias("__ip")
-    )
-    expl = _pq_codes_df(spark, path).select(
-        F.col(id_col), F.posexplode(F.col("codes")).alias("__j", "__code")
-    )
-    adc = (
-        expl.join(qtab, ["__j", "__code"])
-        .where(
-            F.col(id_col) != F.col("query_id") if exclude_self else F.lit(True)
-        )
-        .groupBy("query_id", id_col)
-        .agg(F.sum("__ip").alias("__adc"))
-    )
-    short = (
-        adc.select(
-            "query_id", F.col(id_col), F.round(F.col("__adc"), 6).alias("pq_score")
-        )
-        .withColumn(
-            "__rk",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.desc("pq_score"), F.asc(id_col)
-                )
-            ),
-        )
-        .where(F.col("__rk") <= shortlist)
-        .select("query_id", id_col)
-    )
-    emb = embeddings.select(
-        F.col(id_col), V.l2_normalize(V.as_double_sql(vec_col)).alias("__v")
-    )
-    qraw = queries.select(
-        F.col(id_col).alias("query_id"), V.as_double(vec_col).alias("__qv")
-    )
-    cos = V.cosine("__v", "__qv")
-    return (
-        short.join(emb, id_col)
-        .join(qraw, "query_id")
-        .select("query_id", F.col(id_col), F.round(cos, 6).alias("cosine"))
-        .withColumn(
-            "__rk",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.desc("cosine"), F.asc(id_col)
-                )
-            ),
-        )
-        .where(F.col("__rk") <= k_results)
-        .drop("__rk")
-        .orderBy("query_id", F.desc("cosine"), F.asc(id_col))
     )
 
 
@@ -1827,7 +1334,7 @@ def ivf_batch_topk(
     k: int = 10,
     *,
     # None = the BUILD-RECORDED calibrated operating point (r17); the
-    # pre-recipe fallback 6 is the ann_recall_sweep point for the
+    # pre-recipe fallback 6 is the r14 recall-sweep point for the
     # 8-list fixture index (recall@10 >= 0.9 at sf0.01 and sf0.1)
     n_probe: int | None = None,
     id_col: str = "vec_id",
@@ -2151,7 +1658,7 @@ def ivfpq_query_rerank(
         codes = codes.where(F.col(id_col) != exclude_id)
     score = _adc_score(spark, path, query_vec)
     # residual encoding (manifest-recorded at manifested paths; flat
-    # fixture layouts follow the LSH convention — caller passes the
+    # fixture layouts carry no record — caller passes the
     # build's flag): ADC approximates dot(q, r̂), so add the per-cell
     # constant dot(q, c(cell)) — a tiny map literal over n_lists cells
     if snap.get("residual", residual):  # manifest wins; flat -> caller's flag
@@ -2598,141 +2105,6 @@ def ivfpq_upsert(
             )
         raise
     return len(touched)
-
-
-def mllib_brp_topk(
-    embeddings: DataFrame,
-    query_id: int,
-    k: int = 10,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_length: float = 0.5,
-    num_hash_tables: int = 4,
-    seed: int = 42,
-) -> DataFrame:
-    """MLlib-native ANN twin: BucketedRandomProjectionLSH (Euclidean) over
-    L2-normalized vectors — on unit vectors Euclidean ordering equals
-    cosine ordering, so approxNearestNeighbors returns cosine neighbors.
-    Kept alongside the expression-based ``lsh_topk`` for users of the
-    stock estimator."""
-    from pyspark.ml.feature import BucketedRandomProjectionLSH, Normalizer
-    from pyspark.ml.functions import array_to_vector
-
-    vecs = embeddings.select(
-        F.col(id_col), array_to_vector(V.as_double(vec_col)).alias("raw")
-    )
-    vecs = Normalizer(inputCol="raw", outputCol="v", p=2.0).transform(vecs).select(id_col, "v")
-    brp = BucketedRandomProjectionLSH(
-        inputCol="v", outputCol="hashes", bucketLength=bucket_length,
-        numHashTables=num_hash_tables, seed=seed,
-    )
-    model = brp.fit(vecs)
-    krow = vecs.where(F.col(id_col) == query_id).first()
-    if krow is None:
-        return embeddings.sparkSession.createDataFrame(
-            [], f"{id_col} long, cosine double"
-        )
-    key = krow["v"]
-    out = model.approxNearestNeighbors(vecs.where(F.col(id_col) != query_id), key, k)
-    # euclidean dist d on unit vectors -> cosine = 1 - d^2/2
-    return out.select(
-        F.col(id_col), F.round(1.0 - F.col("distCol") ** 2 / 2.0, 6).alias("cosine")
-    )
-
-
-def _hyperplanes(n_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
-    """Deterministic pseudo-gaussian hyperplanes from a tiny LCG —
-    stdlib-only so the plan is reproducible everywhere."""
-    state = seed & 0x7FFFFFFF
-    def nxt() -> float:
-        nonlocal state
-        state = (1103515245 * state + 12345) % (1 << 31)
-        return state / float(1 << 31)
-    planes = []
-    for _ in range(n_planes):
-        # sum of 6 uniforms ~ gaussian-ish; sign symmetry is all LSH needs
-        planes.append([sum(nxt() for _ in range(6)) - 3.0 for _ in range(dim)])
-    return planes
-
-
-def _bucket_expr(v: str, n_planes: int, dim: int, seed: int):
-    planes = _hyperplanes(n_planes, dim, seed)
-    bits = [
-        F.when(
-            V.dot(v, V.array_sql(plane)) >= 0, F.lit(1 << p)
-        ).otherwise(F.lit(0))
-        for p, plane in enumerate(planes)
-    ]
-    bucket = bits[0]
-    for b in bits[1:]:
-        bucket = bucket + b
-    return bucket.cast("int")
-
-
-def with_hyperplane_buckets(
-    embeddings: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-) -> DataFrame:
-    """Attach `bucket`: the n_planes-bit signed-projection signature."""
-    return embeddings.withColumn("bucket", _bucket_expr(V.as_double_sql(vec_col), n_planes, dim, seed))
-
-
-def lsh_topk(
-    embeddings: DataFrame,
-    query_id: int,
-    k: int = 10,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 4,
-    n_tables: int = 4,
-    dim: int = 64,
-) -> DataFrame:
-    """Approximate top-k via multi-table hyperplane LSH: ``n_tables``
-    independent hash tables of ``n_planes`` bits each; candidates are
-    vectors that share the query's bucket in ANY table (classic recall
-    amplification: P[candidate] = 1-(1-p^planes)^tables).
-
-    Mechanics mirror minhash banding: rows explode to (table_id, bucket)
-    and bucket-join against the query's signatures — only ids + small
-    signatures shuffle, then just the candidate set is scored. Recall < 1
-    by construction; tests measure overlap vs brute force. On a persisted
-    bucketed table the bucket join becomes partition pruning."""
-    v, v_sql = V.as_double(vec_col), V.as_double_sql(vec_col)
-    tables = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("table_id"),
-                _bucket_expr(v_sql, n_planes, dim, seed=42 + 1000 * t).alias("bucket"),
-            )
-            for t in range(n_tables)
-        ]
-    )
-    emb = embeddings.select(F.col(id_col), v.alias("v"), tables.alias("tb"))
-    banded = emb.select(id_col, "v", F.explode("tb").alias("b")).select(
-        id_col, "v", "b.table_id", "b.bucket"
-    )
-    q = (
-        banded.where(F.col(id_col) == query_id)
-        .select(F.col("table_id"), F.col("bucket"), F.col("v").alias("qv"))
-    )
-    cands = (
-        banded.where(F.col(id_col) != query_id)
-        .join(F.broadcast(q), ["table_id", "bucket"])
-        .select(id_col, "v", "qv")
-        .dropDuplicates([id_col])
-    )
-    cos = V.cosine("v", "qv")
-    return (
-        cands.select(F.col(id_col), F.round(cos, 6).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
 
 
 def ivf_assignment_stats(

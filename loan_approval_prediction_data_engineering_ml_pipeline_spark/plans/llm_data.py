@@ -520,12 +520,8 @@ def _index_dir(sf_dir: str, kind: str) -> str:
 # sf tag (not the root) for other SFs.
 _ORACLE_IVF_DIR = _index_dir("sf0.01", "ivf8")
 _ORACLE_PQ_DIR = _index_dir("sf0.01", "pq8x16")
-_ORACLE_LSH_DIR = _index_dir("sf0.01", "lsh4x4")
 _ORACLE_IVFPQ_DIR = _index_dir("sf0.01", "ivfpq8x8x16")
 _ORACLE_IVFTEXT_DIR = _index_dir("sf0.01", "ivftext")
-_ORACLE_LSHSIG_DIR = _index_dir("sf0.01", "lshsig8x8")
-_ORACLE_IVFPQ256_DIR = _index_dir("sf0.01", "ivfpq8x8x256")
-_ORACLE_IVFPQR256_DIR = _index_dir("sf0.01", "ivfpqr8x8x256")
 
 
 def _query_vec(spark: SparkSession, sf_dir: str, vec_id: int) -> list[float]:
@@ -606,15 +602,16 @@ def _ensure_index(
 ) -> str:
     """Build-if-missing + STALENESS-GUARDED ensure for a committed index
     fixture — the one helper behind every ``_ensure_*`` (ADVICE r14: the
-    fingerprint used to live only in ivf8/lsh44, so a content-only
-    embeddings regeneration silently served stale ivf32/pq/ivfpq cells).
+    fingerprint used to live only in ivf8 and the retired LSH index, so
+    a content-only embeddings regeneration silently served stale
+    ivf32/pq/ivfpq cells).
 
     The committed index must describe the CURRENT source table (fixtures
     can be regenerated out from under a committed index). Freshness =
     :func:`_emb_fp` of ``src_pairs`` (the live table) equals the index's
     own content: ``stored_pairs()`` re-derives ``(id, e1)`` from the
-    committed files when the index stores raw components (IVF cells, LSH
-    rows); indexes that store only CODES (PQ, IVF-PQ) compare against a
+    committed files when the index stores raw components (IVF cells);
+    indexes that store only CODES (PQ, IVF-PQ) compare against a
     ``content.fp`` sidecar written at build time — a missing sidecar
     rebuilds once and writes it. Checked once per version of the
     ``source`` table (``(dir, rel)``, through the read memo); a stale
@@ -712,30 +709,9 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ensure_lsh44(spark: SparkSession, sf_dir: str) -> str:
-    """Build-if-missing + staleness-guarded lsh4x4 index path (shared
-    by ann_lsh_bucketed and ann_family_recall). Stored rows replicate
-    per table, so the content comparison distincts per-id first
-    components before fingerprinting."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    idx = _index_dir(sf_dir, "lsh4x4")
-    return _ensure_index(
-        spark,
-        idx,
-        source=(sf_dir, "embeddings.parquet"),
-        marker="_SUCCESS",
-        src_pairs=_emb_pairs(emb),
-        id_col="vec_id",
-        build=lambda: S.build_lsh_index(emb, idx, n_planes=4, n_tables=4),
-        stored_pairs=lambda: spark.read.parquet(idx)
-        .select("vec_id", F.element_at("v", 1).alias("e1"))
-        .distinct(),
-    )
-
-
 def _ensure_pq816(spark: SparkSession, sf_dir: str) -> str:
-    """Build-if-missing + staleness-guarded pq8x16 index path (ann_pq,
-    ann_family_recall). PQ stores only codes — staleness compares the
+    """Build-if-missing + staleness-guarded pq8x16 index path (ann_pq).
+    PQ stores only codes — staleness compares the
     ``content.fp`` sidecar written at build time (ADVICE r14)."""
     emb = load_table(spark, sf_dir, "embeddings")
     idx = _index_dir(sf_dir, "pq8x16")
@@ -752,7 +728,7 @@ def _ensure_pq816(spark: SparkSession, sf_dir: str) -> str:
 
 def _ensure_ivfpq(spark: SparkSession, sf_dir: str) -> str:
     """Build-if-missing + staleness-guarded ivfpq8x8x16 index path
-    (ann_ivfpq, ann_family_recall). Codes-only index — sidecar
+    (ann_ivfpq, ann_ivfpq_batch). Codes-only index — sidecar
     fingerprint, like :func:`_ensure_pq816` (ADVICE r14)."""
     emb = load_table(spark, sf_dir, "embeddings")
     idx = _index_dir(sf_dir, "ivfpq8x8x16")
@@ -766,53 +742,6 @@ def _ensure_ivfpq(spark: SparkSession, sf_dir: str) -> str:
         build=lambda: S.build_ivfpq_index(
             emb, idx, n_lists=8, m=8, k=16, seed=42
         ),
-    )
-
-
-
-@query(
-    "ann_lsh_bucketed",
-    tier="local",  # ann_ivf carries the persisted-index lifecycle in the capped driver set
-    # Approximate vs brute force, but EXACT given the persisted index
-    # (same argument as ann_ivf/ann_pq, VERDICT r3 #2): the probe set is
-    # the query vector's own (table_id, bucket) signature — and since the
-    # query IS corpus vector 0, the committed index already records that
-    # signature, so DuckDB re-derives the probe buckets from vec_id 0's
-    # index rows (an independent path from the Spark probe's driver-side
-    # hyperplane dot products), the candidate set by bucket membership,
-    # and the exact top-k over candidates.
-    oracle=f"""
-    WITH q AS (
-      SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0
-    ),
-    probe AS (
-      SELECT CAST(table_id AS INT) AS table_id, CAST(bucket AS INT) AS bucket
-      FROM read_parquet('{_ORACLE_LSH_DIR}/*/*/*.parquet', hive_partitioning=1)
-      WHERE vec_id = 0
-    ),
-    cand AS (
-      SELECT DISTINCT i.vec_id
-      FROM read_parquet('{_ORACLE_LSH_DIR}/*/*/*.parquet', hive_partitioning=1) i
-      JOIN probe ON CAST(i.table_id AS INT) = probe.table_id
-                AND CAST(i.bucket AS INT) = probe.bucket
-      WHERE i.vec_id != 0
-    )
-    SELECT c.vec_id,
-           round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS cosine
-    FROM cand c JOIN embeddings e ON e.vec_id = c.vec_id, q
-    ORDER BY cosine DESC, c.vec_id
-    LIMIT 10
-    """,
-    description="Multi-table hyperplane-LSH ANN with the persisted-index "
-    "lifecycle: 4 tables x 4 sign bits written once PARTITIONED BY "
-    "(table_id, bucket); the probe computes the query's buckets "
-    "driver-side and scans only those partitions (pruning, not a join); "
-    "oracle-verified against the committed index",
-)
-def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    idx = _ensure_lsh44(spark, sf_dir)
-    return S.lsh_index_query(
-        spark, idx, _query_vec(spark, sf_dir, 0), k=10, n_planes=4, n_tables=4, exclude_id=0
     )
 
 
@@ -1962,7 +1891,6 @@ def _pii_redact_sql(col: str) -> str:
     return red
 
 
-
 _FUNNEL_CHK = (
     "(CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) "
     "AS BIGINT) % 2147483647)"
@@ -3092,8 +3020,6 @@ def bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-
 @query(
     "phrase_merges",
     tier="local",
@@ -4088,330 +4014,6 @@ def ann_ivf_stream_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "ann_recall_report",
-    tier="local",
-    # ANN quality evaluation, fully SQL-re-derivable: EXACT top-10 by
-    # brute-force cosine (the ground truth) vs the IVF index's
-    # partition-pruned top-10, recall@10 = overlap/10 per query. Both
-    # rankings round cosine to 6 dp BEFORE ranking (ties on vec_id), so
-    # both engines derive identical sets; the index side reads the same
-    # committed parquet the probe scans.
-    oracle=f"""
-    WITH hq AS (
-      SELECT vec_id AS qvid, CAST(embedding AS DOUBLE[]) AS qv
-      FROM embeddings WHERE vec_id < 3
-    ),
-    e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    exact AS (
-      SELECT qvid, vec_id FROM (
-        SELECT hq.qvid, e.vec_id,
-               row_number() OVER (
-                 PARTITION BY hq.qvid
-                 ORDER BY round(list_cosine_similarity(e.v, hq.qv), 6) DESC,
-                          e.vec_id
-               ) AS rk
-        FROM hq, e WHERE e.vec_id != hq.qvid
-      ) WHERE rk <= 10
-    ),
-    cent AS (
-      SELECT CAST(cell AS INT) AS cell, CAST(centroid AS DOUBLE[]) AS centroid
-      FROM read_parquet('{_ORACLE_IVF_DIR}/centroids/*.parquet')
-    ),
-    cranked AS (
-      SELECT hq.qvid, cent.cell,
-             row_number() OVER (
-               PARTITION BY hq.qvid
-               ORDER BY list_distance(cent.centroid, hq.qv), cent.cell
-             ) AS crk
-      FROM cent, hq
-    ),
-    probe AS (SELECT qvid, cell FROM cranked WHERE crk <= 6),
-    cand AS (
-      SELECT CAST(vec_id AS BIGINT) AS vec_id,
-             CAST(arr AS DOUBLE[]) AS arr,
-             CAST(cell AS INT) AS cell
-      FROM read_parquet('{_ORACLE_IVF_DIR}/cells/*/*.parquet',
-                        hive_partitioning=1)
-    ),
-    approx AS (
-      SELECT qvid, vec_id FROM (
-        SELECT p.qvid, c.vec_id,
-               row_number() OVER (
-                 PARTITION BY p.qvid
-                 ORDER BY round(list_cosine_similarity(c.arr, h.qv), 6) DESC,
-                          c.vec_id
-               ) AS rk
-        FROM probe p
-        JOIN cand c ON c.cell = p.cell
-        JOIN hq h ON h.qvid = p.qvid
-        WHERE c.vec_id != p.qvid
-      ) WHERE rk <= 10
-    )
-    SELECT exact.qvid AS query_id,
-           round(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END) / 10.0, 6)
-             AS recall_at_10
-    FROM exact LEFT JOIN approx a
-      ON a.qvid = exact.qvid AND a.vec_id = exact.vec_id
-    GROUP BY 1 ORDER BY 1
-    """,
-    description="ANN index quality report: recall@10 of the committed "
-    "IVF index's partition-pruned probe against the exact brute-force "
-    "cosine top-10, per query vector, at the SHIPPED operating point "
-    "(n_probe=6, the smallest with sweep recall >= 0.9 at sf0.01 and "
-    "sf0.1 — see ann_recall_sweep, which derives the whole curve in "
-    "one pass). Exact side is one broadcast of 3 query vectors against "
-    "the corpus + a per-query window; approx side is the fused "
-    "ivf_batch_topk plan; recall is one join of two (queries x 10)-row "
-    "sets — evaluation cost independent of corpus size beyond the one "
-    "exact scan",
-)
-def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    idx = _ensure_ivf8(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 3)
-    approx = S.ivf_batch_topk(spark, idx, q, k=10, n_probe=6)
-    qv = q.select(F.col("vec_id").alias("query_id"), V.as_double("embedding").alias("qv"))
-    corpus = emb.select("vec_id", V.as_double("embedding").alias("v"))
-    cos = F.round(V.cosine("v", "qv"), 6)
-    exact = (
-        corpus.join(F.broadcast(qv))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", cos.alias("cosine"))
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.desc("cosine"), F.asc("vec_id")
-                )
-            ),
-        )
-        .where(F.col("rk") <= 10)
-    )
-    return (
-        exact.join(
-            approx.select("query_id", "vec_id").withColumn("hit", F.lit(1)),
-            ["query_id", "vec_id"],
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.round(
-                F.sum(F.coalesce(F.col("hit"), F.lit(0))) / F.lit(10.0), 6
-            ).alias("recall_at_10")
-        )
-        .orderBy("query_id")
-    )
-
-
-def _recall_sweep_oracle(index_dir: str, n_lists: int) -> str:
-    """The one-pass sweep oracle, templated over (index dir, n_lists)
-    so the ivf8 and ivf32 builds share one derivation."""
-    return f"""
-    WITH hq AS (
-      SELECT vec_id AS qvid, CAST(embedding AS DOUBLE[]) AS qv
-      FROM embeddings WHERE vec_id < 3
-    ),
-    e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    exact AS (
-      SELECT qvid, vec_id FROM (
-        SELECT hq.qvid, e.vec_id,
-               row_number() OVER (
-                 PARTITION BY hq.qvid
-                 ORDER BY round(list_cosine_similarity(e.v, hq.qv), 6) DESC,
-                          e.vec_id
-               ) AS rk
-        FROM hq, e WHERE e.vec_id != hq.qvid
-      ) WHERE rk <= 10
-    ),
-    cent AS (
-      SELECT CAST(cell AS INT) AS cell, CAST(centroid AS DOUBLE[]) AS centroid
-      FROM read_parquet('{index_dir}/centroids/*.parquet')
-    ),
-    cranked AS (
-      SELECT hq.qvid, cent.cell,
-             row_number() OVER (
-               PARTITION BY hq.qvid
-               ORDER BY list_distance(cent.centroid, hq.qv), cent.cell
-             ) AS crk
-      FROM cent, hq
-    ),
-    cells AS (
-      SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(cell AS INT) AS cell
-      FROM read_parquet('{index_dir}/cells/*/*.parquet',
-                        hive_partitioning=1)
-    ),
-    truth AS (
-      SELECT exact.qvid, cr.crk
-      FROM exact
-      JOIN cells c ON c.vec_id = exact.vec_id
-      JOIN cranked cr ON cr.qvid = exact.qvid AND cr.cell = c.cell
-    ),
-    cellsz AS (SELECT cell, count(*) AS cn FROM cells GROUP BY 1),
-    probes AS (
-      SELECT CAST(g.i AS INT) AS n_probe FROM generate_series(1, {n_lists}) g(i)
-    ),
-    rec AS (
-      SELECT p.n_probe, t.qvid,
-             sum(CASE WHEN t.crk <= p.n_probe THEN 1 ELSE 0 END) / 10.0 AS r
-      FROM probes p, truth t GROUP BY 1, 2
-    ),
-    recm AS (SELECT n_probe, round(avg(r), 6) AS recall_at_10 FROM rec GROUP BY 1),
-    cost AS (
-      SELECT p.n_probe, cr.qvid, sum(cz.cn) AS rows_q
-      FROM probes p, cranked cr JOIN cellsz cz ON cz.cell = cr.cell
-      WHERE cr.crk <= p.n_probe GROUP BY 1, 2
-    ),
-    costm AS (
-      SELECT n_probe, round(avg(rows_q), 6) AS mean_cand_rows FROM cost GROUP BY 1
-    )
-    SELECT n_probe, recall_at_10, mean_cand_rows
-    FROM recm JOIN costm USING (n_probe) ORDER BY n_probe
-    """
-
-
-def _recall_sweep(
-    spark: SparkSession,
-    sf_dir: str,
-    idx: str,
-    *,
-    emb: DataFrame | None = None,
-    id_col: str = "vec_id",
-    use_dot: bool = False,
-) -> DataFrame:
-    """The one-pass sweep plan (shared by the ivf8, ivf32, and
-    text-derived-index rows).
-
-    ``emb``/``id_col`` generalize the corpus beyond the fixture
-    embeddings table (r15: the text-derived encoder output indexed by
-    doc_id). ``use_dot=True`` scores with the raw dot product — for
-    l2-NORMALIZED corpora (the encoder's output) dot IS cosine, with no
-    division anywhere, so both engines agree bit-for-bit even on
-    zero-norm rows (dot 0.0 instead of NULL).
-
-    Identity (VERDICT r13 #1): with a total candidate order (cosine
-    rounded to 6 dp DESC, vec_id ASC, self excluded on both sides), a
-    ground-truth top-10 neighbor is in the probe's top-10 IFF its cell
-    is probed — anything outranking it within the probed subset
-    outranks it globally too, and there are at most 9 such items, all
-    themselves global top-10. So recall@10(p) = |{truth neighbors whose
-    cell rank <= p}| / 10, derivable from exact-top-10 x per-query
-    centroid ranking; the whole recall/cost curve costs one exact scan
-    + tiny rank joins instead of n_lists probe runs."""
-    from pyspark.sql import Window
-
-    if emb is None:
-        emb = load_table(spark, sf_dir, "embeddings")
-    qv = emb.where(F.col(id_col) < 3).select(
-        F.col(id_col).alias("query_id"), V.as_double("embedding").alias("qv")
-    )
-    corpus = emb.select(
-        F.col(id_col).alias("vid"), V.as_double("embedding").alias("v")
-    )
-    score = (
-        V.dot("v", "qv")
-        if use_dot
-        else V.cosine("v", "qv")
-    )
-    cos = F.round(score, 6)
-    exact = (
-        corpus.join(F.broadcast(qv))
-        .where(F.col("vid") != F.col("query_id"))
-        .select("query_id", "vid", cos.alias("cosine"))
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.desc("cosine"), F.asc("vid")
-                )
-            ),
-        )
-        .where(F.col("rk") <= 10)
-        .select("query_id", "vid")
-    )
-    cent = S._ivf_centroids(spark, idx)
-    dist = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("centroid"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, d: acc + d,
-    )
-    crk = (
-        qv.join(F.broadcast(cent))
-        .select("query_id", "cell", dist.alias("d"))
-        .withColumn(
-            "crk",
-            F.row_number().over(Window.partitionBy("query_id").orderBy("d", "cell")),
-        )
-        .select("query_id", "cell", "crk")
-    )
-    cells = S._ivf_cells(spark, idx).select(F.col(id_col).alias("vid"), "cell")
-    truth = (
-        exact.join(cells, "vid")
-        .join(crk, ["query_id", "cell"])
-        .select("query_id", "crk")
-    )
-    cellsz = cells.groupBy("cell").agg(F.count(F.lit(1)).alias("cn"))
-    # n_lists from the memoized centroid rows (no Spark job; the old
-    # cent.count() ran one per sweep call)
-    n_lists = len(S._ivf_centroid_rows(spark, idx))
-    probes = spark.range(1, n_lists + 1).select(
-        F.col("id").cast("int").alias("n_probe")
-    )
-    rec = (
-        probes.join(F.broadcast(truth))
-        .groupBy("n_probe", "query_id")
-        .agg(
-            (
-                F.sum(F.when(F.col("crk") <= F.col("n_probe"), 1).otherwise(0))
-                / F.lit(10.0)
-            ).alias("r")
-        )
-        .groupBy("n_probe")
-        .agg(F.round(F.avg("r"), 6).alias("recall_at_10"))
-    )
-    scan = crk.join(F.broadcast(cellsz), "cell").select("query_id", "crk", "cn")
-    cost = (
-        probes.join(F.broadcast(scan))
-        .where(F.col("crk") <= F.col("n_probe"))
-        .groupBy("n_probe", "query_id")
-        .agg(F.sum("cn").alias("rows_q"))
-        .groupBy("n_probe")
-        .agg(F.round(F.avg("rows_q"), 6).alias("mean_cand_rows"))
-    )
-    return rec.join(cost, "n_probe").orderBy("n_probe")
-
-
-@query(
-    "ann_recall_sweep",
-    tier="local",
-    oracle=lambda: _recall_sweep_oracle(_ORACLE_IVF_DIR, 8),
-    description="ANN operating-point sweep (the report that sizes "
-    "n_probe): recall@10 + mean candidate rows scanned for every "
-    "n_probe 1..n_lists over the committed ivf8 index, computed in ONE "
-    "pass via the probed-cell dominance identity (a ground-truth "
-    "neighbor survives the probe's top-10 iff its cell is probed, "
-    "because anything outranking it in a candidate subset is itself "
-    "global top-10 under the shared total order) — so the whole "
-    "recall/cost curve costs one exact scan + tiny rank joins instead "
-    "of n_lists probe runs; the curve picks the shipped default "
-    "(smallest n_probe with recall >= 0.9)",
-)
-def ann_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _recall_sweep(spark, sf_dir, _ensure_ivf8(spark, sf_dir))
-
-
-def _text_emb(spark: SparkSession, sf_dir: str, feats: DataFrame | None = None):
-    """The text-derived corpus embedding (doc_id, embedding) — shared
-    derivation for the ivftext ensure/sweep (encoder of
-    ``ann_text_embed_topk``, operators/embedding.py)."""
-    from ..operators import embedding as E
-
-    docs = load_table(spark, sf_dir, "documents")
-    return E.hashed_tfidf_embed(docs, dim=64, feats=feats)
-
-
 def _ensure_ivftext(spark: SparkSession, sf_dir: str) -> str:
     """Build-if-missing + staleness-guarded IVF index over the
     TEXT-DERIVED embeddings (VERDICT r14 #1 — the seam between the r14
@@ -4444,94 +4046,6 @@ def _ensure_ivftext(spark: SparkSession, sf_dir: str) -> str:
         stored_pairs=lambda: S._ivf_cells(spark, idx).select(
             "doc_id", F.element_at(F.col("arr"), 1).alias("e1")
         ),
-    )
-
-
-@query(
-    "ann_recall_sweep_textivf",
-    tier="local",
-    # One-pass recall/cost curve over the TEXT-DERIVED index. Both
-    # engines take corpus vectors, centroids, and the probe universe
-    # (n_probe = the distinct centroid ranks) from the committed index
-    # files; exact truth ranks by round(dot, 6) — the corpus is
-    # l2-normalized by the encoder, so dot IS cosine with no division
-    # anywhere and both engines agree even on zero-norm rows. The
-    # staleness fingerprint (_ensure_ivftext) ties the committed files
-    # to the live encoder output, so the sweep can never score a stale
-    # index against fresh truth (ADVICE r14).
-    oracle=f"""
-    WITH cells AS (
-      SELECT CAST(doc_id AS BIGINT) AS vid, CAST(arr AS DOUBLE[]) AS v,
-             CAST(cell AS INT) AS cell
-      FROM read_parquet('{_ORACLE_IVFTEXT_DIR}/cells/*/*.parquet',
-                        hive_partitioning=1)
-    ),
-    hq AS (SELECT vid AS qvid, v AS qv FROM cells WHERE vid < 3),
-    exact AS (
-      SELECT qvid, vid FROM (
-        SELECT hq.qvid, c.vid,
-               row_number() OVER (
-                 PARTITION BY hq.qvid
-                 ORDER BY round(list_dot_product(c.v, hq.qv), 6) DESC, c.vid
-               ) AS rk
-        FROM hq, cells c WHERE c.vid != hq.qvid
-      ) WHERE rk <= 10
-    ),
-    cent AS (
-      SELECT CAST(cell AS INT) AS cell, CAST(centroid AS DOUBLE[]) AS centroid
-      FROM read_parquet('{_ORACLE_IVFTEXT_DIR}/centroids/*.parquet')
-    ),
-    cranked AS (
-      SELECT hq.qvid, cent.cell,
-             row_number() OVER (
-               PARTITION BY hq.qvid
-               ORDER BY list_distance(cent.centroid, hq.qv), cent.cell
-             ) AS crk
-      FROM cent, hq
-    ),
-    truth AS (
-      SELECT exact.qvid, cr.crk
-      FROM exact
-      JOIN cells c ON c.vid = exact.vid
-      JOIN cranked cr ON cr.qvid = exact.qvid AND cr.cell = c.cell
-    ),
-    cellsz AS (SELECT cell, count(*) AS cn FROM cells GROUP BY 1),
-    probes AS (SELECT DISTINCT crk AS n_probe FROM cranked),
-    rec AS (
-      SELECT p.n_probe, t.qvid,
-             sum(CASE WHEN t.crk <= p.n_probe THEN 1 ELSE 0 END) / 10.0 AS r
-      FROM probes p, truth t GROUP BY 1, 2
-    ),
-    recm AS (SELECT n_probe, round(avg(r), 6) AS recall_at_10 FROM rec GROUP BY 1),
-    cost AS (
-      SELECT p.n_probe, cr.qvid, sum(cz.cn) AS rows_q
-      FROM probes p, cranked cr JOIN cellsz cz ON cz.cell = cr.cell
-      WHERE cr.crk <= p.n_probe GROUP BY 1, 2
-    ),
-    costm AS (
-      SELECT n_probe, round(avg(rows_q), 6) AS mean_cand_rows FROM cost GROUP BY 1
-    )
-    SELECT n_probe, recall_at_10, mean_cand_rows
-    FROM recm JOIN costm USING (n_probe) ORDER BY n_probe
-    """,
-    description="Operating-point sweep over the TEXT-DERIVED IVF index "
-    "(encoder output has fatter ambient-cosine tails than the jittered "
-    "fixture embeddings, so the shipped n_probe must be re-measured, "
-    "not assumed): recall@10 + mean candidate rows for every n_probe "
-    "over the sqrt(N)-sized ivftext build, in ONE pass via the "
-    "probed-cell dominance identity — this curve sizes "
-    "ann_text_embed_ivf's shipped n_probe",
-)
-def ann_recall_sweep_textivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    idx = _ensure_ivftext(spark, sf_dir)
-    # materialize the encoder output ONCE (r17): the sweep reads it as
-    # both the query side and the exact-truth corpus side — without
-    # this, each reference re-runs the full tokenize+hash+idf encoder
-    # pipeline (the dominant cost; the relation itself is docs x dim+1
-    # doubles, megabytes)
-    emb = _text_emb(spark, sf_dir).localCheckpoint(eager=True)
-    return _recall_sweep(
-        spark, sf_dir, idx, emb=emb, id_col="doc_id", use_dot=True,
     )
 
 
@@ -4582,8 +4096,8 @@ def ann_recall_sweep_textivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     "only the n_probe nearest cell partitions of the sqrt(N)-sized "
     "ivftext build. Replaces the retrieval surface's last per-query "
     "full scan (ann_text_embed_topk stays as the exact-truth twin); "
-    "n_probe=9 is the measured operating point from "
-    "ann_recall_sweep_textivf — the smallest n_probe with recall@10 "
+    "n_probe=9 is the measured operating point of the r15 text-IVF "
+    "recall sweep (SCALE.md) — the smallest n_probe with recall@10 "
     ">= 0.9 at BOTH corpus sizes (0.933 at 500 docs/23 lists, 0.900 at "
     "5000 docs/71 lists; the text encoder's fat ambient-cosine tails "
     "need a larger n_probe/n_lists fraction than the jittered fixtures' "
@@ -4677,7 +4191,7 @@ def ann_text_embed_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     "and N vocabulary broadcasts. Measured warm at sf0.1: batch-of-3 "
     "1.60 s vs 3× the single probe's 3.46 s, and batch-of-32 2.02 s — "
     "~0.06 s/query, an ~18× per-query amortization; n_probe=9 is the "
-    "measured ann_recall_sweep_textivf operating point",
+    "measured operating point of the r15 text-IVF recall sweep",
 )
 def ann_text_embed_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import embedding as E
@@ -4690,652 +4204,6 @@ def ann_text_embed_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return S.ivf_batch_topk(
         spark, idx, queries, k=10, n_probe=9, id_col="doc_id",
-    )
-
-
-def _ensure_lshsig88(spark: SparkSession, sf_dir: str) -> str:
-    """Build-if-missing + staleness-guarded max-config (8 tables x 8
-    planes) LSH signature table — the one fixture behind the whole
-    tables x bits frontier (ann_lsh_band_sweep); prefix masking makes
-    every smaller configuration exact (see write_lsh_signatures)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    idx = _index_dir(sf_dir, "lshsig8x8")
-    return _ensure_index(
-        spark,
-        idx,
-        source=(sf_dir, "embeddings.parquet"),
-        marker="_SUCCESS",
-        src_pairs=_emb_pairs(emb),
-        id_col="vec_id",
-        build=lambda: S.write_lsh_signatures(emb, idx, n_planes=8, n_tables=8),
-        stored_pairs=lambda: spark.read.parquet(idx)
-        .select("vec_id", "e1")
-        .distinct(),
-    )
-
-
-@query(
-    "ann_lsh_band_sweep",
-    tier="local",
-    # The LSH tables x bits frontier in ONE pass (VERDICT r14 #3: LSH
-    # sat at 0.433 recall with only the shipped 4x4 point measured).
-    # Identity: lsh_index_query exact-cosine-ranks the candidate union,
-    # so (dominance, as for IVF) a ground-truth neighbor reaches the
-    # final top-10 IFF it is a candidate — i.e. shares >= 1 (table,
-    # masked-bucket) with the query. Because planes come from one
-    # sequential LCG stream packed low-bit-first, the low b bits of the
-    # committed 8-plane signatures ARE a real b-plane build's buckets
-    # and tables 0..t-1 ARE a real t-table build — so the committed
-    # max-config table yields every (t, b) point exactly, via
-    # per-candidate min-matching-table + rank-prefix sums. Cost twins:
-    # mean_cand_rows (distinct ids cosine-scored) and mean_scanned_rows
-    # (bucket entries read across tables, the IO proxy).
-    oracle=f"""
-    WITH hq AS (
-      SELECT vec_id AS qvid, CAST(embedding AS DOUBLE[]) AS qv
-      FROM embeddings WHERE vec_id < 3
-    ),
-    e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    exact AS (
-      SELECT qvid, vec_id AS vid FROM (
-        SELECT hq.qvid, e.vec_id,
-               row_number() OVER (
-                 PARTITION BY hq.qvid
-                 ORDER BY round(list_cosine_similarity(e.v, hq.qv), 6) DESC,
-                          e.vec_id
-               ) AS rk
-        FROM hq, e WHERE e.vec_id != hq.qvid
-      ) WHERE rk <= 10
-    ),
-    sig AS (
-      SELECT CAST(vec_id AS BIGINT) AS vid, CAST(table_id AS INT) AS table_id,
-             CAST(bucket AS INT) AS bucket
-      FROM read_parquet('{_ORACLE_LSHSIG_DIR}/*.parquet')
-    ),
-    bits AS (
-      SELECT CAST(g.i AS INT) AS n_bits,
-             (1 << CAST(g.i AS INT)) - 1 AS mask
-      FROM generate_series(1, 8) g(i)
-    ),
-    qm AS (
-      SELECT vid AS qvid, table_id, n_bits, bucket & mask AS mb
-      FROM sig, bits WHERE vid < 3
-    ),
-    cm AS (SELECT vid, table_id, n_bits, bucket & mask AS mb FROM sig, bits),
-    cand AS (
-      SELECT qm.qvid, cm.vid, cm.table_id, cm.n_bits
-      FROM cm JOIN qm ON qm.table_id = cm.table_id
-                     AND qm.n_bits = cm.n_bits AND qm.mb = cm.mb
-      WHERE cm.vid != qm.qvid
-    ),
-    mintab AS (
-      SELECT qvid, vid, n_bits, min(table_id) AS mt
-      FROM cand GROUP BY 1, 2, 3
-    ),
-    tabs AS (SELECT CAST(g.i AS INT) AS n_tables FROM generate_series(1, 8) g(i)),
-    qids AS (SELECT DISTINCT qvid FROM hq),
-    recm AS (
-      SELECT n_tables, n_bits, round(avg(r), 6) AS recall_at_10 FROM (
-        SELECT g.n_tables, g.n_bits, g.qvid,
-               sum(CASE WHEN m.mt < g.n_tables THEN 1 ELSE 0 END) / 10.0 AS r
-        FROM (SELECT t.n_tables, b.n_bits, x.qvid, x.vid
-              FROM tabs t, bits b, exact x) g
-        LEFT JOIN mintab m
-          ON m.qvid = g.qvid AND m.vid = g.vid AND m.n_bits = g.n_bits
-        GROUP BY 1, 2, 3
-      ) GROUP BY 1, 2
-    ),
-    h AS (SELECT qvid, n_bits, mt, count(*) AS c FROM mintab GROUP BY 1, 2, 3),
-    gq AS (SELECT t.n_tables, b.n_bits, q.qvid FROM tabs t, bits b, qids q),
-    dcm AS (
-      SELECT n_tables, n_bits, round(avg(nc), 6) AS mean_cand_rows FROM (
-        SELECT g.n_tables, g.n_bits, g.qvid,
-               sum(CASE WHEN h.mt < g.n_tables THEN h.c ELSE 0 END) AS nc
-        FROM gq g LEFT JOIN h ON h.qvid = g.qvid AND h.n_bits = g.n_bits
-        GROUP BY 1, 2, 3
-      ) GROUP BY 1, 2
-    ),
-    scq AS (
-      SELECT qvid, table_id, n_bits, count(*) AS c FROM cand GROUP BY 1, 2, 3
-    ),
-    scm AS (
-      SELECT n_tables, n_bits, round(avg(ns), 6) AS mean_scanned_rows FROM (
-        SELECT g.n_tables, g.n_bits, g.qvid,
-               sum(CASE WHEN s.table_id < g.n_tables THEN s.c ELSE 0 END) AS ns
-        FROM gq g LEFT JOIN scq s ON s.qvid = g.qvid AND s.n_bits = g.n_bits
-        GROUP BY 1, 2, 3
-      ) GROUP BY 1, 2
-    )
-    SELECT n_tables, n_bits, recall_at_10, mean_cand_rows, mean_scanned_rows
-    FROM recm JOIN dcm USING (n_tables, n_bits)
-              JOIN scm USING (n_tables, n_bits)
-    ORDER BY n_tables, n_bits
-    """,
-    description="LSH operating-point sweep: recall@10 + candidate/scan "
-    "cost for EVERY (n_tables <= 8, n_planes <= 8) configuration, in "
-    "one pass over a committed max-config signature table via prefix "
-    "masking (low b bits of the 8-plane signature = a real b-plane "
-    "build's buckets; tables 0..t-1 = a real t-table build). Measured "
-    "verdict (r15): hyperplane LSH on this corpus has NO useful >=0.9 "
-    "point — every >=0.9 cell cosine-scores 58-68%+ of the corpus "
-    "(e.g. 1154/2000 ids at 6 tables x 3 bits, sf0.1), where brute "
-    "force wins outright — so the shipped 4x4 stays, documented as the "
-    "O(1)-probe/low-recall tier (0.37-0.43 recall for ~23% of corpus "
-    "scanned); IVF is the >=0.9 serving family",
-)
-def ann_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    idx = _ensure_lshsig88(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = emb.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), V.as_double("embedding").alias("qv")
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("vid"), V.as_double("embedding").alias("v")
-    )
-    cos = F.round(V.cosine("v", "qv"), 6)
-    exact = (
-        corpus.join(F.broadcast(qv))
-        .where(F.col("vid") != F.col("query_id"))
-        .select("query_id", "vid", cos.alias("cosine"))
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vid"))
-            ),
-        )
-        .where(F.col("rk") <= 10)
-        .select("query_id", "vid")
-    )
-    sig = S.cached_index_parquet(spark, idx, [""]).select("vec_id", "table_id", "bucket")
-    bits = spark.createDataFrame(
-        [(b, (1 << b) - 1) for b in range(1, 9)], "n_bits int, mask int"
-    )
-    qm = (
-        sig.where(F.col("vec_id") < 3)
-        .select(F.col("vec_id").alias("query_id"), "table_id", "bucket")
-        .crossJoin(F.broadcast(bits))
-        .select(
-            "query_id", "table_id", "n_bits",
-            F.col("bucket").bitwiseAND(F.col("mask")).alias("mb"),
-        )
-    )
-    cm = (
-        sig.crossJoin(F.broadcast(bits))
-        .select(
-            F.col("vec_id").alias("vid"), "table_id", "n_bits",
-            F.col("bucket").bitwiseAND(F.col("mask")).alias("mb"),
-        )
-    )
-    cand = (
-        cm.join(F.broadcast(qm), ["table_id", "n_bits", "mb"])
-        .where(F.col("vid") != F.col("query_id"))
-        .select("query_id", "vid", "table_id", "n_bits")
-    )
-    mintab = cand.groupBy("query_id", "vid", "n_bits").agg(
-        F.min("table_id").alias("mt")
-    )
-    tabs = spark.range(1, 9).select(F.col("id").cast("int").alias("n_tables"))
-    bitsn = bits.select("n_bits")
-    rec = (
-        tabs.crossJoin(bitsn)
-        .crossJoin(F.broadcast(exact))
-        .join(F.broadcast(mintab), ["query_id", "vid", "n_bits"], "left")
-        .withColumn(
-            "hit", F.when(F.col("mt") < F.col("n_tables"), 1).otherwise(0)
-        )
-        .groupBy("n_tables", "n_bits", "query_id")
-        .agg((F.sum("hit") / F.lit(10.0)).alias("r"))
-        .groupBy("n_tables", "n_bits")
-        .agg(F.round(F.avg("r"), 6).alias("recall_at_10"))
-    )
-    qids = qv.select("query_id")
-    gq = tabs.crossJoin(bitsn).crossJoin(F.broadcast(qids))
-    h = mintab.groupBy("query_id", "n_bits", "mt").agg(F.count(F.lit(1)).alias("c"))
-    dcm = (
-        gq.join(F.broadcast(h), ["query_id", "n_bits"], "left")
-        .groupBy("n_tables", "n_bits", "query_id")
-        .agg(
-            F.sum(
-                F.when(F.col("mt") < F.col("n_tables"), F.col("c")).otherwise(0)
-            ).alias("nc")
-        )
-        .groupBy("n_tables", "n_bits")
-        .agg(F.round(F.avg("nc"), 6).alias("mean_cand_rows"))
-    )
-    scq = cand.groupBy("query_id", "table_id", "n_bits").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    scm = (
-        gq.join(F.broadcast(scq), ["query_id", "n_bits"], "left")
-        .groupBy("n_tables", "n_bits", "query_id")
-        .agg(
-            F.sum(
-                F.when(F.col("table_id") < F.col("n_tables"), F.col("c")).otherwise(0)
-            ).alias("ns")
-        )
-        .groupBy("n_tables", "n_bits")
-        .agg(F.round(F.avg("ns"), 6).alias("mean_scanned_rows"))
-    )
-    return (
-        rec.join(dcm, ["n_tables", "n_bits"])
-        .join(scm, ["n_tables", "n_bits"])
-        .select(
-            "n_tables", "n_bits", "recall_at_10", "mean_cand_rows",
-            "mean_scanned_rows",
-        )
-        .orderBy("n_tables", "n_bits")
-    )
-
-
-def _ivfpq_sweep_oracle(
-    index_dir: str, residual: bool = False, corpus_sql: str = "embeddings"
-) -> str:
-    """The one-pass IVF-PQ sweep oracle, templated over the index dir so
-    the k=16 / k=64 / k=256 / residual builds share one derivation (m=8
-    in all; k is implied by the codebooks file, never hardcoded here).
-    ``residual=True`` adds the per-(query, cell) constant
-    ``dot(nv, centroid)`` to every ADC score — the exact term the
-    residual probe adds, since dot(q, c + r̂) = dot(q, c) + ADC(r̂).
-    ``corpus_sql`` is the relation the vectors come from — the
-    ``embeddings`` view by default, a ``read_parquet(...)`` over a
-    persisted fixture corpus for the clustered positive control."""
-    sel = "round(k.cc + sum(t.ip), 6)" if residual else "round(sum(t.ip), 6)"
-    cjoin = (
-        "JOIN cconst k ON k.qvid = t.qvid AND k.cell = c.cell" if residual else ""
-    )
-    cgroup = ", k.cc" if residual else ""
-    return f"""
-    WITH hq AS (
-      SELECT vec_id AS qvid, CAST(embedding AS DOUBLE[]) AS qv
-      FROM {corpus_sql} WHERE vec_id < 3
-    ),
-    e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM {corpus_sql}),
-    exact AS (
-      SELECT qvid, vec_id FROM (
-        SELECT hq.qvid, e.vec_id,
-               row_number() OVER (
-                 PARTITION BY hq.qvid
-                 ORDER BY round(list_cosine_similarity(e.v, hq.qv), 6) DESC,
-                          e.vec_id
-               ) AS rk
-        FROM hq, e WHERE e.vec_id != hq.qvid
-      ) WHERE rk <= 10
-    ),
-    hqn AS (
-      SELECT qvid,
-             list_transform(qv, x -> x / sqrt(list_sum(list_transform(qv, y -> y*y)))) AS nv
-      FROM hq
-    ),
-    cent AS (
-      SELECT CAST(cell AS INT) AS cell, CAST(centroid AS DOUBLE[]) AS centroid
-      FROM read_parquet('{index_dir}/centroids/*.parquet')
-    ),
-    cranked AS (
-      SELECT hqn.qvid, cent.cell,
-             row_number() OVER (
-               PARTITION BY hqn.qvid
-               ORDER BY list_distance(cent.centroid, hqn.nv), cent.cell
-             ) AS crk
-      FROM cent, hqn
-    ),
-    books AS (
-      SELECT CAST(subspace AS INT) AS j, CAST(code AS INT) AS code,
-             CAST(centroid AS DOUBLE[]) AS centroid
-      FROM read_parquet('{index_dir}/codebooks/*.parquet')
-    ),
-    tab AS (
-      SELECT hqn.qvid, b.j, b.code,
-             list_dot_product(b.centroid, hqn.nv[b.j*8+1 : b.j*8+8]) AS ip
-      FROM books b, hqn
-    ),
-    cvec AS (
-      SELECT CAST(vec_id AS BIGINT) AS vec_id, codes, CAST(cell AS INT) AS cell
-      FROM read_parquet('{index_dir}/codes/*/*.parquet',
-                        hive_partitioning=1)
-    ),
-    cconst AS (
-      SELECT hqn.qvid, cent.cell, list_dot_product(cent.centroid, hqn.nv) AS cc
-      FROM cent, hqn
-    ),
-    scores AS (
-      SELECT t.qvid, c.vec_id, c.cell, {sel} AS s
-      FROM (SELECT vec_id, cell, r.j, codes[r.j+1] AS code
-            FROM cvec, range(8) r(j)) c
-      JOIN tab t ON t.j = c.j AND t.code = c.code
-      {cjoin}
-      GROUP BY t.qvid, c.vec_id, c.cell{cgroup}
-    ),
-    candj AS (
-      SELECT sc.qvid, sc.vec_id, sc.s, CAST(cr.crk AS INT) AS crk
-      FROM scores sc
-      JOIN cranked cr ON cr.qvid = sc.qvid AND cr.cell = sc.cell
-      WHERE sc.vec_id != sc.qvid
-    ),
-    t AS (
-      SELECT exact.qvid, exact.vec_id AS tvid, cj.s AS ts, cj.crk AS tcrk
-      FROM exact
-      JOIN candj cj ON cj.qvid = exact.qvid AND cj.vec_id = exact.vec_id
-    ),
-    bc AS (
-      SELECT cj.qvid, t.tvid, cj.crk, count(*) AS nb
-      FROM candj cj JOIN t ON t.qvid = cj.qvid
-      WHERE cj.vec_id != t.tvid
-        AND (cj.s > t.ts OR (cj.s = t.ts AND cj.vec_id < t.tvid))
-      GROUP BY 1, 2, 3
-    ),
-    probes AS (SELECT DISTINCT CAST(crk AS INT) AS n_probe FROM cranked),
-    sls AS (SELECT * FROM (VALUES (10), (25), (50), (100), (250), (500)) v(shortlist)),
-    grid AS (SELECT p.n_probe, t.qvid, t.tvid, t.tcrk FROM probes p, t),
-    ab AS (
-      SELECT g.n_probe, g.qvid, g.tvid, g.tcrk,
-             sum(CASE WHEN bc.crk <= g.n_probe THEN bc.nb ELSE 0 END) AS nbetter
-      FROM grid g LEFT JOIN bc ON bc.qvid = g.qvid AND bc.tvid = g.tvid
-      GROUP BY 1, 2, 3, 4
-    ),
-    surv AS (
-      SELECT ab.n_probe, s.shortlist, ab.qvid,
-             CASE WHEN ab.tcrk <= ab.n_probe AND ab.nbetter + 1 <= s.shortlist
-                  THEN 1 ELSE 0 END AS hit
-      FROM ab, sls s
-    ),
-    recm AS (
-      SELECT n_probe, shortlist, round(avg(r), 6) AS recall_at_10 FROM (
-        SELECT n_probe, shortlist, qvid, sum(hit) / 10.0 AS r
-        FROM surv GROUP BY 1, 2, 3
-      ) GROUP BY 1, 2
-    ),
-    cellsz AS (SELECT cell, count(*) AS cn FROM cvec GROUP BY 1),
-    costm AS (
-      SELECT n_probe, round(avg(rows_q), 6) AS mean_adc_rows FROM (
-        SELECT p.n_probe, cr.qvid, sum(cz.cn) AS rows_q
-        FROM probes p, cranked cr JOIN cellsz cz ON cz.cell = cr.cell
-        WHERE cr.crk <= p.n_probe GROUP BY 1, 2
-      ) GROUP BY 1
-    ),
-    ccnt AS (SELECT qvid, crk, count(*) AS cn FROM candj GROUP BY 1, 2),
-    crows AS (
-      SELECT p.n_probe, c.qvid,
-             sum(CASE WHEN c.crk <= p.n_probe THEN c.cn ELSE 0 END) AS cand_rows
-      FROM probes p, ccnt c GROUP BY 1, 2
-    ),
-    rrm AS (
-      SELECT cr.n_probe, s.shortlist,
-             round(avg(least(s.shortlist, cr.cand_rows)), 6) AS mean_rerank_rows
-      FROM crows cr, sls s GROUP BY 1, 2
-    )
-    SELECT n_probe, shortlist, recall_at_10, mean_adc_rows, mean_rerank_rows
-    FROM recm JOIN costm USING (n_probe) JOIN rrm USING (n_probe, shortlist)
-    ORDER BY n_probe, shortlist
-    """
-
-
-def _ivfpq_sweep(
-    spark: SparkSession,
-    sf_dir: str,
-    idx: str,
-    *,
-    residual: bool = False,
-    corpus: DataFrame | None = None,
-    shortlists: tuple[int, ...] = (10, 25, 50, 100, 250, 500),
-) -> DataFrame:
-    """One-pass operating-point sweep for the COMPOSITE index (VERDICT
-    r14 #2: IVF-PQ sat at 0.70 recall at the shipped n_probe=3 x
-    shortlist=100 with no measured curve behind it). The dominance
-    identity extends to the two-stage probe: with the exact-cosine
-    rerank ranking by the SAME total order as the truth ranking, a
-    ground-truth top-10 neighbor is in the final top-10 IFF (a) its
-    cell is probed AND (b) it survives the ADC shortlist cut — i.e.
-    fewer than ``shortlist`` candidates in the probed cells ADC-outrank
-    it. So the whole n_probe x shortlist grid needs ONE exact scan +
-    ONE full-corpus ADC scoring per query (the sweep is a report; the
-    serving path stays cell-pruned), a better-than-truth count per
-    (truth, candidate-cell-rank), and tiny rank joins — instead of 32
-    probe runs. ADC scores round to 6 dp before ranking (vec_id ties)
-    exactly like the probe, so both engines derive identical counts."""
-    import os
-    from functools import reduce
-
-    from pyspark.sql import Window
-
-    emb = corpus if corpus is not None else load_table(spark, sf_dir, "embeddings")
-    # exact truth: raw-space cosine (scale-invariant, so identical in
-    # the normalized space the index ranks in) — same convention as
-    # ann_family_recall
-    qv = emb.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), V.as_double("embedding").alias("qv")
-    )
-    corpus = emb.select("vec_id", V.as_double("embedding").alias("v"))
-    cos = F.round(V.cosine("v", "qv"), 6)
-    exact = (
-        corpus.join(F.broadcast(qv))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", cos.alias("cosine"))
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.desc("cosine"), F.asc("vec_id")
-                )
-            ),
-        )
-        .where(F.col("rk") <= 10)
-        .select("query_id", "vec_id")
-    )
-    snap = S._ivfpq_snapshot(idx)
-    cent = S.cached_index_parquet(spark, idx, [snap["centroids"]])
-    if snap["version"] == 0:
-        codes = S.cached_index_parquet(spark, idx, ["codes"])
-    else:
-        codes = S._read_manifest_dirs(
-            spark, idx, sorted(set(snap["cells"].values()))
-        )
-    codes = codes.select(
-        "vec_id", F.col("cell").cast("int").alias("cell"), "codes"
-    )
-    # centroid rank per query — in NORMALIZED space (the quantizer was
-    # fit on the normalized corpus)
-    nqv = emb.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"),
-        V.l2_normalize(V.as_double_sql("embedding")).alias("nv"),
-    )
-    dist = F.aggregate(
-        F.zip_with(F.col("nv"), F.col("centroid"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, d: acc + d,
-    )
-    crk = (
-        nqv.join(F.broadcast(cent))
-        .select("query_id", "cell", dist.alias("d"))
-        .withColumn(
-            "crk",
-            F.row_number().over(Window.partitionBy("query_id").orderBy("d", "cell")),
-        )
-        .select("query_id", "cell", "crk")
-    )
-    # per-query ADC over ALL committed code rows in ONE codes scan
-    # (VERDICT r17 #3): the sweep used to union one full-code scan per
-    # query, each with its own driver-built literal ADC table. The
-    # per-query tables are the SAME driver-side values (shared
-    # _adc_table), shipped together as one nested array literal and
-    # indexed by a 3-row broadcast (query_id, __qi) relation — the
-    # per-row sum keeps the exact j = 0..m-1 order of the single-probe
-    # aggregate, so every score is bit-identical to the union form.
-    # 3 bounded rows collected for the driver-side ADC literal tables;
-    # centroids collected once (n_lists rows — also replaces the
-    # separate cent.count() job below).
-    qraw = (
-        emb.where(F.col("vec_id") < 3)
-        .select("vec_id", V.as_double("embedding").alias("v"))
-        .collect()
-    )
-    cent_rows = cent.collect()
-    n_lists = len(cent_rows)
-    m_sub, k_codes, _sub, _cents = S._load_codebook(spark, idx)
-    qt = S._array2d_lit(
-        [S._adc_table(spark, idx, list(r["v"])) for r in qraw]
-    )
-    qtag = spark.createDataFrame(
-        [(int(r["vec_id"]), i + 1) for i, r in enumerate(qraw)],
-        "query_id long, __qi int",
-    )
-    adc = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m_sub - 1)),
-        F.lit(0.0),
-        lambda acc, j: acc
-        + F.element_at(
-            F.element_at(qt, F.col("__qi")),
-            (j * k_codes + F.element_at(F.col("codes"), j + 1) + 1).cast("int"),
-        ),
-    )
-    if not residual:
-        score = F.round(adc, 6)
-    else:
-        # residual encoding: ADC approximates dot(q, r̂); add the
-        # per-cell constant dot(q, c(cell)) — per-query rows of the
-        # same nested-literal form (cells are contiguous 0..n_lists-1),
-        # exactly the values the probe's per-query map literal adds
-        import math
-
-        cent_sorted = sorted(cent_rows, key=lambda c: int(c["cell"]))
-        if [int(c["cell"]) for c in cent_sorted] != list(range(n_lists)):
-            raise ValueError(
-                "non-contiguous cell ids in the committed centroid table — "
-                "the positional residual-constant lookup assumes cells "
-                "0..n_lists-1 (every build writes the full KMeans table)"
-            )
-        consts2d = []
-        for r in qraw:
-            qvec = list(r["v"])
-            qn = math.sqrt(sum(x * x for x in qvec)) or 1.0
-            qnv = [x / qn for x in qvec]
-            consts2d.append(
-                [
-                    sum(qnv[i] * float(c["centroid"][i]) for i in range(len(qnv)))
-                    for c in cent_sorted
-                ]
-            )
-        ct = S._array2d_lit(consts2d)
-        score = F.round(
-            F.element_at(F.element_at(ct, F.col("__qi")), F.col("cell") + 1) + adc,
-            6,
-        )
-    cand = (
-        codes.crossJoin(F.broadcast(qtag))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", "cell", score.alias("s"))
-    )
-    # Materialize the shared relations ONCE (r18): candj fans out to
-    # the truth join, the better-than-truth count, and the candidate
-    # cost counts — un-materialized, every reference re-ran the codes
-    # scan + ADC scoring (the sweep plans carried ~90 parquet scans).
-    # candj is (n_queries x codes) rows of 4 small columns; at real
-    # scale the full-corpus ADC pass is the sweep's documented cost and
-    # one disk-backed materialization beats 3+ recomputations of it.
-    # tt is bounded (n_queries x 10 truth rows). Eager at build time
-    # (the dsir_select convention — see capture_plans note).
-    candj = cand.join(crk, ["query_id", "cell"]).localCheckpoint(eager=True)
-    tt = exact.join(
-        candj.select(
-            "query_id",
-            "vec_id",
-            F.col("s").alias("ts"),
-            F.col("crk").alias("tcrk"),
-        ),
-        ["query_id", "vec_id"],
-    ).select(
-        "query_id", F.col("vec_id").alias("tvid"), "ts", "tcrk"
-    ).localCheckpoint(eager=True)
-    # better-than-truth count per (truth neighbor, candidate cell rank):
-    # the one relation from which EVERY (n_probe, shortlist) point's
-    # ADC rank follows by a bounded rank-prefix sum
-    bc = (
-        candj.join(F.broadcast(tt), "query_id")
-        .where(
-            (F.col("vec_id") != F.col("tvid"))
-            & (
-                (F.col("s") > F.col("ts"))
-                | ((F.col("s") == F.col("ts")) & (F.col("vec_id") < F.col("tvid")))
-            )
-        )
-        .groupBy("query_id", "tvid", "crk")
-        .agg(F.count(F.lit(1)).alias("nb"))
-    )
-    # n_lists already known from the collected centroid rows (one fewer
-    # Spark job per sweep than the old cent.count())
-    probes = spark.range(1, n_lists + 1).select(
-        F.col("id").cast("int").alias("n_probe")
-    )
-    sls = spark.createDataFrame(
-        [(s,) for s in shortlists], "shortlist int"
-    )
-    grid = probes.crossJoin(F.broadcast(tt.select("query_id", "tvid", "tcrk")))
-    ab = (
-        grid.join(F.broadcast(bc), ["query_id", "tvid"], "left")
-        .groupBy("n_probe", "query_id", "tvid", "tcrk")
-        .agg(
-            F.sum(
-                F.when(F.col("crk") <= F.col("n_probe"), F.col("nb")).otherwise(
-                    F.lit(0)
-                )
-            ).alias("nbetter")
-        )
-    )
-    surv = ab.crossJoin(F.broadcast(sls)).withColumn(
-        "hit",
-        F.when(
-            (F.col("tcrk") <= F.col("n_probe"))
-            & (F.col("nbetter") + 1 <= F.col("shortlist")),
-            1,
-        ).otherwise(0),
-    )
-    rec = (
-        surv.groupBy("n_probe", "shortlist", "query_id")
-        .agg((F.sum("hit") / F.lit(10.0)).alias("r"))
-        .groupBy("n_probe", "shortlist")
-        .agg(F.round(F.avg("r"), 6).alias("recall_at_10"))
-    )
-    cellsz = codes.groupBy("cell").agg(F.count(F.lit(1)).alias("cn"))
-    scan = crk.join(F.broadcast(cellsz), "cell").select("query_id", "crk", "cn")
-    cost = (
-        probes.join(F.broadcast(scan))
-        .where(F.col("crk") <= F.col("n_probe"))
-        .groupBy("n_probe", "query_id")
-        .agg(F.sum("cn").alias("rows_q"))
-        .groupBy("n_probe")
-        .agg(F.round(F.avg("rows_q"), 6).alias("mean_adc_rows"))
-    )
-    ccnt = candj.groupBy("query_id", "crk").agg(F.count(F.lit(1)).alias("cn"))
-    crows = (
-        probes.join(F.broadcast(ccnt))
-        .groupBy("n_probe", "query_id")
-        .agg(
-            F.sum(
-                F.when(F.col("crk") <= F.col("n_probe"), F.col("cn")).otherwise(0)
-            ).alias("cand_rows")
-        )
-    )
-    rr = (
-        crows.crossJoin(F.broadcast(sls))
-        .select(
-            "n_probe",
-            "shortlist",
-            F.least(F.col("shortlist").cast("long"), F.col("cand_rows")).alias(
-                "rrows"
-            ),
-        )
-        .groupBy("n_probe", "shortlist")
-        .agg(F.round(F.avg("rrows"), 6).alias("mean_rerank_rows"))
-    )
-    return (
-        rec.join(cost, "n_probe")
-        .join(rr, ["n_probe", "shortlist"])
-        .select(
-            "n_probe", "shortlist", "recall_at_10", "mean_adc_rows",
-            "mean_rerank_rows",
-        )
-        .orderBy("n_probe", "shortlist")
     )
 
 
@@ -5444,557 +4312,6 @@ def ann_ivfpq_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.ivfpq_batch_topk(
         spark, idx, emb.where(F.col("vec_id") < 3), emb,
         10, n_probe=6, shortlist=500,
-    )
-
-
-def _ensure_ivfpq256(spark: SparkSession, sf_dir: str) -> str:
-    """Build-if-missing + staleness-guarded ivfpq8x8x256 — the k=256
-    point (8 bits/subspace, FAISS's default PQ precision) the shipped
-    100 TB recipe rests on. Codes-only index — sidecar fingerprint."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    idx = _index_dir(sf_dir, "ivfpq8x8x256")
-    return _ensure_index(
-        spark,
-        idx,
-        source=(sf_dir, "embeddings.parquet"),
-        marker="codes/_SUCCESS",
-        src_pairs=_emb_pairs(emb),
-        id_col="vec_id",
-        build=lambda: S.build_ivfpq_index(
-            emb, idx, n_lists=8, m=8, k=256, seed=42
-        ),
-    )
-
-
-@query(
-    "ann_recall_sweep_ivfpq256",
-    tier="local",
-    oracle=lambda: _ivfpq_sweep_oracle(_ORACLE_IVFPQ256_DIR),
-    description="The k=256 point of the IVF-PQ sweep (8 bits/subspace — "
-    "FAISS's default PQ precision): the measurement the recorded 100 TB "
-    "recipe ('k=256 + residual, never a ~25%-of-corpus rerank') rested "
-    "on by extrapolation until r16 (VERDICT r15 #1 — the k chain "
-    "stopped at 64). Measured: k=256 LIFTS the sf0.1 shortlist-100 "
-    "ceiling 0.600 (k=16) / 0.733 (k=64) -> 0.900 at p=6 and 0.967 at "
-    "p=8, i.e. >=0.9 recall@10 now costs a 5%-of-corpus rerank instead "
-    "of 25%; at sf0.01 it reaches 0.967 at p=6/s=50. The bits-bind "
-    "conclusion holds through the full 16->64->256 chain",
-)
-def ann_recall_sweep_ivfpq256(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ivfpq_sweep(spark, sf_dir, _ensure_ivfpq256(spark, sf_dir))
-
-
-def _ensure_ivfpqr256(spark: SparkSession, sf_dir: str) -> str:
-    """Build-if-missing + staleness-guarded ivfpqr8x8x256 — the k=256
-    RESIDUAL point: the exact encoding the recorded 100 TB recipe names
-    (FAISS IVFADC at 8 bits/subspace over cell residuals). Codes-only
-    index — sidecar fingerprint."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    idx = _index_dir(sf_dir, "ivfpqr8x8x256")
-    return _ensure_index(
-        spark,
-        idx,
-        source=(sf_dir, "embeddings.parquet"),
-        marker="codes/_SUCCESS",
-        src_pairs=_emb_pairs(emb),
-        id_col="vec_id",
-        build=lambda: S.build_ivfpq_index(
-            emb, idx, n_lists=8, m=8, k=256, seed=42, residual=True
-        ),
-    )
-
-
-@query(
-    "ann_recall_sweep_ivfpqr256",
-    tier="local",
-    oracle=lambda: _ivfpq_sweep_oracle(_ORACLE_IVFPQR256_DIR, residual=True),
-    description="The k=256 + RESIDUAL point — the exact operating point "
-    "the recorded 100 TB recipe names, now measured end to end "
-    "(VERDICT r16). At sf0.1 it matches raw k=256's 0.900 at p=6/s=100 "
-    "and DOMINATES at tighter shortlists (s=25: 0.633 vs raw 0.433 at "
-    "p=6; s=50: 0.833 vs 0.767 at p=8) — with ample bits the residual "
-    "encoding's finer resolution finally shows even on this weakly "
-    "clustered corpus, exactly where FAISS predicts it: shortlist-bound "
-    "regimes. At sf0.01 it reaches 1.0 at p=6/s=50. Recipe revised "
-    "honestly: k=256 raw already buys the 5%-rerank >=0.9 point; "
-    "+residual is for pushing the shortlist (rerank IO) down further",
-)
-def ann_recall_sweep_ivfpqr256(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ivfpq_sweep(
-        spark, sf_dir, _ensure_ivfpqr256(spark, sf_dir), residual=True
-    )
-
-
-def _ensure_clustered64(spark: SparkSession, sf_dir: str) -> str:
-    """Deterministic HIERARCHICALLY-clustered corpus + paired
-    raw/residual IVF-PQ builds — the residual POSITIVE control (VERDICT
-    r15 #2): both measured corpora (jittered fixtures, text-derived
-    embeddings) are weakly clustered, so the shipped "sweep decides per
-    corpus" policy had only no-gain poles behind it. This fixture is
-    the other pole, shaped the way real embedding corpora cluster:
-    16 well-separated COARSE centers (uniform[-1,1]^64 — these become
-    the IVF cells), each containing 8 SUB-clusters (center offsets
-    gauss sigma=0.1/dim) with tiny point noise (sigma=0.01/dim). A
-    query's true neighbors are its sub-cluster mates, so ranking
-    requires resolving SUB-cluster geometry: raw k=16 codebooks
-    collapse a whole coarse cell to near-identical codes (inter-coarse
-    distance dominates the per-subspace KMeans objective), while the
-    SAME bit budget fit on residuals v − c(cell) — which ARE the
-    sub-offsets — separates the sub-clusters. A tuned flat design
-    (single tier, within-noise only) does NOT discriminate: with no
-    structure between noise and cell there is nothing residual bits
-    can learn that raw bits can't, and both arms tie (measured before
-    this shape was chosen).
-
-    Sized to the sf tier's embeddings count so the control scales with
-    the gate. Seeded stdlib RNG, generated driver-side once and
-    persisted — the DuckDB oracle reads the SAME parquet. Layout:
-    ``clustered64/{corpus,raw,res}``. The build guard keys on the
-    TIER'S embeddings count, not mere ``_SUCCESS`` presence (ADVICE
-    r16): a regenerated-at-different-size tier must regenerate the
-    control corpus too, or the "sized to the sf tier" contract silently
-    breaks while the raw/res indexes keep rebuilding from stale data. A
-    pre-guard fixture without the count sidecar is adopted in place iff
-    its row count still matches the tier (one cheap metadata count)."""
-    import json
-    import os
-    import random
-
-    root = _index_dir(sf_dir, "clustered64")
-    corpus_dir = os.path.join(root, "corpus")
-    meta_path = os.path.join(root, "corpus_meta.json")
-    n = load_table(spark, sf_dir, "embeddings").count()
-    built = os.path.exists(os.path.join(corpus_dir, "_SUCCESS"))
-    if built:
-        if os.path.exists(meta_path):
-            with open(meta_path) as fh:
-                built = int(json.load(fh)["n"]) == n
-        else:
-            built = spark.read.parquet(corpus_dir).count() == n
-            if built:  # adopt the pre-sidecar fixture without a rebuild
-                with open(meta_path, "w") as fh:
-                    json.dump({"n": n}, fh)
-    if not built:
-        rnd = random.Random(4242)
-        coarse = [
-            [rnd.uniform(-1.0, 1.0) for _ in range(64)] for _ in range(16)
-        ]
-        subs = [
-            [[rnd.gauss(0.0, 0.1) for _ in range(64)] for _ in range(8)]
-            for _ in range(16)
-        ]
-        rows = []
-        for i in range(n):
-            c = i % 16
-            s = (i // 16) % 8
-            rows.append(
-                (
-                    i,
-                    [
-                        coarse[c][d] + subs[c][s][d] + rnd.gauss(0.0, 0.01)
-                        for d in range(64)
-                    ],
-                )
-            )
-        spark.createDataFrame(
-            rows, "vec_id long, embedding array<double>"
-        ).coalesce(1).write.mode("overwrite").parquet(corpus_dir)
-        with open(meta_path, "w") as fh:
-            json.dump({"n": n}, fh)
-    corpus = spark.read.parquet(corpus_dir)
-    for sub, residual in (("raw", False), ("res", True)):
-        idx = os.path.join(root, sub)
-        _ensure_index(
-            spark,
-            idx,
-            source=(root, "corpus"),
-            marker="codes/_SUCCESS",
-            src_pairs=_emb_pairs(corpus),
-            id_col="vec_id",
-            build=lambda idx=idx, residual=residual: S.build_ivfpq_index(
-                corpus, idx, n_lists=16, m=8, k=16, seed=42, residual=residual
-            ),
-        )
-    return root
-
-
-_ORACLE_CLUST_DIR = _index_dir("sf0.01", "clustered64")
-_ORACLE_CLUST_CORPUS = (
-    f"read_parquet('{_ORACLE_CLUST_DIR}/corpus/*.parquet')"
-)
-
-
-@query(
-    "ann_recall_sweep_clustered_raw",
-    tier="local",
-    oracle=lambda: _ivfpq_sweep_oracle(
-        f"{_ORACLE_CLUST_DIR}/raw", corpus_sql=_ORACLE_CLUST_CORPUS
-    ),
-    description="RAW-encoding arm of the residual positive control: the "
-    "m=8/k=16 IVF-PQ sweep over the hierarchical fixture corpus (16 "
-    "coarse centers × 8 sub-clusters, sub-offset sigma=0.1, point noise "
-    "0.01). Raw codebooks spend their 4 bits/subspace separating COARSE "
-    "centers, collapsing each cell's sub-structure to near-identical "
-    "codes — measured recall@10 at sf0.01 sticks at 0.333 at "
-    "shortlist=10 no matter how many cells are probed (the truth is "
-    "the query's own sub-cluster, which ADC cannot rank within a cell)",
-)
-def ann_recall_sweep_clustered_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    root = _ensure_clustered64(spark, sf_dir)
-    return _ivfpq_sweep(
-        spark,
-        sf_dir,
-        os.path.join(root, "raw"),
-        corpus=spark.read.parquet(os.path.join(root, "corpus")),
-    )
-
-
-@query(
-    "ann_recall_sweep_clustered_res",
-    tier="local",
-    oracle=lambda: _ivfpq_sweep_oracle(
-        f"{_ORACLE_CLUST_DIR}/res",
-        residual=True,
-        corpus_sql=_ORACLE_CLUST_CORPUS,
-    ),
-    description="RESIDUAL arm of the positive control (VERDICT r15 #2): "
-    "same corpus, same m=8/k=16 budget, codebooks fit on v − c(cell) — "
-    "which on this corpus ARE the sub-cluster offsets, so the same 4 "
-    "bits/subspace separate what raw quantizes away. MEASURED at "
-    "sf0.01: recall@10 at shortlist=10 is 0.700 vs raw's 0.333 (2.1×), "
-    "at every n_probe — residual>raw now has its positive pole, "
-    "closing the 'sweep decides per corpus' policy's missing half: "
-    "residual pays exactly when cells carry sub-structure LARGER than "
-    "noise but SMALLER than inter-cell distance",
-)
-def ann_recall_sweep_clustered_res(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    root = _ensure_clustered64(spark, sf_dir)
-    return _ivfpq_sweep(
-        spark,
-        sf_dir,
-        os.path.join(root, "res"),
-        residual=True,
-        corpus=spark.read.parquet(os.path.join(root, "corpus")),
-    )
-
-
-@query(
-    "ann_family_recall",
-    tier="local",
-    # Cross-family quality report (VERDICT r13 #7): recall@10 of each
-    # committed index family's probe AT ITS SHIPPED DEFAULTS against
-    # the exact brute-force top-10, mean over the 3 query vectors. Each
-    # arm re-derives its family's existing single-query oracle with a
-    # PARTITION BY qvid generalization; all rankings round cosine to
-    # 6 dp before ranking with vec_id tie-break, so both engines derive
-    # identical sets. IVF probes crk <= 6 (the ann_recall_sweep
-    # operating point, = the ivf_query/ivf_batch_topk default).
-    oracle=f"""
-    WITH hq AS (
-      SELECT vec_id AS qvid, CAST(embedding AS DOUBLE[]) AS qv
-      FROM embeddings WHERE vec_id < 3
-    ),
-    hqn AS (
-      SELECT qvid,
-             list_transform(qv, x -> x / sqrt(list_sum(list_transform(qv, y -> y*y)))) AS nv
-      FROM hq
-    ),
-    e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    exact AS (
-      SELECT qvid, vec_id FROM (
-        SELECT hq.qvid, e.vec_id,
-               row_number() OVER (
-                 PARTITION BY hq.qvid
-                 ORDER BY round(list_cosine_similarity(e.v, hq.qv), 6) DESC,
-                          e.vec_id
-               ) AS rk
-        FROM hq, e WHERE e.vec_id != hq.qvid
-      ) WHERE rk <= 10
-    ),
-    -- IVF arm: centroid rank per query, probe the default 6 cells
-    icent AS (
-      SELECT CAST(cell AS INT) AS cell, CAST(centroid AS DOUBLE[]) AS centroid
-      FROM read_parquet('{_ORACLE_IVF_DIR}/centroids/*.parquet')
-    ),
-    icrk AS (
-      SELECT hq.qvid, icent.cell,
-             row_number() OVER (
-               PARTITION BY hq.qvid
-               ORDER BY list_distance(icent.centroid, hq.qv), icent.cell
-             ) AS crk
-      FROM icent, hq
-    ),
-    icand AS (
-      SELECT CAST(vec_id AS BIGINT) AS vec_id,
-             CAST(arr AS DOUBLE[]) AS arr, CAST(cell AS INT) AS cell
-      FROM read_parquet('{_ORACLE_IVF_DIR}/cells/*/*.parquet',
-                        hive_partitioning=1)
-    ),
-    ivf10 AS (
-      SELECT qvid, vec_id FROM (
-        SELECT p.qvid, c.vec_id,
-               row_number() OVER (
-                 PARTITION BY p.qvid
-                 ORDER BY round(list_cosine_similarity(c.arr, h.qv), 6) DESC,
-                          c.vec_id
-               ) AS rk
-        FROM (SELECT qvid, cell FROM icrk WHERE crk <= 6) p
-        JOIN icand c ON c.cell = p.cell
-        JOIN hq h ON h.qvid = p.qvid
-        WHERE c.vec_id != p.qvid
-      ) WHERE rk <= 10
-    ),
-    -- LSH arm: each query IS corpus vector qvid, so its committed
-    -- (table_id, bucket) signature defines the probe set
-    lidx AS (
-      SELECT CAST(vec_id AS BIGINT) AS vec_id,
-             CAST(table_id AS INT) AS table_id, CAST(bucket AS INT) AS bucket
-      FROM read_parquet('{_ORACLE_LSH_DIR}/*/*/*.parquet', hive_partitioning=1)
-    ),
-    lprobe AS (SELECT vec_id AS qvid, table_id, bucket FROM lidx WHERE vec_id < 3),
-    lcand AS (
-      SELECT DISTINCT p.qvid, i.vec_id
-      FROM lidx i JOIN lprobe p
-        ON i.table_id = p.table_id AND i.bucket = p.bucket
-      WHERE i.vec_id != p.qvid
-    ),
-    lsh10 AS (
-      SELECT qvid, vec_id FROM (
-        SELECT c.qvid, c.vec_id,
-               row_number() OVER (
-                 PARTITION BY c.qvid
-                 ORDER BY round(list_cosine_similarity(e.v, h.qv), 6) DESC,
-                          c.vec_id
-               ) AS rk
-        FROM lcand c
-        JOIN e ON e.vec_id = c.vec_id
-        JOIN hq h ON h.qvid = c.qvid
-      ) WHERE rk <= 10
-    ),
-    -- PQ arm: ADC over all committed codes, shortlist 100, exact rerank
-    pbooks AS (
-      SELECT CAST(subspace AS INT) AS j, CAST(code AS INT) AS code,
-             CAST(centroid AS DOUBLE[]) AS centroid
-      FROM read_parquet('{_ORACLE_PQ_DIR}/codebooks/*.parquet')
-    ),
-    ptab AS (
-      SELECT n.qvid, b.j, b.code,
-             list_dot_product(b.centroid, n.nv[b.j*8+1 : b.j*8+8]) AS ip
-      FROM pbooks b, hqn n
-    ),
-    pcvec AS (
-      SELECT CAST(vec_id AS BIGINT) AS vec_id, codes
-      FROM read_parquet('{_ORACLE_PQ_DIR}/codes/*.parquet')
-    ),
-    pscores AS (
-      SELECT t.qvid, c.vec_id, round(sum(t.ip), 6) AS pq_score
-      FROM (SELECT vec_id, r.j, codes[r.j+1] AS code
-            FROM pcvec, range(8) r(j)) c
-      JOIN ptab t ON t.j = c.j AND t.code = c.code
-      WHERE c.vec_id != t.qvid
-      GROUP BY t.qvid, c.vec_id
-    ),
-    pshort AS (
-      SELECT qvid, vec_id FROM (
-        SELECT qvid, vec_id,
-               row_number() OVER (
-                 PARTITION BY qvid ORDER BY pq_score DESC, vec_id
-               ) AS rk
-        FROM pscores
-      ) WHERE rk <= 100
-    ),
-    pq10 AS (
-      SELECT qvid, vec_id FROM (
-        SELECT s.qvid, s.vec_id,
-               row_number() OVER (
-                 PARTITION BY s.qvid
-                 ORDER BY round(list_cosine_similarity(e.v, n.nv), 6) DESC,
-                          s.vec_id
-               ) AS rk
-        FROM pshort s JOIN e ON e.vec_id = s.vec_id
-        JOIN hqn n ON n.qvid = s.qvid
-      ) WHERE rk <= 10
-    ),
-    -- IVF-PQ arm: normalized-space coarse probe (6 cells), ADC over
-    -- probed cells' codes, shortlist 500, exact rerank (the r15
-    -- ann_recall_sweep_ivfpq operating point)
-    qcent AS (
-      SELECT CAST(cell AS INT) AS cell, CAST(centroid AS DOUBLE[]) AS centroid
-      FROM read_parquet('{_ORACLE_IVFPQ_DIR}/centroids/*.parquet')
-    ),
-    qcrk AS (
-      SELECT n.qvid, qcent.cell,
-             row_number() OVER (
-               PARTITION BY n.qvid
-               ORDER BY list_distance(qcent.centroid, n.nv), qcent.cell
-             ) AS crk
-      FROM qcent, hqn n
-    ),
-    qbooks AS (
-      SELECT CAST(subspace AS INT) AS j, CAST(code AS INT) AS code,
-             CAST(centroid AS DOUBLE[]) AS centroid
-      FROM read_parquet('{_ORACLE_IVFPQ_DIR}/codebooks/*.parquet')
-    ),
-    qtab AS (
-      SELECT n.qvid, b.j, b.code,
-             list_dot_product(b.centroid, n.nv[b.j*8+1 : b.j*8+8]) AS ip
-      FROM qbooks b, hqn n
-    ),
-    qcvec AS (
-      SELECT CAST(vec_id AS BIGINT) AS vec_id, codes, CAST(cell AS INT) AS cell
-      FROM read_parquet('{_ORACLE_IVFPQ_DIR}/codes/*/*.parquet',
-                        hive_partitioning=1)
-    ),
-    qscores AS (
-      SELECT t.qvid, c.vec_id, round(sum(t.ip), 6) AS pq_score
-      FROM (SELECT p.qvid, v.vec_id, r.j, v.codes[r.j+1] AS code
-            FROM qcvec v
-            JOIN (SELECT qvid, cell FROM qcrk WHERE crk <= 6) p
-              ON p.cell = v.cell
-            CROSS JOIN range(8) r(j)
-            WHERE v.vec_id != p.qvid) c
-      JOIN qtab t ON t.qvid = c.qvid AND t.j = c.j AND t.code = c.code
-      GROUP BY t.qvid, c.vec_id
-    ),
-    qshort AS (
-      SELECT qvid, vec_id FROM (
-        SELECT qvid, vec_id,
-               row_number() OVER (
-                 PARTITION BY qvid ORDER BY pq_score DESC, vec_id
-               ) AS rk
-        FROM qscores
-      ) WHERE rk <= 500
-    ),
-    ivfpq10 AS (
-      SELECT qvid, vec_id FROM (
-        SELECT s.qvid, s.vec_id,
-               row_number() OVER (
-                 PARTITION BY s.qvid
-                 ORDER BY round(list_cosine_similarity(e.v, n.nv), 6) DESC,
-                          s.vec_id
-               ) AS rk
-        FROM qshort s JOIN e ON e.vec_id = s.vec_id
-        JOIN hqn n ON n.qvid = s.qvid
-      ) WHERE rk <= 10
-    ),
-    fam AS (
-      SELECT 'ivf' AS family, qvid, vec_id FROM ivf10
-      UNION ALL SELECT 'lsh', qvid, vec_id FROM lsh10
-      UNION ALL SELECT 'pq', qvid, vec_id FROM pq10
-      UNION ALL SELECT 'ivfpq', qvid, vec_id FROM ivfpq10
-    ),
-    fams AS (SELECT DISTINCT family FROM fam),
-    expected AS (SELECT f.family, x.qvid, x.vec_id FROM fams f, exact x),
-    per_q AS (
-      SELECT x.family, x.qvid,
-             sum(CASE WHEN fam.vec_id IS NOT NULL THEN 1 ELSE 0 END) / 10.0 AS r
-      FROM expected x LEFT JOIN fam
-        ON fam.family = x.family AND fam.qvid = x.qvid AND fam.vec_id = x.vec_id
-      GROUP BY 1, 2
-    )
-    SELECT family, round(avg(r), 6) AS recall_at_10
-    FROM per_q GROUP BY 1 ORDER BY family
-    """,
-    description="Cross-family ANN quality report: recall@10 vs the "
-    "exact brute-force top-10 for all four committed index families at "
-    "their shipped defaults — IVF (n_probe=6, the sweep operating "
-    "point), hyperplane-LSH (4 tables x 4 bits), flat PQ (m=8, k=16, "
-    "ADC shortlist 100 + exact rerank), and IVF-PQ (6-cell probe + ADC "
-    "shortlist 500 + rerank, the r15 sweep operating point) — mean over the 3 query vectors; the comparison that "
-    "picks a family for a workload (pair with each family's bench "
-    "latency row). Every arm is the family's existing single-query "
-    "oracle generalized PARTITION BY query",
-)
-def ann_family_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from functools import reduce
-
-    from pyspark.sql import Window
-
-    ivf = _ensure_ivf8(spark, sf_dir)
-    lsh = _ensure_lsh44(spark, sf_dir)
-    pq = _ensure_pq816(spark, sf_dir)
-    ivfpq = _ensure_ivfpq(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
-    q3 = emb.where(F.col("vec_id") < 3)
-    qv = q3.select(
-        F.col("vec_id").alias("query_id"), V.as_double("embedding").alias("qv")
-    )
-    corpus = emb.select("vec_id", V.as_double("embedding").alias("v"))
-    cos = F.round(V.cosine("v", "qv"), 6)
-    exact = (
-        corpus.join(F.broadcast(qv))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", cos.alias("cosine"))
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.desc("cosine"), F.asc("vec_id")
-                )
-            ),
-        )
-        .where(F.col("rk") <= 10)
-        .select("query_id", "vec_id")
-    )
-
-    # the 3 bounded query vectors in ONE driver job (r18; _query_vec
-    # per id was 3 separate .first() jobs per rep)
-    vecs = {
-        int(r["vec_id"]): list(r["v"])
-        for r in q3.select(
-            "vec_id", V.as_double("embedding").alias("v")
-        ).collect()
-    }
-    # n_probe pinned: this row's oracle derives the probe set at 6, so
-    # it must not float with a build-recorded recommendation (r17)
-    ivf10 = S.ivf_batch_topk(
-        spark, ivf, q3, k=10, n_probe=6
-    ).select("query_id", "vec_id")
-    # batch LSH probe (VERDICT r17 #7): one signature scan for all 3
-    # queries instead of 3 single probes; per query the rows are
-    # test-pinned identical to lsh_index_query
-    lsh10 = S.lsh_batch_query(
-        spark, lsh, [(i, vecs[i]) for i in range(3)], k=10,
-        n_planes=4, n_tables=4,
-    ).select("query_id", "vec_id")
-    # batch probes for the compressed families (r17): per query the
-    # batch plans return EXACTLY the single probe's rows (test-pinned),
-    # but the 3-query fan-in runs as ONE plan per family — the unioned
-    # single probes re-scanned the code relation per query and built
-    # three driver-side ADC literal tables each (measured 3.5-3.9 s per
-    # family vs 1.3-1.6 s batched at sf0.1)
-    pq10 = S.pq_batch_topk(
-        spark, pq, q3, emb, 10, shortlist=100
-    ).select("query_id", "vec_id")
-    ivfpq10 = S.ivfpq_batch_topk(
-        spark, ivfpq, q3, emb, 10, n_probe=6, shortlist=500
-    ).select("query_id", "vec_id")
-    fam = reduce(
-        DataFrame.unionByName,
-        [
-            df.select(F.lit(name).alias("family"), "query_id", "vec_id")
-            for name, df in [
-                ("ivf", ivf10), ("lsh", lsh10), ("pq", pq10), ("ivfpq", ivfpq10)
-            ]
-        ],
-    ).withColumn("hit", F.lit(1))
-    families = spark.createDataFrame(
-        [("ivf",), ("lsh",), ("pq",), ("ivfpq",)], "family string"
-    )
-    expected = families.crossJoin(F.broadcast(exact))
-    return (
-        expected.join(
-            F.broadcast(fam), ["family", "query_id", "vec_id"], "left"
-        )
-        .groupBy("family", "query_id")
-        .agg((F.sum(F.coalesce(F.col("hit"), F.lit(0))) / F.lit(10.0)).alias("r"))
-        .groupBy("family")
-        .agg(F.round(F.avg("r"), 6).alias("recall_at_10"))
-        .orderBy("family")
     )
 
 
@@ -6475,7 +4792,6 @@ def retrieval_quality_hybrid_textemb(spark: SparkSession, sf_dir: str) -> DataFr
 # ---------------------------------------------------------------------------
 # DSIR importance resampling (targeted data selection, Xie et al. 2023)
 # ---------------------------------------------------------------------------
-
 
 
 @query(

@@ -26,7 +26,9 @@ so the registry is curated into two tiers:
   fully oracle-parity-checked by ``tests/test_oracle_parity.py`` (which
   iterates ALL tiers) and still benchable; just not part of the driver's
   capped snapshot. A local query whose expressions a driver query
-  already checks is deleted, not kept as a second copy. Kept, and why:
+  already checks is deleted, not kept as a second copy; so is one that
+  only measures another operator (the ANN recall sweeps: their
+  operating points are recorded in SCALE.md). Kept, and why:
 
   - ``projection_drop`` and ``derived_arithmetic``:
     ``tests/test_plan_quality.py`` pins their ColumnPruning and pushdown
@@ -36,7 +38,10 @@ so the registry is curated into two tiers:
   - ``grouped_stats_approx``: a bounded approximation of
     ``grouped_stats``, not an oracle twin;
   - ``deterministic_sample`` and ``dedup_minhash_groups``: operators no
-    driver query reaches.
+    driver query reaches;
+  - ``ann_pq``, ``ann_ivfpq`` and ``ann_ivf_batch``: the flat-PQ,
+    single-probe IVF-PQ and batched IVF probes, which the driver tier's
+    brute-force, IVF and batched IVF-PQ queries do not reach.
 """
 
 from __future__ import annotations

@@ -91,3 +91,27 @@ def test_coverage_appendix_matches_the_registry():
     assert mark + appendix == gen.render(), (
         "COVERAGE.md's appendix is stale: run scripts/gen_coverage_appendix.py"
     )
+
+
+def test_every_committed_index_fixture_is_named_by_the_engine():
+    # a fixture under .indexes/ outlives the code that builds and reads
+    # it unless someone deletes both: each index directory must appear
+    # as a string literal somewhere in the engine package
+    import ast
+    import glob
+
+    pkg = os.path.join(ROOT, "loan_approval_prediction_data_engineering_ml_pipeline_spark")
+    literals = set()
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        literals |= {
+            n.value for n in ast.walk(tree)
+            if isinstance(n, ast.Constant) and isinstance(n.value, str)
+        }
+    dirs = {
+        os.path.basename(os.path.dirname(d))
+        for d in glob.glob(os.path.join(ROOT, ".indexes", "sf*", "*", ""))
+    }
+    assert dirs, "no committed index fixtures found"
+    assert dirs <= literals, f"fixtures no engine code names: {sorted(dirs - literals)}"

@@ -1,4 +1,4 @@
-"""Snapshot-atomic lifecycle tests for the LSH / PQ / IVF-PQ persisted
+"""Snapshot-atomic lifecycle tests for the PQ / IVF-PQ persisted
 indexes (VERDICT r12 #4) — the same protocol guarantees the BM25 and
 IVF families already prove: (a) a crash after the object write but
 before the manifest commit changes nothing a reader can observe; (b) a
@@ -111,23 +111,6 @@ def _lifecycle(
 
 
 @pytest.mark.slow
-def test_lsh_index_lifecycle_snapshot_atomic(spark, tmp_path, monkeypatch, emb, probe_vec):
-    _lifecycle(
-        spark, tmp_path, monkeypatch, probe_vec,
-        name="lsh",
-        build=lambda idx: SIM.build_lsh_index(
-            emb, idx, n_planes=4, n_tables=4, dim=64
-        ),
-        probe=lambda idx: SIM.lsh_index_query(
-            spark, idx, probe_vec, k=5, n_planes=4, n_tables=4, dim=64, exclude_id=7
-        ),
-        upsert=lambda idx, new: SIM.lsh_upsert(
-            spark, idx, new, n_planes=4, n_tables=4, dim=64
-        ),
-    )
-
-
-@pytest.mark.slow
 def test_pq_index_lifecycle_snapshot_atomic(spark, tmp_path, monkeypatch, emb, probe_vec):
     _lifecycle(
         spark, tmp_path, monkeypatch, probe_vec,
@@ -183,36 +166,6 @@ def test_pq_upsert_migrates_flat_blob_then_touches_buckets_only(
     assert n == 1
 
 
-def test_lsh_upsert_uses_committed_params_and_matches_fresh_build(
-    spark, tmp_path, emb, probe_vec
-):
-    """After an upsert, a probe equals a FRESH build over the union
-    corpus (same hyperplanes, same candidates), and the manifest's
-    recorded params override whatever the caller passes."""
-    idx = str(tmp_path / "lsh_eq")
-    SIM.build_lsh_index(emb, idx, n_planes=4, n_tables=4, dim=64)
-    new = _new_vec(spark, probe_vec)
-    SIM.lsh_upsert(spark, idx, new, n_planes=4, n_tables=4, dim=64)
-
-    fresh = str(tmp_path / "lsh_fresh")
-    SIM.build_lsh_index(
-        emb.select("vec_id", "embedding").unionByName(new),
-        fresh, n_planes=4, n_tables=4, dim=64,
-    )
-    a = sorted(map(tuple, SIM.lsh_index_query(
-        spark, idx, probe_vec, k=10, n_planes=4, n_tables=4, dim=64, exclude_id=7
-    ).collect()))
-    b = sorted(map(tuple, SIM.lsh_index_query(
-        spark, fresh, probe_vec, k=10, n_planes=4, n_tables=4, dim=64, exclude_id=7
-    ).collect()))
-    assert a == b
-    # manifest params are authoritative: wrong caller params, same result
-    c = sorted(map(tuple, SIM.lsh_index_query(
-        spark, idx, probe_vec, k=10, n_planes=2, n_tables=1, dim=64, exclude_id=7
-    ).collect()))
-    assert c == a
-
-
 @pytest.mark.slow
 def test_ivf_upsert_four_writer_race_serializes_via_occ(spark, tmp_path, emb, probe_vec):
     """The BM25 4-writer OCC standard applied to the ANN side: four
@@ -263,29 +216,19 @@ def test_ivf_upsert_four_writer_race_serializes_via_occ(spark, tmp_path, emb, pr
     assert sorted(ids) == sorted(90000 + 10 * w + i for w in range(4) for i in range(3))
 
 
-@pytest.mark.parametrize("family", ["pq", "lsh"])
 @pytest.mark.slow
-def test_pq_lsh_concurrent_upserts_serialize_via_occ(spark, tmp_path, emb, probe_vec, family):
+def test_pq_concurrent_upserts_serialize_via_occ(spark, tmp_path, emb, probe_vec):
     """Two concurrent upserts of disjoint deltas with OCC retries must
-    serialize through the manifest log for the PQ and LSH families too.
-    The PQ case also races the one-time flat-blob MIGRATION: both
-    writers may decide to migrate simultaneously — the loser must
-    rebase onto the winner's bucketed layout, not re-migrate over it."""
+    serialize through the manifest log for the PQ family too. They also
+    race the one-time flat-blob MIGRATION: both writers may decide to
+    migrate simultaneously — the loser must rebase onto the winner's
+    bucketed layout, not re-migrate over it."""
     import threading
 
-    idx = str(tmp_path / f"{family}_race")
-    if family == "pq":
-        SIM.build_pq_index(emb, idx, m=8, k=16)
-        upsert = lambda d: SIM.pq_upsert(spark, idx, d, retries=8)
-        probe = lambda: SIM.pq_query(spark, idx, probe_vec, 15, exclude_id=7)
-    else:
-        SIM.build_lsh_index(emb, idx, n_planes=4, n_tables=4, dim=64)
-        upsert = lambda d: SIM.lsh_upsert(
-            spark, idx, d, n_planes=4, n_tables=4, dim=64, retries=8
-        )
-        probe = lambda: SIM.lsh_index_query(
-            spark, idx, probe_vec, k=15, n_planes=4, n_tables=4, dim=64, exclude_id=7
-        )
+    idx = str(tmp_path / "pq_race")
+    SIM.build_pq_index(emb, idx, m=8, k=16)
+    upsert = lambda d: SIM.pq_upsert(spark, idx, d, retries=8)
+    probe = lambda: SIM.pq_query(spark, idx, probe_vec, 15, exclude_id=7)
 
     deltas = [
         spark.createDataFrame(
@@ -347,16 +290,6 @@ def test_empty_probe_schema_matches_built_id_type(spark, tmp_path, emb, probe_ve
     the non-empty path, or downstream unions/joins break only in the
     rare all-buckets-missing case."""
     iemb = emb.select(F.col("vec_id").cast("int").alias("vec_id"), "embedding")
-
-    lsh = str(tmp_path / "lsh_int")
-    SIM.build_lsh_index(iemb, lsh, n_planes=4, n_tables=4, dim=64)
-    full = SIM.lsh_index_query(
-        spark, lsh, probe_vec, k=5, n_planes=4, n_tables=4, dim=64
-    )
-    snap = SIM._lsh_manifest_from_flat(lsh, n_planes=4, n_tables=4, dim=64)
-    empty = SIM._empty_topk(spark, lsh, list(snap["banded"].values()), "vec_id")
-    assert empty.schema == full.schema
-    assert full.unionByName(empty).count() == full.count()  # union round-trips
 
     ivfpq = str(tmp_path / "ivfpq_int")
     SIM.build_ivfpq_index(iemb, ivfpq, n_lists=8, m=8, k=16)
@@ -538,38 +471,6 @@ def test_ivfpq_batch_matches_single_probe_and_brute_force(
 
 
 @pytest.mark.slow
-def test_pq_batch_matches_single_probe(spark, tmp_path, emb):
-    """The batched flat-PQ probe (r17): a 1-row batch and each arm of a
-    multi-query batch must reproduce pq_query_rerank EXACTLY — same
-    normalized ADC table values, 6-dp shortlist cut, normalized-corpus
-    rerank, and id tie-breaks (the relational ADC table is the literal
-    table's join form)."""
-    idx = str(tmp_path / "pq")
-    SIM.build_pq_index(emb, idx, m=8, k=16, seed=42)
-    for qid in (0, 1, 7):
-        qdf = emb.where(F.col("vec_id") == qid)
-        qv = [float(x) for x in qdf.first()["embedding"]]
-        single = [
-            (r["vec_id"], r["cosine"])
-            for r in SIM.pq_query_rerank(
-                spark, idx, emb, qv, 10, shortlist=50, exclude_id=qid
-            ).collect()
-        ]
-        batch1 = [
-            (r["vec_id"], r["cosine"])
-            for r in SIM.pq_batch_topk(
-                spark, idx, qdf, emb, 10, shortlist=50
-            ).collect()
-        ]
-        assert batch1 == single and len(batch1) == 10
-    multi = SIM.pq_batch_topk(
-        spark, idx, emb.where(F.col("vec_id") < 3), emb, 5, shortlist=50
-    ).collect()
-    assert len(multi) == 15
-    assert [r["query_id"] for r in multi] == sorted(r["query_id"] for r in multi)
-
-
-@pytest.mark.slow
 def test_default_build_records_calibrated_recipe_probes_resolve_it(
     spark, tmp_path, emb
 ):
@@ -700,60 +601,28 @@ def test_pq_families_tolerate_low_diversity_subspaces(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_pq_batch_zero_query_vector_matches_single_probe(spark, tmp_path, emb):
+def test_ivfpq_batch_zero_query_vector_matches_single_probe(spark, tmp_path, emb):
     """ADVICE r17: the single probe guards a zero query norm with
     ``qn or 1.0`` (zero vector → 0.0 ADC scores), while a try_divide
     normalize would turn the batch's ADC sums all-NULL and diverge the
     shortlist. Pin the batch arm to the single probe on the degenerate
     input."""
-    idx = str(tmp_path / "pqz")
-    SIM.build_pq_index(emb, idx, m=8, k=16, seed=42)
+    idx = str(tmp_path / "ivfpqz")
+    SIM.build_ivfpq_index(emb, idx, n_lists=8, m=8, k=16, seed=42)
     dim = len(emb.first()["embedding"])
     zq = spark.createDataFrame(
         [(90002, [0.0] * dim)], "vec_id long, embedding array<double>"
     )
     single = [
         (r["vec_id"], r["cosine"])
-        for r in SIM.pq_query_rerank(
-            spark, idx, emb, [0.0] * dim, 10, shortlist=50
+        for r in SIM.ivfpq_query_rerank(
+            spark, idx, emb, [0.0] * dim, 10, n_probe=3, shortlist=50
         ).collect()
     ]
     batch = [
         (r["vec_id"], r["cosine"])
-        for r in SIM.pq_batch_topk(spark, idx, zq, emb, 10, shortlist=50).collect()
+        for r in SIM.ivfpq_batch_topk(
+            spark, idx, zq, emb, 10, n_probe=3, shortlist=50
+        ).collect()
     ]
     assert batch == single and len(batch) == 10
-
-
-
-def test_lsh_batch_matches_single_probes(spark, tmp_path, emb):
-    """The batched LSH probe (r18, VERDICT r17 #7): per query the batch
-    plan must reproduce lsh_index_query EXACTLY — same probed (table,
-    bucket) sets, candidate dedup, 6-dp cosine rounding, and id
-    tie-breaks — while reading the union of probed dirs in one scan."""
-    idx = str(tmp_path / "lsh_batch")
-    SIM.build_lsh_index(emb, idx, n_planes=4, n_tables=4, dim=64)
-    qids = [0, 1, 7]
-    rows = {
-        int(r["vec_id"]): [float(x) for x in r["embedding"]]
-        for r in emb.where(F.col("vec_id").isin(qids)).collect()
-    }
-    batch = SIM.lsh_batch_query(
-        spark, idx, [(q, rows[q]) for q in qids], k=10,
-        n_planes=4, n_tables=4,
-    ).collect()
-    for q in qids:
-        single = [
-            (r["vec_id"], r["cosine"])
-            for r in SIM.lsh_index_query(
-                spark, idx, rows[q], k=10, n_planes=4, n_tables=4,
-                exclude_id=q,
-            ).collect()
-        ]
-        arm = [
-            (r["vec_id"], r["cosine"])
-            for r in batch
-            if int(r["query_id"]) == q
-        ]
-        assert arm == single
-
